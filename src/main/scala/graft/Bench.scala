@@ -279,7 +279,7 @@ object Bench {
   /** BASELINE.md protocol: CDC upsert throughput over a ≥1M-event generated
     * stream (seeded, generation excluded) — full Q61 path: JSONL file read →
     * parse → per-table filter → flatten → typed cast → last-write-wins →
-    * parquet sink merge.
+    * snapshot sink merge.
     *
     * Measurement protocol (cache-deterministic): the generated JSONL is
     * re-read once untimed so the timed runs hit a warm page cache (the
@@ -292,7 +292,7 @@ object Bench {
     import org.apache.spark.sql.types._
     import graft.cdc.CdcPipeline
     import graft.model.{ColSpec, TableSpec}
-    import graft.sink.LocalParquetSink
+    import graft.sink.SnapshotParquetSink
     val n = 1000000L
     val keys = 200000L
     try {
@@ -331,7 +331,7 @@ object Bench {
         val t0 = System.nanoTime()
         val env = spark.read.schema(envSchema).json(jsonDir)
         val flat = CdcPipeline.expanded(CdcPipeline.forTable(env, "shop.orders"))
-        new LocalParquetSink(sinkDir)
+        new SnapshotParquetSink(sinkDir)
           .merge(CdcPipeline.typed(flat, spec), Seq("primary_key"), "seq", "is_delete")
         (System.nanoTime() - t0) / 1e9
       }
@@ -349,13 +349,14 @@ object Bench {
 
   /** Incremental-merge scale story: with an 8M-key, 64-char-payload table
     * in place, merge a 10-key micro-batch (a hot-key update — the realistic
-    * steady-state CDC trigger) through the whole-table-rewrite sink vs the
-    * bucket-partitioned sink. The partitioned merge reads and rewrites
-    * ≤ 10 of 128 buckets, so its cost tracks the affected fraction of the
-    * table, not its size — the full-rewrite side is O(table), so the gap
-    * widens with volume. Below ~4M rows scheduler fixed costs swamp the
-    * signal (measured: the partitioned side is flat ~1.3 s of per-job
-    * overhead regardless of table size), which is why the table here is 8M.
+    * steady-state CDC trigger) into two snapshot tables: one bucket (every
+    * merge rewrites the whole table) vs 128 buckets. The 128-bucket merge
+    * reads and rewrites ≤ 10 of 128 buckets, so its cost tracks the
+    * affected fraction of the table, not its size — the full-rewrite side
+    * is O(table), so the gap widens with volume. Below ~4M rows scheduler
+    * fixed costs swamp the signal (measured: the bucketed side is flat
+    * ~1.3 s of per-job overhead regardless of table size), which is why
+    * the table here is 8M.
     * A batch whose keys hash across every bucket degrades to a full
     * rewrite — hash layout prunes by key count, not key range.
     *
@@ -377,7 +378,7 @@ object Bench {
   private def cdcIncrementalMergeSpeedup(
       spark: org.apache.spark.sql.SparkSession): (Double, Double, Double) = {
     import org.apache.spark.sql.functions._
-    import graft.sink.{LocalParquetSink, PartitionedParquetSink, UpsertSink}
+    import graft.sink.SnapshotParquetSink
     try {
       val base = sys.props("java.io.tmpdir") + "/graft_cdc_incr_" + ProcessHandle.current().pid()
       wipe(new java.io.File(base))
@@ -386,28 +387,31 @@ object Bench {
           (col("id") + offset).as("seq"),
           sha2(concat(lit("v"), col("id")), 256).as("val"), // 64-char payload
           lit(false).as("is_delete"))
-      val local = new LocalParquetSink(s"$base/local")
-      val part = new PartitionedParquetSink(s"$base/part", nBuckets = 128)
+      val full = new SnapshotParquetSink(s"$base/full", nBuckets = 1)
+      val incr = new SnapshotParquetSink(s"$base/incr", nBuckets = 128)
       val hotKeys = seed(10, 50000) // 10 existing keys updated
-      for (sink <- Seq[UpsertSink](local, part)) {
+      for (sink <- Seq(full, incr)) {
         sink.merge(seed(8000000, 0), Seq("primary_key"), "seq", "is_delete") // untimed load
         sink.merge(hotKeys, Seq("primary_key"), "seq", "is_delete") // warm-up (codegen)
         sink.merge(hotKeys, Seq("primary_key"), "seq", "is_delete") // warm-up (cache)
       }
       // interleaved timings so environment drift (page cache, GC) hits both
-      // sinks equally
-      def timed(sink: UpsertSink): Double = {
+      // sinks equally; each superseded version is vacuumed untimed so the
+      // full-rewrite side holds one copy of the table on disk, not seven
+      def timed(sink: SnapshotParquetSink): Double = {
         val t0 = System.nanoTime()
         sink.merge(hotKeys, Seq("primary_key"), "seq", "is_delete")
-        (System.nanoTime() - t0) / 1e9
+        val t = (System.nanoTime() - t0) / 1e9
+        sink.vacuum(keepLast = 1, minOrphanAgeMs = 0L)
+        t
       }
-      val pairs = (1 to 5).map(_ => (timed(local), timed(part)))
-      System.err.println(s"[bench] incr pairs (local, part): " +
+      val pairs = (1 to 5).map(_ => (timed(full), timed(incr)))
+      System.err.println(s"[bench] incr pairs (full, incr): " +
         pairs.map(p => f"(${p._1}%.2f, ${p._2}%.2f)").mkString(" "))
-      val tLocal = pairs.map(_._1).min
-      val tPart = pairs.map(_._2).min
+      val tFull = pairs.map(_._1).min
+      val tIncr = pairs.map(_._2).min
       wipe(new java.io.File(base))
-      (tLocal / tPart, tLocal, tPart)
+      (tFull / tIncr, tFull, tIncr)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] incremental merge bench failed: $e")
       (-1.0, -1.0, -1.0)

@@ -1145,11 +1145,8 @@ object Cdc {
          |       CAST(CAST(CAST(row_qty AS DOUBLE) AS DECIMAL(18,4)) AS STRING) AS qty,
          |       row_created AS created
          |FROM r WHERE rn = 1 AND NOT is_del""".stripMargin) { (s, _) =>
-      val base = sys.props("java.io.tmpdir") + "/graft_q64b_" +
-        ProcessHandle.current().pid()
-      graft.engine.Fs.deleteTree(new java.io.File(base))
-      graft.engine.Fs.reclaimAtExit(base)
-      val sink = new graft.sink.LocalParquetSink(base + "/t")
+      val (sink, dir) = freshSnapshotSink("q64b")
+      graft.engine.Fs.reclaimAtExit(dir)
       val e = env(s)
       def flatTyped(df: DataFrame, sp: TableSpec) =
         CdcPipeline.typed(CdcPipeline.expanded(CdcPipeline.forTable(df, "shop.orders")), sp)

@@ -16,11 +16,10 @@ import graft.engine.Dfs
   *
   *   - NO crash window: a crash anywhere before the manifest publish leaves
   *     orphan data files and an intact table at the previous version — no
-  *     backup/restore protocol needed (contrast [[LocalParquetSink]]'s
-  *     two-move swap and [[PartitionedParquetSink]]'s bucket backups);
+  *     backup/restore protocol needed;
   *   - incremental merges: unaffected buckets carry their manifest entries
-  *     forward untouched — merge cost is O(affected fraction), same as
-  *     [[PartitionedParquetSink]];
+  *     forward untouched — merge cost is O(affected fraction of the table);
+  *     `nBuckets = 1` makes every merge a whole-table rewrite;
   *   - time travel for free: every previous manifest remains readable
   *     (`readAt`) until `vacuum` expires it;
   *   - concurrent-writer safety: the manifest publish is the optimistic
@@ -45,9 +44,9 @@ import graft.engine.Dfs
   * head seq — monotone; what [[SnapshotCatalog.commitAligned]] reads),
   * then one `b <bucket> <relative-path>` per
   * bucket present. Merge semantics (last-write-wins by seq, `__gen`
-  * tie-break = the committing version, tombstoned deletes) match the other
-  * sinks; `__gen` strictly increases per commit, so replaying a batch is
-  * idempotent and out-of-order-safe.
+  * tie-break = the committing version, tombstoned deletes) implement the
+  * [[UpsertSink]] contract; `__gen` strictly increases per commit, so
+  * replaying a batch is idempotent and out-of-order-safe.
   */
 /** Manifest-format and bucket-routing primitives, shared between the Scala
   * sink API and the DSv2 read path ([[graft.sources.SnapshotTableProvider]])
@@ -91,7 +90,10 @@ object SnapshotParquetSink {
 
   /** The cluster spec recorded at `version`; empty = hash-routed table. */
   def manifestCluster(dir: String, version: Long): Seq[ClusterCol] =
-    Dfs.readUtf8(manifestPath(dir, version)).split('\n').toSeq
+    clusterOf(manifestLines(dir, version))
+
+  private def clusterOf(lines: Seq[String]): Seq[ClusterCol] =
+    lines
       .filter(_.startsWith("c "))
       .map { line =>
         val Array(_, n, lo, hi) = line.split(" ", 4)
@@ -244,12 +246,17 @@ object SnapshotParquetSink {
     new HPath(manifestsDir(dir), f"v$v%08d.manifest")
 
   /** All published versions at `dir`, ascending; empty before any commit. */
-  def versions(dir: String): Seq[Long] =
+  def versions(dir: String): Seq[Long] = versionTimes(dir).map(_._1)
+
+  /** (version, manifest modification time) for every published version at
+    * `dir`, ascending — one listing.
+    */
+  private[sink] def versionTimes(dir: String): Seq[(Long, Long)] =
     Dfs.list(manifestsDir(dir))
-      .map(_.getPath.getName)
-      .collect { case s if s.startsWith("v") && s.endsWith(".manifest") =>
-        s.stripPrefix("v").stripSuffix(".manifest").toLong }
-      .sorted
+      .map(st => st.getPath.getName -> st.getModificationTime)
+      .collect { case (n, t) if n.startsWith("v") && n.endsWith(".manifest") =>
+        n.stripPrefix("v").stripSuffix(".manifest").toLong -> t }
+      .sortBy(_._1)
 
   /** Bounded (dir, version) → lines cache. A published manifest is
     * IMMUTABLE (publish is rename-onto-absent), so a hit can never be
@@ -295,8 +302,11 @@ object SnapshotParquetSink {
   }
 
   /** (declared nBuckets, bucket → path relative to `dir`) at `version`. */
-  def manifest(dir: String, version: Long): (Int, Map[Int, String]) = {
-    val lines = manifestLines(dir, version)
+  def manifest(dir: String, version: Long): (Int, Map[Int, String]) =
+    manifestOf(dir, version, manifestLines(dir, version))
+
+  private def manifestOf(dir: String, version: Long,
+      lines: Seq[String]): (Int, Map[Int, String]) = {
     val n = lines.collectFirst { case l if l.startsWith("nBuckets=") =>
       l.stripPrefix("nBuckets=").toInt }
       .getOrElse(sys.error(s"manifest v$version at $dir lacks nBuckets"))
@@ -355,7 +365,10 @@ object SnapshotParquetSink {
     * recorded — consumers then fall back to caller-declared keys.
     */
   def manifestKeys(dir: String, version: Long): Seq[String] =
-    manifestLines(dir, version)
+    keysOf(manifestLines(dir, version))
+
+  private def keysOf(lines: Seq[String]): Seq[String] =
+    lines
       .collectFirst { case l if l.startsWith("keys=") =>
         l.stripPrefix("keys=").split(',').toSeq.map(_.trim).filter(_.nonEmpty) }
       .getOrElse(Seq.empty)
@@ -384,7 +397,10 @@ object SnapshotParquetSink {
     * seq-consistent cross-table cuts without scanning data files.
     */
   def manifestMaxSeq(dir: String, version: Long): Option[Long] =
-    manifestLines(dir, version)
+    maxSeqOf(manifestLines(dir, version))
+
+  private def maxSeqOf(lines: Seq[String]): Option[Long] =
+    lines
       .collectFirst { case l if l.startsWith("maxseq=") =>
         l.stripPrefix("maxseq=").toLong }
 
@@ -1664,7 +1680,7 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
   /** Point lookup against the LATEST snapshot, reading only the key's
     * bucket file — manifest + hash layout turn a key probe into one
     * 1/nBuckets-of-the-table read. Bucket derivation is bit-identical to
-    * the write path ([[PartitionedParquetSink.lookup]]'s contract): literals
+    * the write path ([[SnapshotParquetSink.bucketFor]]'s contract): literals
     * cast to the STORED key types, xxhash64 evaluated driver-side, no Spark
     * job for the routing decision. A never-merged sink yields an empty
     * zero-column frame.
@@ -2096,24 +2112,27 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     * the signal to compact).
     */
   def history(spark: SparkSession): DataFrame = {
-    val vs = versions
-    val rows = vs.map { v =>
-      val (n, entries) = SnapshotParquetSink.manifest(dir, v)
-      val prev = if (v == vs.head) Map.empty[Int, String]
-        else SnapshotParquetSink.manifest(dir, vs(vs.indexOf(v) - 1))._2
-      val rewritten = entries.count { case (b, rel) => prev.get(b) != Some(rel) }
-      val cluster = SnapshotParquetSink.manifestCluster(dir, v)
-        .map(c => s"${c.name}[${c.lo},${c.hi}]").mkString(",")
-      org.apache.spark.sql.Row(
-        v,
-        new java.sql.Timestamp(
-          Dfs.fs(manifestPath(v)).getFileStatus(manifestPath(v)).getModificationTime),
-        n,
-        entries.size,
-        rewritten,
-        SnapshotParquetSink.manifestMaxSeq(dir, v).map(Long.box).orNull,
-        SnapshotParquetSink.manifestKeys(dir, v).mkString(","),
-        cluster)
+    // one listing for versions and publish times, one parse per manifest;
+    // each version diffs against its predecessor's already-parsed entries
+    val parsed = SnapshotParquetSink.versionTimes(dir).map { case (v, published) =>
+      val lines = SnapshotParquetSink.manifestLines(dir, v)
+      (v, published, lines, SnapshotParquetSink.manifestOf(dir, v, lines))
+    }
+    val prevEntries = Map.empty[Int, String] +: parsed.map(_._4._2)
+    val rows = parsed.zip(prevEntries).map {
+      case ((v, published, lines, (n, entries)), before) =>
+        val rewritten = entries.count { case (b, rel) => before.get(b) != Some(rel) }
+        val cluster = SnapshotParquetSink.clusterOf(lines)
+          .map(c => s"${c.name}[${c.lo},${c.hi}]").mkString(",")
+        org.apache.spark.sql.Row(
+          v,
+          new java.sql.Timestamp(published),
+          n,
+          entries.size,
+          rewritten,
+          SnapshotParquetSink.maxSeqOf(lines).map(Long.box).orNull,
+          SnapshotParquetSink.keysOf(lines).mkString(","),
+          cluster)
     }
     import org.apache.spark.sql.types._
     spark.createDataFrame(
@@ -2177,14 +2196,7 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     // pins (the vacuumAll expire → per-table TOCTOU seam). The hour that
     // protects in-flight data roots protects fresh history for the same
     // reason; a version missing from the re-listing is likewise left alone.
-    val manifestAge: Map[Long, Long] = Dfs.list(manifestsDir)
-      .flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("v") && n.endsWith(".manifest"))
-          Some(n.stripPrefix("v").stripSuffix(".manifest").toLong ->
-            st.getModificationTime)
-        else None
-      }.toMap
+    val manifestAge: Map[Long, Long] = SnapshotParquetSink.versionTimes(dir).toMap
     val drop = vs.filter(dropSet).filter(v =>
       manifestAge.get(v).exists(m => nowForFloor - m >= minOrphanAgeMs))
     // the floor intervening is a DIFFERENT outcome than "nothing to drop"

@@ -19,7 +19,7 @@ import graft.model.TableSpec
   * so a replay containing ONLY stale pre-delete events of a deleted key
   * would re-insert it. Logical mode (IS_DELETED column, README.md:61) is
   * fully replay-idempotent and is what a production pipeline should pair
-  * with a filtered view — the same tombstone design LocalParquetSink uses.
+  * with a filtered view — the same tombstone design SnapshotParquetSink uses.
   */
 object SnowflakeSqlGen {
 

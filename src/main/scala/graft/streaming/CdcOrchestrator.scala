@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import graft.cdc.CdcPipeline
 import graft.inspect.Inspection
 import graft.model.TableSpec
-import graft.sink.LocalParquetSink
+import graft.sink.SnapshotParquetSink
 
 /** Multi-table fan-out orchestration — the reference's two entry points
   * re-expressed in-process (R30 `add_new_tables` add_output.py:458-561, R31
@@ -49,10 +49,10 @@ object CdcOrchestrator {
       running: Map[String, Running] = Map.empty,
       logicalDeletes: Boolean = false,
       extraPk: Option[graft.model.ColSpec] = None,
-      // sink per table directory — default local parquet; pass e.g.
-      // `new PartitionedParquetSink(_, nBuckets = 128)` for the bucketed
-      // layout, or a warehouse-backed implementation
-      sinkFactory: String => graft.sink.UpsertSink = new LocalParquetSink(_)): Map[String, Running] = {
+      // sink per table directory — default the manifest-committed snapshot
+      // table; pass e.g. `new SnapshotParquetSink(_, nBuckets = 128)` for a
+      // wider bucket layout, or a warehouse-backed implementation
+      sinkFactory: String => graft.sink.UpsertSink = new SnapshotParquetSink(_)): Map[String, Running] = {
     val specs = TableSpec.loadCsv(columnsPath)
     val discovered = discoverTables(spark, inputDir)
       .filter(t => include.isEmpty || include.contains(t))
@@ -103,7 +103,7 @@ object CdcOrchestrator {
       running: Map[String, Running] = Map.empty,
       logicalDeletes: Boolean = false,
       extraPk: Option[graft.model.ColSpec] = None,
-      sinkFactory: String => graft.sink.UpsertSink = new LocalParquetSink(_)): Map[String, Running] = {
+      sinkFactory: String => graft.sink.UpsertSink = new SnapshotParquetSink(_)): Map[String, Running] = {
     val specs = TableSpec.loadCsv(columnsPath)
     val discovered = Inspection.tables(consumerFactory().batch(spark))
       .collect().map(_.getString(0)).toSeq.sorted
@@ -162,7 +162,7 @@ object CdcOrchestrator {
       running: Option[SharedRunning] = None,
       logicalDeletes: Boolean = false,
       extraPk: Option[graft.model.ColSpec] = None,
-      sinkFactory: String => graft.sink.UpsertSink = new LocalParquetSink(_)): SharedRunning = {
+      sinkFactory: String => graft.sink.UpsertSink = new SnapshotParquetSink(_)): SharedRunning = {
     val specs = TableSpec.loadCsv(columnsPath)
     val discovered = Inspection.tables(consumerFactory().batch(spark))
       .collect().map(_.getString(0)).toSeq.sorted

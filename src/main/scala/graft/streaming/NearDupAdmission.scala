@@ -18,7 +18,7 @@ import graft.sink.{DeleteMode, UpsertSink}
   * accumulated corpus is, the property that makes dedup-at-ingest viable
   * at crawl scale. (The estimate join touches the signature store only on
   * the candidate ids — at 100 TB both stores are bucketed on their keys,
-  * e.g. [[graft.sink.PartitionedParquetSink]], so both joins co-locate.)
+  * e.g. [[graft.sink.SnapshotParquetSink]], so both joins co-locate.)
   *
   * Crash/replay safety is inherited from the sinks' last-write-wins merge:
   * stores are keyed by (doc_id, band) / (doc_id, hi) with seq = batch id,
@@ -64,9 +64,6 @@ object NearDupAdmission {
           def readStore(s: UpsertSink, cols: Seq[String]): Option[DataFrame] =
             try Some(s.read(spark, DeleteMode.Hard).select(cols.map(col): _*))
             catch {
-              case e: org.apache.spark.sql.AnalysisException
-                  if e.getMessage.contains("PATH_NOT_FOUND") ||
-                    e.getMessage.contains("Path does not exist") => None
               case e: RuntimeException
                   if e.getMessage != null &&
                     e.getMessage.contains("no snapshot published") => None

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.cdc.CdcPipeline
 import graft.model.TableSpec
 import graft.queries.Cdc
-import graft.sink.{DeleteMode, LocalParquetSink}
+import graft.sink.{DeleteMode, SnapshotParquetSink}
 import graft.streaming.{CdcStream, CdcStreamSpec, SchemaEvolution, StartFrom}
 
 /** Streaming harness (SURVEY §5.4): file-source replay of the CDC fixtures,
@@ -57,7 +57,7 @@ class CdcStreamingSpec extends SparkSpec {
     val sinkDir = tmpDir("cdc_sink") + "/orders"
     val chunks = fixtureLines.grouped(600).toSeq
     writeChunk(in, "part0.jsonl", chunks.head)
-    val sink = new LocalParquetSink(sinkDir)
+    val sink = new SnapshotParquetSink(sinkDir)
     val spec = CdcStreamSpec(in, ckpt, ordersSpec, sink)
     val q = CdcStream.start(spark, spec)
     try {
@@ -77,7 +77,7 @@ class CdcStreamingSpec extends SparkSpec {
     val sinkDir = tmpDir("cdc_sink") + "/orders"
     val chunks = fixtureLines.grouped(900).toSeq
     writeChunk(in, "part0.jsonl", chunks.head)
-    val sink = new LocalParquetSink(sinkDir)
+    val sink = new SnapshotParquetSink(sinkDir)
     val spec = CdcStreamSpec(in, ckpt, ordersSpec, sink)
 
     val q1 = CdcStream.start(spark, spec)
@@ -103,7 +103,7 @@ class CdcStreamingSpec extends SparkSpec {
     writeChunk(snapIn, "full.jsonl", fixtureLines.take(1200))
     writeChunk(in, "tail.jsonl", fixtureLines.drop(900))
     val snapshot = CdcPipeline.materialize(CdcPipeline.readBatch(spark, snapIn), ordersSpec)
-    val sink = new LocalParquetSink(sinkDir)
+    val sink = new SnapshotParquetSink(sinkDir)
     val q = CdcStream.bootstrap(spark, CdcStreamSpec(in, ckpt, ordersSpec, sink), snapshot)
     try q.processAllAvailable() finally { q.stop(); q.awaitTermination() }
     val got = sink.read(spark, DeleteMode.Hard).select("primary_key")
@@ -114,7 +114,6 @@ class CdcStreamingSpec extends SparkSpec {
   }
 
   test("snapshot sink streams: micro-batch commits version history, replay stays exactly-once") {
-    import graft.sink.SnapshotParquetSink
     val in = tmpDir("cdc_in"); val ckpt = tmpDir("cdc_ckpt")
     val sinkDir = tmpDir("cdc_snap") + "/orders"
     val chunks = fixtureLines.grouped(900).toSeq
@@ -152,8 +151,8 @@ class CdcStreamingSpec extends SparkSpec {
     // view without waiting for every replica to catch up.
     val inO = tmpDir("cr_in_o"); val inC = tmpDir("cr_in_c")
     val full = tmpDir("cr_full")
-    val sinkO = new LocalParquetSink(tmpDir("cr_s_o") + "/t")
-    val sinkC = new LocalParquetSink(tmpDir("cr_s_c") + "/t")
+    val sinkO = new SnapshotParquetSink(tmpDir("cr_s_o") + "/t")
+    val sinkC = new SnapshotParquetSink(tmpDir("cr_s_c") + "/t")
     val customersSpec = TableSpec.loadCsv(Cdc.Fixtures.columnsPath)("shop.customers")
     writeChunk(inO, "all.jsonl", fixtureLines)
     writeChunk(inC, "part0.jsonl", fixtureLines.take(901))
@@ -162,7 +161,7 @@ class CdcStreamingSpec extends SparkSpec {
       val q = CdcStream.start(spark, CdcStreamSpec(in, tmpDir("cr_ck") + s"/${sp.fullTableName}", sp, sink))
       try q.processAllAvailable() finally { q.stop(); q.awaitTermination() }
     }
-    def head(sink: LocalParquetSink): Long =
+    def head(sink: SnapshotParquetSink): Long =
       sink.read(spark, DeleteMode.Logical).agg(max("seq")).head().getLong(0)
     val heads = Map("shop.orders" -> head(sinkO), "shop.customers" -> head(sinkC))
     val cut = CdcPipeline.consistentCutoff(heads)
@@ -237,7 +236,7 @@ class CdcStreamingSpec extends SparkSpec {
     val chunks = fixtureLines.grouped(900).toSeq
     val src = new MemoryCdcSource(spark)
     src.add(chunks.head)
-    val sink = new LocalParquetSink(sinkDir)
+    val sink = new SnapshotParquetSink(sinkDir)
     val spec = CdcStreamSpec("", ckpt, ordersSpec, sink, source = Some(src))
     val q = CdcStream.start(spark, spec)
     try {
@@ -263,7 +262,7 @@ class CdcStreamingSpec extends SparkSpec {
     val sinkDir = tmpDir("cdc_ksink") + "/orders"
     val src = new KafkaLikeSource(spark, nPartitions = 2)
     fixtureLines.zipWithIndex.foreach { case (l, i) => src.publish(i % 2, l) }
-    val sink = new LocalParquetSink(sinkDir)
+    val sink = new SnapshotParquetSink(sinkDir)
     val spec = CdcStreamSpec("", ckpt, ordersSpec, sink, source = Some(src))
     val q = CdcStream.start(spark, spec)
     try {
@@ -283,7 +282,7 @@ class CdcStreamingSpec extends SparkSpec {
     val sinkDir = tmpDir("cdc_krsink") + "/orders"
     val src = new KafkaLikeSource(spark, nPartitions = 2)
     fixtureLines.zipWithIndex.foreach { case (l, i) => src.publish(i % 2, l) }
-    val sink = new LocalParquetSink(sinkDir)
+    val sink = new SnapshotParquetSink(sinkDir)
     val spec = CdcStreamSpec("", ckpt, ordersSpec, sink, source = Some(src))
     val q = CdcStream.start(spark, spec)
     try {
@@ -310,13 +309,13 @@ class CdcStreamingSpec extends SparkSpec {
     assert(got == expected && got.nonEmpty)
   }
 
-  test("mid-batch crash over the partitioned sink: replayed batch + bucket restore = exactly-once") {
-    import graft.sink.PartitionedParquetSink
+  test("mid-batch crash over the snapshot sink: replayed batch over an unpublished commit = exactly-once") {
+    import spark.implicits._
     val in = tmpDir("cdc_in"); val ckpt = tmpDir("cdc_ckpt")
     val sinkDir = tmpDir("cdc_sink") + "/orders"
     val chunks = fixtureLines.grouped(900).toSeq
     writeChunk(in, "part0.jsonl", chunks.head)
-    val sink = new PartitionedParquetSink(sinkDir, nBuckets = 8)
+    val sink = new SnapshotParquetSink(sinkDir, nBuckets = 8)
     val spec = CdcStreamSpec(in, ckpt, ordersSpec, sink)
 
     val q1 = CdcStream.start(spark, spec)
@@ -335,23 +334,22 @@ class CdcStreamingSpec extends SparkSpec {
     // re-commit's rename fail as if another query owned the checkpoint
     new File(commits.last.getParentFile, s".${commits.last.getName}.crc").delete()
 
-    // ...and additionally interrupt the sink itself mid-overwrite: move one
-    // live bucket into the backup dir (the crash point after the pre-image
-    // copy, before the staged bucket landed) — recover() must restore it.
-    val liveBuckets = new File(sinkDir).listFiles().filter(_.getName.startsWith("__bucket="))
-    assert(liveBuckets.nonEmpty)
-    val backup = new File(sinkDir + ".backup")
-    backup.mkdirs()
-    java.nio.file.Files.move(liveBuckets.head.toPath,
-      backup.toPath.resolve(liveBuckets.head.getName))
+    // ...and additionally interrupt the sink itself mid-commit: a data root
+    // written but never published (the crash point between the data write
+    // and the manifest publish) — it must never surface, and the replay
+    // commits past it.
+    val orphanRoot = s"data/${java.util.UUID.randomUUID()}"
+    Seq("orphan").toDF("primary_key").write.parquet(s"$sinkDir/$orphanRoot/__bucket=0")
 
     chunks.tail.zipWithIndex.foreach { case (c, i) => writeChunk(in, s"part${i + 1}.jsonl", c) }
-    val q2 = CdcStream.start(spark, spec) // same checkpoint → replays, recovers, continues
+    val q2 = CdcStream.start(spark, spec) // same checkpoint → replays, continues
     try q2.processAllAvailable() finally { q2.stop(); q2.awaitTermination() }
 
     val got = sink.read(spark, DeleteMode.Hard).select("primary_key")
       .collect().map(_.getString(0)).toSet
     assert(got == expectedKeys(in))
+    assert(!SnapshotParquetSink.manifest(sinkDir, sink.currentVersion.get)._2.values
+      .exists(_.startsWith(orphanRoot)))
   }
 
   test("schema drift report: added, removed, and retyped columns by name") {
@@ -375,8 +373,8 @@ class CdcStreamingSpec extends SparkSpec {
   test("AtTime replay filters events before the start point (R18)") {
     val in = tmpDir("cdc_in")
     writeChunk(in, "all.jsonl", fixtureLines)
-    val sinkAll = new LocalParquetSink(tmpDir("s") + "/a")
-    val sinkReplay = new LocalParquetSink(tmpDir("s") + "/r")
+    val sinkAll = new SnapshotParquetSink(tmpDir("s") + "/a")
+    val sinkReplay = new SnapshotParquetSink(tmpDir("s") + "/r")
     CdcStream.backfill(spark, CdcStreamSpec(in, "", ordersSpec, sinkAll))
     // replay from the fixture's midpoint (seq 865 ≈ 2024-02-01 + 865 min)
     val mid = java.sql.Timestamp.from(java.time.Instant.parse("2024-02-01T00:00:00Z")
@@ -390,7 +388,7 @@ class CdcStreamingSpec extends SparkSpec {
 
   test("schema evolution: detect new column, backfill from firstSeen-1min, restart (R19/R23/R24)") {
     val in = tmpDir("cdc_in"); val ckpt = tmpDir("cdc_ckpt")
-    val sink = new LocalParquetSink(tmpDir("cdc_sink") + "/orders")
+    val sink = new SnapshotParquetSink(tmpDir("cdc_sink") + "/orders")
     // spec WITHOUT discount — the epoch-2 column is unknown to the pipeline
     val base = ordersSpec
     val withoutDiscount = base.copy(cols = base.cols.filterNot(_.name == "discount"))
@@ -416,7 +414,7 @@ class CdcStreamingSpec extends SparkSpec {
 
   test("type widening: refreshed catalog widens udts, full replay, restart (R23 extension)") {
     val in = tmpDir("widen_in"); val ckpt = tmpDir("widen_ckpt")
-    val sink = new LocalParquetSink(tmpDir("widen_sink") + "/orders")
+    val sink = new SnapshotParquetSink(tmpDir("widen_sink") + "/orders")
     // epoch 1 streams under the ORIGINAL catalog: qty smallint → LONG,
     // created datetime → TIMESTAMP
     writeChunk(in, "part0.jsonl", fixtureLines.take(1500))
@@ -693,7 +691,7 @@ class CdcStreamingSpec extends SparkSpec {
     val running = CdcOrchestrator.addNewTables(
       spark, in, Cdc.Fixtures.columnsPath, tmpDir("psink_orch_sink"), tmpDir("psink_orch_ckpt"),
       include = Seq("shop.orders"), exclude = Nil,
-      sinkFactory = new graft.sink.PartitionedParquetSink(_, nBuckets = 8))
+      sinkFactory = new graft.sink.SnapshotParquetSink(_, nBuckets = 8))
     try {
       running.values.foreach(_.query.processAllAvailable())
       val got = running("shop.orders").spec.sink.read(spark, DeleteMode.Hard)
@@ -706,10 +704,10 @@ class CdcStreamingSpec extends SparkSpec {
     import graft.streaming.CdcOrchestrator
     val in = tmpDir("ssink_orch_in")
     writeChunk(in, "all.jsonl", fixtureLines)
+    // the default sinkFactory: a SnapshotParquetSink per table
     val running = CdcOrchestrator.addNewTables(
       spark, in, Cdc.Fixtures.columnsPath, tmpDir("ssink_orch_sink"), tmpDir("ssink_orch_ckpt"),
-      include = Seq("shop.orders"), exclude = Nil,
-      sinkFactory = new graft.sink.SnapshotParquetSink(_, nBuckets = 8))
+      include = Seq("shop.orders"), exclude = Nil)
     try {
       running.values.foreach(_.query.processAllAvailable())
       val got = running("shop.orders").spec.sink.read(spark, DeleteMode.Hard)
@@ -720,7 +718,7 @@ class CdcStreamingSpec extends SparkSpec {
 
   test("CdcStream watermark advances with event time and preserves results") {
     val in = tmpDir("cdcwm_in"); val ckpt = tmpDir("cdcwm_ckpt")
-    val sink = new LocalParquetSink(tmpDir("cdcwm_sink") + "/orders")
+    val sink = new SnapshotParquetSink(tmpDir("cdcwm_sink") + "/orders")
     val chunks = fixtureLines.grouped(900).toSeq
     writeChunk(in, "part0.jsonl", chunks.head)
     val spec = CdcStreamSpec(in, ckpt, ordersSpec, sink,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
 import graft.llm.{Dedup, TextAnalysis}
-import graft.sink.{DeleteMode, LocalParquetSink, SnapshotParquetSink, TextIndexStore}
+import graft.sink.{DeleteMode, SnapshotParquetSink, TextIndexStore}
 import graft.streaming.{NearDupAdmission, TextIngest}
 
 /** The exactly-once END-TO-END proof for the store family: the full
@@ -89,9 +89,9 @@ class ExactlyOncePipelineSpec extends SparkSpec {
     // ---- streaming side: three id-ordered micro-batches, crash after two
     val in = tmpDir("e2e_in")
     val ckptNda = tmpDir("e2e_ck_nda"); val ckptIdx = tmpDir("e2e_ck_idx")
-    val bandStore = new LocalParquetSink(tmpDir("e2e_bands") + "/t")
-    val sigStore = new LocalParquetSink(tmpDir("e2e_sigs") + "/t")
-    val dropSink = new LocalParquetSink(tmpDir("e2e_drops") + "/t")
+    val bandStore = new SnapshotParquetSink(tmpDir("e2e_bands") + "/t")
+    val sigStore = new SnapshotParquetSink(tmpDir("e2e_sigs") + "/t")
+    val dropSink = new SnapshotParquetSink(tmpDir("e2e_drops") + "/t")
     val index = new TextIndexStore(tmpDir("e2e_idx") + "/s")
 
     def chunkLines(lo: Long, hi: Long): Seq[String] =

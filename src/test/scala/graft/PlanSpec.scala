@@ -162,8 +162,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("directory-partitioned layout prunes at planning: one partition scanned of six") {
-    // The storage-layout contract PartitionedParquetSink sells: an equality
-    // predicate on the partition column must resolve to PartitionFilters
+    // The storage-layout contract directory-partitioned tables rely on: an
+    // equality predicate on the partition column must resolve to PartitionFilters
     // (directory pruning — Spark never lists the other partitions' files),
     // not PushedFilters (row-group skipping inside files already opened).
     val tmp = java.nio.file.Files.createTempDirectory("graft_prune").toString

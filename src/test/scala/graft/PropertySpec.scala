@@ -5,7 +5,7 @@ import graft.types.UdtMapper
 
 /** Property-based coverage (SURVEY §5.3): the R3 calculated-field round
   * trip, udt-mapper totality, and upsert order-invariance (the latter also
-  * exercised with concrete permutations in LocalParquetSinkSpec).
+  * exercised with concrete batch orders in SnapshotParquetSinkSpec).
   */
 class PropertySpec extends SparkSpec {
 

@@ -3,12 +3,12 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
-import graft.sink.{DeleteMode, LocalParquetSink, SnapshotParquetSink}
+import graft.sink.{DeleteMode, SnapshotParquetSink}
 
-/** The snapshot sink must agree with LocalParquetSink on every merge
-  * semantic while adding what the manifest layer is for: atomic commits
-  * (orphan data never surfaces), time travel, manifest reuse for untouched
-  * buckets, and vacuum.
+/** The snapshot sink must keep the upsert contract (last-write-wins by seq,
+  * tombstoned deletes, idempotent replay) while adding what the manifest
+  * layer is for: atomic commits (orphan data never surfaces), time travel,
+  * manifest reuse for untouched buckets, and vacuum.
   */
 class SnapshotParquetSinkSpec extends SparkSpec {
   import spark.implicits._
@@ -21,23 +21,37 @@ class SnapshotParquetSinkSpec extends SparkSpec {
       .map(r => r.getAs[String]("primary_key") ->
         (r.getAs[Long]("seq"), r.getAs[String]("val"))).toMap
 
+  // The name predates the single-bucket layout taking over from a separate
+  // whole-table sink: `local` below is that layout (every merge rewrites the
+  // whole table), and the bucketed table must agree with it.
   test("agrees with LocalParquetSink across an insert/update/delete sequence") {
-    val snap = new SnapshotParquetSink(tmpDir("ssink") + "/t", nBuckets = 4)
-    val local = new LocalParquetSink(tmpDir("lsink") + "/t")
     val batches = Seq(
       batch(("a", 0, "a0", false), ("b", 1, "b0", false), ("c", 2, "c0", false)),
       batch(("a", 3, "a1", false), ("b", 4, "del", true)),
       batch(("b", 2, "stale", false)), // stale post-delete event: tombstone wins
       batch(("d", 5, "d0", false)))
-    batches.foreach { b =>
-      snap.merge(b, Seq("primary_key"), "seq", "is_delete")
-      local.merge(b, Seq("primary_key"), "seq", "is_delete")
+    // last-write-wins by seq makes the final state independent of the
+    // order the batches arrive in
+    val orders = Seq(batches, batches.reverse, new scala.util.Random(7).shuffle(batches))
+    for ((order, i) <- orders.zipWithIndex) {
+      val snap = new SnapshotParquetSink(tmpDir("ssink") + "/t", nBuckets = 4)
+      order.foreach(b => snap.merge(b, Seq("primary_key"), "seq", "is_delete"))
+      assert(state(snap, DeleteMode.Hard) ==
+        Map("a" -> (3L, "a1"), "c" -> (2L, "c0"), "d" -> (5L, "d0")), s"order $i")
+      assert(snap.versions == Seq(0L, 1L, 2L, 3L))
+      val logical = snap.read(spark, DeleteMode.Logical).collect()
+        .map(r => r.getAs[String]("primary_key") ->
+          (r.getAs[Long]("seq"), r.getAs[Boolean]("is_deleted"))).toMap
+      assert(logical == Map("a" -> (3L, false), "b" -> (4L, true),
+        "c" -> (2L, false), "d" -> (5L, false)), s"order $i")
+      // a NEWER event resurrects the tombstoned key
+      snap.merge(batch(("b", 7, "b1", false)), Seq("primary_key"), "seq", "is_delete")
+      assert(state(snap, DeleteMode.Hard)("b") == ((7L, "b1")))
     }
-    assert(state(snap, DeleteMode.Hard) == state(local, DeleteMode.Hard))
-    assert(snap.versions == Seq(0L, 1L, 2L, 3L))
-    val logical = snap.read(spark, DeleteMode.Logical).collect()
-      .map(r => r.getAs[String]("primary_key") -> r.getAs[Boolean]("is_deleted")).toMap
-    assert(logical("b") && !logical("a"))
+    val local = new SnapshotParquetSink(tmpDir("lsink") + "/t", nBuckets = 1)
+    batches.foreach(b => local.merge(b, Seq("primary_key"), "seq", "is_delete"))
+    assert(state(local, DeleteMode.Hard) ==
+      Map("a" -> (3L, "a1"), "c" -> (2L, "c0"), "d" -> (5L, "d0")))
   }
 
   test("time travel: every committed version stays readable until vacuumed") {
@@ -603,6 +617,12 @@ class SnapshotParquetSinkSpec extends SparkSpec {
       sink.merge(batch(("b", 1, "b0", false)), Seq("val"), "seq", "is_delete")
     }
     assert(e2.getMessage.contains("committed"))
+    // ...and so is a different last-write-wins order column
+    val e3 = intercept[IllegalArgumentException] {
+      sink.merge(batch(("b", 1, "b0", false)).withColumn("seq2", $"seq"),
+        Seq("primary_key"), "seq2", "is_delete")
+    }
+    assert(e3.getMessage.contains("order column"))
     // compaction carries the recorded keys forward
     sink.compact(spark)
     assert(SnapshotParquetSink.manifestKeys(dir, 1L) == Seq("primary_key"))
@@ -904,6 +924,11 @@ class SnapshotParquetSinkSpec extends SparkSpec {
       s"SELECT primary_key, change FROM table_changes('$dir', 0, 1)")
       .collect().map(r => (r.getString(0), r.getString(1))).toMap
     assert(feed == Map("k0" -> "update"))
+    // once vacuum drops v0, the oldest kept version has no predecessor:
+    // every entry it lists counts as rewritten
+    sink.vacuum(keepLast = 1, minOrphanAgeMs = 0L)
+    val kept = sink.history(spark).collect()
+    assert(kept.length == 1 && kept(0).getLong(0) == 1L && kept(0).getInt(4) == kept(0).getInt(3))
   }
 
   test("rebucket: partition-count evolution preserves content; history keeps its layout") {
@@ -1099,11 +1124,22 @@ class SnapshotParquetSinkSpec extends SparkSpec {
     val v0 = sink.readAt(spark, 0L, DeleteMode.Hard)
     assert(v0.count() == 16L)
     assert(v0.schema("num").dataType == org.apache.spark.sql.types.LongType)
+    // a replayed merge after the replace still orders deterministically:
+    // same seq as the loaded row, the newer commit wins the tie
+    sink.merge(batch(("k0", 1L, "k0-X", false)).withColumn("num", lit("9")),
+      Seq("primary_key"), "seq", "is_delete")
+    assert(state(sink, DeleteMode.Hard) == Map("k0" -> ((1L, "k0-X"))))
     // key-contract guard still applies
     val e = intercept[IllegalArgumentException] {
       sink.replaceAll(batch(("x", 9L, "x0", false)), Seq("val"), "seq", "is_delete")
     }
     assert(e.getMessage.contains("committed"))
+    // an empty batch would publish an unreadable empty table — refused
+    val empty = intercept[IllegalArgumentException] {
+      sink.replaceAll(batch(("x", 9L, "x0", false)).limit(0),
+        Seq("primary_key"), "seq", "is_delete")
+    }
+    assert(empty.getMessage.contains("empty batch"))
   }
 
   test("manifest-recorded schema: resolution is metadata-only, evolution unions, versions pin") {

@@ -166,7 +166,7 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("materialized aggregate: sink view converges to the batch aggregate across micro-batches") {
-    import graft.sink.{DeleteMode, LocalParquetSink}
+    import graft.sink.{DeleteMode, SnapshotParquetSink}
     import graft.streaming.MaterializedAgg
     val in = tmpDir("magg_in"); val ckpt = tmpDir("magg_ckpt")
     val sinkDir = tmpDir("magg_sink") + "/view"
@@ -175,7 +175,7 @@ class StreamingOpsSpec extends SparkSpec {
       """{"event_id":1,"event_type":"view","value":10.0,"ts":"2024-01-01T10:00:00Z"}""",
       """{"event_id":2,"event_type":"view","value":5.0,"ts":"2024-01-01T10:05:00Z"}""",
       """{"event_id":3,"event_type":"click","value":1.0,"ts":"2024-01-01T10:06:00Z"}"""))
-    val sink = new LocalParquetSink(sinkDir)
+    val sink = new SnapshotParquetSink(sinkDir)
     val q = MaterializedAgg.start(
       spark.readStream.schema(schema).json(in),
       keyCols = Seq("event_type"), valueCol = "value",
@@ -209,7 +209,7 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("materialized join: per-batch incremental enrichment, dim updates apply to future facts") {
-    import graft.sink.{DeleteMode, LocalParquetSink}
+    import graft.sink.{DeleteMode, SnapshotParquetSink}
     import graft.streaming.MaterializedJoin
     val in = tmpDir("mj_in"); val ckpt = tmpDir("mj_ckpt")
     val sinkDir = tmpDir("mj_sink") + "/view"
@@ -220,7 +220,7 @@ class StreamingOpsSpec extends SparkSpec {
       """{"fact_id":100,"dim_key":1,"amount":5.0}""",
       """{"fact_id":101,"dim_key":2,"amount":7.0}""",
       """{"fact_id":102,"dim_key":9,"amount":1.0}""")) // no dim row yet
-    val sink = new LocalParquetSink(sinkDir)
+    val sink = new SnapshotParquetSink(sinkDir)
     def view(): Map[Long, Option[String]] =
       sink.read(spark, DeleteMode.Hard).collect()
         .map(r => r.getAs[Long]("fact_id") -> Option(r.getAs[String]("tier"))).toMap
@@ -251,11 +251,11 @@ class StreamingOpsSpec extends SparkSpec {
     // the composition a real pipeline runs: the dimension is ITSELF a CDC
     // sink kept current by upsert merges — every micro-batch's dim() read
     // must see the state as of the latest completed merge
-    import graft.sink.{DeleteMode, LocalParquetSink}
+    import graft.sink.{DeleteMode, SnapshotParquetSink}
     import graft.streaming.MaterializedJoin
     val in = tmpDir("mjc_in"); val ckpt = tmpDir("mjc_ckpt")
-    val dimSink = new LocalParquetSink(tmpDir("mjc_dim") + "/dim")
-    val factSink = new LocalParquetSink(tmpDir("mjc_sink") + "/view")
+    val dimSink = new SnapshotParquetSink(tmpDir("mjc_dim") + "/dim")
+    val factSink = new SnapshotParquetSink(tmpDir("mjc_sink") + "/view")
     def dimBatch(rows: (Long, Long, String, Boolean)*) =
       rows.toSeq.toDF("dim_key", "dseq", "tier", "ddel")
     dimSink.merge(dimBatch((1L, 0L, "gold", false)), Seq("dim_key"), "dseq", "ddel")
@@ -292,11 +292,11 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("near-dup admission stream: cross-batch candidates come from the band store") {
-    import graft.sink.LocalParquetSink
+    import graft.sink.SnapshotParquetSink
     import graft.streaming.NearDupAdmission
     val in = tmpDir("nda_in"); val ckpt = tmpDir("nda_ckpt")
-    val bandStore = new LocalParquetSink(tmpDir("nda_bands") + "/t")
-    val sigStore = new LocalParquetSink(tmpDir("nda_sigs") + "/t")
+    val bandStore = new SnapshotParquetSink(tmpDir("nda_bands") + "/t")
+    val sigStore = new SnapshotParquetSink(tmpDir("nda_sigs") + "/t")
     val results = scala.collection.mutable.Map[Long, Map[(Long, Long), Double]]()
     val dup = "the quick brown fox jumps over the lazy dog"
     write(in, "b0.jsonl", Seq(
