@@ -152,6 +152,112 @@ object CommitLock {
   /** The active lock implementation for manifest publishes. */
   def current: CommitLock = impl
 
+  /** Losses an optimistic commit absorbs before [[retry]] gives up. */
+  private val MaxAttempts = 10
+
+  /** The publish step of every commit: creates `dst`'s parent, stages
+    * `body` under a unique `.tmp-<uuid>` name beside `dst` and publishes it
+    * through the [[current]] lock. True = this committer owns `dst` (a
+    * manifest body is installed in the [[readPublished]] cache, which also
+    * refreshes a stale entry left by a delete-and-recreate of the same
+    * path); false = another committer did first, and the staged file is
+    * deleted. The stage name is unique per call, so concurrent committers
+    * of one slot never overwrite each other's staged body — the winner
+    * publishes exactly what it wrote. `dbg` times the two steps as `write`
+    * and `publish`.
+    */
+  def publishFile(dst: Path, body: String, dbg: Option[Dbg] = None): Boolean = {
+    def timed[A](tag: String)(f: => A): A = dbg.fold(f)(_(tag)(f))
+    Dfs.mkdirs(dst.getParent)
+    val tmp = new Path(dst.getParent, s".tmp-${java.util.UUID.randomUUID()}")
+    timed("write")(Dfs.writeUtf8(tmp, body))
+    val won = timed("publish")(current.publishOntoAbsent(tmp, dst))
+    val lines = body.split('\n').toSeq
+    if (!won) Dfs.delete(tmp)
+    else if (complete(lines)) published.put(dst.toString, lines)
+    won
+  }
+
+  /** Deletes the `.tmp-*` stages in `dir` older than `minAgeMs` — what a
+    * crash between [[publishFile]]'s stage and publish leaves behind
+    * (a lost race cleans its own stage at once).
+    */
+  def sweepStaged(dir: Path, minAgeMs: Long): Unit = {
+    val now = System.currentTimeMillis()
+    Dfs.list(dir)
+      .filter(st => st.getPath.getName.startsWith(".tmp-"))
+      .filter(st => now - st.getModificationTime >= minAgeMs)
+      .foreach(st => Dfs.delete(st.getPath))
+  }
+
+  /** Bounded path → lines cache of published manifests (table versions,
+    * catalog cuts). A published manifest is IMMUTABLE (publish is
+    * put-if-absent), so a hit can never be stale within a log's lifetime;
+    * the two mutation edges are handled explicitly — [[publishFile]]
+    * installs the body it won with, and vacuums [[evictPublished]] what
+    * they drop. Commits re-read the SAME manifest ~a dozen times (layout
+    * guard, keys, seqcol, schema, maxseq, stats, blooms, skip-cols,
+    * entries); locally that is parse churn, on an object store it is a
+    * dozen GETs per commit.
+    */
+  private val published =
+    java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[String, Seq[String]](64, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[String, Seq[String]]): Boolean =
+          size() > 512
+      })
+
+  /** A manifest body is complete once it carries its `version=` line. */
+  private def complete(lines: Seq[String]): Boolean =
+    lines.exists(_.startsWith("version="))
+
+  /** The lines of the published manifest at `p`, through the cache. */
+  def readPublished(p: Path): Seq[String] = {
+    val hit = published.get(p.toString)
+    if (hit != null) hit
+    else {
+      val lines = Dfs.readUtf8(p).split('\n').toSeq
+      // cache only a COMPLETE body: under a put-style commit lock a racing
+      // reader can observe the file before its content — that read must
+      // stay transient (the caller fails/retries as before), never become
+      // a pinned empty manifest
+      if (complete(lines)) published.put(p.toString, lines)
+      lines
+    }
+  }
+
+  /** Drops `p` from the published-manifest cache (its file was deleted). */
+  def evictPublished(p: Path): Unit = { published.remove(p.toString); () }
+
+  /** The retry policy of every optimistic commit: runs `attempt(n)` for
+    * n = 1, 2, … until it returns Some (it published), and fails with
+    * "`what` lost the race N times at `dir`" on the [[MaxAttempts]]th
+    * loss. After any other loss `rebased()` decides how to go on: true =
+    * the loss was absorbed without recomputing (merge republishing the
+    * same files over a disjoint winner), so the next attempt runs at once;
+    * false = sleep a jittered 10..100·n ms first — two writers in lockstep
+    * (each commit takes about as long as the other's) can otherwise starve
+    * one side for many consecutive versions.
+    */
+  def retry[A](what: String, dir: String, rebased: () => Boolean = () => false)(
+      attempt: Int => Option[A]): A = {
+    var attempts = 0
+    var out = Option.empty[A]
+    while (out.isEmpty) {
+      attempts += 1
+      out = attempt(attempts)
+      if (out.isEmpty) {
+        if (attempts >= MaxAttempts)
+          sys.error(s"$what lost the race $attempts times at $dir")
+        if (!rebased())
+          Thread.sleep(java.util.concurrent.ThreadLocalRandom.current()
+            .nextLong(10L, 100L * attempts))
+      }
+    }
+    out.get
+  }
+
   /** Swap the publish implementation process-wide (a deployment choice,
     * made once at startup next to the filesystem configuration — e.g.
     * `ObjectStoreCommitLock` when tables live on s3a). Returns the

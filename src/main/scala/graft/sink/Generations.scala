@@ -104,18 +104,12 @@ private[graft] object Generations {
     */
   def publish(dir: String, ng: Long, what: String,
       watermark: Option[Long] = None, floor: Option[Long] = None): Unit = {
-    Dfs.mkdirs(new HPath(s"$dir/gens"))
-    val tmp = new HPath(s"$dir/gens", s".tmp-$ng")
     val body = s"gen=$ng\n" + watermark.map(w => s"watermark=$w\n").getOrElse("") +
       floor.map(f => s"floor=$f\n").getOrElse("")
-    Dfs.writeUtf8(tmp, body)
-    val won = graft.engine.CommitLock.current.publishOntoAbsent(
-      tmp, new HPath(s"$dir/gens", f"v$ng%08d.manifest"))
-    if (!won) {
-      Dfs.delete(tmp)
+    if (!graft.engine.CommitLock.publishFile(
+        new HPath(s"$dir/gens", f"v$ng%08d.manifest"), body))
       sys.error(s"$what lost the generation-$ng publish race at $dir — " +
         "another maintainer ran concurrently; re-run against its result")
-    }
   }
 
   /** The committed batch dirs a reader (or the next compaction) of one

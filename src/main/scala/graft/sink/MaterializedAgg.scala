@@ -806,7 +806,7 @@ final class MaterializedAgg(
     *      group's extremum) recompute from the source snapshot restricted
     *      to them — the only O(source-scan) step, skipped entirely when
     *      the at-risk set is empty.
-    *   4. one guarded merge ([[SnapshotParquetSink.mergeGuarded]]) ships
+    *   4. one guarded merge ([[SnapshotParquetSink.mergeGuardedHinted]]) ships
     *      the ABSOLUTE folded rows; a concurrent refresher moving the
     *      applied head throws FoldBaseConflict and this refresh re-reads
     *      and retries (same protocol as the delta regime).

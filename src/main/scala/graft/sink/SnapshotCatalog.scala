@@ -80,25 +80,13 @@ final class SnapshotCatalog(dir: String, epochCarryMinVersions: Int = 64) {
   private def manifestPath(v: Long): HPath =
     new HPath(catalogDir, f"v$v%08d.manifest")
 
-  /** Published catalog cuts are immutable (rename-onto-absent), so their
-    * lines cache like table manifests do ([[SnapshotParquetSink]]'s cache
-    * rationale): every commit re-reads the base cut for pin/epoch
-    * carry-forward, every seq-aligned read re-reads its cut — locally
-    * parse churn, on an object store a GET per call. Commit installs the
-    * fresh body; expiry evicts.
+  /** Published catalog cuts are immutable, so their lines cache like table
+    * manifests do ([[graft.engine.CommitLock.readPublished]]): every commit
+    * re-reads the base cut for pin/epoch carry-forward, every seq-aligned
+    * read re-reads its cut. Commit installs the fresh body; expiry evicts.
     */
-  private def cutLines(v: Long): Seq[String] = {
-    val k = (dir, v)
-    val hit = SnapshotCatalog.cutCache.get(k)
-    if (hit != null) hit
-    else {
-      val lines = Dfs.readUtf8(manifestPath(v)).split('\n').toSeq
-      // complete bodies only — a put-style lock can expose the file before
-      // its content; that read must stay transient, not cache
-      if (lines.exists(_.startsWith("version="))) SnapshotCatalog.cutCache.put(k, lines)
-      lines
-    }
-  }
+  private def cutLines(v: Long): Seq[String] =
+    graft.engine.CommitLock.readPublished(manifestPath(v))
 
   /** Member table handle — tables live under the catalog dir by name. */
   private def validName(name: String): Unit =
@@ -194,10 +182,7 @@ final class SnapshotCatalog(dir: String, epochCarryMinVersions: Int = 64) {
       require(Dfs.exists(SnapshotParquetSink.manifestPath(s"$dir/$name", tv)),
         s"cannot pin $name@v$tv — that table version is not published")
     })
-    Dfs.mkdirs(catalogDir)
-    var attempts = 0
-    while (true) {
-      attempts += 1
+    graft.engine.CommitLock.retry("catalog commit", dir) { _ =>
       val retained = dbg("versions")(versions)
       val base = retained.lastOption
       val version = base.map(_ + 1L).getOrElse(0L)
@@ -232,25 +217,14 @@ final class SnapshotCatalog(dir: String, epochCarryMinVersions: Int = 64) {
           at >= oldestRetained || version - at <= epochCarryMinVersions.toLong }
       val allEpochs = carriedEpochs ++
         epoch.map { case (w, b) => w -> (b, version) }
-      val commitId = java.util.UUID.randomUUID().toString
-      val tmp = new HPath(catalogDir, s".tmp-$commitId")
       val body = (s"version=$version" +:
         (allPins.toSeq.sortBy(_._1).map { case (n, tv) => s"t $n $tv" } ++
           allEpochs.toSeq.sortBy(_._1).map { case (w, (b, at)) => s"e $w $b $at" }))
         .mkString("", "\n", "\n")
-      dbg("write")(Dfs.writeUtf8(tmp, body))
       // same pluggable commit seam as the table manifests (LogStore pattern)
-      if (dbg("publish")(graft.engine.CommitLock.current.publishOntoAbsent(tmp, manifestPath(version)))) {
-        SnapshotCatalog.cutCache.put((dir, version), body.split('\n').toSeq)
-        return version
-      }
-      Dfs.delete(tmp)
-      if (attempts >= 10)
-        sys.error(s"catalog commit lost the race $attempts times at $dir")
-      Thread.sleep(java.util.concurrent.ThreadLocalRandom.current()
-        .nextLong(10L, 100L * attempts))
+      Option.when(graft.engine.CommitLock.publishFile(manifestPath(version), body,
+        Some(dbg)))(version)
     }
-    -1L // unreachable
   }
 
   /** Pins each listed table at its CURRENT published version — the normal
@@ -433,14 +407,9 @@ final class SnapshotCatalog(dir: String, epochCarryMinVersions: Int = 64) {
     val drop = vs.dropRight(keepLast)
     drop.foreach { v =>
       Dfs.delete(manifestPath(v))
-      SnapshotCatalog.cutCache.remove((dir, v))
-      ()
+      graft.engine.CommitLock.evictPublished(manifestPath(v))
     }
-    val now = System.currentTimeMillis()
-    Dfs.list(catalogDir)
-      .filter(st => st.getPath.getName.startsWith(".tmp-"))
-      .filter(st => now - st.getModificationTime >= minOrphanAgeMs)
-      .foreach(st => Dfs.delete(st.getPath))
+    graft.engine.CommitLock.sweepStaged(catalogDir, minOrphanAgeMs)
     drop.size
   }
 }
@@ -454,14 +423,4 @@ object SnapshotCatalog {
     */
   private[graft] def inParallel[A, B](items: Seq[A])(f: A => B): Seq[B] =
     SnapshotParquetSink.inParallel(items)(f)
-
-  // bounded (catalogDir, version) → cut lines; see cutLines for the
-  // immutability argument
-  private[sink] val cutCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long), Seq[String]](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long), Seq[String]]): Boolean =
-          size() > 256
-      })
 }

@@ -7,47 +7,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Dfs
 
-/** Snapshot-isolated MERGE sink over immutable parquet files — the
-  * table-format layer (the pattern Delta Lake / Apache Iceberg use): data
-  * files are written once and never modified; a commit is the ATOMIC
-  * publication of a new manifest that lists, per hash bucket, the file
-  * holding that bucket's current state. Readers resolve the highest
-  * published manifest, so they always see a complete committed snapshot:
-  *
-  *   - NO crash window: a crash anywhere before the manifest publish leaves
-  *     orphan data files and an intact table at the previous version — no
-  *     backup/restore protocol needed;
-  *   - incremental merges: unaffected buckets carry their manifest entries
-  *     forward untouched — merge cost is O(affected fraction of the table);
-  *     `nBuckets = 1` makes every merge a whole-table rewrite;
-  *   - time travel for free: every previous manifest remains readable
-  *     (`readAt`) until `vacuum` expires it;
-  *   - concurrent-writer safety: the manifest publish is the optimistic
-  *     lock — publishing version N+1 fails if another writer got there
-  *     first, and the merge recomputes against the new state and retries.
-  *
-  * All metadata and deletes go through the Hadoop `FileSystem` API
-  * ([[graft.engine.Dfs]]), so the same table runs on local disk in tests
-  * and HDFS/object storage on a cluster; the commit lock is
-  * [[Dfs.renameOntoAbsent]] (rename with `Options.Rename.NONE` — atomic
-  * fail-if-exists on HDFS, conditional-put on stores that support it),
-  * not a POSIX hard link.
-  *
-  * Layout under `dir`:
-  * {{{
-  *   data/<commit-uuid>/__bucket=<b>/part-*.parquet   immutable
-  *   manifests/v<%08d>.manifest                       text, atomic publish
-  * }}}
-  *
-  * Manifest format (line-oriented, no parser dependency):
-  * `version=N`, `nBuckets=B`, `keys=...`, `maxseq=S` (the table's applied
-  * head seq — monotone; what [[SnapshotCatalog.commitAligned]] reads),
-  * then one `b <bucket> <relative-path>` per
-  * bucket present. Merge semantics (last-write-wins by seq, `__gen`
-  * tie-break = the committing version, tombstoned deletes) implement the
-  * [[UpsertSink]] contract; `__gen` strictly increases per commit, so
-  * replaying a batch is idempotent and out-of-order-safe.
-  */
 /** Manifest-format and bucket-routing primitives, shared between the Scala
   * sink API and the DSv2 read path ([[graft.sources.SnapshotTableProvider]])
   * so neither re-learns the layout.
@@ -142,18 +101,26 @@ object SnapshotParquetSink {
     * table's skipping configuration on that gap.
     */
   def declaredStatsCols(dir: String, version: Long): Seq[String] =
-    headerCols(dir, version, "statscols=").getOrElse(
-      manifestStats(dir, version).values.flatMap(_.keys).toSeq.distinct.sorted)
+    headerCols(dir, version, "statscols=").getOrElse(colsOf(manifestStats(dir, version)))
 
   /** Bloom twin of [[declaredStatsCols]]. */
   def declaredBloomCols(dir: String, version: Long): Seq[String] =
-    headerCols(dir, version, "bloomcols=").getOrElse(
-      manifestBlooms(dir, version).values.flatMap(_.keys).toSeq.distinct.sorted)
+    headerCols(dir, version, "bloomcols=").getOrElse(colsOf(manifestBlooms(dir, version)))
+
+  /** The columns any bucket of a parsed `s`/`f` line map records, sorted. */
+  private[sink] def colsOf(perBucket: Map[Int, Map[String, Any]]): Seq[String] =
+    perBucket.values.flatMap(_.keys).toSeq.distinct.sorted
 
   private def headerCols(dir: String, version: Long,
       prefix: String): Option[Seq[String]] =
-    manifestLines(dir, version).collectFirst { case l if l.startsWith(prefix) =>
-      l.stripPrefix(prefix).split(',').toSeq.map(_.trim).filter(_.nonEmpty) }
+    header(manifestLines(dir, version), prefix).map(csvOf)
+
+  /** The value of the first `<key>` header line (`key` ends in `=`). */
+  private def header(lines: Seq[String], key: String): Option[String] =
+    lines.collectFirst { case l if l.startsWith(key) => l.stripPrefix(key) }
+
+  private def csvOf(v: String): Seq[String] =
+    v.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
 
   /** Absorbs the caller's delete-flag column into the internal
     * `__is_deleted` (null → false). When the flag column is literally named
@@ -258,48 +225,9 @@ object SnapshotParquetSink {
         n.stripPrefix("v").stripSuffix(".manifest").toLong -> t }
       .sortBy(_._1)
 
-  /** Bounded (dir, version) → lines cache. A published manifest is
-    * IMMUTABLE (publish is rename-onto-absent), so a hit can never be
-    * stale within a table's lifetime; the two mutation edges are handled
-    * explicitly — [[publish]] installs the fresh body (covering
-    * delete-tree-and-recreate fixtures reusing version numbers inside one
-    * JVM), and vacuum evicts what it drops. Commits re-read the SAME
-    * manifest ~a dozen times (layout guard, keys, seqcol, schema, maxseq,
-    * stats, blooms, skip-cols, entries); locally that is parse churn, on
-    * an object store it is a dozen GETs per commit.
-    */
-  private val manifestCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long), Seq[String]](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long), Seq[String]]): Boolean =
-          size() > 256
-      })
-
-  private[sink] def cacheManifest(dir: String, version: Long, body: String): Unit = {
-    manifestCache.put((dir, version), body.split('\n').toSeq)
-    ()
-  }
-
-  private[sink] def evictManifest(dir: String, version: Long): Unit = {
-    manifestCache.remove((dir, version))
-    ()
-  }
-
-  private def manifestLines(dir: String, version: Long): Seq[String] = {
-    val k = (dir, version)
-    val hit = manifestCache.get(k)
-    if (hit != null) hit
-    else {
-      val lines = Dfs.readUtf8(manifestPath(dir, version)).split('\n').toSeq
-      // cache only a COMPLETE body: under a put-style commit lock a racing
-      // reader can observe the file before its content — that read must
-      // stay transient (the caller fails/retries as before), never become
-      // a pinned empty manifest
-      if (lines.exists(_.startsWith("version="))) manifestCache.put(k, lines)
-      lines
-    }
-  }
+  /** `version`'s manifest lines, through the published-manifest cache. */
+  private def manifestLines(dir: String, version: Long): Seq[String] =
+    graft.engine.CommitLock.readPublished(manifestPath(dir, version))
 
   /** (declared nBuckets, bucket → path relative to `dir`) at `version`. */
   def manifest(dir: String, version: Long): (Int, Map[Int, String]) =
@@ -307,9 +235,7 @@ object SnapshotParquetSink {
 
   private def manifestOf(dir: String, version: Long,
       lines: Seq[String]): (Int, Map[Int, String]) = {
-    val n = lines.collectFirst { case l if l.startsWith("nBuckets=") =>
-      l.stripPrefix("nBuckets=").toInt }
-      .getOrElse(sys.error(s"manifest v$version at $dir lacks nBuckets"))
+    val n = header(lines, "nBuckets=").map(_.toInt).getOrElse(sys.error(s"manifest v$version at $dir lacks nBuckets"))
     val entries = lines.iterator.filter(_.startsWith("b ")).map { line =>
       val Array(_, b, rel) = line.split(" ", 3)
       b.toInt -> rel
@@ -333,11 +259,15 @@ object SnapshotParquetSink {
     */
   def manifestBlooms(dir: String,
       version: Long): Map[Int, Map[String, (String, String)]] =
-    manifestLines(dir, version)
-      .filter(_.startsWith("f "))
+    perBucketLines(manifestLines(dir, version), "f ")((ty, rel) => (ty, rel))
+
+  /** `<tag> <bucket> <col> <x> <y>` lines as bucket → column → (x, y). */
+  private def perBucketLines[V](lines: Seq[String], tag: String)(
+      value: (String, String) => V): Map[Int, Map[String, V]] =
+    lines.filter(_.startsWith(tag))
       .map { line =>
-        val Array(_, b, c, ty, rel) = line.split(" ", 5)
-        (b.toInt, c, (ty, rel))
+        val Array(_, b, c, x, y) = line.split(" ", 5)
+        (b.toInt, c, value(x, y))
       }
       .groupBy(_._1)
       .map { case (b, rows) => b -> rows.map(r => r._2 -> r._3).toMap }
@@ -355,10 +285,9 @@ object SnapshotParquetSink {
     */
   def manifestSchema(dir: String,
       version: Long): Option[org.apache.spark.sql.types.StructType] =
-    manifestLines(dir, version)
-      .collectFirst { case l if l.startsWith("schema=") =>
-        org.apache.spark.sql.types.DataType.fromJson(l.stripPrefix("schema="))
-          .asInstanceOf[org.apache.spark.sql.types.StructType] }
+    header(manifestLines(dir, version), "schema=").map(json =>
+      org.apache.spark.sql.types.DataType.fromJson(json)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
 
   /** The merge-key columns recorded at `version` (the columns the bucket
     * hash routes on). Empty for manifests written before keys were
@@ -368,10 +297,7 @@ object SnapshotParquetSink {
     keysOf(manifestLines(dir, version))
 
   private def keysOf(lines: Seq[String]): Seq[String] =
-    lines
-      .collectFirst { case l if l.startsWith("keys=") =>
-        l.stripPrefix("keys=").split(',').toSeq.map(_.trim).filter(_.nonEmpty) }
-      .getOrElse(Seq.empty)
+    header(lines, "keys=").map(csvOf).getOrElse(Seq.empty)
 
   /** The last-write-wins ORDER COLUMN recorded at `version` (`seqcol=`).
     * Written by merge/replaceAll from the caller's declared `seqCol` and
@@ -385,10 +311,7 @@ object SnapshotParquetSink {
     * fall back to the caller-supplied or default name.
     */
   def manifestSeqCol(dir: String, version: Long): Option[String] =
-    manifestLines(dir, version)
-      .collectFirst { case l if l.startsWith("seqcol=") =>
-        l.stripPrefix("seqcol=").trim }
-      .filter(_.nonEmpty)
+    header(manifestLines(dir, version), "seqcol=").map(_.trim).filter(_.nonEmpty)
 
   /** The applied-head seq recorded at `version`: the max `seqCol` this
     * table has merged up to and including that commit (monotone across
@@ -400,9 +323,7 @@ object SnapshotParquetSink {
     maxSeqOf(manifestLines(dir, version))
 
   private def maxSeqOf(lines: Seq[String]): Option[Long] =
-    lines
-      .collectFirst { case l if l.startsWith("maxseq=") =>
-        l.stripPrefix("maxseq=").toLong }
+    header(lines, "maxseq=").map(_.toLong)
 
   /** Per-bucket column statistics recorded at `version`:
     * bucket → column → (min, max) as decimal strings (timestamps as epoch
@@ -422,14 +343,8 @@ object SnapshotParquetSink {
     */
   def manifestStats(dir: String,
       version: Long): Map[Int, Map[String, (BigDecimal, BigDecimal)]] =
-    manifestLines(dir, version)
-      .filter(_.startsWith("s "))
-      .map { line =>
-        val Array(_, b, c, mn, mx) = line.split(" ", 5)
-        (b.toInt, c, (BigDecimal(mn), BigDecimal(mx)))
-      }
-      .groupBy(_._1)
-      .map { case (b, rows) => b -> rows.map(r => r._2 -> r._3).toMap }
+    perBucketLines(manifestLines(dir, version), "s ")((mn, mx) =>
+      (BigDecimal(mn), BigDecimal(mx)))
 
   /** Per-column shift that maps a `[0, hi-lo]` offset onto the FULL
     * [[ClusterBits]]-bit code range — exact integer arithmetic, no
@@ -504,7 +419,48 @@ object SnapshotParquetSink {
   }
 }
 
-/** `statsCols`: numeric/timestamp columns to record per-bucket min/max for
+/** Snapshot-isolated MERGE sink over immutable parquet files — the
+  * table-format layer (the pattern Delta Lake / Apache Iceberg use): data
+  * files are written once and never modified; a commit is the ATOMIC
+  * publication of a new manifest that lists, per hash bucket, the file
+  * holding that bucket's current state. Readers resolve the highest
+  * published manifest, so they always see a complete committed snapshot:
+  *
+  *   - NO crash window: a crash anywhere before the manifest publish leaves
+  *     orphan data files and an intact table at the previous version — no
+  *     backup/restore protocol needed;
+  *   - incremental merges: unaffected buckets carry their manifest entries
+  *     forward untouched — merge cost is O(affected fraction of the table);
+  *     `nBuckets = 1` makes every merge a whole-table rewrite;
+  *   - time travel for free: every previous manifest remains readable
+  *     (`readAt`) until `vacuum` expires it;
+  *   - concurrent-writer safety: the manifest publish is the optimistic
+  *     lock — publishing version N+1 fails if another writer got there
+  *     first, and the merge recomputes against the new state and retries.
+  *
+  * All metadata and deletes go through the Hadoop `FileSystem` API
+  * ([[graft.engine.Dfs]]), so the same table runs on local disk in tests
+  * and HDFS/object storage on a cluster; the commit lock is
+  * [[Dfs.renameOntoAbsent]] (rename with `Options.Rename.NONE` — atomic
+  * fail-if-exists on HDFS, conditional-put on stores that support it),
+  * not a POSIX hard link.
+  *
+  * Layout under `dir`:
+  * {{{
+  *   data/<commit-uuid>/__bucket=<b>/part-*.parquet   immutable
+  *   manifests/v<%08d>.manifest                       text, atomic publish
+  * }}}
+  *
+  * Manifest format (line-oriented, no parser dependency):
+  * `version=N`, `nBuckets=B`, `keys=...`, `maxseq=S` (the table's applied
+  * head seq — monotone; what [[SnapshotCatalog.commitAligned]] reads),
+  * then one `b <bucket> <relative-path>` per
+  * bucket present. Merge semantics (last-write-wins by seq, `__gen`
+  * tie-break = the committing version, tombstoned deletes) implement the
+  * [[UpsertSink]] contract; `__gen` strictly increases per commit, so
+  * replaying a batch is idempotent and out-of-order-safe.
+  *
+  * `statsCols`: numeric/timestamp columns to record per-bucket min/max for
   * in each commit's manifest — MANIFEST-LEVEL DATA SKIPPING (the Delta
   * data-skipping idea adapted to the incremental bucket layout): the DSv2
   * scan drops whole buckets whose recorded range excludes a pushed range/
@@ -536,13 +492,18 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
   require(clusterBy.size <= 2, "clusterBy supports 1 or 2 columns (Z-order is 2-D here)")
   require(clusterBy.map(_.name).distinct.size == clusterBy.size,
     "clusterBy columns must be distinct")
-  if (clusterBy.nonEmpty) {
-    require((nBuckets & (nBuckets - 1)) == 0 && nBuckets > 0,
-      s"a clustered table needs a power-of-two nBuckets (top Z-code bits " +
-        s"are the bucket), got $nBuckets")
-    require(java.lang.Long.numberOfTrailingZeros(nBuckets.toLong)
+  requireClusterable(nBuckets)
+
+  /** A clustered table's bucket count (at create and at [[rebucket]]) must
+    * be a power of two — the top Z-code bits are the bucket — within the
+    * Z-code resolution.
+    */
+  private def requireClusterable(n: Int): Unit = if (clusterBy.nonEmpty) {
+    require(n > 0 && (n & (n - 1)) == 0, s"a clustered table needs a " +
+      s"power-of-two bucket count (top Z-code bits are the bucket), got $n")
+    require(java.lang.Long.numberOfTrailingZeros(n.toLong)
         <= SnapshotParquetSink.ClusterBits * clusterBy.length,
-      s"nBuckets=$nBuckets exceeds the Z-code resolution for ${clusterBy.length} column(s)")
+      s"$n buckets exceed the Z-code resolution for ${clusterBy.length} column(s)")
   }
 
   private def manifestsDir: HPath = SnapshotParquetSink.manifestsDir(dir)
@@ -553,11 +514,8 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     * table), timestamps normalized to epoch micros so the manifest is a
     * plain decimal string. All-null buckets record no line (unknown).
     */
-  private def statsLinesFor(spark: SparkSession, commitId: String): Seq[String] =
-    statsLinesFor(spark, commitId, statsCols)
-
   private def statsLinesFor(spark: SparkSession, commitId: String,
-      cols: Seq[String]): Seq[String] = {
+      cols: Seq[String] = statsCols): Seq[String] = {
     if (cols.isEmpty) return Nil
     val written = spark.read
       .option("basePath", s"$dir/data/$commitId").parquet(s"$dir/data/$commitId")
@@ -610,11 +568,6 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
       }
   }
 
-  /** Writer options enabling PARQUET-NATIVE bloom filters for `cols` on a
-    * data write — row-group-level equality skipping INSIDE the files, the
-    * layer that still pays off when a bucket's distinct count exceeds what
-    * the manifest-level sidecar will cover ([[BloomIndex]]'s scaladoc).
-    */
   /** Parquet-native bloom writing is EVIDENCE-GATED per commit: the
     * sidecar layer exactly covers buckets up to [[BloomIndex.MaxDistinct]]
     * distinct values, so the in-file row-group filters only ever prune
@@ -643,6 +596,11 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
       cols: Seq[String]): Map[String, String] =
     if (nativeBloomsWanted(prior, cols)) parquetBloomOpts(cols) else Map.empty
 
+  /** Writer options enabling PARQUET-NATIVE bloom filters for `cols` on a
+    * data write — row-group-level equality skipping INSIDE the files, the
+    * layer that still pays off when a bucket's distinct count exceeds what
+    * the manifest-level sidecar will cover ([[BloomIndex]]'s scaladoc).
+    */
   private def parquetBloomOpts(cols: Seq[String]): Map[String, String] =
     cols.flatMap(c => Seq(
       s"parquet.bloom.filter.enabled#$c" -> "true",
@@ -653,9 +611,6 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
       // buckets exactly
       s"parquet.bloom.filter.expected.ndv#$c" -> BloomIndex.MaxDistinct.toString))
       .toMap
-
-  private def bloomLinesFor(spark: SparkSession, commitId: String): Seq[String] =
-    bloomLinesFor(spark, commitId, bloomCols)
 
   /** `statscols=` / `bloomcols=` header lines recording the commit's
     * EFFECTIVE skipping declaration: this handle's when it declares any,
@@ -683,7 +638,7 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     * buckets record nothing and rely on the parquet-native blooms).
     */
   private def bloomLinesFor(spark: SparkSession, commitId: String,
-      cols: Seq[String]): Seq[String] = {
+      cols: Seq[String] = bloomCols): Seq[String] = {
     if (cols.isEmpty) return Nil
     val root = s"$dir/data/$commitId"
     val written = spark.read.option("basePath", root).parquet(root)
@@ -939,10 +894,6 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
       shiftright(z, zBits - log2n).cast("int")
     }
 
-  /** `c <name> <lo> <hi>` manifest lines declaring this handle's layout. */
-  private def clusterLines: Seq[String] =
-    clusterBy.map(c => s"c ${c.name} ${c.lo} ${c.hi}")
-
   /** A clustered table written by a hash-routing handle (or with different
     * bounds) would scatter keys across incompatible bucket routings — the
     * same silent corruption the nBuckets guard exists for.
@@ -954,7 +905,6 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
         s"clusterBy=$committed — construct the sink with the table's spec")
   }
 
-  /** All published versions, ascending; empty before the first commit. */
   /** This handle's bucket-layout width — cost models divide table bytes by
     * it to price a bucket-pruned read.
     */
@@ -966,6 +916,7 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     */
   def isHashRouted: Boolean = clusterBy.isEmpty
 
+  /** All published versions, ascending; empty before the first commit. */
   def versions: Seq[Long] = SnapshotParquetSink.versions(dir)
 
   def currentVersion: Option[Long] = versions.lastOption
@@ -974,23 +925,103 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
   private def readManifest(v: Long): Map[Int, String] =
     SnapshotParquetSink.manifest(dir, v)._2
 
-  /** Writes the manifest body to a temp file and publishes it at `version`
-    * through the pluggable commit lock ([[graft.engine.CommitLock]] — the
-    * LogStore seam; rename-onto-absent by default, put-if-absent under a
-    * coordinator on object stores). True = this writer owns the version;
-    * false = lost the race (temp cleaned up, data root left for the caller
-    * to delete).
+  /** Publishes a manifest body at `version` through the pluggable commit
+    * lock ([[graft.engine.CommitLock.publishFile]] — the LogStore seam;
+    * rename-onto-absent by default, put-if-absent under a coordinator on
+    * object stores). True = this writer owns the version; false = lost the
+    * race (data root left for the caller to delete).
     */
-  private def publish(version: Long, commitId: String, body: String): Boolean = {
-    Dfs.mkdirs(manifestsDir)
-    val tmp = new HPath(manifestsDir, s".tmp-$commitId")
-    Dfs.writeUtf8(tmp, body)
-    val won = graft.engine.CommitLock.current.publishOntoAbsent(tmp, manifestPath(version))
-    if (!won) Dfs.delete(tmp)
-    // a win installs the authoritative body (also refreshing any stale
-    // entry left by a delete-tree-and-recreate of the same table path)
-    else SnapshotParquetSink.cacheManifest(dir, version, body)
-    won
+  private def publish(version: Long, body: String): Boolean =
+    graft.engine.CommitLock.publishFile(manifestPath(version), body)
+
+  /** The one writer of a manifest body. Each rewrite passes its own carry
+    * rules in as values: the header fields (`seqCol`/`maxSeq`/`schema`
+    * absent = line omitted; `skipFrom` = the manifest [[skipColsLines]]
+    * carries the skipping declaration from), the cluster spec, the bucket
+    * entries and the per-bucket `s` (stats) and `f` (bloom) lines. Line
+    * order is the format's: header, `c`, `b` by bucket, `s`, `f`.
+    */
+  private def manifestBody(version: Long, buckets: Int, keys: Seq[String],
+      seqCol: Option[String], maxSeq: Option[Long], schema: Option[String],
+      skipFrom: Option[Long], cluster: Seq[SnapshotParquetSink.ClusterCol],
+      entries: Iterable[(Int, String)], stats: Seq[String],
+      blooms: Seq[String]): String =
+    (Seq(s"version=$version", s"nBuckets=$buckets", s"keys=${keys.mkString(",")}") ++
+      seqCol.map(c => s"seqcol=$c") ++ maxSeq.map(m => s"maxseq=$m") ++ schema ++
+      skipColsLines(skipFrom) ++
+      cluster.map(c => s"c ${c.name} ${c.lo} ${c.hi}") ++
+      entries.toSeq.sortBy(_._1).map { case (b, rel) => s"b $b $rel" } ++
+      stats ++ blooms).mkString("", "\n", "\n")
+
+  /** `tag` (`s` stats / `f` bloom) lines re-emitted from a parsed manifest
+    * for the buckets `keep` admits, sorted by bucket then column — the
+    * carry rule of commits that leave those buckets' files (or a superset
+    * of their content) in place.
+    */
+  private def carriedLines(tag: String, perBucket: Map[Int, Map[String, (Any, Any)]],
+      keep: Int => Boolean): Seq[String] =
+    perBucket.toSeq.sortBy(_._1).filter { case (b, _) => keep(b) }
+      .flatMap { case (b, cols) => cols.toSeq.sortBy(_._1).map {
+        case (c, (x, y)) => s"$tag $b $c $x $y" } }
+
+  private def carriedStats(v: Long, keep: Int => Boolean): Seq[String] =
+    carriedLines("s", SnapshotParquetSink.manifestStats(dir, v), keep)
+
+  /** Writes `df` (already one partition per bucket) as the commit root
+    * `data/<commitId>`, one `__bucket=<b>` directory per bucket.
+    */
+  private def writeBuckets(df: DataFrame, commitId: String,
+      opts: Map[String, String]): Unit =
+    df.write.mode("overwrite").partitionBy("__bucket").options(opts)
+      .parquet(s"$dir/data/$commitId")
+
+  /** Last-write-wins per key: the row with the highest `seqCol`, ties to
+    * the newest `__gen` (the committing version), over `by`'s groups.
+    */
+  private def lastWritePerKey(df: DataFrame, by: Seq[String],
+      seqCol: String): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(by.map(col): _*)
+      .orderBy(col(seqCol).desc, col("__gen").desc)
+    df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
+  }
+
+  /** The buckets the write under `data/<commitId>` actually produced,
+    * ascending — one listing of its `__bucket=` directories.
+    */
+  private def writtenBucketsOf(commitId: String): Array[Int] =
+    Dfs.list(new HPath(s"$dir/data/$commitId")).map(_.getPath.getName)
+      .collect { case n if n.startsWith("__bucket=") => n.stripPrefix("__bucket=").toInt }
+      .toArray.sorted
+
+  /** Bloom columns a whole-table rewrite of `base` covers: this handle's
+    * declaration, else the columns `base`'s manifest holds sidecars for.
+    */
+  private def effectiveBloomCols(base: Long): Seq[String] =
+    if (bloomCols.nonEmpty) bloomCols
+    else SnapshotParquetSink.colsOf(SnapshotParquetSink.manifestBlooms(dir, base))
+
+  /** Layout guard against the manifest at `v`: a writer with a different
+    * bucket count or key set would scatter keys across incompatible bucket
+    * routings — the corruption would be SILENT (wrong rows per bucket
+    * file), so mismatches fail loudly. The order column is part of the
+    * contract too: two writers under different last-write-wins columns
+    * produce an undefined winner. `op` names the caller in the key error.
+    */
+  private def guardLayout(v: Long, op: String, keys: Seq[String],
+      seqCol: String): Unit = {
+    val declared = SnapshotParquetSink.manifest(dir, v)._1
+    require(declared == nBuckets,
+      s"sink nBuckets=$nBuckets but the table at $dir was committed with " +
+        s"nBuckets=$declared — construct the sink with the table's value")
+    val priorKeys = SnapshotParquetSink.manifestKeys(dir, v)
+    require(priorKeys.isEmpty || priorKeys == keys,
+      s"$op keys ${keys.mkString(",")} do not match the table's committed " +
+        s"keys ${priorKeys.mkString(",")} at $dir")
+    val priorSeq = SnapshotParquetSink.manifestSeqCol(dir, v)
+    require(priorSeq.forall(_ == seqCol),
+      s"seqCol '$seqCol' does not match the table's committed order " +
+        s"column '${priorSeq.getOrElse("")}' at $dir")
+    requireClusterMatch(v)
   }
 
   @volatile private var lastCommitInfo: Option[SnapshotParquetSink.CommitInfo] = None
@@ -1065,20 +1096,16 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     * the bucket stores for those keys, and callers stamp seq at-or-above
     * the head anyway), executed as a broadcast anti-join instead of the
     * plain merge's whole-bucket window sort. Batches must be key-unique.
-    */
-  def mergeGuarded(batch: DataFrame, keys: Seq[String], seqCol: String,
-      isDeleteCol: String, requireBaseSeq: Option[Long]): Unit =
-    mergeImpl(batch, keys, seqCol, isDeleteCol, None, requireBaseSeq, None)
-
-  /** [[mergeGuarded]] with the probe PRECOMPUTED: callers that already
-    * know the batch's affected buckets and applied head (the IVM fold
-    * derives both from its own dirty-group probe) skip the merge's probe
-    * job — one fewer fixed-latency action per refresh. The hint contract
-    * is EXACTNESS, enforced after the write by comparing the written
-    * bucket directories against the hint (one driver-side listing): a
-    * missing bucket would otherwise publish a manifest entry pointing at
-    * an unwritten file, an extra one would orphan written rows — both
-    * silent corruption, so a mismatch fails the commit loudly.
+    *
+    * The probe is PRECOMPUTED: callers that already know the batch's
+    * affected buckets and applied head (the IVM fold derives both from its
+    * own dirty-group probe) skip the merge's probe job — one fewer
+    * fixed-latency action per refresh. The hint contract is EXACTNESS,
+    * enforced after the write by comparing the written bucket directories
+    * against the hint (one driver-side listing): a missing bucket would
+    * otherwise publish a manifest entry pointing at an unwritten file, an
+    * extra one would orphan written rows — both silent corruption, so a
+    * mismatch fails the commit loudly.
     */
   def mergeGuardedHinted(batch: DataFrame, keys: Seq[String], seqCol: String,
       isDeleteCol: String, requireBaseSeq: Option[Long],
@@ -1170,36 +1197,15 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
       }
       if (affected.isEmpty) return
 
-      /** Layout guards against the manifest at `v`: a writer with a
-        * different bucket count or key set would scatter keys across
-        * incompatible bucket routings — the corruption would be SILENT
-        * (wrong rows per bucket file), so mismatches fail loudly. Re-run
-        * per publish attempt: a concurrent rebucket/recluster between
-        * attempts changes the answer.
-        */
-      def guardLayout(v: Long): Unit = {
-        val declared = SnapshotParquetSink.manifest(dir, v)._1
-        require(declared == nBuckets,
-          s"sink nBuckets=$nBuckets but the table at $dir was committed with " +
-            s"nBuckets=$declared — construct the sink with the table's value")
-        val priorKeys = SnapshotParquetSink.manifestKeys(dir, v)
-        require(priorKeys.isEmpty || priorKeys == keys,
-          s"merge keys ${keys.mkString(",")} do not match the table's committed " +
-            s"keys ${priorKeys.mkString(",")} at $dir")
-        // the order column is part of the layout contract too: two writers
-        // merging under different LWW columns produce an undefined winner
-        val priorSeq = SnapshotParquetSink.manifestSeqCol(dir, v)
-        require(priorSeq.forall(_ == seqCol),
-          s"seqCol '$seqCol' does not match the table's committed order " +
-            s"column '${priorSeq.getOrElse("")}' at $dir")
-        requireClusterMatch(v)
-      }
+      // one computed-and-written merge result: the publish attempts below
+      // republish it unchanged across rebases
+      final case class Staged(base: Option[Long], entries: Map[Int, String],
+          commitId: String, written: Array[Int],
+          schema: org.apache.spark.sql.types.StructType,
+          stats: Seq[String], blooms: Seq[String])
 
-      var attempts = 0
-      var rebases = 0
       var dataWrites = 0
-      var committed = false
-      while (!committed) {
+      def compute(): Staged = {
         val base = currentVersion
         // fold merges: the optimistic base check — the delta was computed
         // against a specific applied head; a moved head means some other
@@ -1210,30 +1216,19 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
             throw SnapshotParquetSink.FoldBaseConflict(dir, rb, prior)
         }
         val entries = base.map(readManifest).getOrElse(Map.empty)
-        base.foreach(guardLayout)
+        // re-run per computation and per lost publish: a concurrent
+        // rebucket/recluster between attempts changes the answer
+        base.foreach(guardLayout(_, "merge", keys, seqCol))
 
-        // existing state of the affected buckets, grouped by commit root:
-        // each root was written with partitionBy("__bucket"), so reading
-        // with basePath=root recovers the bucket column; roots from
-        // different commits may differ in schema (evolution) — union by
-        // name. Read under the manifest's RECORDED schema when present
-        // (zero footer IO — the readAt rule; explicit-schema reads
-        // null-fill evolution-era files exactly like mergeSchema resolved
-        // them, and __bucket comes back as the appended partition column);
-        // legacy manifests keep the footer merge.
-        val recordedSchema = base.flatMap(v =>
-          SnapshotParquetSink.manifestSchema(dir, v))
-        val existing = affected.flatMap(b => entries.get(b).map(rel => (b, rel)))
-          .groupBy { case (_, rel) => rel.substring(0, rel.indexOf("/__bucket=")) }
-        val current = existing.values.toSeq.sortBy(_.head._2).map { group =>
-          val root = s"$dir/${group.head._2.substring(0, group.head._2.indexOf("/__bucket="))}"
-          val rdr = recordedSchema match {
-            case Some(rec) => spark.read.schema(rec)
-            case None      => spark.read.option("mergeSchema", "true")
-          }
-          rdr.option("basePath", root)
-            .parquet(group.map { case (_, rel) => s"$dir/$rel" }: _*)
-        }.reduceOption((a, b) => a.unionByName(b, allowMissingColumns = true))
+        // existing state of the affected buckets, read under the
+        // manifest's RECORDED schema when present (zero footer IO — the
+        // readAt rule; explicit-schema reads null-fill evolution-era files
+        // exactly like mergeSchema resolved them, and __bucket comes back
+        // as the appended partition column); legacy manifests keep the
+        // footer merge.
+        val current = readByRoot(spark,
+          affected.toSeq.flatMap(b => entries.get(b).map(rel => (b, rel))),
+          base.flatMap(v => SnapshotParquetSink.manifestSchema(dir, v)))
 
         // __gen = the version this computation TARGETS. A rebase publishes
         // these files at a HIGHER version with the gen left as-is — safe
@@ -1316,19 +1311,8 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
             // of the bucket layout (subset partitioning). Skew fallback:
             // window at key granularity first — the sort parallelizes
             // across keys — then the layout shuffle on the survivors.
-            if (fusedShape) {
-              val w = org.apache.spark.sql.expressions.Window
-                .partitionBy((col("__bucket") +: keys.map(col)): _*)
-                .orderBy(col(seqCol).desc, col("__gen").desc)
-              all.withColumn("__rn", row_number().over(w))
-                .filter(col("__rn") === 1).drop("__rn")
-            } else {
-              val w = org.apache.spark.sql.expressions.Window
-                .partitionBy(keys.map(col): _*)
-                .orderBy(col(seqCol).desc, col("__gen").desc)
-              bucketLayout(all0.withColumn("__rn", row_number().over(w))
-                .filter(col("__rn") === 1).drop("__rn"))
-            }
+            if (fusedShape) lastWritePerKey(all, "__bucket" +: keys, seqCol)
+            else bucketLayout(lastWritePerKey(all0, keys, seqCol))
         }
 
         val commitId = UUID.randomUUID().toString
@@ -1341,9 +1325,7 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
         // measured at 1.5–2.1× bulk-commit overhead
         val obs = observeBlooms(spark, toWrite, merged.schema)
         dbg("write")(graft.engine.JobTag(spark, "commit:write") {
-          obs.frame.write.mode("overwrite").partitionBy("__bucket")
-            .options(parquetBloomOptsFor(base, bloomCols))
-            .parquet(s"$dir/data/$commitId") })
+          writeBuckets(obs.frame, commitId, parquetBloomOptsFor(base, bloomCols)) })
         dataWrites += 1
         // hinted probes are trusted into the manifest — verify the written
         // bucket dirs against the hint (one driver-side listing). The
@@ -1355,10 +1337,8 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
         val writtenBuckets: Array[Int] = probeHint match {
           case None => affected
           case Some(_) =>
-            val written = Dfs.list(new HPath(s"$dir/data/$commitId"))
-              .map(_.getPath.getName).filter(_.startsWith("__bucket="))
-              .map(_.stripPrefix("__bucket=").toInt).toSet
-            if (!written.subsetOf(affected.toSet)) {
+            val written = writtenBucketsOf(commitId)
+            if (!written.toSet.subsetOf(affected.toSet)) {
               // drop the never-published write before surfacing — the other
               // abort paths (FoldBaseConflict, overlap-abandon) do the same,
               // and a retrying caller must not leak one bucket-rewrite tree
@@ -1367,10 +1347,10 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
               throw SnapshotParquetSink.ProbeHintMismatch(
                 s"probe hint mismatch at $dir: hinted buckets " +
                   s"${affected.mkString(",")} but the write produced " +
-                  s"${written.toSeq.sorted.mkString(",")} — the caller's " +
+                  s"${written.mkString(",")} — the caller's " +
                   "affected-bucket precomputation is wrong")
             }
-            written.toArray.sorted
+            written
         }
         // data-derived manifest lines depend only on the written files —
         // computed once, reused verbatim across rebase attempts
@@ -1379,97 +1359,89 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
         val freshBlooms = dbg("blooms")(graft.engine.JobTag(spark, "commit:blooms") {
           obs.lines(commitId, merged.schema) })
 
-        // publish loop: first attempt carries from `base`; a lost race
-        // against writers of DISJOINT buckets rebases — re-carries from the
-        // winners' manifest and republishes the SAME data files (no
-        // recompute, no rewrite); an overlapping winner invalidates the
-        // computation and falls back to the outer recompute loop
-        var abandoned = false
-        var carryFrom = base
-        while (!committed && !abandoned) {
-          attempts += 1
-          val version = carryFrom.map(_ + 1L).getOrElse(0L)
-          val carryEntries = carryFrom.map(readManifest).getOrElse(Map.empty)
-          val newEntries = carryEntries ++
-            writtenBuckets.map(b => b -> s"data/$commitId/__bucket=$b")
-          // prior head: recorded metadata, or — for a table whose manifests
-          // predate maxseq recording — ONE upgrade scan of the stored state
-          // (recording only the batch's max would UNDERSTATE the head and
-          // hand commitAligned a cut whose state reaches past it)
-          val priorMaxSeq: Option[Long] = carryFrom.flatMap { v =>
-            SnapshotParquetSink.manifestMaxSeq(dir, v).orElse(
-              Option(readAt(spark, v, DeleteMode.Logical)
-                .agg(max(col(seqCol).cast("long"))).head().get(0))
-                .map(_.asInstanceOf[Long]))
+        Staged(base, entries, commitId, writtenBuckets, merged.schema,
+          freshStats, freshBlooms)
+      }
+
+      // publish loop (the shared retry policy): the first attempt after a
+      // computation carries from its base; a lost race against writers of
+      // DISJOINT buckets rebases — re-carries from the winners' manifest
+      // and republishes the SAME data files (no recompute, no rewrite); an
+      // overlapping winner invalidates the computation, which is dropped
+      // and redone against the new state after the backoff
+      var staged: Option[Staged] = None
+      var carryFrom: Option[Long] = None
+      var rebases = 0
+      def rebased(): Boolean = {
+        val s = staged.get
+        val cur = currentVersion.getOrElse(
+          sys.error(s"lost the commit race at $dir but no version is " +
+            "published — another writer's manifest vanished mid-race"))
+        // rebase precondition: the winners changed NEITHER the layout
+        // (bucket count / keys / cluster spec — guardLayout) NOR any
+        // bucket this computation read (its entry must still be what
+        // our base read) — then the merged files remain the correct
+        // next state of exactly those buckets
+        guardLayout(cur, "merge", keys, seqCol)
+        val curEntries = readManifest(cur)
+        if (affected.forall(b => curEntries.get(b) == s.entries.get(b))) {
+          rebases += 1
+          carryFrom = Some(cur)
+          true
+        } else {
+          // best-effort: the orphan is unreferenced scratch — a transient
+          // delete failure must not abort the retry (vacuum collects it)
+          Dfs.deleteTreeQuiet(new HPath(s"$dir/data/${s.commitId}"))
+          staged = None
+          false
+        }
+      }
+      graft.engine.CommitLock.retry("snapshot commit", dir, () => rebased()) { attempts =>
+        val s = staged.getOrElse {
+          val fresh = compute()
+          staged = Some(fresh)
+          carryFrom = fresh.base
+          fresh
+        }
+        val version = carryFrom.map(_ + 1L).getOrElse(0L)
+        val carryEntries = carryFrom.map(readManifest).getOrElse(Map.empty)
+        val newEntries = carryEntries ++
+          s.written.map(b => b -> s"data/${s.commitId}/__bucket=$b")
+        // prior head: recorded metadata, or — for a table whose manifests
+        // predate maxseq recording — ONE upgrade scan of the stored state
+        // (recording only the batch's max would UNDERSTATE the head and
+        // hand commitAligned a cut whose state reaches past it)
+        val priorMaxSeq: Option[Long] = carryFrom.flatMap { v =>
+          SnapshotParquetSink.manifestMaxSeq(dir, v).orElse(
+            Option(readAt(spark, v, DeleteMode.Logical)
+              .agg(max(col(seqCol).cast("long"))).head().get(0))
+              .map(_.asInstanceOf[Long]))
+        }
+        // fold merges re-check the base on every carry source: a rebase
+        // re-carries from winners whose state may include another
+        // refresher's fold of the same delta
+        requireBaseSeq.foreach { rb =>
+          if (!priorMaxSeq.contains(rb)) {
+            Dfs.deleteTreeQuiet(new HPath(s"$dir/data/${s.commitId}"))
+            throw SnapshotParquetSink.FoldBaseConflict(dir, rb, priorMaxSeq)
           }
-          // fold merges re-check the base on every carry source: a rebase
-          // re-carries from winners whose state may include another
-          // refresher's fold of the same delta
-          requireBaseSeq.foreach { rb =>
-            if (!priorMaxSeq.contains(rb)) {
-              Dfs.deleteTreeQuiet(new HPath(s"$dir/data/$commitId"))
-              throw SnapshotParquetSink.FoldBaseConflict(dir, rb, priorMaxSeq)
-            }
-          }
-          val maxSeqOpt: Option[Long] = (batchMaxSeq.toSeq ++ priorMaxSeq.toSeq)
-            .reduceOption((a: Long, b: Long) => math.max(a, b))
-          // stats/bloom carry-forward mirrors the entries': untouched
-          // buckets keep the lines of the commit that last wrote them
-          val priorStats = carryFrom.map(v => SnapshotParquetSink.manifestStats(dir, v))
-            .getOrElse(Map.empty)
-          val carried = (priorStats -- writtenBuckets).toSeq.sortBy(_._1).flatMap {
-            case (b, cols) => cols.toSeq.sortBy(_._1).map {
-              case (c, (mn, mx)) => s"s $b $c $mn $mx" } }
-          val priorBlooms = carryFrom
-            .map(v => SnapshotParquetSink.manifestBlooms(dir, v))
-            .getOrElse(Map.empty)
-          val carriedBlooms = (priorBlooms -- writtenBuckets).toSeq.sortBy(_._1).flatMap {
-            case (b, cols) => cols.toSeq.sortBy(_._1).map {
-              case (c, (ty, rel)) => s"f $b $c $ty $rel" } }
-          val body = (Seq(s"version=$version", s"nBuckets=$nBuckets",
-            s"keys=${keys.mkString(",")}", s"seqcol=$seqCol") ++
-            maxSeqOpt.map(m => s"maxseq=$m").toSeq ++
-            schemaLine(merged.schema, carryFrom).toSeq ++
-            skipColsLines(carryFrom) ++
-            clusterLines ++
-            newEntries.toSeq.sortBy(_._1).map { case (b, rel) => s"b $b $rel" } ++
-            carried ++ freshStats ++
-            carriedBlooms ++ freshBlooms)
-            .mkString("", "\n", "\n")
-          if (publish(version, commitId, body)) {
-            committed = true
-            lastCommitInfo = Some(SnapshotParquetSink.CommitInfo(
-              version, attempts, rebases, dataWrites))
-          } else {
-            if (attempts >= 10)
-              sys.error(s"snapshot commit lost the race $attempts times at $dir")
-            val cur = currentVersion.getOrElse(
-              sys.error(s"lost the commit race at $dir but no version is " +
-                "published — another writer's manifest vanished mid-race"))
-            // rebase precondition: the winners changed NEITHER the layout
-            // (bucket count / keys / cluster spec — guardLayout) NOR any
-            // bucket this computation read (its entry must still be what
-            // our base read) — then the merged files remain the correct
-            // next state of exactly those buckets
-            guardLayout(cur)
-            val curEntries = readManifest(cur)
-            val disjoint = affected.forall(b => curEntries.get(b) == entries.get(b))
-            if (disjoint) {
-              rebases += 1
-              carryFrom = Some(cur)
-            } else {
-              // best-effort: the orphan is unreferenced scratch — a
-              // transient delete failure must not abort the retry (vacuum
-              // collects it)
-              Dfs.deleteTreeQuiet(new HPath(s"$dir/data/$commitId"))
-              abandoned = true
-              // jittered backoff: two writers in lockstep (each merge takes
-              // about as long as the other's) can otherwise starve one side
-              // for many consecutive versions
-              Thread.sleep(java.util.concurrent.ThreadLocalRandom.current()
-                .nextLong(10L, 100L * attempts))
-            }
-          }
+        }
+        val maxSeqOpt: Option[Long] = (batchMaxSeq.toSeq ++ priorMaxSeq.toSeq)
+          .reduceOption((a: Long, b: Long) => math.max(a, b))
+        // stats/bloom carry-forward mirrors the entries': untouched
+        // buckets keep the lines of the commit that last wrote them
+        val written = s.written.toSet
+        val carriedBlooms = carryFrom.toSeq.flatMap(v =>
+          carriedLines("f", SnapshotParquetSink.manifestBlooms(dir, v), b => !written(b)))
+        val body = manifestBody(version, nBuckets, keys, Some(seqCol), maxSeqOpt,
+          schemaLine(s.schema, carryFrom), carryFrom, clusterBy, newEntries,
+          carryFrom.toSeq.flatMap(carriedStats(_, b => !written(b))) ++ s.stats,
+          carriedBlooms ++ s.blooms)
+        if (!publish(version, body)) None
+        else {
+          lastCommitInfo = Some(SnapshotParquetSink.CommitInfo(
+            version, attempts, rebases, dataWrites))
+          Some(())
         }
       }
     } finally {
@@ -1483,9 +1455,11 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     * forward — so the new version's state and column TYPES come from the
     * batch alone (the type-widening contract), while every older version
     * stays time-travel-readable under its own types. Publishes through the
-    * same rename-onto-absent lock as [[merge]]; a lost race re-publishes
-    * the same content at the next version (the batch is the whole truth —
-    * nothing to recompute).
+    * same commit lock and layout guard as [[merge]] (bucket count, keys,
+    * order column, cluster spec). A lost race deletes the written data
+    * root and rewrites the batch for the next version: the rows carry the
+    * target version as their `__gen`, so the files cannot be republished
+    * under another one.
     */
   override def replaceAll(batch: DataFrame, keys: Seq[String], seqCol: String,
       isDeleteCol: String): Unit = synchronized {
@@ -1503,55 +1477,23 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
         s"replaceAll batch carries no orderable $seqCol values — the rebuilt " +
           "table would record no applied head, and a later commitAligned " +
           "would silently pin the superseded pre-replace version")
-      var attempts = 0
-      while (true) {
-        attempts += 1
+      graft.engine.CommitLock.retry("replaceAll", dir) { _ =>
         val base = currentVersion
         val version = base.map(_ + 1L).getOrElse(0L)
-        base.foreach { v =>
-          val declared = SnapshotParquetSink.manifest(dir, v)._1
-          require(declared == nBuckets,
-            s"sink nBuckets=$nBuckets but the table at $dir was committed with " +
-              s"nBuckets=$declared — construct the sink with the table's value")
-          val priorKeys = SnapshotParquetSink.manifestKeys(dir, v)
-          require(priorKeys.isEmpty || priorKeys == keys,
-            s"replaceAll keys ${keys.mkString(",")} do not match the table's committed " +
-              s"keys ${priorKeys.mkString(",")} at $dir")
-          requireClusterMatch(v)
-        }
+        base.foreach(guardLayout(_, "replaceAll", keys, seqCol))
         val incoming = incoming0.withColumn("__gen", lit(version))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(keys.map(col): _*)
-          .orderBy(col(seqCol).desc, col("__gen").desc)
-        val merged = incoming.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
+        val merged = lastWritePerKey(incoming, keys, seqCol)
         val commitId = UUID.randomUUID().toString
         val toWrite = merged.repartition(affected.length, col("__bucket"))
         // same in-write bloom fusion as merge (see observeBlooms)
         val obs = observeBlooms(spark, toWrite, merged.schema)
-        obs.frame.write.mode("overwrite").partitionBy("__bucket")
-          .options(parquetBloomOptsFor(base, bloomCols))
-          .parquet(s"$dir/data/$commitId")
-        val newEntries = affected.map(b => b -> s"data/$commitId/__bucket=$b")
-        val body = (Seq(s"version=$version", s"nBuckets=$nBuckets",
-          s"keys=${keys.mkString(",")}", s"seqcol=$seqCol") ++
-          batchMaxSeq.map(m => s"maxseq=$m").toSeq ++
-          schemaLine(merged.schema, None).toSeq ++
-          skipColsLines(base) ++
-          clusterLines ++
-          newEntries.sortBy(_._1).map { case (b, rel) => s"b $b $rel" } ++
-          statsLinesFor(spark, commitId) ++
-          obs.lines(commitId, merged.schema))
-          .mkString("", "\n", "\n")
-        if (publish(version, commitId, body)) {
-          return
-        } else {
-          deleteTree(new HPath(s"$dir/data/$commitId"))
-          if (attempts >= 10)
-            sys.error(s"replaceAll lost the race $attempts times at $dir")
-          Thread.sleep(java.util.concurrent.ThreadLocalRandom.current()
-            .nextLong(10L, 100L * attempts))
-        }
+        writeBuckets(obs.frame, commitId, parquetBloomOptsFor(base, bloomCols))
+        val body = manifestBody(version, nBuckets, keys, Some(seqCol), batchMaxSeq,
+          schemaLine(merged.schema, None), base, clusterBy,
+          affected.map(b => b -> s"data/$commitId/__bucket=$b"),
+          statsLinesFor(spark, commitId), obs.lines(commitId, merged.schema))
+        if (publish(version, body)) Some(())
+        else { deleteTree(new HPath(s"$dir/data/$commitId")); None }
       }
     } finally {
       incoming0.unpersist()
@@ -1694,11 +1636,6 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
   def lookup(spark: SparkSession, keys: Seq[String], keyValues: Seq[Any],
       mode: DeleteMode = DeleteMode.Hard): DataFrame = {
     require(keys.length == keyValues.length, "one value per key column")
-    def shaped(df: DataFrame): DataFrame = mode match {
-      case DeleteMode.Hard    => df.filter(!col("__is_deleted")).drop("__is_deleted")
-      case DeleteMode.Logical => // 'is_deleted' reserved by Logical mode (see shape)
-        df.drop("is_deleted").withColumnRenamed("__is_deleted", "is_deleted")
-    }
     currentVersion match {
       case None => spark.emptyDataFrame
       case Some(v) =>
@@ -1710,13 +1647,8 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
         // lookup is read-only and must self-align instead)
         val (committedN, entries) = SnapshotParquetSink.manifest(dir, v)
         // recorded schema when present (zero footer IO — the readAt rule);
-        // legacy manifests sample one file's footer as before
-        val sample = SnapshotParquetSink.manifestSchema(dir, v) match {
-          case Some(rec) =>
-            spark.read.schema(rec).parquet(s"$dir/${entries.head._2}").drop("__gen")
-          case None =>
-            spark.read.parquet(s"$dir/${entries.head._2}").drop("__gen")
-        }
+        // legacy manifests sample one bucket's footers
+        val sample = readWithKnownSchema(spark, v, Seq(s"$dir/${entries.head._2}"))
         val schema = sample.schema
         val committedCluster = SnapshotParquetSink.manifestCluster(dir, v)
         val bucket =
@@ -1740,13 +1672,10 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
             SnapshotParquetSink.clusterBucketFor(longs, committedCluster, committedN)
           }
         entries.get(bucket.toInt) match {
-          case None => shaped(sample.limit(0))
+          case None => shape(sample.limit(0), mode)
           case Some(rel) =>
-            val t = (SnapshotParquetSink.manifestSchema(dir, v) match {
-              case Some(rec) => spark.read.schema(rec).parquet(s"$dir/$rel")
-              case None => spark.read.option("mergeSchema", "true").parquet(s"$dir/$rel")
-            }).drop("__gen")
-            shaped(keys.zip(keyValues).foldLeft(t) { case (df, (k, kv)) => df.filter(col(k) === kv) })
+            val t = readWithKnownSchema(spark, v, Seq(s"$dir/$rel"))
+            shape(keys.zip(keyValues).foldLeft(t) { case (df, (k, kv)) => df.filter(col(k) === kv) }, mode)
         }
     }
   }
@@ -1809,19 +1738,29 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
       .filter(col("change").isNotNull) // unchanged keys (same seq) drop out
   }
 
-  /** The whole committed state at `base`, grouped per commit root so
-    * mixed-schema roots (evolution) union by name — the shared read for
-    * whole-table rewrites (compact, tombstone purge).
+  /** The whole committed state at `base` — the shared read for
+    * whole-table rewrites (compact, rebucket, tombstone purge).
     */
-  private def readFullState(spark: SparkSession, base: Long): DataFrame = {
-    val entries = readManifest(base)
-    entries.toSeq.sortBy(_._1)
-      .groupBy { case (_, rel) => rel.substring(0, rel.indexOf("/__bucket=")) }
-      .toSeq.sortBy(_._1).map { case (root, group) =>
-        spark.read.option("mergeSchema", "true").option("basePath", s"$dir/$root")
+  private def readFullState(spark: SparkSession, base: Long): DataFrame =
+    readByRoot(spark, readManifest(base).toSeq.sortBy(_._1), None).get
+
+  /** The commit root (`data/<commit-uuid>`) of a manifest entry. */
+  private def rootOf(rel: String): String = rel.substring(0, rel.indexOf("/__bucket="))
+
+  /** `entries`' bucket files grouped per commit root: each root was written
+    * with partitionBy("__bucket"), so reading with basePath=root recovers
+    * the bucket column; roots from different commits may differ in schema
+    * (evolution) — union by name. `schema` None = mergeSchema footer read.
+    * None when `entries` is empty.
+    */
+  private def readByRoot(spark: SparkSession, entries: Seq[(Int, String)],
+      schema: Option[org.apache.spark.sql.types.StructType]): Option[DataFrame] =
+    entries.groupBy { case (_, rel) => rootOf(rel) }.toSeq.sortBy(_._1)
+      .map { case (root, group) =>
+        schema.fold(spark.read.option("mergeSchema", "true"))(spark.read.schema(_))
+          .option("basePath", s"$dir/$root")
           .parquet(group.map { case (_, rel) => s"$dir/$rel" }: _*)
-      }.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
-  }
+      }.reduceOption((a, b) => a.unionByName(b, allowMissingColumns = true))
 
   /** Rewrites the whole current state as ONE fresh commit: every bucket's
     * file moves under a single new root, so after history expires
@@ -1833,9 +1772,7 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     * Returns the published version.
     */
   def compact(spark: SparkSession): Long = synchronized {
-    var attempts = 0
-    while (true) {
-      attempts += 1
+    graft.engine.CommitLock.retry("compaction", dir) { _ =>
       val base = currentVersion.getOrElse(sys.error(s"nothing to compact at $dir"))
       val entries = readManifest(base)
       val version = base + 1L
@@ -1844,23 +1781,10 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
       // bloom columns (handle's, or whatever the base manifest recorded):
       // the rewrite keeps the parquet-native row-group blooms where the
       // base manifest evidences saturated buckets (parquetBloomOptsFor)
-      val baseBloomCols = SnapshotParquetSink.manifestBlooms(dir, base)
-        .values.flatMap(_.keys).toSeq.distinct.sorted
-      val effBloomCols = if (bloomCols.nonEmpty) bloomCols else baseBloomCols
-      full.repartition(entries.size, col("__bucket"))
-        .write.mode("overwrite").partitionBy("__bucket")
-        .options(parquetBloomOptsFor(Some(base), effBloomCols))
-        .parquet(s"$dir/data/$commitId")
-      val newEntries = entries.keys.map(b => b -> s"data/$commitId/__bucket=$b")
-      // carry the recorded merge keys forward — compaction rewrites data
-      // files, never the key contract
-      val baseKeys = SnapshotParquetSink.manifestKeys(dir, base)
-      val baseMaxSeq = SnapshotParquetSink.manifestMaxSeq(dir, base)
-      // per-bucket content is preserved exactly, so ranges carry verbatim
-      val carried = SnapshotParquetSink.manifestStats(dir, base).toSeq.sortBy(_._1)
-        .flatMap { case (b, cols) => cols.toSeq.sortBy(_._1).map {
-          case (c, (mn, mx)) => s"s $b $c $mn $mx" } }
-      // ... and so do the bloom sidecars (files copied under the new root —
+      writeBuckets(full.repartition(entries.size, col("__bucket")), commitId,
+        parquetBloomOptsFor(Some(base), effectiveBloomCols(base)))
+      // per-bucket content is preserved exactly, so stats ranges carry
+      // verbatim (carriedStats below) and so do the bloom sidecars (files copied under the new root —
       // the same-root-as-entry invariant vacuum reachability relies on).
       // EXCEPT when this handle declares bloomCols: then compaction is also
       // the index BACKFILL path — recompute for every bucket, which is how
@@ -1869,29 +1793,18 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
       val bloomsOut =
         if (bloomCols.nonEmpty) bloomLinesFor(spark, commitId)
         else copyBloomsInto(base, commitId, entries.keySet)
-      // compaction rewrites files, never the routing — cluster spec carries
-      val carriedCluster = SnapshotParquetSink.manifestCluster(dir, base)
-        .map(c => s"c ${c.name} ${c.lo} ${c.hi}")
-      val body = (Seq(s"version=$version", s"nBuckets=$nBuckets",
-        s"keys=${baseKeys.mkString(",")}") ++
-        SnapshotParquetSink.manifestSeqCol(dir, base).map(s => s"seqcol=$s") ++
-        baseMaxSeq.map(m => s"maxseq=$m").toSeq ++
-        schemaLine(full.schema, None).toSeq ++ // full rewrite: derive fresh
-        skipColsLines(Some(base)) ++
-        carriedCluster ++
-        newEntries.toSeq.sortBy(_._1).map { case (b, rel) => s"b $b $rel" } ++
-        carried ++ bloomsOut)
-        .mkString("", "\n", "\n")
-      if (publish(version, commitId, body)) {
-        return version
-      } else {
-        Dfs.deleteTreeQuiet(new HPath(s"$dir/data/$commitId"))
-        if (attempts >= 10) sys.error(s"compaction lost the race $attempts times at $dir")
-        Thread.sleep(java.util.concurrent.ThreadLocalRandom.current()
-          .nextLong(10L, 100L * attempts))
-      }
+      // compaction rewrites data files, never the key contract, the head
+      // or the routing — recorded keys, seqcol, maxseq and cluster spec carry
+      val body = manifestBody(version, nBuckets, SnapshotParquetSink.manifestKeys(dir, base),
+        SnapshotParquetSink.manifestSeqCol(dir, base),
+        SnapshotParquetSink.manifestMaxSeq(dir, base),
+        schemaLine(full.schema, None), // full rewrite: derive fresh
+        Some(base), SnapshotParquetSink.manifestCluster(dir, base),
+        entries.keys.map(b => b -> s"data/$commitId/__bucket=$b"),
+        carriedStats(base, _ => true), bloomsOut)
+      if (publish(version, body)) Some(version)
+      else { Dfs.deleteTreeQuiet(new HPath(s"$dir/data/$commitId")); None }
     }
-    -1L // unreachable
   }
 
   /** Re-buckets the whole table to `newBuckets` as ONE fresh commit — the
@@ -1912,16 +1825,8 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     */
   def rebucket(spark: SparkSession, newBuckets: Int): Long = synchronized {
     require(newBuckets > 0, "newBuckets must be positive")
-    if (clusterBy.nonEmpty) {
-      require((newBuckets & (newBuckets - 1)) == 0,
-        s"a clustered table needs a power-of-two bucket count, got $newBuckets")
-      require(java.lang.Long.numberOfTrailingZeros(newBuckets.toLong)
-          <= SnapshotParquetSink.ClusterBits * clusterBy.length,
-        s"newBuckets=$newBuckets exceeds the Z-code resolution")
-    }
-    var attempts = 0
-    while (true) {
-      attempts += 1
+    requireClusterable(newBuckets)
+    graft.engine.CommitLock.retry("rebucket", dir) { _ =>
       val base = currentVersion.getOrElse(sys.error(s"nothing to rebucket at $dir"))
       val version = base + 1L
       val baseKeys = SnapshotParquetSink.manifestKeys(dir, base)
@@ -1933,9 +1838,7 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
       val commitId = UUID.randomUUID().toString
       // bloom sidecars must be RECOMPUTED (values re-partition across the
       // new bucket set — carried filters would describe the old partition)
-      val baseBloomCols = SnapshotParquetSink.manifestBlooms(dir, base)
-        .values.flatMap(_.keys).toSeq.distinct.sorted
-      val effBloomCols = if (bloomCols.nonEmpty) bloomCols else baseBloomCols
+      val effBloomCols = effectiveBloomCols(base)
       // native blooms for the rewrite are decided by the NEW geometry, not
       // the prior manifest: rebucket re-partitions values, so prior
       // saturation evidence describes buckets that no longer exist (a
@@ -1956,44 +1859,23 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
             parquetBloomOpts(effBloomCols)
           else Map.empty[String, String]
         }
-      full.repartition(newBuckets, col("__bucket"))
-        .write.mode("overwrite").partitionBy("__bucket")
-        .options(nativeOpts)
-        .parquet(s"$dir/data/$commitId")
-      val writtenBuckets = Dfs.list(new HPath(s"$dir/data/$commitId"))
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith("__bucket=") =>
-          n.stripPrefix("__bucket=").toInt }
-        .sorted
-      val newEntries = writtenBuckets.map(b => b -> s"data/$commitId/__bucket=$b")
-      val baseMaxSeq = SnapshotParquetSink.manifestMaxSeq(dir, base)
+      writeBuckets(full.repartition(newBuckets, col("__bucket")), commitId, nativeOpts)
       // stats recomputed for whatever the base recorded (this maintenance
       // handle may not declare statsCols; the table's skipping metadata
       // must survive regardless)
-      val baseStatCols = SnapshotParquetSink.manifestStats(dir, base)
-        .values.flatMap(_.keys).toSeq.distinct.sorted
-      val statCols = if (statsCols.nonEmpty) statsCols else baseStatCols
-      val body = (Seq(s"version=$version", s"nBuckets=$newBuckets",
-        s"keys=${baseKeys.mkString(",")}") ++
-        SnapshotParquetSink.manifestSeqCol(dir, base).map(s => s"seqcol=$s") ++
-        baseMaxSeq.map(m => s"maxseq=$m").toSeq ++
-        schemaLine(full.schema, None).toSeq ++ // full rewrite: derive fresh
-        skipColsLines(Some(base)) ++
-        clusterLines ++
-        newEntries.map { case (b, rel) => s"b $b $rel" } ++
-        statsLinesFor(spark, commitId, statCols) ++
+      val statCols = if (statsCols.nonEmpty) statsCols
+        else SnapshotParquetSink.colsOf(SnapshotParquetSink.manifestStats(dir, base))
+      val body = manifestBody(version, newBuckets, baseKeys,
+        SnapshotParquetSink.manifestSeqCol(dir, base),
+        SnapshotParquetSink.manifestMaxSeq(dir, base),
+        schemaLine(full.schema, None), // full rewrite: derive fresh
+        Some(base), clusterBy,
+        writtenBucketsOf(commitId).map(b => b -> s"data/$commitId/__bucket=$b"),
+        statsLinesFor(spark, commitId, statCols),
         bloomLinesFor(spark, commitId, effBloomCols))
-        .mkString("", "\n", "\n")
-      if (publish(version, commitId, body)) {
-        return version
-      } else {
-        Dfs.deleteTreeQuiet(new HPath(s"$dir/data/$commitId"))
-        if (attempts >= 10) sys.error(s"rebucket lost the race $attempts times at $dir")
-        Thread.sleep(java.util.concurrent.ThreadLocalRandom.current()
-          .nextLong(10L, 100L * attempts))
-      }
+      if (publish(version, body)) Some(version)
+      else { Dfs.deleteTreeQuiet(new HPath(s"$dir/data/$commitId")); None }
     }
-    -1L // unreachable
   }
 
   /** Drops tombstones whose delete event is at or below `horizonSeq`, as
@@ -2013,9 +1895,7 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     */
   def purgeTombstones(spark: SparkSession, horizonSeq: Long,
       seqColDefault: String = "seq"): Long = synchronized {
-    var attempts = 0
-    while (true) {
-      attempts += 1
+    graft.engine.CommitLock.retry("purge", dir) { _ =>
       val base = currentVersion.getOrElse(sys.error(s"nothing to purge at $dir"))
       // the recorded order column governs the horizon comparison; the
       // parameter is the pre-recording fallback
@@ -2036,20 +1916,11 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
       val purged = full.filter(
         coalesce(!(col("__is_deleted") && col(seqCol) <= horizonSeq), lit(true)))
       val commitId = UUID.randomUUID().toString
-      val baseBloomCols = SnapshotParquetSink.manifestBlooms(dir, base)
-        .values.flatMap(_.keys).toSeq.distinct.sorted
-      val effBloomCols = if (bloomCols.nonEmpty) bloomCols else baseBloomCols
-      purged.repartition(entries.size, col("__bucket"))
-        .write.mode("overwrite").partitionBy("__bucket")
-        .options(parquetBloomOptsFor(Some(base), effBloomCols))
-        .parquet(s"$dir/data/$commitId")
+      writeBuckets(purged.repartition(entries.size, col("__bucket")), commitId,
+        parquetBloomOptsFor(Some(base), effectiveBloomCols(base)))
       // a bucket whose every row was a purged tombstone writes no dir —
       // list what actually landed instead of assuming the old bucket set
-      val writtenBuckets = Dfs.list(new HPath(s"$dir/data/$commitId"))
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith("__bucket=") =>
-          n.stripPrefix("__bucket=").toInt }
-        .sorted
+      val writtenBuckets = writtenBucketsOf(commitId)
       if (writtenBuckets.isEmpty) {
         // the whole table was horizon-old tombstones: publishing a
         // zero-entry manifest would leave an UNREADABLE head (the
@@ -2059,48 +1930,27 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
           "(every row is a horizon-old tombstone) — delete the table " +
           "instead of publishing an unreadable empty version")
       }
-      val newEntries = writtenBuckets.map(b => b -> s"data/$commitId/__bucket=$b")
-      val baseKeys = SnapshotParquetSink.manifestKeys(dir, base)
       // stats: recompute when this handle records them; otherwise CARRY the
       // base's lines for surviving buckets — purge only removes rows, so
       // prior ranges stay valid over-approximations, and a maintenance
       // handle constructed without statsCols must not silently strip the
       // table's data-skipping metadata
+      val kept = writtenBuckets.toSet
       val statsOut =
         if (statsCols.nonEmpty) statsLinesFor(spark, commitId)
-        else {
-          val kept = writtenBuckets.toSet
-          SnapshotParquetSink.manifestStats(dir, base).toSeq.sortBy(_._1)
-            .filter { case (b, _) => kept(b) }
-            .flatMap { case (b, cols) => cols.toSeq.sortBy(_._1).map {
-              case (c, (mn, mx)) => s"s $b $c $mn $mx" } }
-        }
+        else carriedStats(base, kept)
       // purge removes rows, never the routing — cluster spec carries; bloom
       // sidecars COPY for surviving buckets (content only shrank, so the
       // existing filters stay safe over-approximations of what remains)
-      val carriedCluster = SnapshotParquetSink.manifestCluster(dir, base)
-        .map(c => s"c ${c.name} ${c.lo} ${c.hi}")
-      val copiedBlooms = copyBloomsInto(base, commitId, writtenBuckets.toSet)
-      val body = (Seq(s"version=$version", s"nBuckets=$nBuckets",
-        s"keys=${baseKeys.mkString(",")}") ++
-        SnapshotParquetSink.manifestSeqCol(dir, base).map(s => s"seqcol=$s") ++
-        headSeq.map(m => s"maxseq=$m").toSeq ++
-        schemaLine(purged.schema, None).toSeq ++ // full rewrite: derive fresh
-        skipColsLines(Some(base)) ++
-        carriedCluster ++
-        newEntries.sortBy(_._1).map { case (b, rel) => s"b $b $rel" } ++
-        statsOut ++ copiedBlooms)
-        .mkString("", "\n", "\n")
-      if (publish(version, commitId, body)) {
-        return version
-      } else {
-        Dfs.deleteTreeQuiet(new HPath(s"$dir/data/$commitId"))
-        if (attempts >= 10) sys.error(s"purge lost the race $attempts times at $dir")
-        Thread.sleep(java.util.concurrent.ThreadLocalRandom.current()
-          .nextLong(10L, 100L * attempts))
-      }
+      val body = manifestBody(version, nBuckets, SnapshotParquetSink.manifestKeys(dir, base),
+        SnapshotParquetSink.manifestSeqCol(dir, base), headSeq,
+        schemaLine(purged.schema, None), // full rewrite: derive fresh
+        Some(base), SnapshotParquetSink.manifestCluster(dir, base),
+        writtenBuckets.map(b => b -> s"data/$commitId/__bucket=$b"),
+        statsOut, copyBloomsInto(base, commitId, kept))
+      if (publish(version, body)) Some(version)
+      else { Dfs.deleteTreeQuiet(new HPath(s"$dir/data/$commitId")); None }
     }
-    -1L // unreachable
   }
 
   /** Version history as a DataFrame — the DESCRIBE HISTORY analog, read
@@ -2148,6 +1998,12 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
         StructField("cluster", StringType, nullable = false))))
   }
 
+  /** Versions the last vacuum WANTED to drop but withheld under the
+    * manifest age floor — lets operators distinguish "nothing to drop"
+    * from "too young to drop" ((0, 0) from [[vacuum]] is ambiguous).
+    */
+  @volatile var lastVacuumWithheld: Int = 0
+
   /** Expires history: keeps the newest `keepLast` manifests, deletes older
     * ones plus every data directory no kept manifest references. Unreferenced
     * roots are deleted only when older than `minOrphanAgeMs` — an
@@ -2158,12 +2014,6 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     * `.tmp-*` manifest leftovers) are collected on the next vacuum after
     * aging out. Returns (manifests deleted, data roots deleted).
     */
-  /** Versions the last vacuum WANTED to drop but withheld under the
-    * manifest age floor — lets operators distinguish "nothing to drop"
-    * from "too young to drop" ((0, 0) from [[vacuum]] is ambiguous).
-    */
-  @volatile var lastVacuumWithheld: Int = 0
-
   def vacuum(keepLast: Int = 1, minOrphanAgeMs: Long = 3600000L): (Int, Int) = synchronized {
     require(keepLast >= 1, "must keep at least the current snapshot")
     val vs = versions
@@ -2205,7 +2055,7 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     lastVacuumWithheld = vs.count(dropSet) - drop.size
     val keep = vs.filterNot(drop.toSet)
     val referencedRoots = keep.flatMap(v => readManifest(v).values)
-      .map(rel => rel.substring(0, rel.indexOf("/__bucket="))).toSet
+      .map(rootOf).toSet
     val dataDir = new HPath(dir, "data")
     val now = System.currentTimeMillis()
     val orphans = Dfs.list(dataDir)
@@ -2215,14 +2065,11 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     // strict: the RETURN VALUE reports these as expired
     drop.foreach { v =>
       Dfs.deleteStrict(manifestPath(v))
-      SnapshotParquetSink.evictManifest(dir, v)
+      graft.engine.CommitLock.evictPublished(manifestPath(v))
     }
     // aged-out temp manifests from crashed commits (lost races clean their
     // own temp synchronously; a crash between write and publish does not)
-    Dfs.list(manifestsDir)
-      .filter(st => st.getPath.getName.startsWith(".tmp-"))
-      .filter(st => now - st.getModificationTime >= minOrphanAgeMs)
-      .foreach(st => Dfs.delete(st.getPath))
+    graft.engine.CommitLock.sweepStaged(manifestsDir, minOrphanAgeMs)
     (drop.size, orphans.size)
   }
 

@@ -37,14 +37,9 @@ object ViewSpecs {
     val p = specPath(viewDir)
     require(!Dfs.exists(p),
       s"a view is already defined at $viewDir — drop $p to redefine")
-    Dfs.mkdirs(new HPath(viewDir))
-    val tmp = new HPath(viewDir, s".view-spec-${java.util.UUID.randomUUID()}")
-    Dfs.writeUtf8(tmp, lines.mkString("", "\n", "\n"))
-    if (!graft.engine.CommitLock.current.publishOntoAbsent(tmp, p)) {
-      Dfs.delete(tmp)
+    if (!graft.engine.CommitLock.publishFile(p, lines.mkString("", "\n", "\n")))
       sys.error(s"lost the definition race at $p — another writer defined " +
         "this view first (drop the file to redefine)")
-    }
   }
 
   /** True when `viewDir` carries a persisted definition. */

@@ -52,14 +52,9 @@ final class TableFollower(upstreamDir: String,
   }
 
   private def publishMarker(v: Long): Unit = {
-    Dfs.mkdirs(markerDir)
-    val tmp = new HPath(markerDir, s".tmp-v$v")
-    Dfs.writeUtf8(tmp, s"applied=$v\n")
     // losing means another follower instance applied the same version —
     // the merge below it was idempotent replay, nothing to repair
-    if (!CommitLock.current.publishOntoAbsent(tmp,
-        new HPath(markerDir, f"v$v%08d.applied")))
-      Dfs.delete(tmp)
+    CommitLock.publishFile(new HPath(markerDir, f"v$v%08d.applied"), s"applied=$v\n")
     // keep the checkpoint bounded: only the max matters
     Dfs.list(markerDir)
       .filter(st => st.getPath.getName.startsWith("v") &&

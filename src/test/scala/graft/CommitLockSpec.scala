@@ -35,6 +35,31 @@ class CommitLockSpec extends SparkSpec {
         assert(Dfs.readUtf8(dst) == "writer-a\n")
         assert(!Dfs.exists(a), "winner's scratch is consumed")
         assert(Dfs.exists(b), "loser's scratch is left for its caller")
+        // the shared publish step under a real race: both committers stage
+        // before either publishes (a shared stage name would let the winner
+        // publish the loser's body — in about half the rounds, hence
+        // several); the slot holds exactly the winner's body and no stage
+        // survives beside it
+        val bodies = Seq("version=0\nwriter-a\n", "version=0\nwriter-b\n")
+        for (round <- 0 until 8) {
+          val slot = new HPath(base, s"race$round/v0.manifest")
+          val bothStaged = new java.util.concurrent.CyclicBarrier(2)
+          val gated = new CommitLock {
+            override def publishOntoAbsent(src: HPath, dst: HPath): Boolean = {
+              bothStaged.await(30, java.util.concurrent.TimeUnit.SECONDS)
+              lock.publishOntoAbsent(src, dst)
+            }
+          }
+          val won = new Array[Boolean](bodies.size)
+          CommitLock.withLock(gated) {
+            val ts = bodies.indices.map(i =>
+              new Thread(() => won(i) = CommitLock.publishFile(slot, bodies(i))))
+            ts.foreach(_.start()); ts.foreach(_.join(60000))
+          }
+          assert(won.count(identity) == 1, s"round $round: ${won.toSeq}")
+          assert(Dfs.readUtf8(slot) == bodies(won.indexOf(true)), s"round $round")
+          assert(Dfs.list(slot.getParent).map(_.getPath.getName) == Seq("v0.manifest"))
+        }
       }
     }
 

@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import graft.engine.{CommitLock, HadoopRenameCommitLock}
+import graft.engine.{CommitLock, Dfs, HadoopRenameCommitLock}
 import graft.sink.{DeleteMode, SnapshotParquetSink}
 
 /** Concurrent-writer commits on one snapshot table: the loser of the
@@ -178,5 +178,48 @@ class ConcurrentMergeSpec extends SparkSpec {
     assert(t.filter($"ext" === s"v3").count() == 1L)
     val blooms = SnapshotParquetSink.manifestBlooms(dir, 2L)
     assert(blooms.size == N, s"all buckets keep filters after a rebase: ${blooms.keys}")
+  }
+
+  test("maintenance rewrites that lose the publish to a merge recompute at the next version") {
+    val base = df(0L until 64L, seq = 0L, tag = "v")
+    val dead = Seq(3L, 17L, 40L)
+    val tombstones = dead.map(i => (i, 1L, s"x$i", true)).toDF("id", "seq", "ext", "is_delete")
+    val winner = keysWhere(_ => true, 4, from = 30000L)
+    val reload = df(Seq(1L, 2L), seq = 9L, tag = "r")
+    // each op runs as writerA and reaches its publish on the base version;
+    // the merge (writerB) takes that version first
+    val ops: Seq[(String, SnapshotParquetSink => Unit)] = Seq(
+      "compact" -> (s => assert(s.compact(spark) == 2L)),
+      "rebucket" -> (s => assert(s.rebucket(spark, 4) == 2L)),
+      "purge" -> (s => assert(s.purgeTombstones(spark, horizonSeq = 1L) == 2L)),
+      "replaceAll" -> (s => s.replaceAll(reload, Seq("id"), "seq", "is_delete")))
+    for ((name, op) <- ops) {
+      val dir = tmpDir(s"lose-$name") + "/t"
+      val setup = new SnapshotParquetSink(dir, nBuckets = N)
+      setup.merge(base.unionByName(tombstones), Seq("id"), "seq", "is_delete")
+      val sinkA = SnapshotParquetSink.forTable(dir)
+      val sinkB = SnapshotParquetSink.forTable(dir)
+      race(
+        a = op(sinkA),
+        b = sinkB.merge(df(winner, seq = 2L, tag = "w"), Seq("id"), "seq", "is_delete"))
+      assert(sinkB.lastCommit.exists(_.version == 1L), s"$name: ${sinkB.lastCommit}")
+      assert(sinkA.versions == Seq(0L, 1L, 2L), s"$name: ${sinkA.versions}")
+      val ids = sortedState(dir).map(_._1).toSet
+      if (name == "replaceAll") assert(ids == Set(1L, 2L), s"$name: $ids")
+      else assert(winner.toSet.subsetOf(ids) && ids.size == 64 - dead.size + winner.size,
+        s"$name lost the winner's rows: $ids")
+      if (name == "purge")
+        assert(SnapshotParquetSink.forTable(dir).read(spark, DeleteMode.Logical)
+          .filter($"is_deleted").count() == 0L, "horizon-old tombstones survive the purge")
+      // the losing attempt cleaned up: no stage beside the manifests, no
+      // data root that no published manifest references
+      val staged = Dfs.list(SnapshotParquetSink.manifestsDir(dir))
+        .map(_.getPath.getName).filter(_.startsWith(".tmp-"))
+      assert(staged.isEmpty, s"$name left stages: $staged")
+      val referenced = (0L to 2L).flatMap(v => SnapshotParquetSink.manifest(dir, v)._2.values)
+        .map(_.split("/__bucket=")(0)).toSet
+      val roots = Dfs.list(new Path(dir, "data")).map(st => s"data/${st.getPath.getName}").toSet
+      assert(roots == referenced, s"$name left unpublished data roots: ${roots -- referenced}")
+    }
   }
 }

@@ -537,7 +537,7 @@ class MaterializedAggSpec extends SparkSpec
   test("arithmetic regimes: CONCURRENT refreshers apply exactly once (FoldBaseConflict retry)") {
     // two independent handles over the same view race a refresh of the
     // same source commit: the guarded merge (mergeFold for deltas,
-    // mergeGuarded for fold absolutes) must refuse the loser's stale
+    // mergeGuardedHinted for fold absolutes) must refuse the loser's stale
     // write — double-applying a delta, or last-write-winning a stale
     // absolute, would corrupt the view silently
     for ((tag, withExt) <- Seq(("delta", false), ("fold", true))) {

@@ -623,6 +623,12 @@ class SnapshotParquetSinkSpec extends SparkSpec {
         Seq("primary_key"), "seq2", "is_delete")
     }
     assert(e3.getMessage.contains("order column"))
+    // replaceAll runs the same guard: its order column is fixed too
+    val e4 = intercept[IllegalArgumentException] {
+      sink.replaceAll(batch(("b", 1, "b0", false)).withColumn("seq2", $"seq"),
+        Seq("primary_key"), "seq2", "is_delete")
+    }
+    assert(e4.getMessage.contains("order column"))
     // compaction carries the recorded keys forward
     sink.compact(spark)
     assert(SnapshotParquetSink.manifestKeys(dir, 1L) == Seq("primary_key"))
