@@ -290,19 +290,16 @@ final class MaterializedAgg(
   }
 
   /** A zero-row frame shaped like the source's Hard read — what
-    * [[deltaSpec]] resolves against. Built from the RECORDED schema when
-    * the manifest carries one: spec analysis is driver-side only and must
-    * not pay the 400-file listing a real `readAt` plan construction does.
+    * [[deltaSpec]] resolves against. Built from the RECORDED schema: spec
+    * analysis is driver-side only and must not pay the 400-file listing a
+    * real `readAt` plan construction does.
     */
-  private def sourceShaped(spark: SparkSession, srcV: Long): DataFrame =
-    SnapshotParquetSink.manifestSchema(source.dir, srcV) match {
-      case Some(rec) =>
-        val shape = org.apache.spark.sql.types.StructType(rec.fields.filterNot(
-          f => f.name == "__gen" || f.name == "__bucket" || f.name == "__is_deleted"))
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), shape)
-      case None => source.readAt(spark, srcV, DeleteMode.Hard).limit(0)
-    }
+  private def sourceShaped(spark: SparkSession, srcV: Long): DataFrame = {
+    val shape = org.apache.spark.sql.types.StructType(
+      SnapshotParquetSink.manifestSchema(source.dir, srcV).fields.filterNot(
+        f => f.name == "__gen" || f.name == "__bucket" || f.name == "__is_deleted"))
+    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), shape)
+  }
 
   /** Does the view's CURRENT committed schema carry the delta counters? A
     * table built before the delta regime (or by a non-delta-able spec)
@@ -310,14 +307,9 @@ final class MaterializedAgg(
     * counter-less rows into a counter-bearing table (or vice versa) would
     * null-fill and corrupt later delta arithmetic.
     */
-  private def storedHasHidden(spark: SparkSession): Boolean =
-    sink.currentVersion.exists { v =>
-      SnapshotParquetSink.manifestSchema(sink.dir, v) match {
-        case Some(s) => s.fieldNames.contains("__rows")
-        case None => sink.readAt(spark, v, DeleteMode.Hard)
-          .columns.contains("__rows")
-      }
-    }
+  private def storedHasHidden: Boolean =
+    sink.currentVersion.exists(
+      SnapshotParquetSink.manifestSchema(sink.dir, _).fieldNames.contains("__rows"))
 
   /** Does the view's committed SCHEMA carry the extremum buffers the fold
     * regime folds against? A pre-buffer table (r13 format, or built by a
@@ -326,16 +318,12 @@ final class MaterializedAgg(
     * lazily (untouched groups carry null buffers until first dirty, when
     * the fold's null-buffer rescan recomputes them exactly).
     */
-  private def storedHasExtBufs(spark: SparkSession, spec: DeltaSpec): Boolean = {
+  private def storedHasExtBufs(spec: DeltaSpec): Boolean = {
     val need = spec.mins.map(e => s"__bot_${e.name}") ++
       spec.maxs.map(e => s"__top_${e.name}") ++
       (spec.mins ++ spec.maxs).map(e => s"__nne_${e.name}")
     sink.currentVersion.exists { v =>
-      val have = SnapshotParquetSink.manifestSchema(sink.dir, v) match {
-        case Some(s) => s.fieldNames.toSet
-        case None => sink.readAt(spark, v, DeleteMode.Hard).columns.toSet
-      }
-      need.forall(have)
+      need.forall(SnapshotParquetSink.manifestSchema(sink.dir, v).fieldNames.toSet)
     }
   }
 
@@ -391,10 +379,8 @@ final class MaterializedAgg(
         // (affected buckets, max seq, write) — O(groups) rows, spillable.
         // extremum buffers only for FOLD-ELIGIBLE (cross-key) views — a
         // keyed view's recompute never needs them (see hiddenAggs)
-        val crossKey = {
-          val ks = SnapshotParquetSink.manifestKeys(source.dir, srcV)
-          ks.nonEmpty && !ks.forall(groupCols.contains)
-        }
+        val crossKey =
+          !SnapshotParquetSink.manifestKeys(source.dir, srcV).forall(groupCols.contains)
         val full = groupedWith(source.readAt(spark, srcV, DeleteMode.Hard),
             spec.map(hiddenAggs(_, withExtBufs = crossKey)).getOrElse(Nil))
           .withColumn("seq", lit(srcV))
@@ -412,12 +398,12 @@ final class MaterializedAgg(
         // regime pick: pure-delta needs (a) a delta-able spec, (b) a view
         // that stores the hidden counters (a pre-delta table must stay on
         // recompute — merging counter-less rows would corrupt arithmetic),
-        // (c) a retained diff base, (d) recorded merge keys for the slice
-        // join. Anything else falls to the exact dirty-group recompute —
-        // carrying the counters forward iff the table already stores them.
-        val deltaReady = spec.isDefined && storedHasHidden(spark)
+        // (c) a retained diff base. Anything else falls to the exact
+        // dirty-group recompute — carrying the counters forward iff the
+        // table already stores them.
+        val deltaReady = spec.isDefined && storedHasHidden
         val baseRetained0 = source.versions.contains(applied)
-        if (deltaReady && baseRetained0 && srcKeys.nonEmpty) {
+        if (deltaReady && baseRetained0) {
           val sp = spec.get
           if (sp.mins.isEmpty && sp.maxs.isEmpty)
             return deltaRefresh(spark, sp, applied, srcV, srcKeys, attempt)
@@ -435,7 +421,7 @@ final class MaterializedAgg(
           // wall). Keyed views (srcKeys ⊆ groups) never fold: their
           // recompute scan already prunes to changed buckets, O(changed).
           if (!srcKeys.forall(groupCols.contains) &&
-              storedHasExtBufs(spark, sp)) {
+              storedHasExtBufs(sp)) {
             val fixedEquiv = spark.conf.getOption(
               "spark.graft.ivm.foldFixedCostBytes").map(_.toLong)
               .getOrElse(MaterializedAgg.FoldFixedCostBytes)
@@ -459,8 +445,7 @@ final class MaterializedAgg(
         lastRefreshRegime = Some("recompute")
         val extraAggs =
           if (deltaReady)
-            hiddenAggs(spec.get, withExtBufs =
-              srcKeys.nonEmpty && !srcKeys.forall(groupCols.contains))
+            hiddenAggs(spec.get, withExtBufs = !srcKeys.forall(groupCols.contains))
           else Nil
         // self-healing when the diff base is GONE (the view lagged past the
         // source's vacuum retention): every group on either side — current
@@ -579,8 +564,8 @@ final class MaterializedAgg(
           // scan itself reads only CHANGED buckets and the whole refresh is
           // O(changed), never O(table). Cross-key rollups must scan the
           // snapshot (exact min/max needs every surviving row of a dirty
-          // group, and those live anywhere). Evolution corner (an agg
-          // column the changed files predate) falls back to the full scan.
+          // group, and those live anywhere). The changed slice carries every
+          // column under the recorded schema.
           val keyDetermined = baseRetained && srcKeys.forall(groupCols.contains)
           def fullSnap = source.readAt(spark, srcV, DeleteMode.Hard)
           val snap =
@@ -589,13 +574,7 @@ final class MaterializedAgg(
                 .getOrElse(fullSnap.filter(lit(false)))
             else fullSnap
           val touched = snap.join(dirty, groupCond(snap, dirty), "left_semi")
-          val recomputed =
-            try groupedWith(touched, extraAggs)
-            catch {
-              case _: org.apache.spark.sql.AnalysisException if keyDetermined =>
-                val t = fullSnap.join(dirty, groupCond(fullSnap, dirty), "left_semi")
-                groupedWith(t, extraAggs)
-            }
+          val recomputed = groupedWith(touched, extraAggs)
           val names = aggNamesOf(recomputed)
           // one outer join covers both cases: dirty groups that still have
           // rows get their recomputed aggregates; groups with no remaining

@@ -154,7 +154,6 @@ final class MaterializedJoin(
         s"joins on ${joinKeys.mkString(",")} — the dim must be keyed by the " +
         "join keys (that is what makes it unique per key)")
     val fKeys = SnapshotParquetSink.manifestKeys(fact.dir, fv)
-    require(fKeys.nonEmpty, s"fact table at ${fact.dir} has no recorded merge keys")
     appliedVersions match {
       case Some((afv, adv)) if afv >= fv && adv >= dv => None
       case applied =>

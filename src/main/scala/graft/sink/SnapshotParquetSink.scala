@@ -92,32 +92,28 @@ object SnapshotParquetSink {
       bloomCols = declaredBloomCols(dir, v))
   }
 
-  /** The table's DECLARED data-skipping columns at `version`: the explicit
-    * `statscols=` / `bloomcols=` header line when present. Legacy manifests
-    * (written before headers) fall back to inferring from the per-bucket
-    * data lines — which UNDERSTATES the declaration when no bucket recorded
-    * a line (every bucket all-null, or over [[BloomIndex.MaxDistinct]]);
-    * the header exists so [[forTable]] writers never silently drop the
-    * table's skipping configuration on that gap.
+  /** The table's DECLARED data-skipping columns at `version` (`statscols=`)
+    * — recorded even when no bucket holds an `s` line (every bucket
+    * all-null), so [[forTable]] writers never drop the table's skipping
+    * configuration.
     */
   def declaredStatsCols(dir: String, version: Long): Seq[String] =
-    headerCols(dir, version, "statscols=").getOrElse(colsOf(manifestStats(dir, version)))
+    csvOf(required(manifestLines(dir, version), "statscols=", dir, version))
 
-  /** Bloom twin of [[declaredStatsCols]]. */
+  /** Bloom twin of [[declaredStatsCols]] (`bloomcols=`; recorded even when
+    * every bucket is over [[BloomIndex.MaxDistinct]] and holds no `f` line).
+    */
   def declaredBloomCols(dir: String, version: Long): Seq[String] =
-    headerCols(dir, version, "bloomcols=").getOrElse(colsOf(manifestBlooms(dir, version)))
-
-  /** The columns any bucket of a parsed `s`/`f` line map records, sorted. */
-  private[sink] def colsOf(perBucket: Map[Int, Map[String, Any]]): Seq[String] =
-    perBucket.values.flatMap(_.keys).toSeq.distinct.sorted
-
-  private def headerCols(dir: String, version: Long,
-      prefix: String): Option[Seq[String]] =
-    header(manifestLines(dir, version), prefix).map(csvOf)
+    csvOf(required(manifestLines(dir, version), "bloomcols=", dir, version))
 
   /** The value of the first `<key>` header line (`key` ends in `=`). */
   private def header(lines: Seq[String], key: String): Option[String] =
     lines.collectFirst { case l if l.startsWith(key) => l.stripPrefix(key) }
+
+  /** [[header]] for a line the format makes mandatory. */
+  private def required(lines: Seq[String], key: String, dir: String,
+      version: Long): String =
+    header(lines, key).getOrElse(sys.error(s"manifest v$version at $dir lacks $key"))
 
   private def csvOf(v: String): Seq[String] =
     v.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
@@ -134,10 +130,8 @@ object SnapshotParquetSink {
     */
   private[sink] def foldDeleteFlag(batch: DataFrame, isDeleteCol: String): DataFrame = {
     // loud, at WRITE time: a NON-flag data column named `is_deleted` would
-    // be silently dropped by every Logical-mode read (the name is where
-    // the tombstone flag resurfaces) — silent business-column loss. The
-    // read-side drop stays for legacy files whose FLAG was persisted under
-    // that name; new writes must rename or declare it as the flag.
+    // collide with the tombstone flag every Logical-mode read resurfaces
+    // under that name — rename it or declare it as the flag.
     require(isDeleteCol == "is_deleted" || !batch.columns.contains("is_deleted"),
       s"column name 'is_deleted' is reserved by Logical-mode reads: a data " +
         s"column of that name (the declared flag is '$isDeleteCol') would " +
@@ -225,9 +219,22 @@ object SnapshotParquetSink {
         n.stripPrefix("v").stripSuffix(".manifest").toLong -> t }
       .sortBy(_._1)
 
-  /** `version`'s manifest lines, through the published-manifest cache. */
-  private def manifestLines(dir: String, version: Long): Seq[String] =
-    graft.engine.CommitLock.readPublished(manifestPath(dir, version))
+  /** First line of every manifest body: the format the lines below follow. */
+  private[sink] val ManifestFormat = "format=2"
+
+  /** `version`'s manifest lines, through the published-manifest cache — the
+    * one read path behind every accessor. A complete body (one with its
+    * `version=` line) must start with [[ManifestFormat]]; a body without a
+    * `version=` line is a put-style lock's not-yet-visible content, which
+    * the accessors fail on transiently and the cache never keeps.
+    */
+  private def manifestLines(dir: String, version: Long): Seq[String] = {
+    val lines = graft.engine.CommitLock.readPublished(manifestPath(dir, version))
+    if (!lines.headOption.contains(ManifestFormat) && lines.exists(_.startsWith("version=")))
+      sys.error(s"manifest v$version at $dir has no $ManifestFormat header: the " +
+        "table was written by a pre-format build and must be re-created")
+    lines
+  }
 
   /** (declared nBuckets, bucket → path relative to `dir`) at `version`. */
   def manifest(dir: String, version: Long): (Int, Map[Int, String]) =
@@ -235,7 +242,7 @@ object SnapshotParquetSink {
 
   private def manifestOf(dir: String, version: Long,
       lines: Seq[String]): (Int, Map[Int, String]) = {
-    val n = header(lines, "nBuckets=").map(_.toInt).getOrElse(sys.error(s"manifest v$version at $dir lacks nBuckets"))
+    val n = required(lines, "nBuckets=", dir, version).toInt
     val entries = lines.iterator.filter(_.startsWith("b ")).map { line =>
       val Array(_, b, rel) = line.split(" ", 3)
       b.toInt -> rel
@@ -249,13 +256,13 @@ object SnapshotParquetSink {
     * reader casts its literal to it before hashing (xxhash64 hashes the
     * same logical value differently per type), so a BIGINT literal finds a
     * row stored as INT. Within one readable version the types cannot
-    * actually diverge across buckets (parquet mergeSchema refuses
-    * int/bigint mixes — widening goes through the replaceAll migration,
-    * which recomputes every sidecar), but recording the type per line makes
-    * the hash contract explicit and keeps readers correct across versions
-    * with different types. Absence of a line means "unknown, cannot prune"
-    * (all-null bucket, distinct count over [[BloomIndex.MaxDistinct]], or a
-    * table written without bloomCols).
+    * actually diverge across buckets (the recorded schema refuses a
+    * same-name type change — widening goes through the replaceAll
+    * migration, which recomputes every sidecar), but recording the type per
+    * line makes the hash contract explicit and keeps readers correct across
+    * versions with different types. Absence of a line means "unknown,
+    * cannot prune" (all-null bucket, distinct count over
+    * [[BloomIndex.MaxDistinct]], or a table written without bloomCols).
     */
   def manifestBlooms(dir: String,
       version: Long): Map[Int, Map[String, (String, String)]] =
@@ -272,32 +279,28 @@ object SnapshotParquetSink {
       .groupBy(_._1)
       .map { case (b, rows) => b -> rows.map(r => r._2 -> r._3).toMap }
 
-  /** The table's FILE schema union recorded at `version` (JSON StructType;
-    * includes `__gen` and the delete flag, excludes the `__bucket`
-    * partition directory) — what `mergeSchema` over every bucket file
-    * would reconstruct, recorded at commit time so READERS NEVER PAY A
+  /** The table's FILE schema union recorded at `version` (`schema=`, JSON
+    * StructType; includes `__gen` and the delete flag, excludes the
+    * `__bucket` partition directory) — what `mergeSchema` over every bucket
+    * file would reconstruct, recorded at commit time so READERS NEVER PAY A
     * FOOTER SCAN TO RESOLVE THE SCHEMA: at 100 TB, "open every bucket's
     * footer before planning" is a real planning-latency tax this line
-    * removes (the Delta metaData-action idea). None for manifests written
-    * before schema recording — consumers then fall back to the footer
-    * merge. Every rewrite that reads the full state (compact, rebucket,
-    * purge, replaceAll) records the line, upgrading legacy tables.
+    * removes (the Delta metaData-action idea).
     */
   def manifestSchema(dir: String,
-      version: Long): Option[org.apache.spark.sql.types.StructType] =
-    header(manifestLines(dir, version), "schema=").map(json =>
-      org.apache.spark.sql.types.DataType.fromJson(json)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+      version: Long): org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.DataType.fromJson(
+      required(manifestLines(dir, version), "schema=", dir, version))
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
 
-  /** The merge-key columns recorded at `version` (the columns the bucket
-    * hash routes on). Empty for manifests written before keys were
-    * recorded — consumers then fall back to caller-declared keys.
+  /** The merge-key columns recorded at `version` (`keys=`, the columns the
+    * bucket hash routes on).
     */
   def manifestKeys(dir: String, version: Long): Seq[String] =
-    keysOf(manifestLines(dir, version))
+    keysOf(dir, version, manifestLines(dir, version))
 
-  private def keysOf(lines: Seq[String]): Seq[String] =
-    header(lines, "keys=").map(csvOf).getOrElse(Seq.empty)
+  private def keysOf(dir: String, version: Long, lines: Seq[String]): Seq[String] =
+    csvOf(required(lines, "keys=", dir, version))
 
   /** The last-write-wins ORDER COLUMN recorded at `version` (`seqcol=`).
     * Written by merge/replaceAll from the caller's declared `seqCol` and
@@ -307,17 +310,17 @@ object SnapshotParquetSink {
     * column literally named `seq`. A table whose order column is `ts` but
     * that also happens to carry an unrelated `seq` data column would
     * otherwise get a silently wrong diff (updates not touching that column
-    * vanish). None for manifests written before recording — consumers then
-    * fall back to the caller-supplied or default name.
+    * vanish).
     */
-  def manifestSeqCol(dir: String, version: Long): Option[String] =
-    header(manifestLines(dir, version), "seqcol=").map(_.trim).filter(_.nonEmpty)
+  def manifestSeqCol(dir: String, version: Long): String =
+    required(manifestLines(dir, version), "seqcol=", dir, version)
 
-  /** The applied-head seq recorded at `version`: the max `seqCol` this
-    * table has merged up to and including that commit (monotone across
-    * versions). None for manifests written before it was recorded. This is
-    * the metadata [[SnapshotCatalog.commitAligned]] reads to build
-    * seq-consistent cross-table cuts without scanning data files.
+  /** The applied-head seq recorded at `version` (`maxseq=`): the max
+    * `seqCol` this table has merged up to and including that commit
+    * (monotone across versions). None while every merge carried only null
+    * seqs — such a table has no head yet. This is the metadata
+    * [[SnapshotCatalog.commitAligned]] reads to build seq-consistent
+    * cross-table cuts without scanning data files.
     */
   def manifestMaxSeq(dir: String, version: Long): Option[Long] =
     maxSeqOf(manifestLines(dir, version))
@@ -332,14 +335,8 @@ object SnapshotParquetSink {
     * the entries' carry-forward rule: untouched buckets keep the stats of
     * the commit that last wrote them, so a bucket's recorded `seq` max is
     * the last time its content changed — which is what makes
-    * `WHERE seq > X` incremental reads skip cold buckets.
-    *
-    * TIMESTAMP_NTZ note: NTZ stats are pure wall-clock micros. A manifest
-    * written by a pre-fix build in a non-UTC session would carry
-    * zone-shifted NTZ ranges; no released table recorded any (the writer
-    * and the fix shipped in the same round), but a table suspected of it
-    * should `compact` once — the rewrite re-derives stats under the
-    * current normalization.
+    * `WHERE seq > X` incremental reads skip cold buckets. TIMESTAMP_NTZ
+    * stats are pure wall-clock micros.
     */
   def manifestStats(dir: String,
       version: Long): Map[Int, Map[String, (BigDecimal, BigDecimal)]] =
@@ -451,11 +448,29 @@ object SnapshotParquetSink {
   *   manifests/v<%08d>.manifest                       text, atomic publish
   * }}}
   *
-  * Manifest format (line-oriented, no parser dependency):
-  * `version=N`, `nBuckets=B`, `keys=...`, `maxseq=S` (the table's applied
-  * head seq — monotone; what [[SnapshotCatalog.commitAligned]] reads),
-  * then one `b <bucket> <relative-path>` per
-  * bucket present. Merge semantics (last-write-wins by seq, `__gen`
+  * Manifest format 2 (line-oriented, no parser dependency), written only
+  * by [[manifestBody]] and read only through the companion's
+  * `manifestLines`, which refuses a complete body whose first line is not
+  * `format=2`. Header lines, in this order:
+  *   - `format=2` — mandatory, first;
+  *   - `version=N` — mandatory; a body without it is not yet complete;
+  *   - `nBuckets=B` — mandatory, the routing width;
+  *   - `keys=k1,k2` — mandatory, the merge keys the bucket hash routes on;
+  *   - `seqcol=c` — mandatory, the last-write-wins order column;
+  *   - `maxseq=S` — optional, the applied head seq (monotone; what
+  *     [[SnapshotCatalog.commitAligned]] reads), absent while every merge
+  *     carried only null seqs;
+  *   - `schema=<json>` — mandatory, the file schema union;
+  *   - `statscols=a,b` and `bloomcols=c` — mandatory (the value may be
+  *     empty), the declared data-skipping columns.
+  * Then the per-line records, each optional:
+  *   - `c <col> <lo> <hi>` — the Z-order cluster spec, one per column
+  *     (none = hash-routed);
+  *   - `b <bucket> <relative-path>` — one per bucket present;
+  *   - `s <bucket> <col> <min> <max>` — per-bucket stats (none = unknown);
+  *   - `f <bucket> <col> <type> <relative-path>` — bloom sidecars.
+  *
+  * Merge semantics (last-write-wins by seq, `__gen`
   * tie-break = the committing version, tombstoned deletes) implement the
   * [[UpsertSink]] contract; `__gen` strictly increases per commit, so
   * replaying a batch is idempotent and out-of-order-safe.
@@ -578,8 +593,8 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     * recommended ≤25k-row bucket layout. A commit therefore writes the
     * native filters iff the PRIOR manifest shows a bloom-declared bucket
     * without a sidecar line (the build's saturation marker — also set by
-    * all-null buckets and pre-declaration legacy buckets, an acceptable
-    * conservative over-trigger): the first oversized commit goes
+    * all-null buckets, an acceptable conservative over-trigger): the
+    * first oversized commit goes
     * native-less (a missing filter prunes nothing, never wrongly) and
     * every later commit carries the native layer. `graft.bloom.forceNative`
     * forces the layer on (bench/test pin of the native-write cost).
@@ -617,8 +632,7 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     * else carried from `carryFrom`'s manifest — so a maintenance or
     * config-less writer never strips the table's declaration, and
     * [[SnapshotParquetSink.forTable]] recovers it even when no bucket
-    * recorded a per-bucket data line. An explicitly empty header means
-    * "declared none"; a missing header means legacy (infer from lines).
+    * recorded a per-bucket data line. An empty value means "declared none".
     */
   private def skipColsLines(carryFrom: Option[Long]): Seq[String] = {
     val st = if (statsCols.nonEmpty) statsCols
@@ -826,38 +840,30 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     }
   }
 
-  /** `schema=<json>` line for a commit writing frames shaped `written`
-    * (the `__bucket` partition column is stripped — it never lands in the
+  /** The `schema=` JSON for a commit writing frames shaped `written` (the
+    * `__bucket` partition column is stripped — it never lands in the
     * files), unioned with the carry source's RECORDED schema: untouched
     * buckets may hold evolution-era columns this commit's affected set
     * never read, and dropping them from the line would misdeclare the
-    * table. On a legacy table (carry source has no recorded schema) the
-    * line is omitted rather than derived — deriving would cost exactly the
-    * footer scan this line exists to remove; the next full rewrite
-    * (compact/rebucket/purge/replaceAll) upgrades it. A same-name type
-    * conflict cannot arise through the supported evolution paths (merge
-    * only ADDS columns; widening rewrites the whole table) and fails
-    * loudly if it ever appears.
+    * table. A same-name type conflict cannot arise through the supported
+    * evolution paths (merge only ADDS columns; widening rewrites the whole
+    * table) and fails loudly if it ever appears.
     */
-  private def schemaLine(written: org.apache.spark.sql.types.StructType,
-      carryFrom: Option[Long]): Option[String] = {
+  private def schemaJson(written: org.apache.spark.sql.types.StructType,
+      carryFrom: Option[Long]): String = {
     import org.apache.spark.sql.types.StructType
     val fileSchema = StructType(written.fields.filterNot(_.name == "__bucket"))
-    val prior = carryFrom.flatMap(v => SnapshotParquetSink.manifestSchema(dir, v))
-    if (carryFrom.isDefined && prior.isEmpty) None
-    else {
-      val out = prior match {
-        case None => fileSchema
-        case Some(p) =>
-          val byName = fileSchema.fields.map(f => f.name -> f).toMap
-          p.fields.foreach(f => byName.get(f.name).foreach(n =>
-            require(n.dataType == f.dataType,
-              s"schema conflict on '${f.name}' at $dir: batch ${n.dataType} vs " +
-                s"recorded ${f.dataType} — type changes go through replaceAll")))
-          StructType(fileSchema.fields ++ p.fields.filterNot(f => byName.contains(f.name)))
-      }
-      Some("schema=" + out.json)
+    val out = carryFrom.map(SnapshotParquetSink.manifestSchema(dir, _)) match {
+      case None => fileSchema
+      case Some(p) =>
+        val byName = fileSchema.fields.map(f => f.name -> f).toMap
+        p.fields.foreach(f => byName.get(f.name).foreach(n =>
+          require(n.dataType == f.dataType,
+            s"schema conflict on '${f.name}' at $dir: batch ${n.dataType} vs " +
+              s"recorded ${f.dataType} — type changes go through replaceAll")))
+        StructType(fileSchema.fields ++ p.fields.filterNot(f => byName.contains(f.name)))
     }
+    out.json
   }
 
   /** Routing: key hash by default; on a clustered table, the top
@@ -934,20 +940,21 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
   private def publish(version: Long, body: String): Boolean =
     graft.engine.CommitLock.publishFile(manifestPath(version), body)
 
-  /** The one writer of a manifest body. Each rewrite passes its own carry
-    * rules in as values: the header fields (`seqCol`/`maxSeq`/`schema`
-    * absent = line omitted; `skipFrom` = the manifest [[skipColsLines]]
-    * carries the skipping declaration from), the cluster spec, the bucket
-    * entries and the per-bucket `s` (stats) and `f` (bloom) lines. Line
-    * order is the format's: header, `c`, `b` by bucket, `s`, `f`.
+  /** The one writer of a manifest body (the format is the class scaladoc's
+    * list). Each rewrite passes its own carry rules in as values: the
+    * header fields (`maxSeq` None = no head yet; `schema` = the
+    * [[schemaJson]]; `skipFrom` = the manifest [[skipColsLines]] carries
+    * the skipping declaration from), the cluster spec, the bucket entries
+    * and the per-bucket `s` (stats) and `f` (bloom) lines.
     */
   private def manifestBody(version: Long, buckets: Int, keys: Seq[String],
-      seqCol: Option[String], maxSeq: Option[Long], schema: Option[String],
+      seqCol: String, maxSeq: Option[Long], schema: String,
       skipFrom: Option[Long], cluster: Seq[SnapshotParquetSink.ClusterCol],
       entries: Iterable[(Int, String)], stats: Seq[String],
       blooms: Seq[String]): String =
-    (Seq(s"version=$version", s"nBuckets=$buckets", s"keys=${keys.mkString(",")}") ++
-      seqCol.map(c => s"seqcol=$c") ++ maxSeq.map(m => s"maxseq=$m") ++ schema ++
+    (Seq(SnapshotParquetSink.ManifestFormat, s"version=$version", s"nBuckets=$buckets",
+      s"keys=${keys.mkString(",")}", s"seqcol=$seqCol") ++
+      maxSeq.map(m => s"maxseq=$m") ++ Seq(s"schema=$schema") ++
       skipColsLines(skipFrom) ++
       cluster.map(c => s"c ${c.name} ${c.lo} ${c.hi}") ++
       entries.toSeq.sortBy(_._1).map { case (b, rel) => s"b $b $rel" } ++
@@ -994,11 +1001,11 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
       .toArray.sorted
 
   /** Bloom columns a whole-table rewrite of `base` covers: this handle's
-    * declaration, else the columns `base`'s manifest holds sidecars for.
+    * declaration, else the one `base`'s manifest records.
     */
   private def effectiveBloomCols(base: Long): Seq[String] =
     if (bloomCols.nonEmpty) bloomCols
-    else SnapshotParquetSink.colsOf(SnapshotParquetSink.manifestBlooms(dir, base))
+    else SnapshotParquetSink.declaredBloomCols(dir, base)
 
   /** Layout guard against the manifest at `v`: a writer with a different
     * bucket count or key set would scatter keys across incompatible bucket
@@ -1014,13 +1021,13 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
       s"sink nBuckets=$nBuckets but the table at $dir was committed with " +
         s"nBuckets=$declared — construct the sink with the table's value")
     val priorKeys = SnapshotParquetSink.manifestKeys(dir, v)
-    require(priorKeys.isEmpty || priorKeys == keys,
+    require(priorKeys == keys,
       s"$op keys ${keys.mkString(",")} do not match the table's committed " +
         s"keys ${priorKeys.mkString(",")} at $dir")
     val priorSeq = SnapshotParquetSink.manifestSeqCol(dir, v)
-    require(priorSeq.forall(_ == seqCol),
+    require(priorSeq == seqCol,
       s"seqCol '$seqCol' does not match the table's committed order " +
-        s"column '${priorSeq.getOrElse("")}' at $dir")
+        s"column '$priorSeq' at $dir")
     requireClusterMatch(v)
   }
 
@@ -1221,14 +1228,13 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
         base.foreach(guardLayout(_, "merge", keys, seqCol))
 
         // existing state of the affected buckets, read under the
-        // manifest's RECORDED schema when present (zero footer IO — the
-        // readAt rule; explicit-schema reads null-fill evolution-era files
-        // exactly like mergeSchema resolved them, and __bucket comes back
-        // as the appended partition column); legacy manifests keep the
-        // footer merge.
-        val current = readByRoot(spark,
+        // manifest's RECORDED schema (zero footer IO — the readAt rule;
+        // explicit-schema reads null-fill evolution-era files exactly like
+        // mergeSchema resolved them, and __bucket comes back as the
+        // appended partition column)
+        val current = base.flatMap(v => readByRoot(spark,
           affected.toSeq.flatMap(b => entries.get(b).map(rel => (b, rel))),
-          base.flatMap(v => SnapshotParquetSink.manifestSchema(dir, v)))
+          SnapshotParquetSink.manifestSchema(dir, v)))
 
         // __gen = the version this computation TARGETS. A rebase publishes
         // these files at a HIGHER version with the gen left as-is — safe
@@ -1407,16 +1413,8 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
         val carryEntries = carryFrom.map(readManifest).getOrElse(Map.empty)
         val newEntries = carryEntries ++
           s.written.map(b => b -> s"data/${s.commitId}/__bucket=$b")
-        // prior head: recorded metadata, or — for a table whose manifests
-        // predate maxseq recording — ONE upgrade scan of the stored state
-        // (recording only the batch's max would UNDERSTATE the head and
-        // hand commitAligned a cut whose state reaches past it)
-        val priorMaxSeq: Option[Long] = carryFrom.flatMap { v =>
-          SnapshotParquetSink.manifestMaxSeq(dir, v).orElse(
-            Option(readAt(spark, v, DeleteMode.Logical)
-              .agg(max(col(seqCol).cast("long"))).head().get(0))
-              .map(_.asInstanceOf[Long]))
-        }
+        val priorMaxSeq: Option[Long] =
+          carryFrom.flatMap(SnapshotParquetSink.manifestMaxSeq(dir, _))
         // fold merges re-check the base on every carry source: a rebase
         // re-carries from winners whose state may include another
         // refresher's fold of the same delta
@@ -1433,8 +1431,8 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
         val written = s.written.toSet
         val carriedBlooms = carryFrom.toSeq.flatMap(v =>
           carriedLines("f", SnapshotParquetSink.manifestBlooms(dir, v), b => !written(b)))
-        val body = manifestBody(version, nBuckets, keys, Some(seqCol), maxSeqOpt,
-          schemaLine(s.schema, carryFrom), carryFrom, clusterBy, newEntries,
+        val body = manifestBody(version, nBuckets, keys, seqCol, maxSeqOpt,
+          schemaJson(s.schema, carryFrom), carryFrom, clusterBy, newEntries,
           carryFrom.toSeq.flatMap(carriedStats(_, b => !written(b))) ++ s.stats,
           carriedBlooms ++ s.blooms)
         if (!publish(version, body)) None
@@ -1488,8 +1486,8 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
         // same in-write bloom fusion as merge (see observeBlooms)
         val obs = observeBlooms(spark, toWrite, merged.schema)
         writeBuckets(obs.frame, commitId, parquetBloomOptsFor(base, bloomCols))
-        val body = manifestBody(version, nBuckets, keys, Some(seqCol), batchMaxSeq,
-          schemaLine(merged.schema, None), base, clusterBy,
+        val body = manifestBody(version, nBuckets, keys, seqCol, batchMaxSeq,
+          schemaJson(merged.schema, None), base, clusterBy,
           affected.map(b => b -> s"data/$commitId/__bucket=$b"),
           statsLinesFor(spark, commitId), obs.lines(commitId, merged.schema))
         if (publish(version, body)) Some(())
@@ -1552,33 +1550,27 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     }.sum
 
   /** Plan a read of `paths` (files of `version`'s manifest) under the
-    * version's RECORDED schema when present — skipping the mergeSchema
-    * footer scan entirely: at scale, schema resolution must be O(1)
-    * metadata, not O(files) footer reads (and locally each skipped footer
-    * job shaves fixed latency off every readAt/readChangedAt of the
-    * merge-heavy lifecycle paths). The recorded schema is the union across
-    * commits with per-column type conflicts refused at write time, so an
-    * explicit-schema read null-fills evolution-era files exactly like
-    * mergeSchema resolved them. Legacy manifests (no schema line) keep the
-    * footer merge.
+    * version's RECORDED schema — no mergeSchema footer scan: at scale,
+    * schema resolution must be O(1) metadata, not O(files) footer reads
+    * (and locally each skipped footer job shaves fixed latency off every
+    * readAt/readChangedAt of the merge-heavy lifecycle paths). The recorded
+    * schema is the union across commits with per-column type conflicts
+    * refused at write time, so an explicit-schema read null-fills
+    * evolution-era files exactly like mergeSchema resolved them.
     */
   private def readWithKnownSchema(spark: SparkSession, version: Long,
       paths: Seq[String]): DataFrame =
-    SnapshotParquetSink.manifestSchema(dir, version) match {
-      case Some(recorded) => spark.read.schema(recorded).parquet(paths: _*)
-      case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    }
+    spark.read.schema(SnapshotParquetSink.manifestSchema(dir, version)).parquet(paths: _*)
 
+  /** Drops the bookkeeping columns; `is_deleted` is reserved for Logical
+    * mode's flag ([[SnapshotParquetSink.foldDeleteFlag]] keeps it out of
+    * the files).
+    */
   private def shape(t0: DataFrame, mode: DeleteMode): DataFrame = {
     val t = t0.drop("__gen", "__bucket")
     mode match {
       case DeleteMode.Hard    => t.filter(!col("__is_deleted")).drop("__is_deleted")
-      // 'is_deleted' is RESERVED by Logical mode: drop a literal column of
-      // that name (legacy files written before foldDeleteFlag absorbed it)
-      // before the rename — otherwise a multi-hop follower chain reads two
-      // 'is_deleted' columns and the next merge dies on ambiguous reference
-      case DeleteMode.Logical =>
-        t.drop("is_deleted").withColumnRenamed("__is_deleted", "is_deleted")
+      case DeleteMode.Logical => t.withColumnRenamed("__is_deleted", "is_deleted")
     }
   }
 
@@ -1602,20 +1594,13 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     * IVM refreshes. None when the versions share every file (no possible
     * change). Schema = the version's RECORDED schema (zero footer IO; the
     * slice carries every table column, with evolution-era files
-    * null-filled), falling back to mergeSchema over the changed files on
-    * legacy manifests — where a caller needing an evolution-era column
-    * absent from old changed files checks `columns` and falls back to
-    * [[readAt]].
+    * null-filled).
     */
   def readChangedAt(spark: SparkSession, version: Long, other: Long,
       mode: DeleteMode): Option[DataFrame] =
     changedEntriesAt(version, other) match {
       case Nil => None
       case paths =>
-        // recorded-schema read: changed slices carry EVERY table column
-        // (evolution-era files null-fill), so consumers' "changed files
-        // predate a column" full-read fallbacks no longer trigger — the
-        // slice is always transform-complete
         Some(shape(readWithKnownSchema(spark, version, paths), mode))
     }
 
@@ -1646,10 +1631,7 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
         // "absent" for live keys (merge guards divergence at write time;
         // lookup is read-only and must self-align instead)
         val (committedN, entries) = SnapshotParquetSink.manifest(dir, v)
-        // recorded schema when present (zero footer IO — the readAt rule);
-        // legacy manifests sample one bucket's footers
-        val sample = readWithKnownSchema(spark, v, Seq(s"$dir/${entries.head._2}"))
-        val schema = sample.schema
+        val schema = SnapshotParquetSink.manifestSchema(dir, v)
         val committedCluster = SnapshotParquetSink.manifestCluster(dir, v)
         val bucket =
           if (committedCluster.isEmpty)
@@ -1672,7 +1654,8 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
             SnapshotParquetSink.clusterBucketFor(longs, committedCluster, committedN)
           }
         entries.get(bucket.toInt) match {
-          case None => shape(sample.limit(0), mode)
+          case None => shape(spark.createDataFrame(
+            java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema), mode)
           case Some(rel) =>
             val t = readWithKnownSchema(spark, v, Seq(s"$dir/$rel"))
             shape(keys.zip(keyValues).foldLeft(t) { case (df, (k, kv)) => df.filter(col(k) === kv) }, mode)
@@ -1698,19 +1681,13 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     * key — the same join any consumer-side diff pays, but over two
     * changed-bucket projections instead of full snapshots.
     */
-  def changesBetween(spark: SparkSession, fromVersion: Long, toVersion: Long,
-      seqColOverride: Option[String] = None): DataFrame = {
+  def changesBetween(spark: SparkSession, fromVersion: Long, toVersion: Long): DataFrame = {
     require(fromVersion < toVersion,
       s"changesBetween needs fromVersion < toVersion, got $fromVersion >= $toVersion")
     val keys = SnapshotParquetSink.manifestKeys(dir, toVersion)
-    require(keys.nonEmpty,
-      s"the table at $dir records no merge keys (pre-keys-recording manifest)")
     // the RECORDED order column governs (the manifest is the contract a
-    // table with an unrelated data column named `seq` relies on); the
-    // override and the literal-`seq` fallback serve pre-recording tables
-    val seqCol = seqColOverride
-      .orElse(SnapshotParquetSink.manifestSeqCol(dir, toVersion))
-      .getOrElse("seq")
+    // table with an unrelated data column named `seq` relies on)
+    val seqCol = SnapshotParquetSink.manifestSeqCol(dir, toVersion)
     def live(v: Long, other: Long) = readChangedAt(spark, v, other, DeleteMode.Hard)
       .getOrElse(readAt(spark, v, DeleteMode.Hard).filter(lit(false)))
       .select(keys.map(col) :+ col(seqCol): _*)
@@ -1742,23 +1719,22 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     * whole-table rewrites (compact, rebucket, tombstone purge).
     */
   private def readFullState(spark: SparkSession, base: Long): DataFrame =
-    readByRoot(spark, readManifest(base).toSeq.sortBy(_._1), None).get
+    readByRoot(spark, readManifest(base).toSeq.sortBy(_._1),
+      SnapshotParquetSink.manifestSchema(dir, base)).get
 
   /** The commit root (`data/<commit-uuid>`) of a manifest entry. */
   private def rootOf(rel: String): String = rel.substring(0, rel.indexOf("/__bucket="))
 
   /** `entries`' bucket files grouped per commit root: each root was written
     * with partitionBy("__bucket"), so reading with basePath=root recovers
-    * the bucket column; roots from different commits may differ in schema
-    * (evolution) — union by name. `schema` None = mergeSchema footer read.
-    * None when `entries` is empty.
+    * the bucket column; every root reads under the recorded `schema`, so
+    * evolution-era files null-fill. None when `entries` is empty.
     */
   private def readByRoot(spark: SparkSession, entries: Seq[(Int, String)],
-      schema: Option[org.apache.spark.sql.types.StructType]): Option[DataFrame] =
+      schema: org.apache.spark.sql.types.StructType): Option[DataFrame] =
     entries.groupBy { case (_, rel) => rootOf(rel) }.toSeq.sortBy(_._1)
       .map { case (root, group) =>
-        schema.fold(spark.read.option("mergeSchema", "true"))(spark.read.schema(_))
-          .option("basePath", s"$dir/$root")
+        spark.read.schema(schema).option("basePath", s"$dir/$root")
           .parquet(group.map { case (_, rel) => s"$dir/$rel" }: _*)
       }.reduceOption((a, b) => a.unionByName(b, allowMissingColumns = true))
 
@@ -1774,7 +1750,7 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
   def compact(spark: SparkSession): Long = synchronized {
     graft.engine.CommitLock.retry("compaction", dir) { _ =>
       val base = currentVersion.getOrElse(sys.error(s"nothing to compact at $dir"))
-      val entries = readManifest(base)
+      val (baseBuckets, entries) = SnapshotParquetSink.manifest(dir, base)
       val version = base + 1L
       val full = readFullState(spark, base)
       val commitId = UUID.randomUUID().toString
@@ -1794,11 +1770,12 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
         if (bloomCols.nonEmpty) bloomLinesFor(spark, commitId)
         else copyBloomsInto(base, commitId, entries.keySet)
       // compaction rewrites data files, never the key contract, the head
-      // or the routing — recorded keys, seqcol, maxseq and cluster spec carry
-      val body = manifestBody(version, nBuckets, SnapshotParquetSink.manifestKeys(dir, base),
+      // or the routing — recorded bucket count, keys, seqcol, maxseq and
+      // cluster spec carry (this handle's own layout plays no part)
+      val body = manifestBody(version, baseBuckets, SnapshotParquetSink.manifestKeys(dir, base),
         SnapshotParquetSink.manifestSeqCol(dir, base),
         SnapshotParquetSink.manifestMaxSeq(dir, base),
-        schemaLine(full.schema, None), // full rewrite: derive fresh
+        schemaJson(full.schema, None), // full rewrite: derive fresh
         Some(base), SnapshotParquetSink.manifestCluster(dir, base),
         entries.keys.map(b => b -> s"data/$commitId/__bucket=$b"),
         carriedStats(base, _ => true), bloomsOut)
@@ -1830,8 +1807,6 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
       val base = currentVersion.getOrElse(sys.error(s"nothing to rebucket at $dir"))
       val version = base + 1L
       val baseKeys = SnapshotParquetSink.manifestKeys(dir, base)
-      require(baseKeys.nonEmpty,
-        s"the table at $dir records no merge keys — rebucket cannot derive routing")
       requireClusterMatch(base)
       val full = readFullState(spark, base).drop("__bucket")
         .withColumn("__bucket", bucketExpr(baseKeys, newBuckets))
@@ -1860,15 +1835,15 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
           else Map.empty[String, String]
         }
       writeBuckets(full.repartition(newBuckets, col("__bucket")), commitId, nativeOpts)
-      // stats recomputed for whatever the base recorded (this maintenance
+      // stats recomputed for whatever the base declared (this maintenance
       // handle may not declare statsCols; the table's skipping metadata
       // must survive regardless)
       val statCols = if (statsCols.nonEmpty) statsCols
-        else SnapshotParquetSink.colsOf(SnapshotParquetSink.manifestStats(dir, base))
+        else SnapshotParquetSink.declaredStatsCols(dir, base)
       val body = manifestBody(version, newBuckets, baseKeys,
         SnapshotParquetSink.manifestSeqCol(dir, base),
         SnapshotParquetSink.manifestMaxSeq(dir, base),
-        schemaLine(full.schema, None), // full rewrite: derive fresh
+        schemaJson(full.schema, None), // full rewrite: derive fresh
         Some(base), clusterBy,
         writtenBucketsOf(commitId).map(b => b -> s"data/$commitId/__bucket=$b"),
         statsLinesFor(spark, commitId, statCols),
@@ -1893,23 +1868,14 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     * (content shrank; carried ranges would stay conservative-safe but
     * recomputing keeps pruning tight).
     */
-  def purgeTombstones(spark: SparkSession, horizonSeq: Long,
-      seqColDefault: String = "seq"): Long = synchronized {
+  def purgeTombstones(spark: SparkSession, horizonSeq: Long): Long = synchronized {
     graft.engine.CommitLock.retry("purge", dir) { _ =>
       val base = currentVersion.getOrElse(sys.error(s"nothing to purge at $dir"))
-      // the recorded order column governs the horizon comparison; the
-      // parameter is the pre-recording fallback
+      // the recorded order column governs the horizon comparison
       val seqCol = SnapshotParquetSink.manifestSeqCol(dir, base)
-        .getOrElse(seqColDefault)
-      val entries = readManifest(base)
+      val (baseBuckets, entries) = SnapshotParquetSink.manifest(dir, base)
       val version = base + 1L
       val full = readFullState(spark, base)
-      // pre-maxseq table: derive the true head from the PRE-purge state
-      // (tombstones included) — deriving it later from the purged state
-      // would understate it and hand commitAligned a cut the table is past
-      val headSeq: Option[Long] = SnapshotParquetSink.manifestMaxSeq(dir, base)
-        .orElse(Option(full.agg(max(col(seqCol).cast("long"))).head().get(0))
-          .map(_.asInstanceOf[Long]))
       // coalesce(true): a NULL-seq tombstone makes the predicate NULL and a
       // plain filter would DROP it regardless of horizon — unknown seq
       // must conservatively survive the purge
@@ -1939,12 +1905,13 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
       val statsOut =
         if (statsCols.nonEmpty) statsLinesFor(spark, commitId)
         else carriedStats(base, kept)
-      // purge removes rows, never the routing — cluster spec carries; bloom
-      // sidecars COPY for surviving buckets (content only shrank, so the
-      // existing filters stay safe over-approximations of what remains)
-      val body = manifestBody(version, nBuckets, SnapshotParquetSink.manifestKeys(dir, base),
-        SnapshotParquetSink.manifestSeqCol(dir, base), headSeq,
-        schemaLine(purged.schema, None), // full rewrite: derive fresh
+      // purge removes rows, never the routing or the head — bucket count,
+      // cluster spec and maxseq carry; bloom sidecars COPY for surviving
+      // buckets (content only shrank, so the existing filters stay safe
+      // over-approximations of what remains)
+      val body = manifestBody(version, baseBuckets, SnapshotParquetSink.manifestKeys(dir, base),
+        seqCol, SnapshotParquetSink.manifestMaxSeq(dir, base),
+        schemaJson(purged.schema, None), // full rewrite: derive fresh
         Some(base), SnapshotParquetSink.manifestCluster(dir, base),
         writtenBuckets.map(b => b -> s"data/$commitId/__bucket=$b"),
         statsOut, copyBloomsInto(base, commitId, kept))
@@ -1981,7 +1948,7 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
           entries.size,
           rewritten,
           SnapshotParquetSink.maxSeqOf(lines).map(Long.box).orNull,
-          SnapshotParquetSink.keysOf(lines).mkString(","),
+          SnapshotParquetSink.keysOf(dir, v, lines).mkString(","),
           cluster)
     }
     import org.apache.spark.sql.types._

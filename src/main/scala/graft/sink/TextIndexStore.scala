@@ -31,9 +31,6 @@ import org.apache.spark.sql.functions._
   */
 final class TextIndexStore(val dir: String) {
 
-  import org.apache.hadoop.fs.{Path => HPath}
-  import graft.engine.Dfs
-
   // ---- generation layer (the [[VectorIndexStore]] pattern): gen 0 is the
   // original flat layout; compact() publishes gen manifests
   // (gens/v%08d.manifest via the commit-lock seam) whose maximum is the
@@ -57,16 +54,10 @@ final class TextIndexStore(val dir: String) {
     */
   def append(batch: DataFrame, batchId: Long,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    // NOT synchronized beyond the entry recover(): an append writes only
-    // its own batch dirs, so serializing the whole (minutes-long) Spark
-    // write against every concurrent search would turn safe read/ingest
-    // concurrency into full serialization
-    // repair any LEGACY crashed two-rename compact BEFORE touching the
-    // store: without this, an append interleaved after a mid-swap crash
-    // would recreate a live dir containing only this batch, and the next
-    // recover() would then classify the full pre-crash copy (old_<sub>)
-    // as post-swap garbage — deleting the only complete index
-    recover()
+    // NOT synchronized: an append writes only its own batch dirs, so
+    // serializing the whole (minutes-long) Spark write against every
+    // concurrent search would turn safe read/ingest concurrency into full
+    // serialization
     // one generation for both sub-stores: resolving twice could straddle a
     // concurrent compaction flip and split the batch across generations
     val (g, wm) = Generations.liveGenInfo(dir)
@@ -104,7 +95,6 @@ final class TextIndexStore(val dir: String) {
     // resolve the generation ONCE for both sub-stores — two liveGen reads
     // could pair one generation's postings with another's doc lengths if
     // a compaction flips between them
-    recover()
     val info = Generations.liveGenInfo(dir)
     val posts = committedAt(spark, info, "postings")
     val dls = committedAt(spark, info, "doclens")
@@ -213,7 +203,6 @@ final class TextIndexStore(val dir: String) {
     */
   def compact(spark: SparkSession, compactId: Long = -1L,
       dropBelow: Long = Long.MinValue): Unit = synchronized {
-    recover() // legacy two-rename crash states (pre-generation layout)
     val info @ (g, wm) = Generations.liveGenInfo(dir)
     val ng = g + 1
     // a prior crashed compaction at ng is invisible garbage — restart it
@@ -270,57 +259,15 @@ final class TextIndexStore(val dir: String) {
       floor = Some((g +: tornGens).min))
   }
 
-  /** Repairs whatever a LEGACY two-rename [[compact]] left behind (the
-    * pre-generation layout; generation-flip compactions need no repair —
-    * their partials are invisible until the manifest publish). Same
-    * decision table as [[Compaction.recover]]: live missing + `old_` present →
-    * the crash hit mid-swap, restore the original; live present + `old_`
-    * present → post-swap garbage, delete; `tmp_` is always garbage (the
-    * live dir is never touched before the merged copy is fully committed).
-    *
-    * Store-mutating, so concurrency is pinned down: `synchronized` (like
-    * [[append]]/[[compact]]) serializes every recover in THIS instance —
-    * two same-instance readers over crash leftovers can no longer race the
-    * `old_` → live restore, and a read can't wipe a running same-instance
-    * compact's `tmp_` dirs. Across INSTANCES the restore additionally
-    * tolerates losing the rename race (the other recoverer restored the
-    * same content — the store is append-only, so both copies are
-    * identical); the cross-instance compact-vs-read window remains the
-    * documented single-writer contract on [[compact]].
-    */
-  def recover(): Unit = synchronized {
-    for (sub <- Seq("postings", "doclens")) {
-      val live = new org.apache.hadoop.fs.Path(s"$dir/$sub")
-      val old = new org.apache.hadoop.fs.Path(s"$dir/old_$sub")
-      val tmp = new org.apache.hadoop.fs.Path(s"$dir/tmp_$sub")
-      if (!graft.engine.Dfs.exists(live) && graft.engine.Dfs.exists(old)) {
-        // rename-onto-absent, NOT FileSystem.rename: HDFS's rename onto an
-        // existing directory silently moves the source INTO it (nesting
-        // old_ garbage under the live index); the FileContext NONE form
-        // fails cleanly instead, and a false return = another instance's
-        // recover restored the identical copy first — accept it
-        graft.engine.Dfs.renameOntoAbsent(old, live)
-        ()
-      }
-      if (graft.engine.Dfs.exists(old) && graft.engine.Dfs.exists(live))
-        graft.engine.Dfs.deleteTreeStrict(old)
-      if (graft.engine.Dfs.exists(tmp))
-        graft.engine.Dfs.deleteTreeStrict(tmp)
-    }
-  }
-
-  private def committed(spark: SparkSession, sub: String): DataFrame = {
-    recover() // a reader after a legacy mid-swap crash must see the restored copy
+  private def committed(spark: SparkSession, sub: String): DataFrame =
     committedAt(spark, Generations.liveGenInfo(dir), sub)
-  }
 
   /** The sub-store's visible batches under an already-resolved
     * (generation, watermark) — the live generation's committed dirs plus
     * unfolded stragglers a concurrent appender committed into a superseded
     * generation ([[Generations.visibleBatchesAt]]; callers that read
     * several subs resolve ONE info first so the pair can't straddle a
-    * flip, and [[compact]]'s internal reads run after its own entry
-    * recover).
+    * flip).
     */
   private def committedAt(spark: SparkSession, info: (Long, Option[Long]),
       sub: String): DataFrame = {

@@ -73,37 +73,18 @@ class SnapshotStreamProvider extends StreamSourceProvider with DataSourceRegiste
     sink.read(spark, DeleteMode.Logical).schema
   }
 
-  /** The table's order column as this stream run will resolve it: an
-    * explicit `option("seqCol", ...)` wins, else the manifest's recorded
-    * `seqcol=` (written by every merge — the contract that protects a
-    * table whose real order column is `ts` but that also carries an
-    * unrelated data column named `seq`), else the literal `seq` fallback
-    * for pre-recording tables.
-    */
-  private def resolveSeqCol(dir: String,
-      parameters: Map[String, String]): String =
-    parameters.get("seqCol")
-      .orElse(SnapshotParquetSink.versions(dir).lastOption
-        .flatMap(v => SnapshotParquetSink.manifestSeqCol(dir, v)))
-      .getOrElse("seq")
-
   /** The change-feed shape: key columns at their stored types, then
     * `change` and the seq-from/to stamps (the exact
-    * [[SnapshotParquetSink.changesBetween]] projection).
+    * [[SnapshotParquetSink.changesBetween]] projection, whose order column
+    * is the manifest's recorded `seqcol=`).
     */
   private def changesSchema(spark: org.apache.spark.sql.SparkSession,
-      dir: String, parameters: Map[String, String]): StructType = {
+      dir: String): StructType = {
     val v = SnapshotParquetSink.versions(dir).lastOption.getOrElse(
       sys.error(s"no committed version at $dir"))
     val keys = SnapshotParquetSink.manifestKeys(dir, v)
-    require(keys.nonEmpty,
-      s"change-feed streaming needs recorded merge keys at $dir")
     val data = logicalSchema(spark, dir)
-    val seqCol = resolveSeqCol(dir, parameters)
-    require(data.fieldNames.contains(seqCol),
-      s"order column '$seqCol' is not a column of the table at $dir — " +
-        "pass option(\"seqCol\", ...) naming the table's real order column")
-    val seqType = data(seqCol).dataType
+    val seqType = data(SnapshotParquetSink.manifestSeqCol(dir, v)).dataType
     StructType(
       keys.map(k => org.apache.spark.sql.types.StructField(k, data(k).dataType)) ++
         Seq(org.apache.spark.sql.types.StructField("change",
@@ -116,7 +97,7 @@ class SnapshotStreamProvider extends StreamSourceProvider with DataSourceRegiste
       parameters: Map[String, String]): StructType =
     schema.getOrElse {
       val dir = dirOf(parameters)
-      if (changesMode(parameters)) changesSchema(ctx.sparkSession, dir, parameters)
+      if (changesMode(parameters)) changesSchema(ctx.sparkSession, dir)
       else logicalSchema(ctx.sparkSession, dir)
     }
 
@@ -132,16 +113,14 @@ class SnapshotStreamProvider extends StreamSourceProvider with DataSourceRegiste
     maxPerTrigger.foreach(m => require(m > 0,
       s"maxVersionsPerTrigger must be positive, got $m"))
     new SnapshotStreamSource(ctx, dir, schemaFor(ctx, schema, parameters),
-      maxPerTrigger, changesMode(parameters),
-      if (changesMode(parameters)) Some(resolveSeqCol(dir, parameters)) else None)
+      maxPerTrigger, changesMode(parameters))
   }
 }
 
 private[sources] final class SnapshotStreamSource(ctx: SQLContext, dir: String,
     frozenSchema: StructType,
     maxVersionsPerTrigger: Option[Int] = None,
-    changes: Boolean = false,
-    seqColOpt: Option[String] = None)
+    changes: Boolean = false)
   extends Source with SupportsTriggerAvailableNow {
 
   override def schema: StructType = frozenSchema
@@ -289,8 +268,7 @@ private[sources] final class SnapshotStreamSource(ctx: SQLContext, dir: String,
       start: Option[OffsetV1], endV: Long): DataFrame = {
     val keys = frozenSchema.fieldNames.toSeq
       .filterNot(Set("change", "seq_from", "seq_to"))
-    // resolved at stream start by the provider (option > manifest > "seq")
-    val seqCol = seqColOpt.getOrElse("seq")
+    val seqCol = SnapshotParquetSink.manifestSeqCol(dir, endV)
     def initial(): DataFrame = conform(
       sink.readAt(spark, endV, DeleteMode.Hard)
         .select(keys.map(col) :+ col(seqCol).as("seq_to"): _*)
@@ -303,7 +281,7 @@ private[sources] final class SnapshotStreamSource(ctx: SQLContext, dir: String,
         sys.error(s"change-feed base v$s was vacuumed at $dir — deletions " +
           "against a vanished base cannot be reconstructed; retain history " +
           "covering the stream's trigger cadence, or use upsert mode")
-      case Some(s) => conform(sink.changesBetween(spark, s, endV, seqColOpt))
+      case Some(s) => conform(sink.changesBetween(spark, s, endV))
     }
   }
 

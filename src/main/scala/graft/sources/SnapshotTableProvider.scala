@@ -101,8 +101,7 @@ class SnapshotTableProvider extends TableProvider with DataSourceRegister
           "upsert) or the Scala API's compact/vacuum for maintenance")
     }
     val keys = params.get("keys").map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
-      .orElse(existing.lastOption
-        .map(v => SnapshotParquetSink.manifestKeys(dir, v)).filter(_.nonEmpty))
+      .orElse(existing.lastOption.map(v => SnapshotParquetSink.manifestKeys(dir, v)))
       .getOrElse(sys.error("graft-snapshot writes need option(\"keys\", \"k1,k2\") — " +
         "the merge keys of the table (recorded in the manifest from the first " +
         "commit onward, so only the first write needs the option)"))
@@ -160,27 +159,17 @@ private[sources] final case class SnapshotState(dir: String, version: Long,
     cluster: Seq[SnapshotParquetSink.ClusterCol] = Nil,
     blooms: Map[Int, Map[String, (String, String)]] = Map.empty) {
 
-  def bucketPaths: Seq[String] = entries.toSeq.sortBy(_._1).map { case (_, rel) => s"$dir/$rel" }
-
   /** Merged-across-commits schema minus internal bookkeeping. Empty for a
     * not-yet-published table (version −1): the writer fallback only needs
     * table RESOLUTION to succeed on a fresh dir — reads still fail loudly
     * at scan construction.
-    *
-    * Resolution order: the manifest's RECORDED schema when present (O(1)
-    * metadata read — at scale, resolving a table must not open every
-    * bucket's parquet footer), else the legacy footer merge.
+    * Read from the manifest's RECORDED schema (O(1) metadata — at scale,
+    * resolving a table must not open every bucket's parquet footer).
     */
   lazy val dataSchema: StructType =
     if (entries.isEmpty) new StructType()
-    else SnapshotParquetSink.manifestSchema(dir, version) match {
-      case Some(recorded) =>
-        StructType(recorded.fields.filterNot(_.name == "__gen"))
-      case None =>
-        val spark = SparkSession.active
-        val full = spark.read.option("mergeSchema", "true").parquet(bucketPaths: _*).schema
-        StructType(full.fields.filterNot(_.name == "__gen"))
-    }
+    else StructType(
+      SnapshotParquetSink.manifestSchema(dir, version).fields.filterNot(_.name == "__gen"))
 
   /** The file list a scan must read given the pushed filters: key-equality
     * routing first (one bucket when every routing input is pinned), then
@@ -396,15 +385,11 @@ private[sources] object SnapshotState {
     // naming any other columns would prune to the WRONG bucket and silently
     // return rows missing, so a mismatch is an error, not a preference
     val recorded = SnapshotParquetSink.manifestKeys(dir, version)
-    val effectiveKeys =
-      if (recorded.nonEmpty) {
-        require(keys.isEmpty || keys == recorded,
-          s"option keys=${keys.mkString(",")} does not match the table's committed " +
-            s"merge keys ${recorded.mkString(",")} at $dir — drop the option " +
-            "(pruning uses the recorded keys automatically)")
-        recorded
-      } else keys // pre-keys-recording manifest: trust the caller (documented)
-    SnapshotState(dir, version, nBuckets, entries, effectiveKeys,
+    require(keys.isEmpty || keys == recorded,
+      s"option keys=${keys.mkString(",")} does not match the table's committed " +
+        s"merge keys ${recorded.mkString(",")} at $dir — drop the option " +
+        "(pruning uses the recorded keys automatically)")
+    SnapshotState(dir, version, nBuckets, entries, recorded,
       SnapshotParquetSink.manifestStats(dir, version),
       SnapshotParquetSink.manifestCluster(dir, version),
       SnapshotParquetSink.manifestBlooms(dir, version))

@@ -139,7 +139,7 @@ object TableFollower {
     * under the UPSTREAM routing, the upstream applied head, and the layout
     * facts ([[applySlice]] gates on them per hop) that decide whether that
     * routing transfers. Only built when the upstream is hash-routed and
-    * records both its keys and head — a clustered upstream routes by
+    * records a head — a clustered upstream routes by
     * Z-order, which key-hash downstream merges cannot reproduce.
     */
   private[streaming] final case class SliceHint(buckets: Array[Int],
@@ -147,7 +147,7 @@ object TableFollower {
 
   /** The slice a follower at `applied` must merge to reach `latest`:
     * changed buckets only on the incremental path, the full state on first
-    * run / vacuum self-heal / evolution lag, None when the manifests share
+    * run / vacuum self-heal, None when the manifests share
     * every file (advance the marker, nothing to merge). The second element
     * is the metadata-derived probe hint for that slice, when derivable.
     */
@@ -164,7 +164,7 @@ object TableFollower {
     val upKeys = SnapshotParquetSink.manifestKeys(upstream.dir, latest)
     val upMax = SnapshotParquetSink.manifestMaxSeq(upstream.dir, latest)
     def hintOver(buckets: Iterable[Int]): Option[SliceHint] =
-      if (upClustered || upKeys.isEmpty || upMax.isEmpty || buckets.isEmpty) None
+      if (upClustered || upMax.isEmpty || buckets.isEmpty) None
       else Some(SliceHint(buckets.toArray.sorted, upMax.get, upN, upKeys))
     // the full state routes to exactly the buckets the manifest records
     def full: (DataFrame, Option[SliceHint]) =
@@ -176,24 +176,13 @@ object TableFollower {
         upstream.readChangedAt(spark, latest, prev, DeleteMode.Logical) match {
           case None => None // manifests share every file — nothing to apply
           case Some(changed) =>
-            // evolution fallback: changed files may predate a column the
-            // transform needs — when their merged schema lags the table's,
-            // fall back to the full state (correct, just unpruned). The
-            // table's column set comes from the manifest's recorded schema
-            // when present (metadata-only); a full readAt is the legacy path
-            val fullCols: Set[String] =
-              SnapshotParquetSink.manifestSchema(upstream.dir, latest)
-                .map(_.fieldNames.toSet - "__gen" - "__is_deleted" + "is_deleted")
-                .getOrElse(
-                  upstream.readAt(spark, latest, DeleteMode.Logical).columns.toSet)
-            if (changed.columns.toSet == fullCols) {
-              // [[SnapshotParquetSink.changedEntriesAt]]'s rule, kept to
-              // bucket ids: the slice holds every row of exactly these
-              val prevEntries = SnapshotParquetSink.manifest(upstream.dir, prev)._2
-              val changedBuckets = upEntries.collect {
-                case (b, rel) if !prevEntries.get(b).contains(rel) => b }
-              Some((changed, hintOver(changedBuckets)))
-            } else Some(full)
+            // the slice carries every column (recorded-schema read). Hint:
+            // [[SnapshotParquetSink.changedEntriesAt]]'s rule, kept to
+            // bucket ids — the slice holds every row of exactly these
+            val prevEntries = SnapshotParquetSink.manifest(upstream.dir, prev)._2
+            val changedBuckets = upEntries.collect {
+              case (b, rel) if !prevEntries.get(b).contains(rel) => b }
+            Some((changed, hintOver(changedBuckets)))
         }
       case Some(_) => // diff base vacuumed: one full resync, then incremental
         Some(full)

@@ -1161,20 +1161,6 @@ class LlmSpec extends SparkSpec {
     assert(!new java.io.File(s"$dir/postings").exists())
     assert(!new java.io.File(s"$dir/gen=1").exists())
     assert(res(store.search(spark, Seq("a", "d"), k = 10)) == bm)
-    // legacy two-rename crash states (pre-generation layout) still repair:
-    // fabricate old_ flat dirs on a FRESH store and let recover restore
-    val dir2 = tmpDir("cidx2")
-    val legacy = new graft.sink.TextIndexStore(dir2)
-    legacy.append(corpus, batchId = 0L)
-    val bm2 = res(legacy.search(spark, Seq("a", "d"), k = 10))
-    for (sub <- Seq("postings", "doclens"))
-      assert(new java.io.File(s"$dir2/$sub").renameTo(new java.io.File(s"$dir2/old_$sub")))
-    new java.io.File(s"$dir2/tmp_postings").mkdirs()
-    legacy.recover()
-    assert(new java.io.File(s"$dir2/postings").exists()
-      && !new java.io.File(s"$dir2/old_postings").exists()
-      && !new java.io.File(s"$dir2/tmp_postings").exists())
-    assert(res(legacy.search(spark, Seq("a", "d"), k = 10)) == bm2)
   }
 
   test("weightedQuantiles: exact cumulative-weight order statistics") {
@@ -1280,29 +1266,6 @@ class LlmSpec extends SparkSpec {
     // dist 2: jello(freq 2) third
     assert(got == Seq(("hello", 1L, 4L), ("help", 1L, 1L), ("jello", 2L, 2L)),
       got.toString)
-  }
-
-  test("TextIndexStore: append after a mid-swap compact crash heals first") {
-    // the data-loss scenario: compact crashes between its two renames
-    // (live gone, old_ holds the full index); a checkpoint-replayed append
-    // must NOT recreate a live dir containing only its own batch — that
-    // would make the next recover() classify old_ as post-swap garbage
-    // and delete the only complete copy
-    val corpus = Seq((0L, "a b"), (1L, "b c"), (2L, "a c")).toDF("doc_id", "text")
-    val dir = tmpDir("crash_idx")
-    val store = new graft.sink.TextIndexStore(dir)
-    store.append(corpus.filter($"doc_id" < 2), batchId = 0L)
-    def res() = store.search(spark, Seq("a"), k = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val before = res()
-    // simulate the crash window
-    for (sub <- Seq("postings", "doclens"))
-      assert(new java.io.File(s"$dir/$sub").renameTo(new java.io.File(s"$dir/old_$sub")))
-    store.append(corpus.filter($"doc_id" === 2L), batchId = 1L)
-    // batch 0's docs survived the interleaving, batch 1 landed
-    val after = res()
-    assert(after.map(_._1).toSet == before.map(_._1).toSet + 2L, after.toString)
-    assert(!new java.io.File(s"$dir/old_postings").exists())
   }
 
   test("BmpAHash.hash: hostile headers (negative/absurd dims) return 0, never loop") {

@@ -638,6 +638,54 @@ class SnapshotParquetSinkSpec extends SparkSpec {
     intercept[Exception] {
       spark.read.format("graft-snapshot").option("keys", "val").load(dir).count()
     }
+
+    // compact and purge keep the COMMITTED bucket count, whatever the
+    // handle's: lookup routes by the recorded count and must find every key
+    val dir4 = tmpDir("guard4") + "/t"
+    val keys32 = (0 until 32).map(i => s"k$i")
+    new SnapshotParquetSink(dir4, nBuckets = 4).merge(
+      batch(keys32.map(k => (k, 1L, s"$k-v", false)): _*), Seq("primary_key"), "seq", "is_delete")
+    def found(): Long = {
+      val t = SnapshotParquetSink.forTable(dir4)
+      keys32.map(k => t.lookup(spark, Seq("primary_key"), Seq(k))).reduce(_ union _).count()
+    }
+    val via8 = new SnapshotParquetSink(dir4, nBuckets = 8)
+    via8.compact(spark)
+    assert(found() == 32L, "compact through an 8-bucket handle")
+    via8.purgeTombstones(spark, horizonSeq = 0L)
+    assert(found() == 32L, "purge through an 8-bucket handle")
+    assert(SnapshotParquetSink.manifest(dir4, 2L)._1 == 4)
+
+    // format: a fresh merge's manifest starts with the format=2 line ...
+    import graft.engine.Dfs
+    val head = SnapshotParquetSink.versions(dir).last
+    val body = Dfs.readUtf8(SnapshotParquetSink.manifestPath(dir, head))
+    assert(body.startsWith("format=2\n"), body)
+    // ... and a complete body without it is refused by every reader. Fresh
+    // dir, so no published-manifest cache entry has ever seen the path.
+    val headerless = tmpDir("noformat") + "/t"
+    Dfs.writeUtf8(SnapshotParquetSink.manifestPath(headerless, 0L),
+      body.stripPrefix("format=2\n"))
+    val old = new SnapshotParquetSink(headerless, nBuckets = 4)
+    def refused(f: => Any): Unit = {
+      val e = intercept[RuntimeException](f)
+      assert(e.getMessage.contains("no format=2 header") &&
+        e.getMessage.contains(s"v0 at $headerless") &&
+        e.getMessage.contains("must be re-created"), e.getMessage)
+    }
+    refused(SnapshotParquetSink.forTable(headerless))
+    refused(old.read(spark, DeleteMode.Hard))
+    refused(old.merge(batch(("z", 9, "z0", false)), Seq("primary_key"), "seq", "is_delete"))
+    refused(old.history(spark))
+    // a body without its version= line (a put-style lock's racing reader)
+    // fails transiently and is never cached: once the body completes, the
+    // same version reads
+    val next = SnapshotParquetSink.manifestPath(dir, head + 1)
+    Dfs.writeUtf8(next, "format=2\n")
+    val partial = intercept[RuntimeException](SnapshotParquetSink.forTable(dir))
+    assert(!partial.getMessage.contains("format=2 header"), partial.getMessage)
+    Dfs.writeUtf8(next, body.replace(s"version=$head\n", s"version=${head + 1}\n"))
+    assert(state(SnapshotParquetSink.forTable(dir), DeleteMode.Hard).keySet == Set("a"))
   }
 
   test("manifest stats: seq-range predicates skip buckets untouched since the cut") {
@@ -800,8 +848,8 @@ class SnapshotParquetSinkSpec extends SparkSpec {
     Dfs.writeUtf8(new HPath(live, "f"), "live\n")
     val old = new HPath(base, "old"); Dfs.mkdirs(old)
     Dfs.writeUtf8(new HPath(old, "f"), "old\n")
-    // the TextIndexStore.recover shape: restoring old_ -> live when another
-    // instance already restored must report a lost race — the content-
+    // restoring a directory (old -> live) when another instance already
+    // restored it must report a lost race — the content-
     // comparison fallback must never try to read a DIRECTORY as UTF-8
     assert(!Dfs.renameOntoAbsent(old, live))
     assert(Dfs.readUtf8(new HPath(live, "f")) == "live\n") // winner intact
@@ -1154,14 +1202,13 @@ class SnapshotParquetSinkSpec extends SparkSpec {
     sink.merge(batch(("a", 0, "a0", false), ("b", 1, "b0", false)),
       Seq("primary_key"), "seq", "is_delete")
     val s0 = SnapshotParquetSink.manifestSchema(dir, 0L)
-    assert(s0.isDefined, "every fresh commit records its schema")
-    assert(s0.get.fieldNames.contains("__gen") && !s0.get.fieldNames.contains("__bucket"))
+    assert(s0.fieldNames.contains("__gen") && !s0.fieldNames.contains("__bucket"))
     // the recorded line must EQUAL what the footer merge reconstructs —
     // the DSv2 resolve substitutes one for the other
     val paths = SnapshotParquetSink.manifest(dir, 0L)._2.toSeq.sortBy(_._1)
       .map { case (_, rel) => s"$dir/$rel" }
     val footer = spark.read.option("mergeSchema", "true").parquet(paths: _*).schema
-    assert(s0.get.fieldNames.sorted.toSeq == footer.fieldNames.sorted.toSeq)
+    assert(s0.fieldNames.sorted.toSeq == footer.fieldNames.sorted.toSeq)
 
     // evolution: a new column in a 1-bucket commit must still appear in the
     // RECORDED schema (union with the carry source), and the DSv2 read —
@@ -1169,16 +1216,16 @@ class SnapshotParquetSinkSpec extends SparkSpec {
     sink.merge(Seq(("a", 5L, "a1", false, 42L))
         .toDF("primary_key", "seq", "val", "is_delete", "extra"),
       Seq("primary_key"), "seq", "is_delete")
-    val s1 = SnapshotParquetSink.manifestSchema(dir, 1L).get
+    val s1 = SnapshotParquetSink.manifestSchema(dir, 1L)
     assert(s1.fieldNames.contains("extra") && s1.fieldNames.contains("val"))
     val t = spark.read.format("graft-snapshot").load(dir)
     assert(t.columns.contains("extra"))
     assert(t.filter(t("primary_key") === "b").select("extra").head.isNullAt(0))
     // per-version pin: v0's recorded schema has no 'extra'
-    assert(!SnapshotParquetSink.manifestSchema(dir, 0L).get.fieldNames.contains("extra"))
+    assert(!SnapshotParquetSink.manifestSchema(dir, 0L).fieldNames.contains("extra"))
     // maintenance rewrites re-derive the line
     sink.compact(spark)
-    assert(SnapshotParquetSink.manifestSchema(dir, 2L).get.fieldNames.contains("extra"))
+    assert(SnapshotParquetSink.manifestSchema(dir, 2L).fieldNames.contains("extra"))
     // type conflicts refuse loudly (type changes go through replaceAll).
     // The key must land in an EMPTY bucket: a batch touching a stored
     // bucket would hit ANSI union coercion first (the round-9 gotcha),

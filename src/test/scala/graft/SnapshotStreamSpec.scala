@@ -166,7 +166,7 @@ class SnapshotStreamSpec extends SparkSpec {
         .toDF("id", "ts", "seq", "note", "is_delete")
     upSink.merge(mk(0L until 4L, 0L, "a"), Seq("id"), "ts", "is_delete")
     assert(SnapshotParquetSink.manifestSeqCol(up,
-      SnapshotParquetSink.versions(up).last).contains("ts"))
+      SnapshotParquetSink.versions(up).last) == "ts")
     val q = spark.readStream.format("graft-snapshot-stream")
       .option("mode", "changes").load(up)
       .writeStream.format("memory").queryName("cdf_seqcol")
