@@ -135,7 +135,7 @@ object SnapshotParquetSink {
     require(isDeleteCol == "is_deleted" || !batch.columns.contains("is_deleted"),
       s"column name 'is_deleted' is reserved by Logical-mode reads: a data " +
         s"column of that name (the declared flag is '$isDeleteCol') would " +
-        "vanish on every Logical read — rename it before writing, or " +
+        "collide with the flag on every Logical read — rename it before writing, or " +
         "declare it as the table's delete-flag column")
     val folded = batch.withColumn("__is_deleted",
       coalesce(col(isDeleteCol).cast("boolean"), lit(false)))
@@ -470,10 +470,10 @@ object SnapshotParquetSink {
   *   - `s <bucket> <col> <min> <max>` — per-bucket stats (none = unknown);
   *   - `f <bucket> <col> <type> <relative-path>` — bloom sidecars.
   *
-  * Merge semantics (last-write-wins by seq, `__gen`
-  * tie-break = the committing version, tombstoned deletes) implement the
-  * [[UpsertSink]] contract; `__gen` strictly increases per commit, so
-  * replaying a batch is idempotent and out-of-order-safe.
+  * Merge semantics (last-write-wins by seq, `__gen` tie-break = the
+  * committing version, tombstoned deletes) implement the [[UpsertSink]]
+  * contract; `__gen` strictly increases per commit, so replaying a batch
+  * is idempotent and out-of-order-safe.
   *
   * `statsCols`: numeric/timestamp columns to record per-bucket min/max for
   * in each commit's manifest — MANIFEST-LEVEL DATA SKIPPING (the Delta
@@ -594,10 +594,10 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     * native filters iff the PRIOR manifest shows a bloom-declared bucket
     * without a sidecar line (the build's saturation marker — also set by
     * all-null buckets, an acceptable conservative over-trigger): the
-    * first oversized commit goes
-    * native-less (a missing filter prunes nothing, never wrongly) and
-    * every later commit carries the native layer. `graft.bloom.forceNative`
-    * forces the layer on (bench/test pin of the native-write cost).
+    * first oversized commit goes native-less (a missing filter prunes
+    * nothing, never wrongly) and every later commit carries the native
+    * layer. `graft.bloom.forceNative` forces the layer on (bench/test pin
+    * of the native-write cost).
     */
   private def nativeBloomsWanted(prior: Option[Long], cols: Seq[String]): Boolean =
     sys.props.contains("graft.bloom.forceNative") ||
@@ -1001,7 +1001,7 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
       .toArray.sorted
 
   /** Bloom columns a whole-table rewrite of `base` covers: this handle's
-    * declaration, else the one `base`'s manifest records.
+    * declaration, else the declaration `base`'s manifest records.
     */
   private def effectiveBloomCols(base: Long): Seq[String] =
     if (bloomCols.nonEmpty) bloomCols

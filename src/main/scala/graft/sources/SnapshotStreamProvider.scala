@@ -211,9 +211,9 @@ private[sources] final class SnapshotStreamSource(ctx: SQLContext, dir: String,
   // IS the version number for LongOffset, so parse rather than match
   private def versionOf(o: OffsetV2): Long = o.json.trim.toLong
 
-  /** Null-fill frozen columns a changed slice predates, then project to
-    * the frozen shape (order included) — evolution-era old files stay
-    * consumable mid-stream.
+  /** Null-fill frozen columns the version's recorded schema lacks (a
+    * `replaceAll` may drop one), then project to the frozen shape (order
+    * included) — a later version stays consumable mid-stream.
     */
   private def conform(df: DataFrame): DataFrame = {
     val have = df.columns.toSet
