@@ -3,11 +3,12 @@ package graft.sink
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Cast, Expression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, Cast, Expression, GenericInternalRow, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Incrementally-maintained materialized aggregate over a snapshot table —
   * the "never recompute the world" leg of the table-format family: a
@@ -44,16 +45,18 @@ import org.apache.spark.sql.types.LongType
   *     column-pruned scan for cross-key rollups).
   *
   * The recompute regime per [[refresh]]:
-  *   1. a key-level full outer join of the live states at the last applied
-  *      version and the current version names the dirty GROUPS in one
-  *      column-pruned pass (same change semantics as
-  *      [[SnapshotParquetSink.changesBetween]]: presence diff + null-safe
-  *      seq inequality; BOTH sides' group values count, because an update
-  *      can MOVE a row between groups — the old group must shrink and the
-  *      new one grow);
+  *   1. a keyed diff of the live states at the last applied version and
+  *      the current version ([[SnapshotParquetSink.keyedDiff]]: presence
+  *      diff + null-safe seq inequality) names the dirty GROUPS in one
+  *      column-pruned pass — BOTH sides' group values count, because an
+  *      update can MOVE a row between groups (the old group must shrink
+  *      and the new one grow);
   *   2. dirty groups recompute from the source's current snapshot and
   *      MERGE into the aggregate table (affected buckets only); groups
-  *      with no remaining rows merge as logical deletes.
+  *      with no remaining rows merge as logical deletes. When the diff came
+  *      back driver-local (a small change), so does the dirty set, and the
+  *      delta — one row per dirty group — is collected and merged as a
+  *      driver-local batch (no persist, no merge probe job).
   *
   * The applied-version bookkeeping is the aggregate table's own manifest:
   * every refreshed row carries `seq` = the source version it was computed
@@ -289,18 +292,6 @@ final class MaterializedAgg(
           .cast("array<bigint>").as(s"__top_${e.name}"), nne(e)))
   }
 
-  /** A zero-row frame shaped like the source's Hard read — what
-    * [[deltaSpec]] resolves against. Built from the RECORDED schema: spec
-    * analysis is driver-side only and must not pay the 400-file listing a
-    * real `readAt` plan construction does.
-    */
-  private def sourceShaped(spark: SparkSession, srcV: Long): DataFrame = {
-    val shape = org.apache.spark.sql.types.StructType(
-      SnapshotParquetSink.manifestSchema(source.dir, srcV).fields.filterNot(
-        f => f.name == "__gen" || f.name == "__bucket" || f.name == "__is_deleted"))
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), shape)
-  }
-
   /** Does the view's CURRENT committed schema carry the delta counters? A
     * table built before the delta regime (or by a non-delta-able spec)
     * lacks them and must stay on the recompute regime — merging
@@ -367,7 +358,7 @@ final class MaterializedAgg(
     target.foreach(v => require(source.versions.contains(v),
       s"cannot refresh to source version $v at ${source.dir} — not published " +
         "or vacuumed"))
-    lazy val spec = deltaSpec(sourceShaped(spark, srcV))
+    lazy val spec = deltaSpec(source.emptyAt(spark, srcV))
     appliedVersion match {
       case Some(applied) if applied >= srcV => None
       case None =>
@@ -454,60 +445,15 @@ final class MaterializedAgg(
         // vanished ones. Costs one full pass; the fix for recurrence is
         // retention covering the refresh cadence (class scaladoc).
         val baseRetained = baseRetained0
-        // dirty groups = groups of the changed keys' rows at EITHER version
-        // (an update can move a row between groups; a delete's group is
-        // only visible on the from side). ONE plan — a key-level full outer
-        // join of the two live states carrying both sides' group columns —
-        // instead of running the change feed and then re-reading both
-        // versions to recover groups (same change semantics as
-        // [[SnapshotParquetSink.changesBetween]]: presence diff + null-safe
-        // seq inequality; a carried row's value cannot change without its
-        // seq changing, the stored last-write seq stands in for value
-        // comparison)
-        val probeCols = (srcKeys ++ groupCols :+ seqCol).distinct
-        // each side reads only the buckets whose file differs between the
-        // two manifests — shared files are byte-identical and keys route
-        // to the same bucket, so untouched buckets cannot contribute dirt.
-        // Changed files predating an evolution-added probe column fall
-        // back to the full read — on BOTH sides together (a full side
-        // joined against a pruned side would misread every unchanged key
-        // as a presence diff); the footer check is changed-files-only.
-        def diffDirty(): DataFrame = {
-          val partA = source.readChangedAt(spark, applied, srcV, DeleteMode.Hard)
-          val partB = source.readChangedAt(spark, srcV, applied, DeleteMode.Hard)
-          val pruned = (partA.toSeq ++ partB.toSeq)
-            .forall(p => probeCols.forall(p.columns.contains))
-          def side(part: Option[DataFrame], v: Long, marker: String): DataFrame = {
-            val rows =
-              if (pruned)
-                part.getOrElse(source.readAt(spark, v, DeleteMode.Hard).filter(lit(false)))
-              else source.readAt(spark, v, DeleteMode.Hard)
-            rows.select(probeCols.map(col): _*).withColumn(marker, lit(true))
-          }
-          val a = side(partA, applied, "__pa").alias("a")
-          val b = side(partB, srcV, "__pb").alias("b")
-          val keyCond = srcKeys.map(k => col(s"a.$k") <=> col(s"b.$k")).reduce(_ && _)
-          val changed = a.join(b, keyCond, "full_outer")
-            .filter(col("a.__pa").isNull || col("b.__pb").isNull ||
-              !(col(s"a.$seqCol") <=> col(s"b.$seqCol")))
-          def groupsIfPresent(tag: String, marker: String) =
-            when(col(marker).isNotNull,
-              struct(groupCols.map(n => col(s"$tag.$n").as(n)): _*))
-          changed
-            .select(explode(array(groupsIfPresent("a", "a.__pa"),
-              groupsIfPresent("b", "b.__pb"))).as("g"))
-            .filter(col("g").isNotNull)
-            .select(groupCols.map(n => col(s"g.$n").as(n)): _*).distinct()
-        }
         def rebuildDirty(): DataFrame =
           read(spark).select(groupCols.map(col): _*)
             .unionByName(source.readAt(spark, srcV, DeleteMode.Hard)
               .select(groupCols.map(col): _*))
             .distinct()
         // COST GATE on the dirty probe (driver-side, manifest-only): when
-        // most source buckets changed between the two versions, diffDirty
-        // reads ~2× the changed bytes plus a key-level full-outer join to
-        // learn what rebuildDirty learns from one grouped pass (view
+        // most source buckets changed between the two versions, the keyed
+        // diff reads ~2× the changed bytes plus a key-level full-outer join
+        // to learn what rebuildDirty learns from one grouped pass (view
         // groups ∪ source groups — a correct SUPERSET of the truly-dirty
         // set; recomputing a clean group reproduces its stored values).
         // Break-even is ~half the table (diff reads both sides of every
@@ -516,15 +462,8 @@ final class MaterializedAgg(
         // extra — a keyed view's recompute prunes its scan to changed
         // buckets and must keep the exact diff (an all-groups dirty set
         // against a pruned scan would tombstone clean groups).
-        val bulkChanged = baseRetained && !srcKeys.forall(groupCols.contains) && {
-          val ea = SnapshotParquetSink.manifest(source.dir, applied)._2
-          val eb = SnapshotParquetSink.manifest(source.dir, srcV)._2
-          val changed = (ea.keySet ++ eb.keySet).count(b => ea.get(b) != eb.get(b))
-          val frac = sys.props.get("graft.ivm.rebuildDirtyFraction")
-            .flatMap(_.toDoubleOption).getOrElse(0.5)
-          changed.toDouble >= frac * math.max(1, eb.size)
-        }
-        if (bulkChanged) {
+        if (baseRetained && !srcKeys.forall(groupCols.contains) &&
+            MaterializedAgg.bulkChanged(source.dir, applied, srcV)) {
           // DIRECT bulk recompute: with (nearly) every bucket changed, the
           // dirty set is (nearly) every group — so skip the dirty
           // bookkeeping altogether. ONE snapshot scan recomputes every
@@ -555,8 +494,17 @@ final class MaterializedAgg(
             ()
           }
         }
-        val dirty = (if (baseRetained) diffDirty() else rebuildDirty())
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // dirty groups = groups of the changed keys' rows at EITHER version
+        // (an update can move a row between groups; a delete's group is
+        // only visible on the from side): one keyed diff carrying both
+        // sides' group columns. A driver-local diff yields a driver-local
+        // dirty set (no persist needed); otherwise the set is persisted,
+        // since the recompute below reads it twice.
+        val diff = if (baseRetained) Some(source.keyedDiff(
+          spark, applied, srcV, srcKeys, seqCol, groupCols.map(col))) else None
+        val localDirty = diff.flatMap(localDirtyGroups(spark, _))
+        val dirty = localDirty.getOrElse(diff.map(dirtyGroups).getOrElse(rebuildDirty())
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         try {
           // KEYED VIEWS (groupCols ⊇ merge keys — per-key rollups): a dirty
           // group's rows all share its key, the key routes to one bucket,
@@ -587,15 +535,24 @@ final class MaterializedAgg(
             .select(groupCols.map(dirty(_)) ++ names.map(marked(_)) :+
               marked("__present").isNull.as("__del"): _*)
             .withColumn("seq", lit(srcV))
+          if (localDirty.isDefined) {
+            // at most one row per dirty group: collected and merged as a
+            // driver-local batch — no persist, no probe job
+            sink.merge(spark.createDataFrame(
+              java.util.Arrays.asList(delta.collect(): _*), delta.schema),
+              groupCols, "seq", "__del")
+            Some(srcV)
+          } else {
             // merge walks this several times; without the persist every walk
             // re-runs the whole recompute join pipeline — O(dirty groups)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            sink.merge(delta, groupCols, "seq", "__del")
-            Some(srcV)
-          } finally {
-            delta.unpersist()
-            ()
+            delta.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            try {
+              sink.merge(delta, groupCols, "seq", "__del")
+              Some(srcV)
+            } finally {
+              delta.unpersist()
+              ()
+            }
           }
         } finally {
           dirty.unpersist()
@@ -603,6 +560,41 @@ final class MaterializedAgg(
         }
     }
   }
+
+  /** The distinct groups of a keyed diff's present sides, planned. */
+  private def dirtyGroups(diff: DataFrame): DataFrame = {
+    def groupsIfPresent(t: String) =
+      when(col(s"__${t}_present"),
+        struct(groupCols.map(g => col(s"__${t}_$g").as(g)): _*))
+    diff.select(explode(array(groupsIfPresent("a"), groupsIfPresent("b"))).as("g"))
+      .filter(col("g").isNotNull)
+      .select(groupCols.map(g => col(s"g.$g").as(g)): _*).distinct()
+  }
+
+  /** [[dirtyGroups]] of a driver-local diff, computed on the driver into a
+    * driver-local frame — None unless the diff is local and every group
+    * column is [[SnapshotParquetSink.byteComparable]] (the distinct is by
+    * bytes; Spark's distinct equates -0.0 and 0.0).
+    */
+  private def localDirtyGroups(spark: SparkSession, diff: DataFrame): Option[DataFrame] =
+    SnapshotParquetSink.localRows(diff).flatMap { rows =>
+      val s = diff.schema
+      val types = groupCols.map(g => s(s"__b_$g").dataType)
+      if (!types.forall(SnapshotParquetSink.byteComparable)) None
+      else {
+        val id = SnapshotParquetSink.rowIdentity(types.zipWithIndex.map(_.swap))
+        val sides = Seq("a", "b").map(t =>
+          (s.fieldIndex(s"__${t}_present"), groupCols.map(g => s.fieldIndex(s"__${t}_$g"))))
+        val groups = scala.collection.mutable.LinkedHashMap.empty[UnsafeRow, InternalRow]
+        for (r <- rows; (present, at) <- sides if r.getBoolean(present)) {
+          val g = new GenericInternalRow(at.zip(types).map { case (i, dt) => r.get(i, dt) }.toArray)
+          groups.getOrElseUpdate(id(g), g)
+        }
+        Some(SnapshotParquetSink.localFrame(spark,
+          StructType(groupCols.zip(types).map { case (n, dt) => StructField(n, dt) }),
+          groups.values.toSeq))
+      }
+    }
 
   /** Pure-delta refresh for SUM/COUNT views — NO snapshot rescan, NO
     * dirty-group recompute, NO view read outside the commit's own rewrite:
@@ -769,8 +761,10 @@ final class MaterializedAgg(
   /** Extremum-aware FOLD refresh for views carrying MIN/MAX alongside
     * SUM/COUNT — the regime between pure-delta and dirty-group recompute:
     *
-    *   1. per-group deltas come from the changed-bucket slices exactly as
-    *      [[deltaRefresh]] (signed images, one GROUP BY), extended with
+    *   1. per-group deltas come from the changed keys'
+    *      ([[SnapshotParquetSink.keyedDiff]]) signed images — the old side
+    *      weighted −1, the new +1 — in one GROUP BY, like
+    *      [[deltaRefresh]]'s, extended with
     *      per-extremum CANDIDATES (min/max over the NEW side) and REMOVAL
     *      bounds (min/max over the OLD side — values that left the group).
     *   2. the stored dirty-group rows join in (a column-pruned read of the
@@ -800,42 +794,28 @@ final class MaterializedAgg(
       attempt: Int): Option[Long] = {
     lastRefreshRegime = Some("fold")
     val dbg = new graft.engine.Dbg("graft.ivm.debug", "[fold]")
-    val oldSlice = source.readChangedAt(spark, applied, srcV, DeleteMode.Hard)
-    val newSlice = source.readChangedAt(spark, srcV, applied, DeleteMode.Hard)
     val exts = spec.mins.map(("mn", _)) ++ spec.maxs.map(("mx", _))
-    def side(part: Option[DataFrame], marker: String): DataFrame = {
-      val rows = part.getOrElse(
-        source.readAt(spark, srcV, DeleteMode.Hard).filter(lit(false)))
-      rows.select(
-        srcKeys.map(k => col(k).as(s"__k_$k")) ++
-          Seq(col(seqCol).as("__seq")) ++
-          groupCols.map(g => col(g).as(s"__g_$g")) ++
-          spec.sums.zipWithIndex.map { case (s, i) =>
-            expr(s.childSql).as(s"__v$i") } ++
-          spec.counts.zipWithIndex.map { case (c, i) =>
-            (c.condSql match {
-              case None      => lit(1L)
-              case Some(sql) => when(expr(sql), 1L).otherwise(0L)
-            }).as(s"__c$i") } ++
-          exts.zipWithIndex.map { case ((_, e), i) =>
-            expr(e.childSql).as(s"__e$i") } :+
-          lit(true).as(marker): _*)
-    }
-    val a = side(oldSlice, "__pa")
-    val b = side(newSlice, "__pb")
-    val keyCond = srcKeys.map(k => a(s"__k_$k") <=> b(s"__k_$k")).reduce(_ && _)
-    val changed = a.join(b, keyCond, "full_outer")
-      .filter(a("__pa").isNull || b("__pb").isNull ||
-        !(a("__seq") <=> b("__seq")))
+    // the changed keys with each side's signed-image inputs
+    val changed = source.keyedDiff(spark, applied, srcV, srcKeys, seqCol,
+      groupCols.map(g => col(g).as(s"__g_$g")) ++
+        spec.sums.zipWithIndex.map { case (s, i) =>
+          expr(s.childSql).as(s"__v$i") } ++
+        spec.counts.zipWithIndex.map { case (c, i) =>
+          (c.condSql match {
+            case None      => lit(1L)
+            case Some(sql) => when(expr(sql), 1L).otherwise(0L)
+          }).as(s"__c$i") } ++
+        exts.zipWithIndex.map { case ((_, e), i) =>
+          expr(e.childSql).as(s"__e$i") })
     val valueFields = groupCols.map(g => s"__g_$g") ++
       spec.sums.indices.map(i => s"__v$i") ++
       spec.counts.indices.map(i => s"__c$i") ++
       exts.indices.map(i => s"__e$i")
-    def image(s: DataFrame, marker: String, w: Long) =
-      when(s(marker).isNotNull,
-        struct(lit(w).as("__w") +: valueFields.map(f => s(f).as(f)): _*))
+    def image(t: String, w: Long) =
+      when(col(s"__${t}_present"),
+        struct(lit(w).as("__w") +: valueFields.map(f => col(s"__${t}_$f").as(f)): _*))
     val signed = changed
-      .select(explode(array(image(a, "__pa", -1L), image(b, "__pb", 1L))).as("r"))
+      .select(explode(array(image("a", -1L), image("b", 1L))).as("r"))
       .filter(col("r").isNotNull)
       .select(col("r.__w").as("__w") +: valueFields.map(f => col(s"r.$f").as(f)): _*)
     val dAggCols =
@@ -972,12 +952,7 @@ final class MaterializedAgg(
       // source read AT ALL; an at-risk set past the collect cap (a bulk
       // refresh gone pathological) falls back to the in-plan semi join —
       // correct, just scan-priced.
-      // test override (`graft.ivm.riskCap`): the fallback branch below
-      // needs >riskCap at-risk GROUPS to fire naturally — far past what a
-      // spec can afford — so specs shrink the cap to force the scan-priced
-      // path and pin its correctness
-      val riskCap = sys.props.get("graft.ivm.riskCap")
-        .flatMap(_.toIntOption).getOrElse(65536)
+      val riskCap = MaterializedAgg.collectCap
       val nRisk = dbg("risk")(jx.filter(atRiskCond).count())
       val batch = {
         def rescanOf(riskSide: DataFrame, hintBroadcast: Boolean): DataFrame = {
@@ -1173,6 +1148,28 @@ object MaterializedAgg {
     (stored: Seq[Long], rem: Seq[Long], add: Seq[Long], bottom: Boolean,
      k: Int, storedNne: Long) =>
       foldExtremumBuf(stored, rem, add, bottom, k, storedNne))
+
+  /** Rows a refresh may collect to the driver: the fold regime's at-risk
+    * groups, the join view's affected facts. Past it, each falls back to
+    * its distributed plan. `graft.ivm.riskCap` shrinks it: the fallbacks
+    * need more rows than a spec can afford to fire naturally.
+    */
+  private[sink] def collectCap: Int =
+    sys.props.get("graft.ivm.riskCap").flatMap(_.toIntOption).getOrElse(65536)
+
+  /** The IVM bulk gate (manifest-only): at least
+    * `graft.ivm.rebuildDirtyFraction` (default 0.5) of the table's buckets
+    * changed between the two versions, so most of a view is plausibly
+    * dirty and one rebuild pass costs less than the incremental
+    * bookkeeping.
+    */
+  private[sink] def bulkChanged(dir: String, fromV: Long, toV: Long): Boolean =
+    fromV < toV && {
+      val frac = sys.props.get("graft.ivm.rebuildDirtyFraction")
+        .flatMap(_.toDoubleOption).getOrElse(0.5)
+      SnapshotParquetSink.changedBuckets(dir, fromV, toV).size.toDouble >=
+        frac * math.max(1, SnapshotParquetSink.manifest(dir, toV)._2.size)
+    }
 
   /** Byte-equivalent of the fold regime's fixed floor in the cost-based
     * fold-vs-recompute pick: the extra jobs (dirty-bucket probe, the

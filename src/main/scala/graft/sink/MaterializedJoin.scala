@@ -1,7 +1,10 @@
 package graft.sink
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 
 /** Incrementally-maintained materialized JOIN view over two snapshot
   * tables — the join leg of the IVM family ([[MaterializedAgg]] is the
@@ -15,15 +18,17 @@ import org.apache.spark.sql.functions._
   *
   * Per [[refresh]]:
   *   1. changed FACT keys between the last applied fact version and the
-  *      current one (key-level full outer join of the two live states:
-  *      presence diff + null-safe seq inequality);
-  *   2. changed JOIN keys on the dim side, same diff shape — a dim update
-  *      must re-enrich EVERY fact row referencing it, a dim delete turns
+  *      current one ([[SnapshotParquetSink.keyedDiff]]: presence diff +
+  *      null-safe seq inequality);
+  *   2. changed JOIN keys on the dim side, same diff — a dim update must
+  *      re-enrich EVERY fact row referencing it, a dim delete turns
   *      left-outer rows null (or tombstones inner-join rows);
   *   3. affected fact rows = current facts hit by either set; they re-join
   *      the current dim and MERGE into the view; fact keys with no
   *      surviving view row (fact deleted, or inner join lost its dim)
-  *      merge as logical deletes.
+  *      merge as logical deletes. When both diffs came back driver-local
+  *      (small changes), the affected facts are one literal-predicate scan
+  *      and the delta a driver-local batch ([[localDelta]]).
   *
   * Applied-version bookkeeping rides the view manifest like the aggregate
   * leg's, but here TWO source versions pack into the one monotone seq:
@@ -98,40 +103,6 @@ final class MaterializedJoin(
   private def joined(facts: DataFrame, d: DataFrame): DataFrame =
     facts.join(d, joinKeys, joinType)
 
-  /** Changed key tuples of `table` between two versions: key-level full
-    * outer join of the live states, presence diff + null-safe seq
-    * inequality (the [[SnapshotParquetSink.changesBetween]] semantics,
-    * column-pruned to keys + seq). Unique per key with no distinct — both
-    * inputs are keyed table states, so the full outer join emits at most
-    * one row per key.
-    */
-  private def changedKeys(spark: SparkSession, table: SnapshotParquetSink,
-      keys: Seq[String], seqCol: String, fromV: Long, toV: Long): DataFrame = {
-    val cols = (keys :+ seqCol).distinct
-    // changed-bucket pruning ([[SnapshotParquetSink.readChangedAt]]); the
-    // evolution fallback applies to BOTH sides together — a full side
-    // joined against a pruned side would misread every unchanged key as a
-    // presence diff
-    val partA = table.readChangedAt(spark, fromV, toV, DeleteMode.Hard)
-    val partB = table.readChangedAt(spark, toV, fromV, DeleteMode.Hard)
-    val pruned = (partA.toSeq ++ partB.toSeq)
-      .forall(p => cols.forall(p.columns.contains))
-    def side(part: Option[DataFrame], v: Long, marker: String) = {
-      val rows =
-        if (pruned)
-          part.getOrElse(table.readAt(spark, v, DeleteMode.Hard).filter(lit(false)))
-        else table.readAt(spark, v, DeleteMode.Hard)
-      rows.select(cols.map(col): _*).withColumn(marker, lit(true))
-    }
-    val a = side(partA, fromV, "__pa").alias("a")
-    val b = side(partB, toV, "__pb").alias("b")
-    val cond = keys.map(k => col(s"a.$k") <=> col(s"b.$k")).reduce(_ && _)
-    a.join(b, cond, "full_outer")
-      .filter(col("a.__pa").isNull || col("b.__pb").isNull ||
-        !(col(s"a.$seqCol") <=> col(s"b.$seqCol")))
-      .select(keys.map(k => coalesce(col(s"a.$k"), col(s"b.$k")).as(k)): _*)
-  }
-
   private def semiOn(left: DataFrame, right: DataFrame, keys: Seq[String],
       jt: String): DataFrame = {
     val l = left.alias("l")
@@ -166,23 +137,15 @@ final class MaterializedJoin(
         // dim uniqueness per join key is STRUCTURAL: the dim is merged by
         // exactly the join keys (required above), and the sink keeps one
         // live row per merge key — no runtime dup scan needed
-        // BULK gate (driver-side, manifest-only — the MaterializedAgg
-        // pattern): when an advanced side's manifests show most buckets
-        // changed, the affected-fact set is plausibly most of the view,
-        // and the incremental machinery (changed-key diffs + the
-        // referencing-rows semi-join) costs more than re-enriching every
-        // fact once — so route to the rebuild branch below, which is
-        // correct for ANY advance (it recomputes all rows and tombstones
-        // vanished keys). Steady micro-advances keep the O(changed) path.
-        def bulkChanged(table: SnapshotParquetSink, fromV: Long, toV: Long): Boolean =
-          fromV < toV && {
-            val ea = SnapshotParquetSink.manifest(table.dir, fromV)._2
-            val eb = SnapshotParquetSink.manifest(table.dir, toV)._2
-            val changed = (ea.keySet ++ eb.keySet).count(b => ea.get(b) != eb.get(b))
-            val frac = sys.props.get("graft.ivm.rebuildDirtyFraction")
-              .flatMap(_.toDoubleOption).getOrElse(0.5)
-            changed.toDouble >= frac * math.max(1, eb.size)
-          }
+        // BULK gate ([[MaterializedAgg.bulkChanged]]): when an advanced
+        // side's manifests show most buckets changed, the affected-fact set
+        // is plausibly most of the view, and the incremental machinery
+        // (changed-key diffs + the referencing-rows probe) costs more than
+        // re-enriching every fact once — so route to the rebuild branch
+        // below, which is correct for ANY advance (it recomputes all rows
+        // and tombstones vanished keys). Steady micro-advances keep the
+        // O(changed) path.
+        //
         // metadata-derived probe hint ([[SnapshotParquetSink.mergeHinted]]):
         // the view is keyed by the FACT keys, so when the view sink shares
         // the fact table's hash routing (same bucket count, no Z-order
@@ -206,18 +169,16 @@ final class MaterializedJoin(
               .getOrElse(Set.empty[Int])).toArray.sorted)
         def changedFactHint(afv: Long): Option[Array[Int]] =
           if (!routingShared) None
-          else {
-            val ea = SnapshotParquetSink.manifest(fact.dir, afv)._2
-            val eb = SnapshotParquetSink.manifest(fact.dir, fv)._2
-            Some((ea.keySet ++ eb.keySet)
-              .filter(b => ea.get(b) != eb.get(b)).toArray.sorted)
-          }
-        val (delta, hint) = applied match {
+          else Some(SnapshotParquetSink.changedBuckets(fact.dir, afv, fv).toArray.sorted)
+        // Left: a driver-local batch, stamped; Right: a planned delta and
+        // its probe hint
+        val plan: Either[DataFrame, (DataFrame, Option[Array[Int]])] = applied match {
           case None =>
-            (joined(factNow, d).withColumn("__del", lit(false)), fullHint)
+            Right((joined(factNow, d).withColumn("__del", lit(false)), fullHint))
           case Some((afv, adv))
               if !fact.versions.contains(afv) || !dim.versions.contains(adv) ||
-                bulkChanged(fact, afv, fv) || bulkChanged(dim, adv, dv) =>
+                MaterializedAgg.bulkChanged(fact.dir, afv, fv) ||
+                MaterializedAgg.bulkChanged(dim.dir, adv, dv) =>
             // self-healing when a diff base is GONE (the view lagged past a
             // source's vacuum retention): rebuild from the current sources —
             // every fact row re-joins, and view keys with no surviving row
@@ -227,81 +188,174 @@ final class MaterializedJoin(
             val gone = semiOn(
               sink.read(spark, DeleteMode.Hard).select(fKeys.map(col): _*),
               recomputed, fKeys, "left_anti")
-            val goneFull = recomputed.schema.fields
-              .filterNot(f => fKeys.contains(f.name))
-              .foldLeft(gone)((df, f) =>
-                df.withColumn(f.name, lit(null).cast(f.dataType)))
-            (recomputed.withColumn("__del", lit(false))
-              .unionByName(goneFull.withColumn("__del", lit(true))), fullHint)
+            Right((withTombstones(recomputed, Seq(gone), fKeys), fullHint))
           case Some((afv, adv)) =>
             // each side's diff (and its downstream probes) exists only when
             // that side actually advanced — a quiet dim costs nothing, a
             // quiet fact costs only the dim diff + referencing-rows probe
             val dirtyF =
-              if (afv < fv) Some(changedKeys(spark, fact, fKeys, factSeqCol, afv, fv))
+              if (afv < fv) Some(fact.keyedDiff(spark, afv, fv, fKeys, factSeqCol, Nil))
               else None
             val dirtyD =
-              if (adv < dv) Some(changedKeys(spark, dim, joinKeys, dimSeqCol, adv, dv))
+              if (adv < dv) Some(dim.keyedDiff(spark, adv, dv, joinKeys, dimSeqCol, Nil))
               else None
-            val parts =
-              dirtyF.map(k => semiOn(factNow, k, fKeys, "left_semi")).toSeq ++
-                dirtyD.map(k => semiOn(factNow, k, joinKeys, "left_semi")).toSeq
-            val affected0 = parts.reduce(_ unionByName _) // stale ⇒ nonEmpty
-            val affected =
-              if (parts.lengthCompare(2) == 0) affected0.dropDuplicates(fKeys)
-              else affected0 // one side: semi output already unique per fact key
-            val recomputed = joined(affected, d)
-            // fact keys with no surviving view row: the fact row was
-            // deleted (dirty but absent from the current facts), or — inner
-            // join only — its dim vanished (affected but absent from the
-            // recompute; under left_outer every affected row joins, so that
-            // probe is dead code and skipped). Disjoint by construction
-            // (affected ⊆ facts), so a plain union, no distinct. Tombstoned
-            // so the view history stays time-travelable.
-            val gone =
-              dirtyF.map(k => semiOn(k, factNow, fKeys, "left_anti")).toSeq ++
-                (if (joinType == "inner")
-                  Seq(semiOn(affected.select(fKeys.map(col): _*), recomputed,
-                    fKeys, "left_anti"))
-                else Nil)
-            val withDel = recomputed.withColumn("__del", lit(false))
-            val df = gone.reduceOption(_ unionByName _) match {
-              case None => withDel
-              case Some(g) =>
-                val goneFull = recomputed.schema.fields
-                  .filterNot(f => fKeys.contains(f.name))
-                  .foldLeft(g)((df, f) =>
-                    df.withColumn(f.name, lit(null).cast(f.dataType)))
-                withDel.unionByName(goneFull.withColumn("__del", lit(true)))
+            val local =
+              if ((dirtyF ++ dirtyD).forall(SnapshotParquetSink.localRows(_).isDefined))
+                localDelta(spark, factNow, d, fKeys, dirtyF, dirtyD, pack(fv, dv))
+              else None
+            local.map(Left(_)).getOrElse {
+              val keysF = dirtyF.map(_.select(fKeys.map(col): _*))
+              val keysD = dirtyD.map(_.select(joinKeys.map(col): _*))
+              val parts =
+                keysF.map(k => semiOn(factNow, k, fKeys, "left_semi")).toSeq ++
+                  keysD.map(k => semiOn(factNow, k, joinKeys, "left_semi")).toSeq
+              val affected0 = parts.reduce(_ unionByName _) // stale ⇒ nonEmpty
+              val affected =
+                if (parts.lengthCompare(2) == 0) affected0.dropDuplicates(fKeys)
+                else affected0 // one side: semi output already unique per fact key
+              val recomputed = joined(affected, d)
+              // fact keys with no surviving view row: the fact row was
+              // deleted (dirty but absent from the current facts), or —
+              // inner join only — its dim vanished (affected but absent from
+              // the recompute; under left_outer every affected row joins, so
+              // that probe is dead code and skipped). Disjoint by
+              // construction (affected ⊆ facts), so a plain union, no
+              // distinct. Tombstoned so the view history stays
+              // time-travelable.
+              val gone =
+                keysF.map(k => semiOn(k, factNow, fKeys, "left_anti")).toSeq ++
+                  (if (joinType == "inner")
+                    Seq(semiOn(affected.select(fKeys.map(col): _*), recomputed,
+                      fKeys, "left_anti"))
+                  else Nil)
+              // dim-quiet advances touch only changed-fact-bucket keys; a
+              // dim-driven delta reaches arbitrary buckets — no hint then
+              Right((withTombstones(recomputed, gone, fKeys),
+                if (dirtyD.isEmpty) changedFactHint(afv) else None))
             }
-            // dim-quiet advances touch only changed-fact-bucket keys; a
-            // dim-driven delta reaches arbitrary buckets — no hint then
-            (df, if (dirtyD.isEmpty) changedFactHint(afv) else None)
         }
-        val stamped = delta.withColumn("__vseq", lit(pack(fv, dv)))
-          // merge walks its input several times (affected buckets, max seq,
-          // write); without the persist every walk re-runs the diff+join
-          // pipeline — O(affected rows), spillable
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          hint match {
-            case Some(bs) =>
-              try sink.mergeHinted(stamped, fKeys, "__vseq", "__del",
-                bs, Some(pack(fv, dv)))
-              catch {
-                case _: SnapshotParquetSink.ProbeHintMismatch =>
-                  // staged write deleted, nothing published — replay with
-                  // the probing merge (idempotent LWW)
-                  sink.merge(stamped, fKeys, "__vseq", "__del")
+        plan match {
+          // at most collect-cap rows, merged as a driver-local batch: no
+          // persist, no probe job
+          case Left(local) => sink.merge(local, fKeys, "__vseq", "__del")
+          case Right((delta, hint)) =>
+            val stamped = delta.withColumn("__vseq", lit(pack(fv, dv)))
+              // merge walks its input several times (affected buckets, max
+              // seq, write); without the persist every walk re-runs the
+              // diff+join pipeline — O(affected rows), spillable
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            try {
+              hint match {
+                case Some(bs) =>
+                  try sink.mergeHinted(stamped, fKeys, "__vseq", "__del",
+                    bs, Some(pack(fv, dv)))
+                  catch {
+                    case _: SnapshotParquetSink.ProbeHintMismatch =>
+                      // staged write deleted, nothing published — replay
+                      // with the probing merge (idempotent LWW)
+                      sink.merge(stamped, fKeys, "__vseq", "__del")
+                  }
+                case None => sink.merge(stamped, fKeys, "__vseq", "__del")
               }
-            case None => sink.merge(stamped, fKeys, "__vseq", "__del")
-          }
-          Some((fv, dv))
-        } finally {
-          stamped.unpersist()
-          ()
+            } finally {
+              stamped.unpersist()
+              ()
+            }
         }
+        Some((fv, dv))
     }
+  }
+
+  /** `recomputed` rows live, plus every key of `gone` as a tombstone with
+    * the other columns null.
+    */
+  private def withTombstones(recomputed: DataFrame, gone: Seq[DataFrame],
+      fKeys: Seq[String]): DataFrame = {
+    val live = recomputed.withColumn("__del", lit(false))
+    gone.reduceOption(_ unionByName _) match {
+      case None => live
+      case Some(g) =>
+        val goneFull = recomputed.schema.fields
+          .filterNot(f => fKeys.contains(f.name))
+          .foldLeft(g)((df, f) => df.withColumn(f.name, lit(null).cast(f.dataType)))
+        live.unionByName(goneFull.withColumn("__del", lit(true)))
+    }
+  }
+
+  /** The incremental arm over driver-local key diffs (`dirtyF`, `dirtyD`,
+    * key columns first): ONE filtered scan of the current facts with
+    * literal key predicates — no semi-join shuffles, no dedup — joined to
+    * the dim with a match marker, persisted and counted. Past
+    * [[MaterializedAgg.collectCap]] keys or rows it returns None and the
+    * distributed arm runs; otherwise the rows come to the driver, where the
+    * delta is assembled: every affected row (under `inner`, only those
+    * whose dim matched), plus tombstones for the dirty fact keys no current
+    * fact holds and, under `inner`, for the affected facts whose dim is
+    * gone. The result is a driver-local batch stamped `vseq`.
+    */
+  private def localDelta(spark: SparkSession, factNow: DataFrame, d: DataFrame,
+      fKeys: Seq[String], dirtyF: Option[DataFrame], dirtyD: Option[DataFrame],
+      vseq: Long): Option[DataFrame] = {
+    val cap = MaterializedAgg.collectCap
+    def rowsOf(diff: Option[DataFrame]) =
+      diff.map(SnapshotParquetSink.localRows(_).get).getOrElse(Nil)
+    if (rowsOf(dirtyF).size + rowsOf(dirtyD).size > cap) return None
+    val matched = factNow.filter(
+      (dirtyF.map(keyIn(_, fKeys, factNow.schema)) ++
+        dirtyD.map(keyIn(_, joinKeys, factNow.schema))).reduce(_ || _))
+      .join(d.withColumn("__dm", lit(true)), joinKeys, "left_outer")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      if (matched.queryExecution.toRdd.count() > cap) return None
+      val rows = matched.queryExecution.toRdd.map(_.copy()).collect()
+      val s = matched.schema
+      val dm = s.fieldIndex("__dm")
+      val out = s.fields.toSeq.filterNot(_.name == "__dm")
+      def key(r: InternalRow, schema: StructType, k: String): Any =
+        r.get(schema.fieldIndex(k), schema(k).dataType)
+      def row(values: Seq[Any], del: Boolean): InternalRow =
+        new GenericInternalRow((values ++ Seq(del, vseq)).toArray)
+      def tombstone(keyValue: String => Any): InternalRow =
+        row(out.map(f => if (fKeys.contains(f.name)) keyValue(f.name) else null), del = true)
+      val (live, dimGone) = rows.partition(r => joinType == "left_outer" || !r.isNullAt(dm))
+      def factKey(schema: StructType) = SnapshotParquetSink.rowIdentity(
+        fKeys.map(k => schema.fieldIndex(k) -> schema(k).dataType))
+      val present = rows.iterator.map(factKey(s)).toSet
+      val deleted = dirtyF.toSeq.flatMap { f =>
+        val id = factKey(f.schema)
+        rowsOf(dirtyF).filterNot(r => present(id(r))).map(r => tombstone(key(r, f.schema, _)))
+      }
+      val batch =
+        live.map(r => row(out.map(f => key(r, s, f.name)), del = false)) ++
+          dimGone.map(r => tombstone(key(r, s, _))) ++ deleted
+      Some(SnapshotParquetSink.localFrame(spark,
+        StructType(out.map(_.copy(nullable = true)) ++ Seq(
+          StructField("__del", BooleanType), StructField("__vseq", LongType))),
+        batch.toSeq))
+    } finally {
+      matched.unpersist()
+      ()
+    }
+  }
+
+  /** Rows whose `cols` are null-safe-equal to one of `diff`'s key tuples
+    * (a driver-local frame, those columns by the same names), as literal
+    * predicates typed like `schema`: an IN list for one column, a struct
+    * IN list otherwise.
+    */
+  private def keyIn(diff: DataFrame, cols: Seq[String], schema: StructType): Column = {
+    val from = cols.map(c => diff.schema.fieldIndex(c) -> diff.schema(c).dataType)
+    val types = cols.map(c => schema(c).dataType)
+    val tuples = SnapshotParquetSink.localRows(diff).get.map(r =>
+      from.map { case (i, dt) => CatalystTypeConverters.convertToScala(r.get(i, dt), dt) })
+    if (tuples.isEmpty) lit(false)
+    else if (cols.length == 1) {
+      val (nulls, values) = tuples.map(_.head).partition(_ == null)
+      val in = col(cols.head).isin(values.distinct.map(v => lit(v).cast(types.head)): _*)
+      if (nulls.isEmpty) in else in || col(cols.head).isNull
+    } else
+      struct(cols.map(col): _*).isin(tuples.map(t =>
+        struct(cols.indices.map(i => lit(t(i)).cast(types(i)).as(cols(i))): _*)): _*)
   }
 
   /** The maintained view — live rows only. */

@@ -3,8 +3,14 @@ package graft.sink
 import java.util.UUID
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types._
 import graft.engine.Dfs
 
 /** Manifest-format and bucket-routing primitives, shared between the Scala
@@ -142,6 +148,44 @@ object SnapshotParquetSink {
     if (isDeleteCol == "is_deleted") folded.drop("is_deleted") else folded
   }
 
+  /** The rows of a DRIVER-LOCAL frame: one whose logical plan, as built, is
+    * a `LocalRelation` (`createDataFrame` over a collection, [[localFrame]]).
+    * Read off `queryExecution.logical`, so the check costs no analysis or
+    * optimizer pass — merge asks it of every batch.
+    */
+  private[sink] def localRows(df: DataFrame): Option[Seq[InternalRow]] =
+    df.queryExecution.logical match {
+      case l: LocalRelation => Some(l.data)
+      case _                => None
+    }
+
+  /** A driver-local frame over internal-format `rows`. */
+  private[sink] def localFrame(spark: SparkSession, schema: StructType,
+      rows: Seq[InternalRow]): DataFrame =
+    Bridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** Types whose UnsafeRow encoding is equal exactly when two values are
+    * equal under `<=>` — what a driver-side keyed comparison may rely on.
+    * Floating point is out (`<=>` equates -0.0 and 0.0, the bytes do not),
+    * and so are non-binary collations.
+    */
+  private[sink] def byteComparable(dt: DataType): Boolean = dt match {
+    case BooleanType | ByteType | ShortType | IntegerType | LongType | DateType |
+         TimestampType | TimestampNTZType | BinaryType | _: DecimalType => true
+    case s: StringType => s.collationId == StringType.collationId
+    case _             => false
+  }
+
+  /** Driver-side identity of the given (ordinal, type) fields of internal
+    * rows: their UnsafeRow projection, null-safe and exact for
+    * [[byteComparable]] types.
+    */
+  private[sink] def rowIdentity(fields: Seq[(Int, DataType)]): InternalRow => UnsafeRow = {
+    val proj = UnsafeProjection.create(
+      fields.map { case (i, dt) => BoundReference(i, dt, nullable = true): Expression })
+    r => proj(r).copy()
+  }
+
   /** Outcome of the last successful [[SnapshotParquetSink.merge]] on a
     * handle: the published version, publish attempts, how many of those
     * attempts REBASED (reused the already-written data files onto a newer
@@ -239,6 +283,20 @@ object SnapshotParquetSink {
   /** (declared nBuckets, bucket → path relative to `dir`) at `version`. */
   def manifest(dir: String, version: Long): (Int, Map[Int, String]) =
     manifestOf(dir, version, manifestLines(dir, version))
+
+  /** Buckets whose manifest entry differs between versions `a` and `b` of
+    * the table at `dir`: listed at one version only, or naming another
+    * file. Buckets sharing a file hold byte-identical rows, and a key routes
+    * to one bucket under one layout, so every key-level change between the
+    * two versions lives in these buckets — change feeds, IVM refreshes and
+    * followers scan them instead of the table. A layout change (rebucket,
+    * compaction, replaceAll) makes every entry differ: correct, unpruned.
+    */
+  private[graft] def changedBuckets(dir: String, a: Long, b: Long): Set[Int] = {
+    val ea = manifest(dir, a)._2
+    val eb = manifest(dir, b)._2
+    (ea.keySet ++ eb.keySet).filter(k => ea.get(k) != eb.get(k))
+  }
 
   private def manifestOf(dir: String, version: Long,
       lines: Seq[String]): (Int, Map[Int, String]) = {
@@ -1183,9 +1241,13 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     val dbg = new graft.engine.Dbg("graft.commit.debug", "[commit]")
     keys.foreach(SnapshotParquetSink.validManifestName("key"))
     val spark = batch.sparkSession
+    // a driver-local batch (a LocalRelation as built — never the optimized
+    // plan, which would cost every ingest batch an optimizer pass) is
+    // re-read for free and probed on the driver: no persist, no probe job
+    val local = SnapshotParquetSink.localRows(batch).isDefined
     val incoming0 = SnapshotParquetSink.foldDeleteFlag(batch, isDeleteCol)
       .withColumn("__bucket", bucketOf(keys))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    if (!local) incoming0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // ONE probe job: the affected-bucket list (≤ nBuckets values by
       // construction — the driver-side list that limits the read and
@@ -1198,6 +1260,12 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
       // against the written bucket dirs below).
       val (affected, batchMaxSeq) = probeHint match {
         case Some((bs, mx)) => (bs.sorted, mx)
+        case None if local =>
+          // the projection folds into the local relation: a driver-side
+          // evaluation, not a job
+          val probed = incoming0.select(col("__bucket"), col(seqCol).cast("long")).collect()
+          (probed.map(_.getInt(0)).distinct.sorted,
+            probed.filterNot(_.isNullAt(1)).map(_.getLong(1)).reduceOption(_ max _))
         case None =>
           dbg("probe")(graft.engine.JobTag(spark, "commit:probe") {
             probeBucketsAndHead(incoming0, seqCol) })
@@ -1575,18 +1643,120 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
   }
 
   /** Version `version`'s bucket files that DIFFER from version `other`'s
-    * manifest entry for the same bucket. Buckets sharing a file between the
-    * two manifests are byte-identical: a keyed diff between the versions
-    * can skip them on BOTH sides (keys route to the same bucket under one
-    * layout), so change feeds and IVM refreshes scan CHANGED buckets, not
-    * the table. A layout change (rebucket, compaction, replaceAll) makes
-    * every entry differ — correct, just unpruned.
+    * manifest entry for the same bucket ([[SnapshotParquetSink.changedBuckets]]
+    * listed at `version`), in bucket order.
     */
   def changedEntriesAt(version: Long, other: Long): Seq[String] = {
-    val theirs = readManifest(other)
-    readManifest(version).toSeq.sortBy(_._1).collect {
-      case (b, rel) if !theirs.get(b).contains(rel) => s"$dir/$rel"
+    val entries = readManifest(version)
+    SnapshotParquetSink.changedBuckets(dir, version, other).toSeq.sorted
+      .flatMap(b => entries.get(b).map(rel => s"$dir/$rel"))
+  }
+
+  /** A zero-row frame shaped like `version`'s Hard read, built from the
+    * recorded schema (no file listing).
+    */
+  private[sink] def emptyAt(spark: SparkSession, version: Long): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      StructType(SnapshotParquetSink.manifestSchema(dir, version).fields.filterNot(f =>
+        f.name == "__gen" || f.name == "__bucket" || f.name == "__is_deleted")))
+
+  /** The keys whose LIVE row (Hard mode) differs between versions `fromV`
+    * and `toV`: live at one version only (a presence diff), or live at both
+    * under null-safe-unequal `seqCol` — the sink stores each key's winning
+    * seq, so a row cannot change without it. The one change rule behind
+    * [[changesBetween]] and the IVM refreshes.
+    *
+    * One row per changed key: the `keys` columns, then per side (`a` =
+    * `fromV`, `b` = `toV`) a non-null flag `__a_present` / `__b_present`
+    * and the caller's `project` columns evaluated on that side's row, named
+    * `__a_<name>` / `__b_<name>` (null where the side is absent).
+    *
+    * Both sides read only the buckets whose file differs between the two
+    * manifests ([[SnapshotParquetSink.changedBuckets]]). The arm is picked
+    * from manifests and FS metadata alone:
+    *   - SMALL, when those files of both versions total at most the
+    *     session's `spark.sql.autoBroadcastJoinThreshold` (−1 turns the arm
+    *     off) and the keys and `seqCol` are
+    *     [[SnapshotParquetSink.byteComparable]]: both projected slices are
+    *     read in ONE job and diffed on the driver, and the result is a
+    *     driver-local frame ([[SnapshotParquetSink.localRows]]) — later
+    *     plans over it and merges of batches built from it start no
+    *     bookkeeping jobs of their own;
+    *   - DISTRIBUTED otherwise: a key-level full outer join of the two
+    *     slices, shuffled on the merge keys.
+    * At 100 TB a micro commit's changed buckets are GB-sized, so the byte
+    * gate keeps the distributed arm there.
+    */
+  private[sink] def keyedDiff(spark: SparkSession, fromV: Long, toV: Long,
+      keys: Seq[String], seqCol: String, project: Seq[Column]): DataFrame = {
+    val nk = keys.length
+    def side(v: Long, other: Long): DataFrame =
+      readChangedAt(spark, v, other, DeleteMode.Hard).getOrElse(emptyAt(spark, v))
+        .select(keys.map(col) ++ Seq(col(seqCol)) ++ project: _*)
+    val a = side(fromV, toV)
+    val b = side(toV, fromV)
+    val projected = b.schema.fields.drop(nk + 1).toSeq
+    require(!projected.exists(_.name == "present"),
+      "keyedDiff projections must not be named 'present' (the presence flags)")
+    val outSchema = StructType(
+      keys.indices.map(i => StructField(keys(i), b.schema(i).dataType)) ++
+        Seq("a", "b").flatMap(t =>
+          StructField(s"__${t}_present", BooleanType, nullable = false) +:
+            projected.map(f => StructField(s"__${t}_${f.name}", f.dataType))))
+    val paths = changedEntriesAt(fromV, toV) ++ changedEntriesAt(toV, fromV)
+    val threshold = Bridge.broadcastThreshold(spark)
+    def small: Boolean =
+      threshold >= 0 &&
+        a.schema.map(_.dataType) == b.schema.map(_.dataType) &&
+        b.schema.fields.take(nk + 1).forall(f => SnapshotParquetSink.byteComparable(f.dataType)) &&
+        SnapshotParquetSink.inParallel(paths) { p =>
+          try Dfs.contentSummary(new HPath(p))._2
+          catch { case _: java.io.IOException => 0L }
+        }.sum <= threshold
+    if (paths.isEmpty) SnapshotParquetSink.localFrame(spark, outSchema, Nil)
+    else if (small) localKeyedDiff(spark, a, b, nk, outSchema)
+    else {
+      def named(df: DataFrame, t: String): DataFrame =
+        df.toDF((keys.indices.map(i => s"__k$t$i") :+ s"__s$t") ++
+            projected.map(f => s"__${t}_${f.name}"): _*)
+          .withColumn(s"__${t}_present", lit(true))
+      named(a, "a").join(named(b, "b"),
+          keys.indices.map(i => col(s"__ka$i") <=> col(s"__kb$i")).reduce(_ && _), "full_outer")
+        .filter(col("__a_present").isNull || col("__b_present").isNull ||
+          !(col("__sa") <=> col("__sb")))
+        .select(keys.indices.map(i => coalesce(col(s"__ka$i"), col(s"__kb$i")).as(keys(i))) ++
+          Seq("a", "b").flatMap(t =>
+            coalesce(col(s"__${t}_present"), lit(false)).as(s"__${t}_present") +:
+              projected.map(f => col(s"__${t}_${f.name}"))): _*)
     }
+  }
+
+  /** [[keyedDiff]]'s small arm: both projected slices (keys, seq, then the
+    * projections) in one job, diffed on the driver by the bytes of their
+    * keys and seq.
+    */
+  private def localKeyedDiff(spark: SparkSession, a: DataFrame, b: DataFrame,
+      nk: Int, outSchema: StructType): DataFrame = {
+    val types = b.schema.fields.map(_.dataType)
+    val rows = a.withColumn("__side", lit(0)).union(b.withColumn("__side", lit(1)))
+      .queryExecution.toRdd.map(_.copy()).collect()
+    val keyId = SnapshotParquetSink.rowIdentity((0 until nk).map(i => i -> types(i)))
+    val seqId = SnapshotParquetSink.rowIdentity(Seq(nk -> types(nk)))
+    val sides = Array.fill(2)(scala.collection.mutable.LinkedHashMap.empty[UnsafeRow, InternalRow])
+    rows.foreach(r => sides(r.getInt(types.length)).update(keyId(r), r))
+    val Array(at, bt) = sides
+    def values(r: Option[InternalRow]): Seq[Any] =
+      r.isDefined +: (nk + 1 until types.length).map(i => r.map(_.get(i, types(i))).orNull)
+    val out = (at.keysIterator ++ bt.keysIterator.filterNot(at.contains)).flatMap { k =>
+      (at.get(k), bt.get(k)) match {
+        case (Some(x), Some(y)) if seqId(x) == seqId(y) => None
+        case (ra, rb) =>
+          val r = rb.orElse(ra).get
+          Some(new GenericInternalRow(
+            ((0 until nk).map(i => r.get(i, types(i))) ++ values(ra) ++ values(rb)).toArray))
+      }
+    }.toSeq
+    SnapshotParquetSink.localFrame(spark, outSchema, out)
   }
 
   /** The state at `version` restricted to buckets that differ from `other`
@@ -1674,12 +1844,12 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     * the key columns, `change`, `seq_from` (null for insert), `seq_to`
     * (null for delete).
     *
-    * Scale shape: both sides read only the buckets whose FILE differs
-    * between the two manifests ([[readChangedAt]] — shared files are
-    * byte-identical and keys route to the same bucket under one layout),
-    * column-pruned to key+seq; the full outer join shuffles on the merge
-    * key — the same join any consumer-side diff pays, but over two
-    * changed-bucket projections instead of full snapshots.
+    * One [[keyedDiff]] over the two versions' changed buckets, projected to
+    * the seq; presence comes from its explicit flags, never from seq
+    * nullability (the sink accepts all-null seq, so a key live on both
+    * sides with a NULL seq is no insert/delete, and NULL⇄value transitions
+    * are updates). A small change is computed on the driver when the frame
+    * is built.
     */
   def changesBetween(spark: SparkSession, fromVersion: Long, toVersion: Long): DataFrame = {
     require(fromVersion < toVersion,
@@ -1688,31 +1858,12 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     // the RECORDED order column governs (the manifest is the contract a
     // table with an unrelated data column named `seq` relies on)
     val seqCol = SnapshotParquetSink.manifestSeqCol(dir, toVersion)
-    def live(v: Long, other: Long) = readChangedAt(spark, v, other, DeleteMode.Hard)
-      .getOrElse(readAt(spark, v, DeleteMode.Hard).filter(lit(false)))
-      .select(keys.map(col) :+ col(seqCol): _*)
-    // explicit existence flags: the sink accepts all-null seq ("contributes
-    // no head"), so presence must NOT be inferred from seq nullability — a
-    // key live on both sides with a NULL seq would otherwise read as
-    // insert/delete, and NULL⇄value transitions would vanish from `update`
-    // under three-valued `=!=`
-    val a = keys.foldLeft(live(fromVersion, toVersion)
-        .withColumnRenamed(seqCol, "seq_from")
-        .withColumn("__a_present", lit(true))) {
-      (df, k) => df.withColumnRenamed(k, s"__a_$k") }
-    val b = keys.foldLeft(live(toVersion, fromVersion)
-        .withColumnRenamed(seqCol, "seq_to")
-        .withColumn("__b_present", lit(true))) {
-      (df, k) => df.withColumnRenamed(k, s"__b_$k") }
-    val cond = keys.map(k => col(s"__a_$k") <=> col(s"__b_$k")).reduce(_ && _)
-    val joined = a.join(b, cond, "full_outer")
-    val change = when(col("__a_present").isNull, lit("insert"))
-      .when(col("__b_present").isNull, lit("delete"))
-      .when(!(col("seq_from") <=> col("seq_to")), lit("update"))
-    val keyCols = keys.map(k => coalesce(col(s"__b_$k"), col(s"__a_$k")).as(k))
-    joined
-      .select(keyCols ++ Seq(change.as("change"), col("seq_from"), col("seq_to")): _*)
-      .filter(col("change").isNotNull) // unchanged keys (same seq) drop out
+    val change = when(!col("__a_present"), lit("insert"))
+      .when(!col("__b_present"), lit("delete"))
+      .otherwise(lit("update"))
+    keyedDiff(spark, fromVersion, toVersion, keys, seqCol, Seq(col(seqCol).as("seq")))
+      .select(keys.map(col) ++
+        Seq(change.as("change"), col("__a_seq").as("seq_from"), col("__b_seq").as("seq_to")): _*)
   }
 
   /** The whole committed state at `base` — the shared read for

@@ -177,12 +177,10 @@ object TableFollower {
           case None => None // manifests share every file — nothing to apply
           case Some(changed) =>
             // the slice carries every column (recorded-schema read). Hint:
-            // [[SnapshotParquetSink.changedEntriesAt]]'s rule, kept to
-            // bucket ids — the slice holds every row of exactly these
-            val prevEntries = SnapshotParquetSink.manifest(upstream.dir, prev)._2
-            val changedBuckets = upEntries.collect {
-              case (b, rel) if !prevEntries.get(b).contains(rel) => b }
-            Some((changed, hintOver(changedBuckets)))
+            // the changed buckets listed at `latest` — the slice holds
+            // every row of exactly these
+            Some((changed, hintOver(SnapshotParquetSink.changedBuckets(
+              upstream.dir, latest, prev).filter(upEntries.contains))))
         }
       case Some(_) => // diff base vacuumed: one full resync, then incremental
         Some(full)

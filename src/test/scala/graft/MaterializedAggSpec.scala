@@ -101,6 +101,112 @@ class MaterializedAggSpec extends SparkSpec
     assert(m.refresh(spark).isEmpty)
   }
 
+  test("small-delta and distributed arms agree at every version") {
+    // one seeded history — inserts, updates, group-moving updates, deletes,
+    // re-inserts, a NULL group and a key under NULL seq — run twice: with
+    // the default broadcast threshold (driver-local diffs and merges) and
+    // with the threshold off (the planned path). Three views ride it: the
+    // rollup under the recompute and the fold regime, and a keyed view.
+    def history(): Seq[DataFrame] = {
+      val rnd = new scala.util.Random(5)
+      var seq = 10L
+      def next() = { seq += 1; seq }
+      val grps = Seq("a", "b", "c", null)
+      def batch(t: (Int, String, Long, Option[Long], Boolean)*): DataFrame =
+        t.toSeq.toDF("id", "grp", "v", "seq", "__del")
+      val live = scala.collection.mutable.Map.empty[Int, String]
+      val out = Seq.newBuilder[DataFrame]
+      out += batch((0 until 24).map { i =>
+        val g = grps(rnd.nextInt(grps.size)); live(i) = g
+        (i, g, rnd.nextInt(50).toLong, Some(1L), false) }: _*)
+      out += batch((90, "a", 7L, None, false))
+      val deleted = scala.collection.mutable.ArrayBuffer.empty[Int]
+      for (round <- 0 until 4) {
+        val ids = rnd.shuffle(live.keys.toSeq.sorted).take(3)
+        val moved = grps.filterNot(_ == live(ids(1)))(rnd.nextInt(grps.size - 1))
+        val fresh = grps(rnd.nextInt(grps.size))
+        out += batch(
+          (ids(0), live(ids(0)), rnd.nextInt(50).toLong, Some(next()), false),
+          (ids(1), moved, rnd.nextInt(50).toLong, Some(next()), false),
+          (100 + round, fresh, 3L, Some(next()), false),
+          (ids(2), null, 0L, Some(next()), true),
+          round match {
+            // the NULL-seq key: deleted and re-inserted under NULL seq,
+            // then resolved to a value
+            case 0 => (90, null, 0L, None, true)
+            case 1 => (90, "b", 8L, None, false)
+            case 2 => (90, "b", 9L, Some(next()), false)
+            // a re-insert of a deleted key
+            case _ => (deleted.head, "c", 4L, Some(next()), false)
+          })
+        live(ids(1)) = moved
+        live(100 + round) = fresh
+        live -= ids(2)
+        deleted += ids(2)
+      }
+      out.result()
+    }
+    val rollup = Seq(count(lit(1)).as("n"), sum(col("v")).as("sv"),
+      min(col("v")).as("mn"), max(col("v")).as("mx"))
+    def rowsOf(df: DataFrame): Set[String] = df.collect().map(_.toString).toSet
+    def run(tag: String, threshold: Option[String]): Seq[Seq[Any]] = {
+      val src = new SnapshotParquetSink(tmpDir(s"magg_${tag}_src"), nBuckets = 4)
+      def view(name: String, groups: Seq[String]) = new MaterializedAgg(src,
+        new SnapshotParquetSink(tmpDir(s"magg_${tag}_$name"), nBuckets = 4), groups, rollup)
+      val views = Seq(("recompute", view("rc", Seq("grp"))), ("fold", view("fd", Seq("grp"))),
+        ("recompute", view("keyed", Seq("id"))))
+      def body = history().map { b =>
+        src.merge(b, Seq("id"), "seq", "__del")
+        val v = src.currentVersion.get
+        views.flatMap { case (regime, m) =>
+          sys.props("graft.ivm.forceRegime") = regime
+          m.refresh(spark)
+          val got = rowsOf(m.read(spark).select((m.groupCols ++ Seq("n", "sv", "mn", "mx")).map(col): _*))
+          if (threshold.isEmpty)
+            assert(got == rowsOf(src.read(spark, DeleteMode.Hard).groupBy(m.groupCols.map(col): _*)
+              .agg(rollup.head, rollup.tail: _*)), s"$tag v$v ${m.groupCols}")
+          Seq(got, m.appliedVersion)
+        } :+ (if (v == 0L) Set.empty[String] else rowsOf(src.changesBetween(spark, v - 1, v)))
+      }
+      threshold.fold(body)(withBroadcastThreshold(_)(body))
+    }
+    sys.props("graft.ivm.rebuildDirtyFraction") = "2.0"
+    try {
+      val small = run("arms_small", None)
+      val distributed = run("arms_dist", Some("-1"))
+      assert(small.size == distributed.size)
+      small.zip(distributed).zipWithIndex.foreach { case ((a, b), i) =>
+        assert(a == b, s"step $i differs between the arms")
+      }
+    } finally {
+      sys.props.remove("graft.ivm.rebuildDirtyFraction")
+      sys.props("graft.ivm.forceRegime") = "fold"
+    }
+  }
+
+  test("a small recompute refresh merges a driver-local delta: no probe job") {
+    val (src, m) = mk("localmerge")
+    src.merge(rows((1, "a", 10, 1), (2, "b", 20, 2), (3, "c", 5, 3)), Seq("id"), "seq", "__del")
+    m.refresh(spark)
+    sys.props("graft.ivm.forceRegime") = "recompute"
+    sys.props("graft.ivm.rebuildDirtyFraction") = "2.0"
+    try {
+      src.merge(rows((2, "a", 7, 4)), Seq("id"), "seq", "__del")
+      assert(jobDescriptionsDuring { assert(m.refresh(spark) == Some(1L)) }
+        .count(_ == "commit:probe") == 0)
+      assert(maintained(m) == direct(src))
+      src.merge(dels(5, 1), Seq("id"), "seq", "__del")
+      withBroadcastThreshold("-1") {
+        assert(jobDescriptionsDuring { assert(m.refresh(spark) == Some(2L)) }
+          .count(_ == "commit:probe") >= 1)
+      }
+      assert(maintained(m) == direct(src))
+    } finally {
+      sys.props.remove("graft.ivm.rebuildDirtyFraction")
+      sys.props("graft.ivm.forceRegime") = "fold"
+    }
+  }
+
   test("a group whose last row is deleted vanishes from the aggregate") {
     val (src, m) = mk("gone")
     src.merge(rows((1, "a", 1, 1), (2, "b", 2, 2)), Seq("id"), "seq", "__del")

@@ -224,14 +224,134 @@ class MaterializedJoinSpec extends SparkSpec {
       .count(_ == "commit:probe") == 0, "fact-only advance must ride the hint")
     assert(maintained(m) == direct(f, d, "left_outer"))
     // dim-driven INCREMENTAL advance: updates fan out to arbitrary fact
-    // buckets — probes. (The bulk gate would otherwise route this tiny
-    // dim's advance to the rebuild arm, which is legitimately hinted.)
+    // buckets — the distributed arm probes. (The bulk gate would otherwise
+    // route this tiny dim's advance to the rebuild arm, which is
+    // legitimately hinted.)
     d.merge(dims(("a", "Acme Corp", 5)), Seq("ck"), "seq", "__ddel")
     sys.props("graft.ivm.rebuildDirtyFraction") = "2.0"
-    try assert(jobDescriptionsDuring { assert(m.refresh(spark).isDefined) }
-      .count(_ == "commit:probe") >= 1, "dim-driven advance must probe")
-    finally sys.props.remove("graft.ivm.rebuildDirtyFraction")
+    try {
+      withBroadcastThreshold("-1") {
+        assert(jobDescriptionsDuring { assert(m.refresh(spark).isDefined) }
+          .count(_ == "commit:probe") >= 1, "distributed dim-driven advance must probe")
+      }
+      assert(maintained(m) == direct(f, d, "left_outer"))
+      // the small-delta arm computes the affected buckets on the driver
+      d.merge(dims(("a", "Acme Inc", 6)), Seq("ck"), "seq", "__ddel")
+      assert(jobDescriptionsDuring { assert(m.refresh(spark).isDefined) }
+        .count(_ == "commit:probe") == 0, "small dim-driven advance must not probe")
+    } finally sys.props.remove("graft.ivm.rebuildDirtyFraction")
     assert(maintained(m) == direct(f, d, "left_outer"))
+  }
+
+  test("small-delta and distributed arms agree at every version, left_outer and inner") {
+    // one seeded history, run twice: with the default broadcast threshold
+    // (driver-local diffs, literal-predicate fact scan, local merge) and
+    // with the threshold off (shuffled diffs, semi joins, probing merge)
+    def history(): Seq[(String, DataFrame)] = {
+      val rnd = new scala.util.Random(11)
+      var seq = 10L
+      def next() = { seq += 1; seq }
+      val cks = Seq("a", "b", "c", "d")
+      val live = scala.collection.mutable.Map.empty[Int, String]
+      val out = Seq.newBuilder[(String, DataFrame)]
+      out += "d" -> dims(("a", "Acme", 1), ("b", "Bolt", 2), ("c", "Coil", 3))
+      out += "f" -> facts((0 until 24).map { i =>
+        val ck = cks(rnd.nextInt(cks.size)); live(i) = ck; (i, ck, i.toLong, 1L) }: _*)
+      // NULL-seq fact key: inserted, deleted and re-inserted under NULL
+      // seq, then resolved to a value
+      def nullSeqFact(id: Int, ck: String, del: Boolean): DataFrame =
+        Seq((id, ck, 7L)).toDF("id", "ck", "v")
+          .withColumn("seq", lit(null).cast("long")).withColumn("__fdel", lit(del))
+      out += "f" -> nullSeqFact(90, "a", del = false)
+      val deleted = scala.collection.mutable.ArrayBuffer.empty[Int]
+      for (round <- 0 until 4) {
+        val ids = rnd.shuffle(live.keys.toSeq.sorted).take(3)
+        // an update, a re-pointing update, an insert of a new key, a
+        // delete, and one step of the NULL-seq key's history (deleted and
+        // re-inserted under NULL seq, then resolved to a value) or a
+        // re-insert of a deleted key
+        out += "f" -> facts(
+          (ids(0), live(ids(0)), rnd.nextInt(100).toLong, next()),
+          (ids(1), cks(rnd.nextInt(cks.size)), 5L, next()),
+          (100 + round, cks(rnd.nextInt(cks.size)), 1L, next()))
+          .unionByName(factDels(next(), ids(2)))
+          .unionByName(round match {
+            case 0 => nullSeqFact(90, "a", del = true)
+            case 1 => nullSeqFact(90, "b", del = false)
+            case 2 => facts((90, "b", 9L, next()))
+            case _ => facts((deleted.head, "c", 3L, next()))
+          })
+        live(100 + round) = "x"
+        live -= ids(2)
+        deleted += ids(2)
+        out += "d" -> (round match {
+          case 1 => dimDels(next(), "b") // a referenced dim vanishes
+          case 2 => dims(("b", "Bolt II", next()), ("d", "Dyne", next()))
+          case _ => dims((cks(rnd.nextInt(3)), s"n$round", next()))
+        })
+      }
+      out.result()
+    }
+    type Snap = (Set[(Int, Option[String], Long, Option[String])], Option[(Long, Long)],
+      Set[(Int, String, Option[Long], Option[Long])])
+    def run(tag: String, joinType: String, threshold: Option[String]): Seq[Snap] = {
+      val (f, d, m) = mk(tag, joinType)
+      def body = history().flatMap { case (side, batch) =>
+        if (side == "f") f.merge(batch, Seq("id"), "seq", "__fdel")
+        else d.merge(batch, Seq("ck"), "seq", "__ddel")
+        if (f.currentVersion.isEmpty || d.currentVersion.isEmpty) Nil
+        else {
+          m.refresh(spark)
+          if (threshold.isEmpty)
+            assert(maintained(m) == direct(f, d, joinType), s"$tag v${m.appliedVersions}")
+          val fv = f.currentVersion.get
+          val feed =
+            if (fv == 0L) Set.empty[(Int, String, Option[Long], Option[Long])]
+            else f.changesBetween(spark, fv - 1, fv).collect().map(r =>
+              (r.getInt(0), r.getString(1), Option(r.get(2)).map(_.asInstanceOf[Long]),
+                Option(r.get(3)).map(_.asInstanceOf[Long]))).toSet
+          Seq((maintained(m), m.appliedVersions, feed))
+        }
+      }
+      threshold.fold(body)(withBroadcastThreshold(_)(body))
+    }
+    sys.props("graft.ivm.rebuildDirtyFraction") = "2.0"
+    try {
+      for (jt <- Seq("left_outer", "inner")) {
+        val small = run(s"arms_small_$jt", jt, None)
+        val distributed = run(s"arms_dist_$jt", jt, Some("-1"))
+        assert(small.size == distributed.size)
+        small.zip(distributed).zipWithIndex.foreach { case ((a, b), i) =>
+          assert(a == b, s"$jt: step $i differs between the arms")
+        }
+      }
+    } finally sys.props.remove("graft.ivm.rebuildDirtyFraction")
+  }
+
+  test("a dim key fanning out past the collect cap takes the distributed arm") {
+    val (f, d, m) = mk("fanout")
+    d.merge(dims(("a", "Acme", 1), ("b", "Bolt", 2)), Seq("ck"), "seq", "__ddel")
+    f.merge(facts((0 until 20).map(i => (i, if (i < 12) "a" else "b", i.toLong, 1L)): _*),
+      Seq("id"), "seq", "__fdel")
+    m.refresh(spark)
+    sys.props("graft.ivm.rebuildDirtyFraction") = "2.0"
+    sys.props("graft.ivm.riskCap") = "5"
+    try {
+      // 12 facts reference "a": past the cap of 5, the distributed arm runs
+      d.merge(dims(("a", "Acme Corp", 3)), Seq("ck"), "seq", "__ddel")
+      assert(jobDescriptionsDuring { assert(m.refresh(spark).isDefined) }
+        .count(_ == "commit:probe") >= 1, "past the cap the planned delta must probe")
+      assert(maintained(m) == direct(f, d, "left_outer"))
+      assert(maintained(m).count(_._4.contains("Acme Corp")) == 12)
+      // under the cap: the local arm, no probe
+      f.merge(factDels(4, 13), Seq("id"), "seq", "__fdel")
+      assert(jobDescriptionsDuring { assert(m.refresh(spark).isDefined) }
+        .count(_ == "commit:probe") == 0, "a small delta under the cap must not probe")
+      assert(maintained(m) == direct(f, d, "left_outer"))
+    } finally {
+      sys.props.remove("graft.ivm.riskCap")
+      sys.props.remove("graft.ivm.rebuildDirtyFraction")
+    }
   }
 
   test("version pairs pack monotonically and round-trip") {

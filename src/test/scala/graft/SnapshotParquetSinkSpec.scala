@@ -824,6 +824,90 @@ class SnapshotParquetSinkSpec extends SparkSpec {
       s"a (NULL seq, unchanged) must be absent; got $feed")
   }
 
+  test("changesBetween: the small-delta and distributed arms agree over a seeded history") {
+    import org.apache.spark.sql.functions.lit
+    // inserts, updates, deletes, re-inserts and NULL-seq churn, over a
+    // string key (byte-comparable: the small arm runs) and a double key
+    // (never byte-comparable: the distributed arm runs under any threshold)
+    def history(): Seq[Seq[(Int, String, Option[Long], Boolean)]] = {
+      val rnd = new scala.util.Random(3)
+      var seq = 10L
+      def next() = { seq += 1; Some(seq) }
+      val out = Seq.newBuilder[Seq[(Int, String, Option[Long], Boolean)]]
+      out += (0 until 20).map(i => (i, s"v$i", Some(1L), false)) :+ ((90, "n", None, false))
+      for (round <- 0 until 5) {
+        val ids = rnd.shuffle((0 until 20).toList).take(3)
+        out += Seq((ids(0), s"u$round", next(), false), (ids(1), "", next(), true),
+          (ids(2), s"r$round", next(), false), (100 + round, "i", next(), false)) ++
+          (round match {
+            case 0 => Seq((90, "", None, true))   // NULL-seq delete
+            case 1 => Seq((90, "m", None, false)) // NULL-seq re-insert
+            case 2 => Seq((90, "o", next(), false)) // NULL → value
+            case _ => Nil
+          })
+      }
+      out.result()
+    }
+    def run(tag: String, keyType: String, threshold: Option[String]): Seq[Set[String]] = {
+      val sink = new SnapshotParquetSink(tmpDir(s"cdfarms_$tag") + "/t", nBuckets = 4)
+      history().foreach(b => sink.merge(b.toDF("k", "val", "seq", "is_delete")
+        .withColumn("primary_key", $"k".cast(keyType)).drop("k"),
+        Seq("primary_key"), "seq", "is_delete"))
+      def feeds = for (a <- sink.versions; b <- sink.versions if a < b)
+        yield sink.changesBetween(spark, a, b).collect().map(_.toString).toSet
+      threshold.fold(feeds)(withBroadcastThreshold(_)(feeds))
+    }
+    for (keyType <- Seq("string", "double")) {
+      val small = run(s"s_$keyType", keyType, None)
+      val distributed = run(s"d_$keyType", keyType, Some("-1"))
+      assert(small == distributed, keyType)
+      assert(small.exists(_.exists(_.contains("update"))) && small.exists(_.exists(_.contains("delete"))))
+    }
+    // the small arm returns a driver-local frame
+    val sink = new SnapshotParquetSink(tmpDir("cdfarms_local") + "/t", nBuckets = 4)
+    sink.merge(batch(("a", 1, "x", false)), Seq("primary_key"), "seq", "is_delete")
+    sink.merge(batch(("a", 2, "y", false)), Seq("primary_key"), "seq", "is_delete")
+    val plan = sink.changesBetween(spark, 0L, 1L).queryExecution.optimizedPlan
+    assert(plan.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation], plan)
+  }
+
+  test("a driver-local batch merges without a probe job, publishing what a planned batch does") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("primary_key", StringType),
+      StructField("seq", LongType), StructField("val", StringType),
+      StructField("is_delete", BooleanType)))
+    def local(rows: Row*): DataFrame = spark.createDataFrame(rows.asJava, schema)
+    def planned(rows: Row*): DataFrame = local(rows: _*).filter($"primary_key".isNotNull)
+    val b0 = Seq(Row("a", 3L, "x", false), Row("b", 7L, "y", false), Row("c", 5L, "z", false))
+    val b1 = Seq(Row("b", 9L, "y2", false), Row("c", 8L, "", true), Row("d", null, "n", false))
+    val l = new SnapshotParquetSink(tmpDir("localbatch_l") + "/t", nBuckets = 4)
+    val p = new SnapshotParquetSink(tmpDir("localbatch_p") + "/t", nBuckets = 4)
+    for (b <- Seq(b0, b1)) {
+      val jobs = jobDescriptionsDuring(l.merge(local(b: _*), Seq("primary_key"), "seq", "is_delete"))
+      assert(!jobs.contains("commit:probe"), jobs)
+      assert(jobDescriptionsDuring(p.merge(planned(b: _*), Seq("primary_key"), "seq", "is_delete"))
+        .contains("commit:probe"))
+      val v = l.currentVersion.get
+      assert(p.currentVersion.contains(v))
+      assert(SnapshotParquetSink.manifest(l.dir, v)._2.keySet ==
+        SnapshotParquetSink.manifest(p.dir, v)._2.keySet)
+      assert(SnapshotParquetSink.manifestMaxSeq(l.dir, v) == SnapshotParquetSink.manifestMaxSeq(p.dir, v))
+      assert(state(l, DeleteMode.Logical) == state(p, DeleteMode.Logical))
+    }
+    assert(SnapshotParquetSink.manifestMaxSeq(l.dir, 1L).contains(9L))
+    // an empty local batch publishes nothing
+    l.merge(local(), Seq("primary_key"), "seq", "is_delete")
+    assert(l.versions == Seq(0L, 1L))
+    // an all-null-seq local batch records no head
+    val n = new SnapshotParquetSink(tmpDir("localbatch_n") + "/t", nBuckets = 4)
+    n.merge(local(Row("a", null, "x", false), Row("b", null, "y", false)),
+      Seq("primary_key"), "seq", "is_delete")
+    assert(n.versions == Seq(0L))
+    assert(SnapshotParquetSink.manifestMaxSeq(n.dir, 0L).isEmpty)
+    assert(n.read(spark, DeleteMode.Hard).count() == 2)
+  }
+
   test("column names that would corrupt the manifest line format are rejected at commit") {
     val dir = tmpDir("badnames") + "/t"
     // stats column with a space: `s <b> <col> <mn> <mx>` splits on spaces

@@ -28,6 +28,21 @@ trait SparkSpec extends AnyFunSuite {
     if (crc.exists()) assert(crc.delete())
   }
 
+  /** Runs `f` with `spark.sql.autoBroadcastJoinThreshold` at `value` ("-1"
+    * turns off broadcasts and the sink's small-delta arm), then restores
+    * the session's setting.
+    */
+  def withBroadcastThreshold[A](value: String)(f: => A): A = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try f
+    finally prior match {
+      case Some(p) => spark.conf.set(key, p)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
   /** Job descriptions ([[graft.engine.JobTag]]) observed while `f` runs —
     * pins probe-skip/job-count claims against the scheduler rather than
     * the code's own accounting. Listener delivery is async: spins until
