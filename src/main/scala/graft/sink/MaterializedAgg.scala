@@ -536,10 +536,10 @@ final class MaterializedAgg(
               marked("__present").isNull.as("__del"): _*)
             .withColumn("seq", lit(srcV))
           if (localDirty.isDefined) {
-            // at most one row per dirty group: collected and merged as a
-            // driver-local batch — no persist, no probe job
-            sink.merge(spark.createDataFrame(
-              java.util.Arrays.asList(delta.collect(): _*), delta.schema),
+            // one row per dirty group, at most the collect cap's: collected
+            // and merged as a driver-local batch — no persist, no probe job
+            sink.merge(SnapshotParquetSink.localFrame(spark, delta.schema,
+              delta.queryExecution.toRdd.map(_.copy()).collect().toSeq),
               groupCols, "seq", "__del")
             Some(srcV)
           } else {
@@ -572,9 +572,11 @@ final class MaterializedAgg(
   }
 
   /** [[dirtyGroups]] of a driver-local diff, computed on the driver into a
-    * driver-local frame — None unless the diff is local and every group
+    * driver-local frame — None unless the diff is local, every group
     * column is [[SnapshotParquetSink.byteComparable]] (the distinct is by
-    * bytes; Spark's distinct equates -0.0 and 0.0).
+    * bytes; Spark's distinct equates -0.0 and 0.0) and there are at most
+    * [[MaterializedAgg.collectCap]] groups (the recompute collects one row
+    * per dirty group).
     */
   private def localDirtyGroups(spark: SparkSession, diff: DataFrame): Option[DataFrame] =
     SnapshotParquetSink.localRows(diff).flatMap { rows =>
@@ -590,7 +592,8 @@ final class MaterializedAgg(
           val g = new GenericInternalRow(at.zip(types).map { case (i, dt) => r.get(i, dt) }.toArray)
           groups.getOrElseUpdate(id(g), g)
         }
-        Some(SnapshotParquetSink.localFrame(spark,
+        if (groups.size > MaterializedAgg.collectCap) None
+        else Some(SnapshotParquetSink.localFrame(spark,
           StructType(groupCols.zip(types).map { case (n, dt) => StructField(n, dt) }),
           groups.values.toSeq))
       }
@@ -1150,8 +1153,8 @@ object MaterializedAgg {
       foldExtremumBuf(stored, rem, add, bottom, k, storedNne))
 
   /** Rows a refresh may collect to the driver: the fold regime's at-risk
-    * groups, the join view's affected facts. Past it, each falls back to
-    * its distributed plan. `graft.ivm.riskCap` shrinks it: the fallbacks
+    * groups, the recompute's dirty groups, the join view's delta. Past it,
+    * each falls back to its distributed plan. `graft.ivm.riskCap` shrinks it: the fallbacks
     * need more rows than a spec can afford to fire naturally.
     */
   private[sink] def collectCap: Int =

@@ -1,10 +1,9 @@
 package graft.sink
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Incrementally-maintained materialized JOIN view over two snapshot
   * tables — the join leg of the IVM family ([[MaterializedAgg]] is the
@@ -27,8 +26,9 @@ import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructTyp
   *      the current dim and MERGE into the view; fact keys with no
   *      surviving view row (fact deleted, or inner join lost its dim)
   *      merge as logical deletes. When both diffs came back driver-local
-  *      (small changes), the affected facts are one literal-predicate scan
-  *      and the delta a driver-local batch ([[localDelta]]).
+  *      (small changes), the affected facts are one scan under literal
+  *      key predicates, and a delta of at most [[MaterializedAgg.collectCap]]
+  *      rows is collected and merged as a driver-local batch.
   *
   * Applied-version bookkeeping rides the view manifest like the aggregate
   * leg's, but here TWO source versions pack into the one monotone seq:
@@ -72,7 +72,7 @@ final class MaterializedJoin(
   require(joinKeys.intersect(dimCols).isEmpty,
     s"dimCols ${dimCols} must not repeat join keys ${joinKeys}")
 
-  private val reserved = Set("__vseq", "__del", "__pa", "__pb")
+  private val reserved = Set("__vseq", "__del", "__dm")
 
   /** Both source versions in one monotone long: refresh only advances
     * components, so (f', d') ≥ (f, d) componentwise with at least one
@@ -170,11 +170,10 @@ final class MaterializedJoin(
         def changedFactHint(afv: Long): Option[Array[Int]] =
           if (!routingShared) None
           else Some(SnapshotParquetSink.changedBuckets(fact.dir, afv, fv).toArray.sorted)
-        // Left: a driver-local batch, stamped; Right: a planned delta and
-        // its probe hint
-        val plan: Either[DataFrame, (DataFrame, Option[Array[Int]])] = applied match {
-          case None =>
-            Right((joined(factNow, d).withColumn("__del", lit(false)), fullHint))
+        // the delta, its probe hint, and whether both diffs came back
+        // driver-local (the delta is then collected when it is small)
+        val (delta, hint, local) = applied match {
+          case None => (joined(factNow, d).withColumn("__del", lit(false)), fullHint, false)
           case Some((afv, adv))
               if !fact.versions.contains(afv) || !dim.versions.contains(adv) ||
                 MaterializedAgg.bulkChanged(fact.dir, afv, fv) ||
@@ -188,7 +187,8 @@ final class MaterializedJoin(
             val gone = semiOn(
               sink.read(spark, DeleteMode.Hard).select(fKeys.map(col): _*),
               recomputed, fKeys, "left_anti")
-            Right((withTombstones(recomputed, Seq(gone), fKeys), fullHint))
+            (withTombstones(recomputed.withColumn("__del", lit(false)), Seq(gone), fKeys),
+              fullHint, false)
           case Some((afv, adv)) =>
             // each side's diff (and its downstream probes) exists only when
             // that side actually advanced — a quiet dim costs nothing, a
@@ -199,144 +199,83 @@ final class MaterializedJoin(
             val dirtyD =
               if (adv < dv) Some(dim.keyedDiff(spark, adv, dv, joinKeys, dimSeqCol, Nil))
               else None
-            val local =
-              if ((dirtyF ++ dirtyD).forall(SnapshotParquetSink.localRows(_).isDefined))
-                localDelta(spark, factNow, d, fKeys, dirtyF, dirtyD, pack(fv, dv))
-              else None
-            local.map(Left(_)).getOrElse {
-              val keysF = dirtyF.map(_.select(fKeys.map(col): _*))
-              val keysD = dirtyD.map(_.select(joinKeys.map(col): _*))
-              val parts =
-                keysF.map(k => semiOn(factNow, k, fKeys, "left_semi")).toSeq ++
-                  keysD.map(k => semiOn(factNow, k, joinKeys, "left_semi")).toSeq
-              val affected0 = parts.reduce(_ unionByName _) // stale ⇒ nonEmpty
-              val affected =
+            val local = (dirtyF ++ dirtyD).forall(SnapshotParquetSink.localRows(_).isDefined)
+            val affected =
+              if (local)
+                // driver-local diffs: ONE scan of the current facts under
+                // literal key predicates — no joins, no dedup
+                factNow.filter((dirtyF.map(keyIn(_, fKeys, factNow.schema)) ++
+                  dirtyD.map(keyIn(_, joinKeys, factNow.schema))).reduce(_ || _))
+              else {
+                val parts =
+                  dirtyF.map(k => semiOn(factNow, k.select(fKeys.map(col): _*), fKeys,
+                    "left_semi")).toSeq ++
+                    dirtyD.map(k => semiOn(factNow, k.select(joinKeys.map(col): _*), joinKeys,
+                      "left_semi")).toSeq
+                val affected0 = parts.reduce(_ unionByName _) // stale ⇒ nonEmpty
                 if (parts.lengthCompare(2) == 0) affected0.dropDuplicates(fKeys)
                 else affected0 // one side: semi output already unique per fact key
-              val recomputed = joined(affected, d)
-              // fact keys with no surviving view row: the fact row was
-              // deleted (dirty but absent from the current facts), or —
-              // inner join only — its dim vanished (affected but absent from
-              // the recompute; under left_outer every affected row joins, so
-              // that probe is dead code and skipped). Disjoint by
-              // construction (affected ⊆ facts), so a plain union, no
-              // distinct. Tombstoned so the view history stays
-              // time-travelable.
-              val gone =
-                keysF.map(k => semiOn(k, factNow, fKeys, "left_anti")).toSeq ++
-                  (if (joinType == "inner")
-                    Seq(semiOn(affected.select(fKeys.map(col): _*), recomputed,
-                      fKeys, "left_anti"))
-                  else Nil)
-              // dim-quiet advances touch only changed-fact-bucket keys; a
-              // dim-driven delta reaches arbitrary buckets — no hint then
-              Right((withTombstones(recomputed, gone, fKeys),
-                if (dirtyD.isEmpty) changedFactHint(afv) else None))
-            }
-        }
-        plan match {
-          // at most collect-cap rows, merged as a driver-local batch: no
-          // persist, no probe job
-          case Left(local) => sink.merge(local, fKeys, "__vseq", "__del")
-          case Right((delta, hint)) =>
-            val stamped = delta.withColumn("__vseq", lit(pack(fv, dv)))
-              // merge walks its input several times (affected buckets, max
-              // seq, write); without the persist every walk re-runs the
-              // diff+join pipeline — O(affected rows), spillable
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              hint match {
-                case Some(bs) =>
-                  try sink.mergeHinted(stamped, fKeys, "__vseq", "__del",
-                    bs, Some(pack(fv, dv)))
-                  catch {
-                    case _: SnapshotParquetSink.ProbeHintMismatch =>
-                      // staged write deleted, nothing published — replay
-                      // with the probing merge (idempotent LWW)
-                      sink.merge(stamped, fKeys, "__vseq", "__del")
-                  }
-                case None => sink.merge(stamped, fKeys, "__vseq", "__del")
               }
-            } finally {
-              stamped.unpersist()
-              ()
-            }
+            // every affected fact re-joins the dim; under inner, one whose
+            // dim vanished becomes a tombstone
+            val marked = affected.join(d.withColumn("__dm", lit(true)), joinKeys, "left_outer")
+            val dimGone = if (joinType == "inner") col("__dm").isNull else lit(false)
+            val recomputed = marked.select(marked.columns.filterNot(_ == "__dm").map(c =>
+              if (fKeys.contains(c)) col(c)
+              else when(dimGone, lit(null)).otherwise(col(c)).as(c)) :+ dimGone.as("__del"): _*)
+            // dirty fact keys live at the old version only: deleted facts.
+            // Tombstoned so the view history stays time-travelable.
+            val deleted = dirtyF.map(_.filter(!col("__b_present")).select(fKeys.map(col): _*))
+            // dim-quiet advances touch only changed-fact-bucket keys; a
+            // dim-driven delta reaches arbitrary buckets — no hint then
+            (withTombstones(recomputed, deleted.toSeq, fKeys),
+              if (dirtyD.isEmpty) changedFactHint(afv) else None, local)
         }
-        Some((fv, dv))
+        val stamped = delta.withColumn("__vseq", lit(pack(fv, dv)))
+          // merge walks its input several times (affected buckets, max seq,
+          // write); without the persist every walk re-runs the diff+join
+          // pipeline — O(affected rows), spillable
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          // a small delta over local diffs — at most the collect cap's rows
+          // — merges as a driver-local batch: no probe job
+          val batch =
+            if (local && stamped.queryExecution.toRdd.count() <= MaterializedAgg.collectCap)
+              SnapshotParquetSink.localFrame(spark, stamped.schema,
+                stamped.queryExecution.toRdd.map(_.copy()).collect().toSeq)
+            else stamped
+          hint match {
+            case Some(bs) =>
+              try sink.mergeHinted(batch, fKeys, "__vseq", "__del", bs, Some(pack(fv, dv)))
+              catch {
+                case _: SnapshotParquetSink.ProbeHintMismatch =>
+                  // staged write deleted, nothing published — replay with
+                  // the probing merge (idempotent LWW)
+                  sink.merge(batch, fKeys, "__vseq", "__del")
+              }
+            case None => sink.merge(batch, fKeys, "__vseq", "__del")
+          }
+          Some((fv, dv))
+        } finally {
+          stamped.unpersist()
+          ()
+        }
     }
   }
 
-  /** `recomputed` rows live, plus every key of `gone` as a tombstone with
-    * the other columns null.
+  /** `rows` (carrying `__del`) plus every key of `gone` as a tombstone
+    * with the other columns null.
     */
-  private def withTombstones(recomputed: DataFrame, gone: Seq[DataFrame],
-      fKeys: Seq[String]): DataFrame = {
-    val live = recomputed.withColumn("__del", lit(false))
+  private def withTombstones(rows: DataFrame, gone: Seq[DataFrame],
+      fKeys: Seq[String]): DataFrame =
     gone.reduceOption(_ unionByName _) match {
-      case None => live
+      case None => rows
       case Some(g) =>
-        val goneFull = recomputed.schema.fields
-          .filterNot(f => fKeys.contains(f.name))
+        val goneFull = rows.schema.fields
+          .filterNot(f => fKeys.contains(f.name) || f.name == "__del")
           .foldLeft(g)((df, f) => df.withColumn(f.name, lit(null).cast(f.dataType)))
-        live.unionByName(goneFull.withColumn("__del", lit(true)))
+        rows.unionByName(goneFull.withColumn("__del", lit(true)))
     }
-  }
-
-  /** The incremental arm over driver-local key diffs (`dirtyF`, `dirtyD`,
-    * key columns first): ONE filtered scan of the current facts with
-    * literal key predicates — no semi-join shuffles, no dedup — joined to
-    * the dim with a match marker, persisted and counted. Past
-    * [[MaterializedAgg.collectCap]] keys or rows it returns None and the
-    * distributed arm runs; otherwise the rows come to the driver, where the
-    * delta is assembled: every affected row (under `inner`, only those
-    * whose dim matched), plus tombstones for the dirty fact keys no current
-    * fact holds and, under `inner`, for the affected facts whose dim is
-    * gone. The result is a driver-local batch stamped `vseq`.
-    */
-  private def localDelta(spark: SparkSession, factNow: DataFrame, d: DataFrame,
-      fKeys: Seq[String], dirtyF: Option[DataFrame], dirtyD: Option[DataFrame],
-      vseq: Long): Option[DataFrame] = {
-    val cap = MaterializedAgg.collectCap
-    def rowsOf(diff: Option[DataFrame]) =
-      diff.map(SnapshotParquetSink.localRows(_).get).getOrElse(Nil)
-    if (rowsOf(dirtyF).size + rowsOf(dirtyD).size > cap) return None
-    val matched = factNow.filter(
-      (dirtyF.map(keyIn(_, fKeys, factNow.schema)) ++
-        dirtyD.map(keyIn(_, joinKeys, factNow.schema))).reduce(_ || _))
-      .join(d.withColumn("__dm", lit(true)), joinKeys, "left_outer")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (matched.queryExecution.toRdd.count() > cap) return None
-      val rows = matched.queryExecution.toRdd.map(_.copy()).collect()
-      val s = matched.schema
-      val dm = s.fieldIndex("__dm")
-      val out = s.fields.toSeq.filterNot(_.name == "__dm")
-      def key(r: InternalRow, schema: StructType, k: String): Any =
-        r.get(schema.fieldIndex(k), schema(k).dataType)
-      def row(values: Seq[Any], del: Boolean): InternalRow =
-        new GenericInternalRow((values ++ Seq(del, vseq)).toArray)
-      def tombstone(keyValue: String => Any): InternalRow =
-        row(out.map(f => if (fKeys.contains(f.name)) keyValue(f.name) else null), del = true)
-      val (live, dimGone) = rows.partition(r => joinType == "left_outer" || !r.isNullAt(dm))
-      def factKey(schema: StructType) = SnapshotParquetSink.rowIdentity(
-        fKeys.map(k => schema.fieldIndex(k) -> schema(k).dataType))
-      val present = rows.iterator.map(factKey(s)).toSet
-      val deleted = dirtyF.toSeq.flatMap { f =>
-        val id = factKey(f.schema)
-        rowsOf(dirtyF).filterNot(r => present(id(r))).map(r => tombstone(key(r, f.schema, _)))
-      }
-      val batch =
-        live.map(r => row(out.map(f => key(r, s, f.name)), del = false)) ++
-          dimGone.map(r => tombstone(key(r, s, _))) ++ deleted
-      Some(SnapshotParquetSink.localFrame(spark,
-        StructType(out.map(_.copy(nullable = true)) ++ Seq(
-          StructField("__del", BooleanType), StructField("__vseq", LongType))),
-        batch.toSeq))
-    } finally {
-      matched.unpersist()
-      ()
-    }
-  }
 
   /** Rows whose `cols` are null-safe-equal to one of `diff`'s key tuples
     * (a driver-local frame, those columns by the same names), as literal

@@ -159,6 +159,18 @@ object SnapshotParquetSink {
       case _                => None
     }
 
+  /** The most changed-bucket bytes (both versions' files, compressed)
+    * [[SnapshotParquetSink#keyedDiff]] diffs on the driver; −1 turns that
+    * arm off. Set below the arms' measured crossover (`KeyedDiffCrossover`
+    * in the test sources, 4 vCPU, 3 GB driver heap): a bare diff was
+    * faster on the driver up to ~4.6 MB and slower at 9 MB (1.15 s
+    * against 0.74 s); join-view and rollup refreshes over it were still
+    * faster at 9 MB and slower at 17.5 MB. The crossover moves with the
+    * table's shape and the cores, so this is a bound, not an optimum.
+    * A var only so specs can run one history through both arms.
+    */
+  @volatile private[graft] var localDiffMaxBytes: Long = 4L << 20
+
   /** A driver-local frame over internal-format `rows`. */
   private[sink] def localFrame(spark: SparkSession, schema: StructType,
       rows: Seq[InternalRow]): DataFrame =
@@ -1674,9 +1686,9 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     * Both sides read only the buckets whose file differs between the two
     * manifests ([[SnapshotParquetSink.changedBuckets]]). The arm is picked
     * from manifests and FS metadata alone:
-    *   - SMALL, when those files of both versions total at most the
-    *     session's `spark.sql.autoBroadcastJoinThreshold` (−1 turns the arm
-    *     off) and the keys and `seqCol` are
+    *   - SMALL, when those files of both versions total at most
+    *     [[SnapshotParquetSink.localDiffMaxBytes]] and the keys and
+    *     `seqCol` are
     *     [[SnapshotParquetSink.byteComparable]]: both projected slices are
     *     read in ONE job and diffed on the driver, and the result is a
     *     driver-local frame ([[SnapshotParquetSink.localRows]]) — later
@@ -1685,7 +1697,8 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     *   - DISTRIBUTED otherwise: a key-level full outer join of the two
     *     slices, shuffled on the merge keys.
     * At 100 TB a micro commit's changed buckets are GB-sized, so the byte
-    * gate keeps the distributed arm there.
+    * gate keeps the distributed arm there: it is the only arm whose memory
+    * does not grow with the slice on the driver.
     */
   private[sink] def keyedDiff(spark: SparkSession, fromV: Long, toV: Long,
       keys: Seq[String], seqCol: String, project: Seq[Column]): DataFrame = {
@@ -1704,18 +1717,20 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
           StructField(s"__${t}_present", BooleanType, nullable = false) +:
             projected.map(f => StructField(s"__${t}_${f.name}", f.dataType))))
     val paths = changedEntriesAt(fromV, toV) ++ changedEntriesAt(toV, fromV)
-    val threshold = Bridge.broadcastThreshold(spark)
+    val limit = SnapshotParquetSink.localDiffMaxBytes
+    lazy val bytes = SnapshotParquetSink.inParallel(paths) { p =>
+      try Dfs.contentSummary(new HPath(p))._2
+      catch { case _: java.io.IOException => 0L }
+    }.sum
     def small: Boolean =
-      threshold >= 0 &&
+      limit >= 0 &&
         a.schema.map(_.dataType) == b.schema.map(_.dataType) &&
         b.schema.fields.take(nk + 1).forall(f => SnapshotParquetSink.byteComparable(f.dataType)) &&
-        SnapshotParquetSink.inParallel(paths) { p =>
-          try Dfs.contentSummary(new HPath(p))._2
-          catch { case _: java.io.IOException => 0L }
-        }.sum <= threshold
+        bytes <= limit
+    val dbg = new graft.engine.Dbg("graft.ivm.debug", "[diff]")
     if (paths.isEmpty) SnapshotParquetSink.localFrame(spark, outSchema, Nil)
-    else if (small) localKeyedDiff(spark, a, b, nk, outSchema)
-    else {
+    else if (small) dbg(s"local ${bytes}B")(localKeyedDiff(spark, a, b, nk, outSchema))
+    else dbg("distributed") {
       def named(df: DataFrame, t: String): DataFrame =
         df.toDF((keys.indices.map(i => s"__k$t$i") :+ s"__s$t") ++
             projected.map(f => s"__${t}_${f.name}"): _*)

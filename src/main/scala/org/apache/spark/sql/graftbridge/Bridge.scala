@@ -13,13 +13,6 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes, parsed
-    * the way the planner reads it (−1 = off).
-    */
-  def broadcastThreshold(spark: SparkSession): Long =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.conf.autoBroadcastJoinThreshold
-
   /** A batch-computed frame re-wrapped as a STREAMING DataFrame — the V1
     * `Source.getBatch` contract (MicroBatchExecution asserts
     * `isStreaming=true` on the returned plan). Same seam the built-in V1

@@ -104,9 +104,9 @@ class MaterializedAggSpec extends SparkSpec
   test("small-delta and distributed arms agree at every version") {
     // one seeded history — inserts, updates, group-moving updates, deletes,
     // re-inserts, a NULL group and a key under NULL seq — run twice: with
-    // the default broadcast threshold (driver-local diffs and merges) and
-    // with the threshold off (the planned path). Three views ride it: the
-    // rollup under the recompute and the fold regime, and a keyed view.
+    // the driver-local keyed diff on (local diffs and merges) and off (the
+    // planned path). Three views ride it: the rollup under the recompute
+    // and the fold regime, and a keyed view.
     def history(): Seq[DataFrame] = {
       val rnd = new scala.util.Random(5)
       var seq = 10L
@@ -149,7 +149,7 @@ class MaterializedAggSpec extends SparkSpec
     val rollup = Seq(count(lit(1)).as("n"), sum(col("v")).as("sv"),
       min(col("v")).as("mn"), max(col("v")).as("mx"))
     def rowsOf(df: DataFrame): Set[String] = df.collect().map(_.toString).toSet
-    def run(tag: String, threshold: Option[String]): Seq[Seq[Any]] = {
+    def run(tag: String, distributed: Boolean): Seq[Seq[Any]] = {
       val src = new SnapshotParquetSink(tmpDir(s"magg_${tag}_src"), nBuckets = 4)
       def view(name: String, groups: Seq[String]) = new MaterializedAgg(src,
         new SnapshotParquetSink(tmpDir(s"magg_${tag}_$name"), nBuckets = 4), groups, rollup)
@@ -162,20 +162,20 @@ class MaterializedAggSpec extends SparkSpec
           sys.props("graft.ivm.forceRegime") = regime
           m.refresh(spark)
           val got = rowsOf(m.read(spark).select((m.groupCols ++ Seq("n", "sv", "mn", "mx")).map(col): _*))
-          if (threshold.isEmpty)
+          if (!distributed)
             assert(got == rowsOf(src.read(spark, DeleteMode.Hard).groupBy(m.groupCols.map(col): _*)
               .agg(rollup.head, rollup.tail: _*)), s"$tag v$v ${m.groupCols}")
           Seq(got, m.appliedVersion)
         } :+ (if (v == 0L) Set.empty[String] else rowsOf(src.changesBetween(spark, v - 1, v)))
       }
-      threshold.fold(body)(withBroadcastThreshold(_)(body))
+      if (distributed) withLocalDiffOff(body) else body
     }
     sys.props("graft.ivm.rebuildDirtyFraction") = "2.0"
     try {
-      val small = run("arms_small", None)
-      val distributed = run("arms_dist", Some("-1"))
-      assert(small.size == distributed.size)
-      small.zip(distributed).zipWithIndex.foreach { case ((a, b), i) =>
+      val small = run("arms_small", distributed = false)
+      val planned = run("arms_dist", distributed = true)
+      assert(small.size == planned.size)
+      small.zip(planned).zipWithIndex.foreach { case ((a, b), i) =>
         assert(a == b, s"step $i differs between the arms")
       }
     } finally {
@@ -196,7 +196,7 @@ class MaterializedAggSpec extends SparkSpec
         .count(_ == "commit:probe") == 0)
       assert(maintained(m) == direct(src))
       src.merge(dels(5, 1), Seq("id"), "seq", "__del")
-      withBroadcastThreshold("-1") {
+      withLocalDiffOff {
         assert(jobDescriptionsDuring { assert(m.refresh(spark) == Some(2L)) }
           .count(_ == "commit:probe") >= 1)
       }

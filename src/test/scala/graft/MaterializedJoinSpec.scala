@@ -230,7 +230,7 @@ class MaterializedJoinSpec extends SparkSpec {
     d.merge(dims(("a", "Acme Corp", 5)), Seq("ck"), "seq", "__ddel")
     sys.props("graft.ivm.rebuildDirtyFraction") = "2.0"
     try {
-      withBroadcastThreshold("-1") {
+      withLocalDiffOff {
         assert(jobDescriptionsDuring { assert(m.refresh(spark).isDefined) }
           .count(_ == "commit:probe") >= 1, "distributed dim-driven advance must probe")
       }
@@ -244,9 +244,9 @@ class MaterializedJoinSpec extends SparkSpec {
   }
 
   test("small-delta and distributed arms agree at every version, left_outer and inner") {
-    // one seeded history, run twice: with the default broadcast threshold
-    // (driver-local diffs, literal-predicate fact scan, local merge) and
-    // with the threshold off (shuffled diffs, semi joins, probing merge)
+    // one seeded history, run twice: with the driver-local keyed diff on
+    // (local diffs, broadcast key joins, local merge) and off (shuffled
+    // diffs and key joins, probing merge)
     def history(): Seq[(String, DataFrame)] = {
       val rnd = new scala.util.Random(11)
       var seq = 10L
@@ -263,6 +263,10 @@ class MaterializedJoinSpec extends SparkSpec {
         Seq((id, ck, 7L)).toDF("id", "ck", "v")
           .withColumn("seq", lit(null).cast("long")).withColumn("__fdel", lit(del))
       out += "f" -> nullSeqFact(90, "a", del = false)
+      // fact commits that rewrite a bucket but change no live row: a
+      // delete of an absent key, a replayed row under an older seq
+      out += "f" -> factDels(next(), 999)
+      out += "f" -> facts((0, live(0), 0L, 0L))
       val deleted = scala.collection.mutable.ArrayBuffer.empty[Int]
       for (round <- 0 until 4) {
         val ids = rnd.shuffle(live.keys.toSeq.sorted).take(3)
@@ -294,7 +298,7 @@ class MaterializedJoinSpec extends SparkSpec {
     }
     type Snap = (Set[(Int, Option[String], Long, Option[String])], Option[(Long, Long)],
       Set[(Int, String, Option[Long], Option[Long])])
-    def run(tag: String, joinType: String, threshold: Option[String]): Seq[Snap] = {
+    def run(tag: String, joinType: String, distributed: Boolean): Seq[Snap] = {
       val (f, d, m) = mk(tag, joinType)
       def body = history().flatMap { case (side, batch) =>
         if (side == "f") f.merge(batch, Seq("id"), "seq", "__fdel")
@@ -302,7 +306,7 @@ class MaterializedJoinSpec extends SparkSpec {
         if (f.currentVersion.isEmpty || d.currentVersion.isEmpty) Nil
         else {
           m.refresh(spark)
-          if (threshold.isEmpty)
+          if (!distributed)
             assert(maintained(m) == direct(f, d, joinType), s"$tag v${m.appliedVersions}")
           val fv = f.currentVersion.get
           val feed =
@@ -313,15 +317,15 @@ class MaterializedJoinSpec extends SparkSpec {
           Seq((maintained(m), m.appliedVersions, feed))
         }
       }
-      threshold.fold(body)(withBroadcastThreshold(_)(body))
+      if (distributed) withLocalDiffOff(body) else body
     }
     sys.props("graft.ivm.rebuildDirtyFraction") = "2.0"
     try {
       for (jt <- Seq("left_outer", "inner")) {
-        val small = run(s"arms_small_$jt", jt, None)
-        val distributed = run(s"arms_dist_$jt", jt, Some("-1"))
-        assert(small.size == distributed.size)
-        small.zip(distributed).zipWithIndex.foreach { case ((a, b), i) =>
+        val small = run(s"arms_small_$jt", jt, distributed = false)
+        val planned = run(s"arms_dist_$jt", jt, distributed = true)
+        assert(small.size == planned.size)
+        small.zip(planned).zipWithIndex.foreach { case ((a, b), i) =>
           assert(a == b, s"$jt: step $i differs between the arms")
         }
       }

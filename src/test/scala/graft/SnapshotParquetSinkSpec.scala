@@ -828,7 +828,7 @@ class SnapshotParquetSinkSpec extends SparkSpec {
     import org.apache.spark.sql.functions.lit
     // inserts, updates, deletes, re-inserts and NULL-seq churn, over a
     // string key (byte-comparable: the small arm runs) and a double key
-    // (never byte-comparable: the distributed arm runs under any threshold)
+    // (never byte-comparable: the distributed arm always runs)
     def history(): Seq[Seq[(Int, String, Option[Long], Boolean)]] = {
       val rnd = new scala.util.Random(3)
       var seq = 10L
@@ -848,19 +848,19 @@ class SnapshotParquetSinkSpec extends SparkSpec {
       }
       out.result()
     }
-    def run(tag: String, keyType: String, threshold: Option[String]): Seq[Set[String]] = {
+    def run(tag: String, keyType: String, distributed: Boolean): Seq[Set[String]] = {
       val sink = new SnapshotParquetSink(tmpDir(s"cdfarms_$tag") + "/t", nBuckets = 4)
       history().foreach(b => sink.merge(b.toDF("k", "val", "seq", "is_delete")
         .withColumn("primary_key", $"k".cast(keyType)).drop("k"),
         Seq("primary_key"), "seq", "is_delete"))
       def feeds = for (a <- sink.versions; b <- sink.versions if a < b)
         yield sink.changesBetween(spark, a, b).collect().map(_.toString).toSet
-      threshold.fold(feeds)(withBroadcastThreshold(_)(feeds))
+      if (distributed) withLocalDiffOff(feeds) else feeds
     }
     for (keyType <- Seq("string", "double")) {
-      val small = run(s"s_$keyType", keyType, None)
-      val distributed = run(s"d_$keyType", keyType, Some("-1"))
-      assert(small == distributed, keyType)
+      val small = run(s"s_$keyType", keyType, distributed = false)
+      val planned = run(s"d_$keyType", keyType, distributed = true)
+      assert(small == planned, keyType)
       assert(small.exists(_.exists(_.contains("update"))) && small.exists(_.exists(_.contains("delete"))))
     }
     // the small arm returns a driver-local frame

@@ -28,19 +28,15 @@ trait SparkSpec extends AnyFunSuite {
     if (crc.exists()) assert(crc.delete())
   }
 
-  /** Runs `f` with `spark.sql.autoBroadcastJoinThreshold` at `value` ("-1"
-    * turns off broadcasts and the sink's small-delta arm), then restores
-    * the session's setting.
+  /** Runs `f` with the sink's driver-local keyed diff turned off
+    * ([[graft.sink.SnapshotParquetSink.localDiffMaxBytes]] at −1), so every
+    * refresh and change feed takes the distributed arm; then restores it.
     */
-  def withBroadcastThreshold[A](value: String)(f: => A): A = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, value)
+  def withLocalDiffOff[A](f: => A): A = {
+    val prior = graft.sink.SnapshotParquetSink.localDiffMaxBytes
+    graft.sink.SnapshotParquetSink.localDiffMaxBytes = -1L
     try f
-    finally prior match {
-      case Some(p) => spark.conf.set(key, p)
-      case None    => spark.conf.unset(key)
-    }
+    finally graft.sink.SnapshotParquetSink.localDiffMaxBytes = prior
   }
 
   /** Job descriptions ([[graft.engine.JobTag]]) observed while `f` runs —
