@@ -40,7 +40,7 @@ import graft.engine.Dfs
   * which skip at row-group granularity inside the files this layer could
   * not drop. The native layer is EVIDENCE-GATED per commit — written only
   * once the prior manifest shows a saturated (sidecar-less) bloom bucket;
-  * see `SnapshotParquetSink.nativeBloomsWanted` for the measurement.
+  * see `SnapshotParquetSink.parquetBloomOptsFor` for the measurement.
   *
   * Hash contract: positions derive from `xxhash64(col)` (seed 42 — the
   * same function the bucket routing uses), with the query-side literal
@@ -75,8 +75,8 @@ object BloomIndex {
 
   /** Probe position i for 64-bit hash `h` in an m-bit filter — classic
     * double hashing over the two 31-bit halves. MUST stay bit-identical to
-    * the write-side Spark expression in
-    * [[SnapshotParquetSink.bloomLinesFor]]: h1 = h & 0x7fffffff,
+    * the write side's inlined copy in
+    * [[graft.functions.BloomWordsAgg.Ent.add]]: h1 = h & 0x7fffffff,
     * h2 = (h >>> 32) | 1 masked to 31 bits, p_i = (h1 + i·h2) mod m.
     * All operands stay well under 2^34, so the sum never overflows a Long.
     */

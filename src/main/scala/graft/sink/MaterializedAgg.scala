@@ -69,7 +69,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * Retention contract: [[refresh]] reads the source AT the last applied
   * version, so the source must retain every version back to it — vacuum
   * the source with `keepLast` covering the refresh cadence (the
-  * [[SnapshotCatalog.retainedVersions]] handshake shape).
+  * [[SnapshotCatalog.retainedVersions]] handshake shape). A refresh whose
+  * base was vacuumed stays correct at the price of one full recompute.
   *
   * Scale shape at 100 TB: the change feed and dirty-key semi-joins
   * shuffle on the source merge key (the same join any consumer diff
@@ -393,8 +394,9 @@ final class MaterializedAgg(
         // dirty-group recompute — carrying the counters forward iff the
         // table already stores them.
         val deltaReady = spec.isDefined && storedHasHidden
-        val baseRetained0 = source.versions.contains(applied)
-        if (deltaReady && baseRetained0) {
+        val baseRetained = source.versions.contains(applied)
+        val keyed = srcKeys.forall(groupCols.contains)
+        if (deltaReady && baseRetained) {
           val sp = spec.get
           if (sp.mins.isEmpty && sp.maxs.isEmpty)
             return deltaRefresh(spark, sp, applied, srcV, srcKeys, attempt)
@@ -411,8 +413,7 @@ final class MaterializedAgg(
           // wins, a near-keyed 27M rung where fold ran 0.66× recompute's
           // wall). Keyed views (srcKeys ⊆ groups) never fold: their
           // recompute scan already prunes to changed buckets, O(changed).
-          if (!srcKeys.forall(groupCols.contains) &&
-              storedHasExtBufs(sp)) {
+          if (!keyed && storedHasExtBufs(sp)) {
             val fixedEquiv = spark.conf.getOption(
               "spark.graft.ivm.foldFixedCostBytes").map(_.toLong)
               .getOrElse(MaterializedAgg.FoldFixedCostBytes)
@@ -435,45 +436,23 @@ final class MaterializedAgg(
         }
         lastRefreshRegime = Some("recompute")
         val extraAggs =
-          if (deltaReady)
-            hiddenAggs(spec.get, withExtBufs = !srcKeys.forall(groupCols.contains))
-          else Nil
-        // self-healing when the diff base is GONE (the view lagged past the
-        // source's vacuum retention): every group on either side — current
-        // view, current snapshot — is dirty, and the normal recompute +
-        // outer-join machinery below rebuilds live groups and tombstones
-        // vanished ones. Costs one full pass; the fix for recurrence is
-        // retention covering the refresh cadence (class scaladoc).
-        val baseRetained = baseRetained0
-        def rebuildDirty(): DataFrame =
-          read(spark).select(groupCols.map(col): _*)
-            .unionByName(source.readAt(spark, srcV, DeleteMode.Hard)
-              .select(groupCols.map(col): _*))
-            .distinct()
-        // COST GATE on the dirty probe (driver-side, manifest-only): when
-        // most source buckets changed between the two versions, the keyed
-        // diff reads ~2× the changed bytes plus a key-level full-outer join
-        // to learn what rebuildDirty learns from one grouped pass (view
-        // groups ∪ source groups — a correct SUPERSET of the truly-dirty
-        // set; recomputing a clean group reproduces its stored values).
-        // Break-even is ~half the table (diff reads both sides of every
-        // changed bucket). CROSS-KEY views only: their recompute scans the
-        // full snapshot either way, so a superset dirty set costs nothing
-        // extra — a keyed view's recompute prunes its scan to changed
-        // buckets and must keep the exact diff (an all-groups dirty set
-        // against a pruned scan would tombstone clean groups).
-        if (baseRetained && !srcKeys.forall(groupCols.contains) &&
-            MaterializedAgg.bulkChanged(source.dir, applied, srcV)) {
-          // DIRECT bulk recompute: with (nearly) every bucket changed, the
-          // dirty set is (nearly) every group — so skip the dirty
-          // bookkeeping altogether. ONE snapshot scan recomputes every
-          // live group (the dirty-gated shape scanned the source twice:
-          // once for rebuildDirty's group distinct, once for the
-          // semi-joined recompute); dead groups come from a tiny
-          // anti-join of the view's group list against the recompute.
-          // Correctness matches the dirty machinery with dirty = all
-          // groups on either side: recomputing a clean group reproduces
-          // its stored row, vanished groups tombstone.
+          if (deltaReady) hiddenAggs(spec.get, withExtBufs = !keyed) else Nil
+        // DIRECT bulk recompute, for two cases: (1) self-healing when the
+        // diff base is GONE (the view lagged past the source's vacuum
+        // retention; the fix for recurrence is retention covering the
+        // refresh cadence, class scaladoc); (2) the COST GATE (driver-side,
+        // manifest-only) on a cross-key view when most source buckets
+        // changed: the keyed diff would read ~2× the changed bytes plus a
+        // key-level full-outer join to find a dirty set that is (nearly)
+        // every group, and a cross-key recompute scans the full snapshot
+        // either way. Break-even is ~half the table. A keyed view under the
+        // gate keeps the diff: its recompute prunes the scan to changed
+        // buckets, O(changed).
+        // ONE snapshot scan recomputes every live group; dead groups come
+        // from a tiny anti-join of the view's group list against the
+        // recompute. Recomputing a clean group reproduces its stored row,
+        // and vanished groups tombstone.
+        if (!baseRetained || (!keyed && MaterializedAgg.bulkChanged(source.dir, applied, srcV))) {
           val recomputed = groupedWith(
             source.readAt(spark, srcV, DeleteMode.Hard), extraAggs)
           val names = aggNamesOf(recomputed)
@@ -500,10 +479,9 @@ final class MaterializedAgg(
         // sides' group columns. A driver-local diff yields a driver-local
         // dirty set (no persist needed); otherwise the set is persisted,
         // since the recompute below reads it twice.
-        val diff = if (baseRetained) Some(source.keyedDiff(
-          spark, applied, srcV, srcKeys, seqCol, groupCols.map(col))) else None
-        val localDirty = diff.flatMap(localDirtyGroups(spark, _))
-        val dirty = localDirty.getOrElse(diff.map(dirtyGroups).getOrElse(rebuildDirty())
+        val diff = source.keyedDiff(spark, applied, srcV, srcKeys, seqCol, groupCols.map(col))
+        val localDirty = localDirtyGroups(spark, diff)
+        val dirty = localDirty.getOrElse(dirtyGroups(diff)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         try {
           // KEYED VIEWS (groupCols ⊇ merge keys — per-key rollups): a dirty
@@ -514,10 +492,9 @@ final class MaterializedAgg(
           // snapshot (exact min/max needs every surviving row of a dirty
           // group, and those live anywhere). The changed slice carries every
           // column under the recorded schema.
-          val keyDetermined = baseRetained && srcKeys.forall(groupCols.contains)
           def fullSnap = source.readAt(spark, srcV, DeleteMode.Hard)
           val snap =
-            if (keyDetermined)
+            if (keyed)
               source.readChangedAt(spark, srcV, applied, DeleteMode.Hard)
                 .getOrElse(fullSnap.filter(lit(false)))
             else fullSnap
@@ -1154,25 +1131,26 @@ object MaterializedAgg {
 
   /** Rows a refresh may collect to the driver: the fold regime's at-risk
     * groups, the recompute's dirty groups, the join view's delta. Past it,
-    * each falls back to its distributed plan. `graft.ivm.riskCap` shrinks it: the fallbacks
-    * need more rows than a spec can afford to fire naturally.
+    * each falls back to its distributed plan. A var only so specs can
+    * shrink it: the fallbacks need more rows than a spec can afford to
+    * fire naturally.
     */
-  private[sink] def collectCap: Int =
-    sys.props.get("graft.ivm.riskCap").flatMap(_.toIntOption).getOrElse(65536)
+  @volatile private[graft] var collectCap: Int = 65536
 
-  /** The IVM bulk gate (manifest-only): at least
-    * `graft.ivm.rebuildDirtyFraction` (default 0.5) of the table's buckets
-    * changed between the two versions, so most of a view is plausibly
-    * dirty and one rebuild pass costs less than the incremental
-    * bookkeeping.
+  /** The share of a table's buckets a change must touch for [[bulkChanged]].
+    * A var only so specs can keep small tables' refreshes incremental.
+    */
+  @volatile private[graft] var rebuildDirtyFraction: Double = 0.5
+
+  /** The IVM bulk gate (manifest-only): at least [[rebuildDirtyFraction]]
+    * of the table's buckets changed between the two versions, so most of
+    * a view is plausibly dirty and one rebuild pass costs less than the
+    * incremental bookkeeping.
     */
   private[sink] def bulkChanged(dir: String, fromV: Long, toV: Long): Boolean =
-    fromV < toV && {
-      val frac = sys.props.get("graft.ivm.rebuildDirtyFraction")
-        .flatMap(_.toDoubleOption).getOrElse(0.5)
+    fromV < toV &&
       SnapshotParquetSink.changedBuckets(dir, fromV, toV).size.toDouble >=
-        frac * math.max(1, SnapshotParquetSink.manifest(dir, toV)._2.size)
-    }
+        rebuildDirtyFraction * math.max(1, SnapshotParquetSink.manifest(dir, toV)._2.size)
 
   /** Byte-equivalent of the fold regime's fixed floor in the cost-based
     * fold-vs-recompute pick: the extra jobs (dirty-bucket probe, the

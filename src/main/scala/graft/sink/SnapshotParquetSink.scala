@@ -1,7 +1,6 @@
 package graft.sink
 
 import java.util.UUID
-import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -12,6 +11,16 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import graft.engine.Dfs
+
+/** Delete handling at the sink, per the reference's two modes
+  * (add_output.py:138-150): hard = remove the row, logical = keep it with a
+  * boolean `is_deleted` column (README.md:61).
+  */
+sealed trait DeleteMode
+object DeleteMode {
+  case object Hard extends DeleteMode
+  case object Logical extends DeleteMode
+}
 
 /** Manifest-format and bucket-routing primitives, shared between the Scala
   * sink API and the DSv2 read path ([[graft.sources.SnapshotTableProvider]])
@@ -48,10 +57,10 @@ object SnapshotParquetSink {
     * ONE task under the fused shape, so the commit falls back to the
     * two-exchange key-granularity shape instead. 256 MB = AQE's own
     * `skewedPartitionThresholdInBytes` default — the same "one partition
-    * this big is a straggler" judgment. Override per session via
-    * `spark.graft.commit.fusedMaxBucketBytes`.
+    * this big is a straggler" judgment. A var only so specs can force the
+    * fallback shape.
     */
-  private[sink] val FusedMaxBucketBytes = 256L * 1024 * 1024
+  @volatile private[graft] var fusedMaxBucketBytes: Long = 256L * 1024 * 1024
 
   /** The cluster spec recorded at `version`; empty = hash-routed table. */
   def manifestCluster(dir: String, version: Long): Seq[ClusterCol] =
@@ -427,7 +436,7 @@ object SnapshotParquetSink {
   private[sink] def applyShift(x: Long, shift: Int): Long =
     if (shift >= 0) x >> shift else x << -shift
 
-  /** Driver-side cluster routing, bit-identical to the write expression:
+  /** Cluster routing, bit-identical to the write expression:
     * clamp to bounds (null ⇒ lo), subtract lo, shift to [[ClusterBits]]
     * bits, Morton-interleave, keep the top log2(nBuckets) bits — so
     * adjacent buckets are adjacent Z-tiles and a rectangle predicate
@@ -471,7 +480,46 @@ object SnapshotParquetSink {
   final case class ProbeHintMismatch(msg: String)
     extends IllegalArgumentException(msg)
 
-  /** Driver-side bucket routing, bit-identical to the write path's
+  /** The one driver-side key router: the bucket a row holding `values`
+    * (column → value) routes to at `version`, decided from that version's
+    * manifest alone — its committed nBuckets, cluster spec and recorded
+    * key types, never a handle's — and bit-identical to the write path's
+    * `bucketExpr`. A hash-routed table hashes every recorded merge key
+    * ([[bucketFor]]); a clustered one routes by the Z-tile of its cluster
+    * columns alone ([[clusterBucketFor]]; hashing there would pick the
+    * wrong bucket), whose values must be integral (null routes as `lo`,
+    * like the write path's coalesce). None when `values` do not pin the
+    * routing: a routing column missing, or a non-integral cluster value.
+    */
+  private[graft] def routerAt(dir: String, version: Long): Map[String, Any] => Option[Int] = {
+    val lines = manifestLines(dir, version)
+    val n = manifestOf(dir, version, lines)._1
+    val cluster = clusterOf(lines)
+    if (cluster.nonEmpty) values => {
+      val longs = cluster.map(c => values.get(c.name).flatMap {
+        case null     => Some(None)
+        case l: Long  => Some(Some(l))
+        case i: Int   => Some(Some(i.toLong))
+        case s: Short => Some(Some(s.toLong))
+        case b: Byte  => Some(Some(b.toLong))
+        case _        => None
+      })
+      if (longs.forall(_.isDefined)) Some(clusterBucketFor(longs.flatten, cluster, n))
+      else None
+    }
+    else {
+      val keys = keysOf(dir, version, lines)
+      lazy val types = {
+        val schema = manifestSchema(dir, version)
+        keys.map(k => schema(k).dataType)
+      }
+      values =>
+        if (keys.forall(values.contains)) Some(bucketFor(keys.map(values), types, n))
+        else None
+    }
+  }
+
+  /** Hash routing, bit-identical to the write path's
     * `pmod(xxhash64(keys...), nBuckets)`: literals cast to the STORED key
     * types, XxHash64 evaluated without a Spark job.
     */
@@ -541,9 +589,11 @@ object SnapshotParquetSink {
   *   - `f <bucket> <col> <type> <relative-path>` — bloom sidecars.
   *
   * Merge semantics (last-write-wins by seq, `__gen` tie-break = the
-  * committing version, tombstoned deletes) implement the [[UpsertSink]]
-  * contract; `__gen` strictly increases per commit, so replaying a batch
-  * is idempotent and out-of-order-safe.
+  * committing version, tombstoned deletes) are the warehouse MERGE the
+  * reference pipeline runs ([[SnowflakeSqlGen]] generates its SQL);
+  * `__gen` strictly increases per commit, so replaying a batch is
+  * idempotent and out-of-order-safe — what makes `foreachBatch`
+  * exactly-once on restart.
   *
   * `statsCols`: numeric/timestamp columns to record per-bucket min/max for
   * in each commit's manifest — MANIFEST-LEVEL DATA SKIPPING (the Delta
@@ -563,13 +613,14 @@ object SnapshotParquetSink {
   * values hash-scatter (where min/max stats prune nothing), plus
   * parquet-native row-group bloom filters inside every data file written.
   * `WHERE ext_id = 'X'` then plans only the buckets whose filter admits X.
-  * Same cost/compat contract as stats: one extra distinct-hash pass over
-  * the just-written files per commit, absence = no pruning.
+  * The filters accumulate inside the data-write job (`observeBlooms`), so
+  * the cost is per-row hashing plus one small sidecar file per written
+  * bucket — no re-read of the new files; absence = no pruning.
   */
 final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     statsCols: Seq[String] = Nil,
     clusterBy: Seq[SnapshotParquetSink.ClusterCol] = Nil,
-    bloomCols: Seq[String] = Nil) extends UpsertSink {
+    bloomCols: Seq[String] = Nil) {
 
   statsCols.foreach(SnapshotParquetSink.validManifestName("stats"))
   bloomCols.foreach(SnapshotParquetSink.validManifestName("bloom"))
@@ -666,20 +717,26 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     * all-null buckets, an acceptable conservative over-trigger): the
     * first oversized commit goes native-less (a missing filter prunes
     * nothing, never wrongly) and every later commit carries the native
-    * layer. `graft.bloom.forceNative` forces the layer on (bench/test pin
-    * of the native-write cost).
+    * layer. [[rebucket]] judges the NEW geometry instead (its `saturates`).
+    * `graft.bloom.forceNative` forces the layer on (bench/test pin of the
+    * native-write cost).
     */
-  private def nativeBloomsWanted(prior: Option[Long], cols: Seq[String]): Boolean =
-    sys.props.contains("graft.bloom.forceNative") ||
-      (cols.nonEmpty && prior.exists { v =>
-        val blooms = SnapshotParquetSink.manifestBlooms(dir, v)
-        readManifest(v).keys.exists(b =>
-          cols.exists(c => !blooms.get(b).exists(_.contains(c))))
-      })
-
   private def parquetBloomOptsFor(prior: Option[Long],
       cols: Seq[String]): Map[String, String] =
-    if (nativeBloomsWanted(prior, cols)) parquetBloomOpts(cols) else Map.empty
+    nativeBloomOpts(cols, prior.exists { v =>
+      val blooms = SnapshotParquetSink.manifestBlooms(dir, v)
+      readManifest(v).keys.exists(b =>
+        cols.exists(c => !blooms.get(b).exists(_.contains(c))))
+    })
+
+  /** [[parquetBloomOpts]] for `cols` when `saturates` (or
+    * `graft.bloom.forceNative` is set), else none.
+    */
+  private def nativeBloomOpts(cols: Seq[String],
+      saturates: => Boolean): Map[String, String] =
+    if (cols.nonEmpty && (sys.props.contains("graft.bloom.forceNative") || saturates))
+      parquetBloomOpts(cols)
+    else Map.empty
 
   /** Writer options enabling PARQUET-NATIVE bloom filters for `cols` on a
     * data write — row-group-level equality skipping INSIDE the files, the
@@ -712,106 +769,6 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     Seq(s"statscols=${st.mkString(",")}", s"bloomcols=${bl.mkString(",")}")
   }
 
-  /** `f <bucket> <col> <type> <rel>` manifest lines + their sidecar files
-    * for the freshly written commit root — one column-pruned,
-    * distinct-hash scan of the NEW files per bloom column, never the whole
-    * table (the statsLinesFor contract). The heavy part (hash, position
-    * explode, per-word bit OR) runs distributed; the driver collects only
-    * the SPARSE set word array per bucket (≤16 K longs each, and only for
-    * buckets under [[BloomIndex.MaxDistinct]] distinct values — larger
-    * buckets record nothing and rely on the parquet-native blooms).
-    */
-  private def bloomLinesFor(spark: SparkSession, commitId: String,
-      cols: Seq[String] = bloomCols): Seq[String] = {
-    if (cols.isEmpty) return Nil
-    val root = s"$dir/data/$commitId"
-    val written = spark.read.option("basePath", root).parquet(root)
-    val schema = written.schema
-    cols.flatMap { c =>
-      require(schema.fieldNames.contains(c), s"bloom column '$c' absent from the batch")
-      val ddl = schema(c).dataType.catalogString
-      require(!ddl.exists(_.isWhitespace),
-        s"bloom column '$c' has a non-atomic type ($ddl) — bloom skipping " +
-          "covers atomic columns (equality on them is what gets pushed down)")
-      // ONE pass over the new files per bloom column: positions are set at
-      // the MAXIMUM size, and a power-of-two bloom folds down EXACTLY
-      // ((p mod 2^20) mod m = p mod m when m | 2^20 — the low log2(m) bits
-      // are untouched), so per-bucket sizing needs no separate distinct
-      // count: it reads the full-size filter's own fill. Duplicates just
-      // re-set the same bits — a `.distinct()` materialization was measured
-      // at 2.5× merge cost and a count_distinct pre-pass at ~1.4×, both
-      // replaced by this fold-down. The position formula must stay
-      // bit-identical to BloomIndex.position.
-      val hashed = written.filter(col(c).isNotNull)
-        .select(col("__bucket"), xxhash64(col(c)).as("__h"))
-      locally {
-        val h1 = col("__h").bitwiseAND(lit(0x7fffffffL))
-        val h2 = shiftrightunsigned(col("__h"), 32)
-          .bitwiseOR(lit(1L)).bitwiseAND(lit(0x7fffffffL))
-        val positions = array((0 until BloomIndex.K).map(i =>
-          pmod(h1 + lit(i.toLong) * h2, lit(BloomIndex.MaxBits.toLong))): _*)
-        // sparse full-size words: ≤ min(k·rows, 2^20/64) rows per bucket —
-        // tiny next to the batch; cached for the fill probe + the fold
-        val sparse20 = hashed
-          .select(col("__bucket"), explode(positions).as("__p"))
-          .select(col("__bucket"), shiftright(col("__p"), 6).as("__w"),
-            expr("shiftleft(cast(1 as bigint), cast(pmod(__p, 64) as int))")
-              .as("__mask"))
-          .groupBy(col("__bucket"), col("__w"))
-          .agg(expr("bit_or(__mask)").as("__bits"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          // distinct-count estimate from the full-size filter's fill —
-          // the standard bloom inversion n̂ = −(m/k)·ln(1 − X/m); at the
-          // 64k-distinct cap X/m ≈ 0.31, where the estimator is tight
-          val fills = sparse20.groupBy(col("__bucket"))
-            .agg(sum(bit_count(col("__bits"))).as("x"))
-            .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-          val m20 = BloomIndex.MaxBits.toDouble
-          val ms = fills.toSeq.sortBy(_._1).flatMap { case (b, x) =>
-            val nHat =
-              if (x >= BloomIndex.MaxBits) Long.MaxValue // filter saturated
-              else math.ceil(-m20 / BloomIndex.K * math.log1p(-x / m20)).toLong
-            BloomIndex.sizeFor(nHat).map(b -> _)
-          }
-          if (ms.isEmpty) Nil
-          else {
-            // fold to each bucket's size: target word = w mod (m/64), bit
-            // position within the word unchanged — exact, no re-hash
-            val mdf = spark.createDataFrame(ms.map { case (b, m) =>
-              org.apache.spark.sql.Row(b, (m / 64).toLong) }.asJava,
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("__bucket",
-                  org.apache.spark.sql.types.IntegerType, nullable = false),
-                org.apache.spark.sql.types.StructField("__wn",
-                  org.apache.spark.sql.types.LongType, nullable = false))))
-            val sparse = sparse20.join(broadcast(mdf), "__bucket")
-              .groupBy(col("__bucket"), pmod(col("__w"), col("__wn")).as("__wt"))
-              .agg(expr("bit_or(__bits)").as("__bits"))
-              .collect()
-            val byBucket = sparse.groupBy(_.getInt(0))
-            // sidecar publication is O(buckets) tiny-file FS round-trips —
-            // sequentially they dominated the whole bloom pass at O(100)
-            // buckets (measured 1.6× bulk-commit overhead at 80 buckets);
-            // write them concurrently, I/O-bound, bounded pool
-            SnapshotParquetSink.inParallel(ms) { case (b, m) =>
-              val words = new Array[Long](m / 64)
-              byBucket.getOrElse(b, Array.empty).foreach { r =>
-                words(r.getLong(1).toInt) = r.getLong(2)
-              }
-              val rel = s"data/$commitId/__bloom/$c/$b.bf"
-              Dfs.writeBytes(new HPath(s"$dir/$rel"), BloomIndex.encode(m, words))
-              s"f $b $c $ddl $rel"
-            }
-          }
-        } finally {
-          sparse20.unpersist()
-          ()
-        }
-      }
-    }
-  }
-
   /** Bloom sidecars fused INTO the data-write job: the write frame gets an
     * `observe` with one [[graft.functions.BloomWordsAgg]] per bloom column,
     * so the per-bucket filter words accumulate while the parquet writer
@@ -820,9 +777,12 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     * The driver then only decodes the observed map and writes the sidecar
     * files (concurrent, I/O-bound — same publication as before).
     *
-    * Used by the bulk paths (merge, replaceAll). Maintenance rewrites
-    * (compact/purge/rebucket) keep the standalone [[bloomLinesFor]] re-read
-    * or the sidecar copy — they are rare and whole-table by nature.
+    * The one sidecar builder: merge and replaceAll observe this handle's
+    * `bloomCols`, compact's backfill and rebucket the columns they index.
+    * Every write frame is hash-partitioned by `__bucket`, so each bucket's
+    * words come from one task and the filters equal a re-read of the
+    * written files. compact (without a backfill) and purge copy the prior
+    * sidecars instead ([[copyBloomsInto]]).
     */
   private final class ObservedBlooms(
       val frame: DataFrame,
@@ -854,11 +814,12 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
   }
 
   private def observeBlooms(spark: SparkSession, toWrite: DataFrame,
-      schema: org.apache.spark.sql.types.StructType): ObservedBlooms =
-    if (bloomCols.isEmpty) new ObservedBlooms(toWrite, None, Nil)
+      schema: org.apache.spark.sql.types.StructType,
+      cols: Seq[String]): ObservedBlooms =
+    if (cols.isEmpty) new ObservedBlooms(toWrite, None, Nil)
     else {
       graft.functions.GraftFunctions.register(spark)
-      val aggs = bloomCols.map { c =>
+      val aggs = cols.map { c =>
         require(schema.fieldNames.contains(c),
           s"bloom column '$c' absent from the batch")
         val ddl = schema(c).dataType.catalogString
@@ -877,14 +838,14 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
       }
       val obs = org.apache.spark.sql.Observation(
         s"graft-blooms-${UUID.randomUUID()}")
-      val hashed = bloomCols.foldLeft(toWrite)((df, c) =>
+      val hashed = cols.foldLeft(toWrite)((df, c) =>
         df.withColumn(s"__graft_bfh_$c",
           when(col(c).isNotNull, xxhash64(col(c)))))
       // the drop ABOVE the observe keeps the helper out of the written
       // files while CollectMetrics still sees it
       new ObservedBlooms(hashed.observe(obs, aggs.head, aggs.tail: _*)
-        .drop(bloomCols.map(c => s"__graft_bfh_$c"): _*),
-        Some(obs), bloomCols)
+        .drop(cols.map(c => s"__graft_bfh_$c"): _*),
+        Some(obs), cols)
     }
 
   /** Carried/copied bloom lines for a maintenance rewrite (compact, purge):
@@ -1118,7 +1079,11 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     */
   def lastCommitFusedShape: Option[Boolean] = lastFused
 
-  override def merge(batch: DataFrame, keys: Seq[String], seqCol: String,
+  /** Applies a micro-batch of CDC events (any order, any mix of inserts,
+    * updates and deletes flagged by `isDeleteCol`) with last-write-wins by
+    * `seqCol` per `keys`.
+    */
+  def merge(batch: DataFrame, keys: Seq[String], seqCol: String,
       isDeleteCol: String): Unit =
     mergeImpl(batch, keys, seqCol, isDeleteCol, None, None, None)
 
@@ -1177,12 +1142,12 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     * The probe is PRECOMPUTED: callers that already know the batch's
     * affected buckets and applied head (the IVM fold derives both from its
     * own dirty-group probe) skip the merge's probe job — one fewer
-    * fixed-latency action per refresh. The hint contract is EXACTNESS,
-    * enforced after the write by comparing the written bucket directories
-    * against the hint (one driver-side listing): a missing bucket would
-    * otherwise publish a manifest entry pointing at an unwritten file, an
-    * extra one would orphan written rows — both silent corruption, so a
-    * mismatch fails the commit loudly.
+    * fixed-latency action per refresh. The hint may be a SUPERSET of the
+    * buckets the batch writes: the manifest takes entries for exactly the
+    * bucket dirs the write produced (one driver-side listing), so a hinted
+    * bucket with no rows keeps its carried entry. A WRITTEN bucket missing
+    * from the hint would orphan its rows, so it fails the commit loudly
+    * ([[SnapshotParquetSink.ProbeHintMismatch]]), as in [[mergeHinted]].
     */
   def mergeGuardedHinted(batch: DataFrame, keys: Seq[String], seqCol: String,
       isDeleteCol: String, requireBaseSeq: Option[Long],
@@ -1341,9 +1306,9 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
         // one straggler task sorting/folding the whole bucket. The shape
         // is therefore picked per commit from the manifest's own entries:
         // when any affected bucket's stored bytes exceed
-        // `spark.graft.commit.fusedMaxBucketBytes` (default 256 MB — the
-        // AQE skew threshold), the dedup/fold runs at KEY granularity on
-        // the default shuffle partitioning and the one-file-per-bucket
+        // `fusedMaxBucketBytes` (256 MB — the AQE skew threshold), the
+        // dedup/fold runs at KEY granularity on the default shuffle
+        // partitioning and the one-file-per-bucket
         // repartition moves ABOVE it (the pre-r15 two-exchange shape:
         // more driver round trips, but the sort/fold parallelizes across
         // keys instead of serializing on the hot bucket). Cost: one
@@ -1351,8 +1316,7 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
         // shared FS pool — micro-commits touch few buckets, bulk commits
         // amortize it against the rewrite itself.
         val fusedShape = dbg("fusedchk") {
-          val cap = spark.conf.getOption("spark.graft.commit.fusedMaxBucketBytes")
-            .map(_.toLong).getOrElse(SnapshotParquetSink.FusedMaxBucketBytes)
+          val cap = SnapshotParquetSink.fusedMaxBucketBytes
           val stored = affected.toSeq.flatMap(b => entries.get(b).map(rel => s"$dir/$rel"))
           stored.isEmpty || SnapshotParquetSink.inParallel(stored) { p =>
             try Dfs.contentSummary(new HPath(p))._2
@@ -1409,7 +1373,7 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
         // BloomWordsAgg imperative aggregate): zero extra reads of the
         // fresh files, zero extra jobs — the pre-fusion two-job build was
         // measured at 1.5–2.1× bulk-commit overhead
-        val obs = observeBlooms(spark, toWrite, merged.schema)
+        val obs = observeBlooms(spark, toWrite, merged.schema, bloomCols)
         dbg("write")(graft.engine.JobTag(spark, "commit:write") {
           writeBuckets(obs.frame, commitId, parquetBloomOptsFor(base, bloomCols)) })
         dataWrites += 1
@@ -1531,15 +1495,17 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
   /** Truncate-and-load as ONE fresh commit: the published manifest lists
     * only this load's buckets — prior entries are dropped, not carried
     * forward — so the new version's state and column TYPES come from the
-    * batch alone (the type-widening contract), while every older version
-    * stays time-travel-readable under its own types. Publishes through the
+    * batch alone (the type-widening contract: a widening replay must not
+    * union with the stored narrow columns, where ANSI union coercion would
+    * resolve a string-widened column back to the stored type), while every
+    * older version stays time-travel-readable under its own types. Publishes through the
     * same commit lock and layout guard as [[merge]] (bucket count, keys,
     * order column, cluster spec). A lost race deletes the written data
     * root and rewrites the batch for the next version: the rows carry the
     * target version as their `__gen`, so the files cannot be republished
     * under another one.
     */
-  override def replaceAll(batch: DataFrame, keys: Seq[String], seqCol: String,
+  def replaceAll(batch: DataFrame, keys: Seq[String], seqCol: String,
       isDeleteCol: String): Unit = synchronized {
     keys.foreach(SnapshotParquetSink.validManifestName("key"))
     val spark = batch.sparkSession
@@ -1564,7 +1530,7 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
         val commitId = UUID.randomUUID().toString
         val toWrite = merged.repartition(affected.length, col("__bucket"))
         // same in-write bloom fusion as merge (see observeBlooms)
-        val obs = observeBlooms(spark, toWrite, merged.schema)
+        val obs = observeBlooms(spark, toWrite, merged.schema, bloomCols)
         writeBuckets(obs.frame, commitId, parquetBloomOptsFor(base, bloomCols))
         val body = manifestBody(version, nBuckets, keys, seqCol, batchMaxSeq,
           schemaJson(merged.schema, None), base, clusterBy,
@@ -1579,7 +1545,8 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     }
   }
 
-  override def read(spark: SparkSession, mode: DeleteMode): DataFrame =
+  /** The current committed state under `mode`. */
+  def read(spark: SparkSession, mode: DeleteMode): DataFrame =
     readAt(spark, currentVersion.getOrElse(sys.error(s"no snapshot published at $dir")), mode)
 
   /** The committed state AS OF `version` — time travel. Fails loudly if the
@@ -1791,10 +1758,10 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
 
   /** Point lookup against the LATEST snapshot, reading only the key's
     * bucket file — manifest + hash layout turn a key probe into one
-    * 1/nBuckets-of-the-table read. Bucket derivation is bit-identical to
-    * the write path ([[SnapshotParquetSink.bucketFor]]'s contract): literals
-    * cast to the STORED key types, xxhash64 evaluated driver-side, no Spark
-    * job for the routing decision. A never-merged sink yields an empty
+    * 1/nBuckets-of-the-table read. The bucket comes from
+    * [[SnapshotParquetSink.routerAt]] (the committed manifest's routing,
+    * not this handle's constructor arguments), driver-side, no Spark job
+    * for the routing decision. A never-merged sink yields an empty
     * zero-column frame.
     *
     * Contract (shared with the write path): key columns must keep a STABLE
@@ -1809,36 +1776,12 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     currentVersion match {
       case None => spark.emptyDataFrame
       case Some(v) =>
-        // route the way the table was WRITTEN — the committed manifest's
-        // nBuckets and cluster spec are authoritative, not this handle's
-        // constructor arguments: a handle built with a different bucket
-        // count would otherwise probe the WRONG bucket and silently return
-        // "absent" for live keys (merge guards divergence at write time;
-        // lookup is read-only and must self-align instead)
-        val (committedN, entries) = SnapshotParquetSink.manifest(dir, v)
+        val bucket = SnapshotParquetSink.routerAt(dir, v)(keys.zip(keyValues).toMap)
+          .getOrElse(sys.error(s"lookup on ${keys.mkString(",")} = " +
+            s"${keyValues.mkString(",")} does not pin the routing of the table at " +
+            s"$dir: give every merge key (every cluster column, as integral values)"))
         val schema = SnapshotParquetSink.manifestSchema(dir, v)
-        val committedCluster = SnapshotParquetSink.manifestCluster(dir, v)
-        val bucket =
-          if (committedCluster.isEmpty)
-            SnapshotParquetSink.bucketFor(
-              keyValues, keys.map(k => schema(k).dataType), committedN)
-          else {
-            val byName = keys.zip(keyValues).toMap
-            val longs = committedCluster.map { c =>
-              require(byName.contains(c.name),
-                s"lookup must provide cluster key '${c.name}'")
-              Option(byName(c.name)).map {
-                case l: Long => l
-                case i: Int => i.toLong
-                case s: Short => s.toLong
-                case b: Byte => b.toLong
-                case other => sys.error(
-                  s"cluster key '${c.name}' must be integral, got $other")
-              }
-            }
-            SnapshotParquetSink.clusterBucketFor(longs, committedCluster, committedN)
-          }
-        entries.get(bucket.toInt) match {
+        readManifest(v).get(bucket) match {
           case None => shape(spark.createDataFrame(
             java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema), mode)
           case Some(rel) =>
@@ -1920,20 +1863,23 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
       val version = base + 1L
       val full = readFullState(spark, base)
       val commitId = UUID.randomUUID().toString
+      // per-bucket content is preserved exactly, so stats ranges carry
+      // verbatim (carriedStats below) and so do the bloom sidecars (files
+      // copied under the new root — the same-root-as-entry invariant vacuum
+      // reachability relies on). EXCEPT when this handle declares
+      // bloomCols: then compaction is also the index BACKFILL path — the
+      // write observes fresh filters for every bucket, which is how a table
+      // bulk-loaded without blooms (the fast initial load) gains them
+      // afterwards in one maintenance pass
+      val obs = observeBlooms(spark, full.repartition(entries.size, col("__bucket")),
+        full.schema, bloomCols)
       // bloom columns (handle's, or whatever the base manifest recorded):
       // the rewrite keeps the parquet-native row-group blooms where the
       // base manifest evidences saturated buckets (parquetBloomOptsFor)
-      writeBuckets(full.repartition(entries.size, col("__bucket")), commitId,
+      writeBuckets(obs.frame, commitId,
         parquetBloomOptsFor(Some(base), effectiveBloomCols(base)))
-      // per-bucket content is preserved exactly, so stats ranges carry
-      // verbatim (carriedStats below) and so do the bloom sidecars (files copied under the new root —
-      // the same-root-as-entry invariant vacuum reachability relies on).
-      // EXCEPT when this handle declares bloomCols: then compaction is also
-      // the index BACKFILL path — recompute for every bucket, which is how
-      // a table bulk-loaded without blooms (the fast initial load) gains
-      // them afterwards in one maintenance pass
       val bloomsOut =
-        if (bloomCols.nonEmpty) bloomLinesFor(spark, commitId)
+        if (bloomCols.nonEmpty) obs.lines(commitId, full.schema)
         else copyBloomsInto(base, commitId, entries.keySet)
       // compaction rewrites data files, never the key contract, the head
       // or the routing — recorded bucket count, keys, seqcol, maxseq and
@@ -1989,18 +1935,12 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
       // column's sidecar (distinct ≤ rows) — one column-pruned count job
       // over the re-routed state decides, exact in the skip direction and
       // conservatively over-triggering only on heavily duplicated columns.
-      val nativeOpts =
-        if (effBloomCols.isEmpty) Map.empty[String, String]
-        else if (sys.props.contains("graft.bloom.forceNative"))
-          parquetBloomOpts(effBloomCols)
-        else {
-          val maxBucketRows = Option(full.groupBy(col("__bucket")).count()
-            .agg(max("count")).head().get(0)).map(_.asInstanceOf[Long])
-          if (maxBucketRows.exists(_ > BloomIndex.MaxDistinct))
-            parquetBloomOpts(effBloomCols)
-          else Map.empty[String, String]
-        }
-      writeBuckets(full.repartition(newBuckets, col("__bucket")), commitId, nativeOpts)
+      val nativeOpts = nativeBloomOpts(effBloomCols,
+        Option(full.groupBy(col("__bucket")).count().agg(max("count")).head().get(0))
+          .exists(_.asInstanceOf[Long] > BloomIndex.MaxDistinct))
+      val obs = observeBlooms(spark, full.repartition(newBuckets, col("__bucket")),
+        full.schema, effBloomCols)
+      writeBuckets(obs.frame, commitId, nativeOpts)
       // stats recomputed for whatever the base declared (this maintenance
       // handle may not declare statsCols; the table's skipping metadata
       // must survive regardless)
@@ -2013,7 +1953,7 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
         Some(base), clusterBy,
         writtenBucketsOf(commitId).map(b => b -> s"data/$commitId/__bucket=$b"),
         statsLinesFor(spark, commitId, statCols),
-        bloomLinesFor(spark, commitId, effBloomCols))
+        obs.lines(commitId, full.schema))
       if (publish(version, body)) Some(version)
       else { Dfs.deleteTreeQuiet(new HPath(s"$dir/data/$commitId")); None }
     }

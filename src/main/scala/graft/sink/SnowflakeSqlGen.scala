@@ -8,9 +8,10 @@ import graft.model.TableSpec
   * and a MERGE keyed on the upsert columns with hard/logical delete
   * handling. No connector jar ships in this environment, so this is
   * SQL-string generation + unit tests only (SURVEY §7.4); a connector-backed
-  * UpsertSink would execute exactly these statements.
+  * sink would execute exactly these statements.
   *
-  * The generated MERGE honors the UpsertSink contract:
+  * The generated MERGE honors [[SnapshotParquetSink.merge]]'s contract
+  * (last-write-wins by seq per key, idempotent under replay):
   *  - the staged batch is deduped per key (latest SEQ wins) in the USING
   *    subquery, so multi-event-per-key batches are never nondeterministic;
   *  - every MATCHED clause is guarded by `s.SEQ > t.SEQ` and SEQ is stored,

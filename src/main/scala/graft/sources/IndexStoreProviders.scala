@@ -155,8 +155,9 @@ private[sources] final class BatchStoreScanBuilder(state: BatchScanState,
   * see the same cut of every member table, no matter how many per-table
   * merges landed since — the SQL face of the catalog's torn-read
   * guarantee. All snapshot-format read optimizations apply (key-equality
-  * bucket probes, manifest-stats skipping, parquet row-group pruning),
-  * because the scan delegates to the same [[SnapshotState]] machinery as
+  * bucket probes on hash-routed and clustered members, manifest-stats and
+  * bloom-sidecar skipping, parquet row-group pruning), because the pinned
+  * version resolves through the same [[SnapshotState.at]] as
   * `graft-snapshot`.
   *
   * Cross-TABLE consistency caveat: each `.load(...)` resolves the catalog
@@ -189,11 +190,7 @@ final class CatalogTableProvider extends TableProvider with DataSourceRegister {
     val tv = pins.getOrElse(table,
       sys.error(s"catalog v$cv at $dir pins no table '$table' " +
         s"(members: ${pins.keys.toSeq.sorted.mkString(", ")})"))
-    val tdir = s"$dir/$table"
-    val (nBuckets, entries) = graft.sink.SnapshotParquetSink.manifest(tdir, tv)
-    SnapshotState(tdir, tv, nBuckets, entries,
-      graft.sink.SnapshotParquetSink.manifestKeys(tdir, tv),
-      graft.sink.SnapshotParquetSink.manifestStats(tdir, tv))
+    SnapshotState.at(s"$dir/$table", tv)
   }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =

@@ -20,7 +20,7 @@ import graft.sink.SnapshotParquetSink
   * {{{
   *   spark.read.format("graft-snapshot")
   *     .option("asOf", 3)            // optional time travel (default: latest)
-  *     .option("keys", "id")         // optional: enables bucket pruning
+  *     .option("keys", "id")         // optional: must name the recorded merge keys
   *     .load("/path/to/sink")
   * }}}
   *
@@ -29,10 +29,11 @@ import graft.sink.SnapshotParquetSink
   * `DeleteMode.Logical`; hard-delete consumers filter `NOT __is_deleted`).
   * Internal bookkeeping columns (`__gen`, the bucket directory) stay hidden.
   *
-  * Scale shape: when `keys` is declared and a query pins EVERY key with an
-  * equality predicate, the scan builder routes the literals through the
-  * write path's driver-side bucket hash ([[SnapshotParquetSink.bucketFor]])
-  * and plans ONLY that bucket's file — a key probe reads 1/nBuckets of the
+  * Scale shape: when a query pins EVERY routing input (the recorded merge
+  * keys, or the cluster columns of a clustered table) with an equality
+  * predicate, the scan builder routes the literals through the sink's
+  * driver-side router ([[SnapshotParquetSink.routerAt]]) and plans ONLY
+  * that bucket's file — a key probe reads 1/nBuckets of the
   * table before parquet row-group pruning even starts. All remaining
   * filtering/pushdown delegates to Spark's own DSv2 parquet scan, so
   * vectorized reads, nested-column pruning and predicate pushdown behave
@@ -152,12 +153,14 @@ class SnapshotTableProvider extends TableProvider with DataSourceRegister
   }
 }
 
-/** One resolved (dir, version) view of a snapshot table. */
+/** One resolved (dir, version) view of a snapshot table: its bucket
+  * entries and per-bucket stats and bloom lines. Built only in the
+  * companion: [[SnapshotState.at]] for a published version.
+  */
 private[sources] final case class SnapshotState(dir: String, version: Long,
-    nBuckets: Int, entries: Map[Int, String], keys: Seq[String],
-    stats: Map[Int, Map[String, (BigDecimal, BigDecimal)]] = Map.empty,
-    cluster: Seq[SnapshotParquetSink.ClusterCol] = Nil,
-    blooms: Map[Int, Map[String, (String, String)]] = Map.empty) {
+    entries: Map[Int, String],
+    stats: Map[Int, Map[String, (BigDecimal, BigDecimal)]],
+    blooms: Map[Int, Map[String, (String, String)]]) {
 
   /** Merged-across-commits schema minus internal bookkeeping. Empty for a
     * not-yet-published table (version −1): the writer fallback only needs
@@ -180,63 +183,42 @@ private[sources] final case class SnapshotState(dir: String, version: Long,
     bloomPruned(filters, statsPruned(filters, keyPruned(filters)))
       .toSeq.sortBy(_._1).map { case (_, rel) => s"$dir/$rel" }
 
-  /** Key-equality pruning: one bucket when the routing inputs are pinned by
-    * equalities — every declared key on a hash-routed table, every CLUSTER
-    * column on a clustered one (routing there is a pure function of the
-    * cluster columns alone; hashing would pick the WRONG bucket and
-    * silently lose rows, so the committed cluster spec is authoritative).
-    * A SINGLE-key hash table additionally routes `key IN (...)` to the
-    * union of the values' buckets — the batched point-lookup pattern.
+  /** Key-equality pruning through the sink's router
+    * ([[SnapshotParquetSink.routerAt]] — the version's own nBuckets,
+    * cluster spec and key types): one bucket when equalities pin every
+    * routing input (every merge key on a hash-routed table, every cluster
+    * column on a clustered one). An `IN` list on one routing input, the
+    * others pinned by equalities, routes to the union of its values'
+    * buckets — the batched point-lookup pattern. Null list elements never
+    * match a row and are skipped; an extra bucket is only a wasted read
+    * and a missing one would lose rows, so a non-literal element or an
+    * unroutable value disables the pruning.
     */
   private def keyPruned(filters: Seq[Expression]): Map[Int, String] = {
-    if (keys.isEmpty) return entries
     import org.apache.spark.sql.catalyst.CatalystTypeConverters
     import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, In, InSet, Literal}
-    val eqs = filters.collect {
+    if (entries.isEmpty) return entries
+    val route = SnapshotParquetSink.routerAt(dir, version)
+    val eqs: Map[String, Any] = filters.collect {
       case EqualTo(a: Attribute, l: Literal) =>
         a.name -> CatalystTypeConverters.convertToScala(l.value, l.dataType)
       case EqualTo(l: Literal, a: Attribute) =>
         a.name -> CatalystTypeConverters.convertToScala(l.value, l.dataType)
     }.toMap
-    if (cluster.nonEmpty) {
-      if (!cluster.forall(c => eqs.contains(c.name))) return entries
-      val longs = cluster.map(c => eqs(c.name) match {
-        case l: Long  => Some(l)
-        case i: Int   => Some(i.toLong)
-        case s: Short => Some(s.toLong)
-        case b: Byte  => Some(b.toLong)
-        case _        => return entries // non-integral literal: no pruning
-      })
-      val bucket = SnapshotParquetSink.clusterBucketFor(longs, cluster, nBuckets)
-      return entries.get(bucket).map(rel => Map(bucket -> rel)).getOrElse(Map.empty)
+    def routed(values: Seq[Map[String, Any]]): Option[Map[Int, String]] = {
+      val buckets = values.map(route)
+      if (!buckets.forall(_.isDefined)) None
+      else Some(entries.filter { case (b, _) => buckets.contains(Some(b)) })
     }
-    if (keys.forall(eqs.contains)) {
-      val bucket = SnapshotParquetSink.bucketFor(
-        keys.map(eqs), keys.map(k => dataSchema(k).dataType), nBuckets)
-      return entries.get(bucket).map(rel => Map(bucket -> rel)).getOrElse(Map.empty)
-    }
-    // IN on the single merge key: the union of the listed values' buckets
-    // (null list elements never match a row — skip them; an extra bucket is
-    // only a wasted read, a missing one would lose rows, so any non-literal
-    // element disables the pruning entirely)
-    if (keys.length == 1) {
-      val k = keys.head
-      val kt = dataSchema(k).dataType
-      val inValues: Option[Seq[Any]] = filters.collectFirst {
-        case In(a: Attribute, vs) if a.name == k && vs.forall(_.isInstanceOf[Literal]) =>
-          vs.collect { case Literal(v, dt) if v != null =>
-            CatalystTypeConverters.convertToScala(v, dt) }
-        case InSet(a: Attribute, hset) if a.name == k =>
-          hset.toSeq.filter(_ != null)
-            .map(v => CatalystTypeConverters.convertToScala(v, kt))
-      }
-      inValues.foreach { vs =>
-        val buckets = vs.map(v =>
-          SnapshotParquetSink.bucketFor(Seq(v), Seq(kt), nBuckets)).toSet
-        return entries.filter { case (b, _) => buckets.contains(b) }
-      }
-    }
-    entries
+    routed(Seq(eqs)).orElse(filters.iterator.map {
+      case In(a: Attribute, vs) if vs.forall(_.isInstanceOf[Literal]) =>
+        routed(vs.collect { case Literal(v, dt) if v != null =>
+          eqs + (a.name -> CatalystTypeConverters.convertToScala(v, dt)) })
+      case InSet(a: Attribute, hset) =>
+        routed(hset.toSeq.filter(_ != null).map(v =>
+          eqs + (a.name -> CatalystTypeConverters.convertToScala(v, a.dataType))))
+      case _ => None
+    }.collectFirst { case Some(m) => m }).getOrElse(entries)
   }
 
   /** A pushed literal on a stats column as BigDecimal (timestamps compare
@@ -364,6 +346,15 @@ private[sources] final case class SnapshotState(dir: String, version: Long,
 }
 
 private[sources] object SnapshotState {
+  /** The committed state at (`dir`, `version`) — every manifest line a
+    * scan's pruning reads; key routing reads the same manifest through
+    * the sink's router.
+    */
+  def at(dir: String, version: Long): SnapshotState =
+    SnapshotState(dir, version, SnapshotParquetSink.manifest(dir, version)._2,
+      SnapshotParquetSink.manifestStats(dir, version),
+      SnapshotParquetSink.manifestBlooms(dir, version))
+
   def resolve(options: CaseInsensitiveStringMap): SnapshotState = {
     val dir = Option(options.get("path"))
       .getOrElse(sys.error("graft-snapshot needs a path: .load(dir) or option(\"path\", dir)"))
@@ -373,26 +364,21 @@ private[sources] object SnapshotState {
       // unpublished table: resolvable (the write fallback needs this) but
       // unreadable — SnapshotTable.newScanBuilder rejects version −1
       require(options.get("asOf") == null, s"no snapshot published at $dir")
-      return SnapshotState(dir, -1L, 0, Map.empty, keys)
+      return SnapshotState(dir, -1L, Map.empty, Map.empty, Map.empty)
     }
     val version = Option(options.get("asOf")).map(_.toLong).getOrElse(versions.last)
     require(versions.contains(version),
       s"snapshot v$version does not exist at $dir (vacuumed or never published); " +
         s"available: ${versions.mkString(", ")}")
-    val (nBuckets, entries) = SnapshotParquetSink.manifest(dir, version)
-    // bucket-pruning keys: the manifest's RECORDED merge keys are the only
-    // columns the bucket hash actually routes on — a caller-supplied option
-    // naming any other columns would prune to the WRONG bucket and silently
-    // return rows missing, so a mismatch is an error, not a preference
+    // pruning routes on the manifest's RECORDED merge keys; an option
+    // naming other columns would be silently ignored, so a mismatch is an
+    // error, not a preference
     val recorded = SnapshotParquetSink.manifestKeys(dir, version)
     require(keys.isEmpty || keys == recorded,
       s"option keys=${keys.mkString(",")} does not match the table's committed " +
         s"merge keys ${recorded.mkString(",")} at $dir — drop the option " +
         "(pruning uses the recorded keys automatically)")
-    SnapshotState(dir, version, nBuckets, entries, recorded,
-      SnapshotParquetSink.manifestStats(dir, version),
-      SnapshotParquetSink.manifestCluster(dir, version),
-      SnapshotParquetSink.manifestBlooms(dir, version))
+    at(dir, version)
   }
 }
 

@@ -51,8 +51,8 @@ object CdcOrchestrator {
       extraPk: Option[graft.model.ColSpec] = None,
       // sink per table directory — default the manifest-committed snapshot
       // table; pass e.g. `new SnapshotParquetSink(_, nBuckets = 128)` for a
-      // wider bucket layout, or a warehouse-backed implementation
-      sinkFactory: String => graft.sink.UpsertSink = new SnapshotParquetSink(_)): Map[String, Running] = {
+      // wider bucket layout
+      sinkFactory: String => SnapshotParquetSink = new SnapshotParquetSink(_)): Map[String, Running] = {
     val specs = TableSpec.loadCsv(columnsPath)
     val discovered = discoverTables(spark, inputDir)
       .filter(t => include.isEmpty || include.contains(t))
@@ -103,7 +103,7 @@ object CdcOrchestrator {
       running: Map[String, Running] = Map.empty,
       logicalDeletes: Boolean = false,
       extraPk: Option[graft.model.ColSpec] = None,
-      sinkFactory: String => graft.sink.UpsertSink = new SnapshotParquetSink(_)): Map[String, Running] = {
+      sinkFactory: String => SnapshotParquetSink = new SnapshotParquetSink(_)): Map[String, Running] = {
     val specs = TableSpec.loadCsv(columnsPath)
     val discovered = Inspection.tables(consumerFactory().batch(spark))
       .collect().map(_.getString(0)).toSeq.sorted
@@ -162,7 +162,7 @@ object CdcOrchestrator {
       running: Option[SharedRunning] = None,
       logicalDeletes: Boolean = false,
       extraPk: Option[graft.model.ColSpec] = None,
-      sinkFactory: String => graft.sink.UpsertSink = new SnapshotParquetSink(_)): SharedRunning = {
+      sinkFactory: String => SnapshotParquetSink = new SnapshotParquetSink(_)): SharedRunning = {
     val specs = TableSpec.loadCsv(columnsPath)
     val discovered = Inspection.tables(consumerFactory().batch(spark))
       .collect().map(_.getString(0)).toSeq.sorted

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import graft.cdc.CdcPipeline
 import graft.model.TableSpec
-import graft.sink.UpsertSink
+import graft.sink.SnapshotParquetSink
 
 /** Where to start execution (R17/R18): the stream's beginning, or a replay
   * point for backfill (`startExecutionFrom` InputStart / AtTime,
@@ -32,7 +32,7 @@ final case class CdcStreamSpec(
     inputDir: String,
     checkpointDir: String,
     table: TableSpec,
-    sink: UpsertSink,
+    sink: SnapshotParquetSink,
     triggerInterval: String = "1 second", // R16 outputInterval (minutes in prod)
     logicalDeletes: Boolean = false,
     startFrom: StartFrom = StartFrom.InputStart,

@@ -3,12 +3,12 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
-import graft.sink.UpsertSink
+import graft.sink.SnapshotParquetSink
 
 /** Continuously-maintained materialized JOIN view — the join companion to
   * [[MaterializedAgg]]'s incremental-view-maintenance pattern: an
   * append-only fact stream is enriched against a dimension and upserted
-  * into an [[UpsertSink]] keyed by the fact id. Work per micro-batch is
+  * into a [[SnapshotParquetSink]] keyed by the fact id. Work per micro-batch is
   * proportional to the NEW fact rows (each batch joins only its own rows;
   * the dimension broadcasts), never to the accumulated view.
   *
@@ -29,7 +29,7 @@ object MaterializedJoin {
     * place if a later batch re-delivers the fact after the dim arrives).
     */
   def startStreamStatic(facts: DataFrame, dim: () => DataFrame, joinKey: String,
-      factId: String, sink: UpsertSink, checkpoint: String,
+      factId: String, sink: SnapshotParquetSink, checkpoint: String,
       trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
     facts.writeStream
       .outputMode(OutputMode.Append())

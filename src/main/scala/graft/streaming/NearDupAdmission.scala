@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import graft.llm.{Dedup, MinHashAggregator}
-import graft.sink.{DeleteMode, UpsertSink}
+import graft.sink.{DeleteMode, SnapshotParquetSink}
 
 /** Continuous near-duplicate admission — the streaming composition of
   * [[graft.llm.Dedup.incrementalLshCandidates]]: every micro-batch of
@@ -39,7 +39,7 @@ object NearDupAdmission {
     * batch's matching band quadratic against it — the excision is logged
     * per batch by [[graft.llm.Dedup.capBuckets]], never silent.
     */
-  def start(docs: DataFrame, bandStore: UpsertSink, sigStore: UpsertSink,
+  def start(docs: DataFrame, bandStore: SnapshotParquetSink, sigStore: SnapshotParquetSink,
       checkpoint: String, onBatch: (DataFrame, Long) => Unit,
       idCol: String = "doc_id", textCol: String = "text",
       maxBucket: Option[Int] = None,
@@ -61,7 +61,7 @@ object NearDupAdmission {
           // (IO, corrupt file) must propagate — silently falling back to
           // within-batch candidates would admit every near-dup of the
           // standing corpus with zero signal (the no-silent-caps contract)
-          def readStore(s: UpsertSink, cols: Seq[String]): Option[DataFrame] =
+          def readStore(s: SnapshotParquetSink, cols: Seq[String]): Option[DataFrame] =
             try Some(s.read(spark, DeleteMode.Hard).select(cols.map(col): _*))
             catch {
               case e: RuntimeException

@@ -302,6 +302,37 @@ class BloomSnapshotSpec extends SparkSpec {
       .filter($"ext" === "z999").count() == 1L)
   }
 
+  test("one sidecar builder: backfill compact and rebucket write a merge's sidecar bytes") {
+    // some null ext values too: a null sets no bit on any build path
+    val batch = spark.range(3000).select(col("id"), lit(0L).as("seq"),
+      when(col("id") % 50 =!= 0, concat(lit("e"), col("id"))).as("ext"),
+      lit(false).as("is_delete"))
+    def sidecars(dir: String, v: Long): Map[(Int, String), Seq[Byte]] =
+      SnapshotParquetSink.manifestBlooms(dir, v).toSeq.flatMap { case (b, cols) =>
+        cols.toSeq.map { case (c, (ddl, rel)) =>
+          (b, ddl) -> java.nio.file.Files.readAllBytes(
+            java.nio.file.Paths.get(s"$dir/$rel")).toSeq
+        }
+      }.toMap
+    // the reference: a bloom-declared merge of the rows at 8 buckets
+    val mDir = tmpDir("bloom1_m") + "/t"
+    new SnapshotParquetSink(mDir, nBuckets = 8, bloomCols = Seq("ext"))
+      .merge(batch, Seq("id"), "seq", "is_delete")
+    val want = sidecars(mDir, 0L)
+    assert(want.size == 8)
+    // backfill: a plain load, then one compact through a bloom handle
+    val cDir = tmpDir("bloom1_c") + "/t"
+    new SnapshotParquetSink(cDir, nBuckets = 8).merge(batch, Seq("id"), "seq", "is_delete")
+    val cv = new SnapshotParquetSink(cDir, nBuckets = 8, bloomCols = Seq("ext")).compact(spark)
+    assert(sidecars(cDir, cv) == want)
+    // rebucket: the same rows loaded at 4 buckets, re-routed to 8
+    val rDir = tmpDir("bloom1_r") + "/t"
+    val r = new SnapshotParquetSink(rDir, nBuckets = 4, bloomCols = Seq("ext"))
+    r.merge(batch, Seq("id"), "seq", "is_delete")
+    val rv = r.rebucket(spark, 8)
+    assert(sidecars(rDir, rv) == want)
+  }
+
   test("forTable and SQL writes preserve the bloom layout") {
     val dir = tmpDir("bloomsql") + "/t"
     new SnapshotParquetSink(dir, nBuckets = 8, bloomCols = Seq("ext"))

@@ -6,7 +6,7 @@ import graft.sink.{DeleteMode, SnapshotParquetSink}
 /** The commit dedup/fold shape is picked per commit from the manifest's
   * own bucket sizes (guide §2.5): the fused one-exchange shape sorts each
   * affected bucket in ONE task, so a bucket past
-  * `spark.graft.commit.fusedMaxBucketBytes` must trip the guard and run
+  * `SnapshotParquetSink.fusedMaxBucketBytes` must trip the guard and run
   * the key-granularity two-exchange shape instead — same merged state,
   * same one-file-per-bucket layout, parallel dedup.
   */
@@ -42,8 +42,7 @@ class CommitSkewGuardSpec extends SparkSpec {
     // hot table: a 1-byte threshold makes every stored bucket "hot" — the
     // second commit (the first with stored state) must fall back
     val hotDir = tmpDir("skew_hot") + "/t"
-    spark.conf.set("spark.graft.commit.fusedMaxBucketBytes", "1")
-    try {
+    withFusedMaxBucketBytes(1L) {
       val hot = new SnapshotParquetSink(hotDir, nBuckets = 2)
       hot.merge(batch(rows: _*), Seq("primary_key"), "seq", "is_delete")
       // first commit: no stored entries yet, trivially fused
@@ -57,7 +56,7 @@ class CommitSkewGuardSpec extends SparkSpec {
       // fallback re-asserts the layout shuffle above the dedup)
       assert(filesPerBucket(hotDir).nonEmpty &&
         filesPerBucket(hotDir).forall(_ == 1))
-    } finally spark.conf.unset("spark.graft.commit.fusedMaxBucketBytes")
+    }
   }
 
   test("mergeFold under the skew fallback folds correctly and keeps layout") {
@@ -73,8 +72,7 @@ class CommitSkewGuardSpec extends SparkSpec {
         .withColumn("__is_deleted", lit(false))
     sink.mergeFold(delta(("a", 1L, 0L), ("b", 2L, 0L)), Seq("k"), "seq",
       "__del", None)(foldReduce)
-    spark.conf.set("spark.graft.commit.fusedMaxBucketBytes", "1")
-    try {
+    withFusedMaxBucketBytes(1L) {
       sink.mergeFold(delta(("a", 10L, 1L), ("c", 5L, 1L)), Seq("k"), "seq",
         "__del", Some(0L))(foldReduce)
       assert(sink.lastCommitFusedShape.contains(false))
@@ -82,6 +80,6 @@ class CommitSkewGuardSpec extends SparkSpec {
         .map(r => r.getAs[String]("k") -> r.getAs[Long]("n")).toMap
       assert(got == Map("a" -> 11L, "b" -> 2L, "c" -> 5L))
       assert(filesPerBucket(dir).forall(_ == 1))
-    } finally spark.conf.unset("spark.graft.commit.fusedMaxBucketBytes")
+    }
   }
 }

@@ -40,6 +40,17 @@ class ExtensionsSpec extends AnyFunSuite {
           |""".stripMargin).head
       assert(probes.getBoolean(0))
       assert(!probes.getBoolean(1))
+      // BloomPrune's production shape (a literal filter probed by a column)
+      // must compile: with the codegen fallback off, a janino failure
+      // throws instead of silently running interpreted
+      s2.conf.set("spark.sql.codegen.fallback", "false")
+      try {
+        val big = s2.range(1000).toDF("id")
+        val small = s2.range(0, 1000, 7).toDF("k")
+        assert(graft.engine.BloomPrune.semiFilter(big, big("id"), small, small("k"), 1000L)
+          .count() >= 143L)
+        assert(graft.engine.BloomPrune.prunedJoin(big, small, "id", "k", 1000L).count() == 143L)
+      } finally s2.conf.unset("spark.sql.codegen.fallback")
       // codegen hamming: distance, zero, and the unequal-length null
       val h = s2.sql(
         "SELECT hamming('abcdef', 'abXdeY') AS d, hamming('a', 'a') AS z, " +

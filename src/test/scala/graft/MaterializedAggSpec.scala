@@ -170,18 +170,14 @@ class MaterializedAggSpec extends SparkSpec
       }
       if (distributed) withLocalDiffOff(body) else body
     }
-    sys.props("graft.ivm.rebuildDirtyFraction") = "2.0"
-    try {
+    try withBulkGateOff {
       val small = run("arms_small", distributed = false)
       val planned = run("arms_dist", distributed = true)
       assert(small.size == planned.size)
       small.zip(planned).zipWithIndex.foreach { case ((a, b), i) =>
         assert(a == b, s"step $i differs between the arms")
       }
-    } finally {
-      sys.props.remove("graft.ivm.rebuildDirtyFraction")
-      sys.props("graft.ivm.forceRegime") = "fold"
-    }
+    } finally sys.props("graft.ivm.forceRegime") = "fold"
   }
 
   test("a small recompute refresh merges a driver-local delta: no probe job") {
@@ -189,8 +185,7 @@ class MaterializedAggSpec extends SparkSpec
     src.merge(rows((1, "a", 10, 1), (2, "b", 20, 2), (3, "c", 5, 3)), Seq("id"), "seq", "__del")
     m.refresh(spark)
     sys.props("graft.ivm.forceRegime") = "recompute"
-    sys.props("graft.ivm.rebuildDirtyFraction") = "2.0"
-    try {
+    try withBulkGateOff {
       src.merge(rows((2, "a", 7, 4)), Seq("id"), "seq", "__del")
       assert(jobDescriptionsDuring { assert(m.refresh(spark) == Some(1L)) }
         .count(_ == "commit:probe") == 0)
@@ -201,10 +196,7 @@ class MaterializedAggSpec extends SparkSpec
           .count(_ == "commit:probe") >= 1)
       }
       assert(maintained(m) == direct(src))
-    } finally {
-      sys.props.remove("graft.ivm.rebuildDirtyFraction")
-      sys.props("graft.ivm.forceRegime") = "fold"
-    }
+    } finally sys.props("graft.ivm.forceRegime") = "fold"
   }
 
   test("a group whose last row is deleted vanishes from the aggregate") {
@@ -390,8 +382,19 @@ class MaterializedAggSpec extends SparkSpec
 
   test("a vacuumed diff base self-heals: full rebuild, vanished groups tombstoned") {
     val (src, m) = mk("vac")
+    // a keyed twin (groups ⊇ the source's merge keys) over the same source
+    val keyed = new MaterializedAgg(src,
+      new SnapshotParquetSink(tmpDir("magg_vac_keyed"), nBuckets = 4), Seq("id", "grp"),
+      Seq(count(lit(1)).as("n"), sum(col("v")).as("sv")))
+    def keyedRows(df: DataFrame): Set[(Int, String, Long, Long)] =
+      df.select("id", "grp", "n", "sv").collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
+    def keyedDirect: Set[(Int, String, Long, Long)] =
+      keyedRows(src.read(spark, DeleteMode.Hard).groupBy("id", "grp")
+        .agg(count(lit(1)).as("n"), sum(col("v")).as("sv")))
     src.merge(rows((1, "a", 10, 1), (2, "b", 20, 2)), Seq("id"), "seq", "__del")
     m.refresh(spark) // applied = v0
+    keyed.refresh(spark)
     // the view lags while the source advances THREE versions — group b
     // vanishes entirely — and retention drops v0, the view's diff base
     src.merge(rows((3, "c", 7, 3)), Seq("id"), "seq", "__del")
@@ -405,10 +408,19 @@ class MaterializedAggSpec extends SparkSpec
     // the vanished group is a logical delete in the view's history
     val logical = m.sink.read(spark, DeleteMode.Logical)
     assert(logical.filter(col("grp") === "b" && col("is_deleted")).count() == 1)
+    // the keyed view heals the same way: one full recompute, and the
+    // deleted key's group tombstoned
+    assert(keyed.refresh(spark) == Some(3L))
+    assert(keyedRows(keyed.read(spark)) == keyedDirect)
+    assert(keyedDirect == Set((1, "a", 1L, 11L), (3, "c", 1L, 7L)))
+    assert(keyed.sink.read(spark, DeleteMode.Logical)
+      .filter(col("id") === 2 && col("is_deleted")).count() == 1)
     // subsequent refreshes are incremental again
     src.merge(rows((4, "c", 1, 6)), Seq("id"), "seq", "__del")
     assert(m.refresh(spark) == Some(4L))
     assert(maintained(m) == direct(src))
+    assert(keyed.refresh(spark) == Some(4L))
+    assert(keyedRows(keyed.read(spark)) == keyedDirect)
   }
 
   test("aggregate names must be aliased and collision-free") {
@@ -588,11 +600,10 @@ class MaterializedAggSpec extends SparkSpec
     // them into the rescan's semi join; past the cap it must fall back to
     // an UNHINTED join (a forced broadcast of an unbounded risk frame is a
     // driver OOM, not a plan). The cap is far beyond a spec's budget, so
-    // shrink it to 0 via the test knob and re-run the canonical at-risk
+    // shrink it to 0 via the test hook and re-run the canonical at-risk
     // shape — every risk group now takes the fallback, which must land
     // the same exact state as the broadcast path.
-    sys.props("graft.ivm.riskCap") = "0"
-    try {
+    withCollectCap(0) {
       val (src, m) = mk("fcap")
       src.merge(rows((1, "a", 10, 1), (2, "a", 20, 2), (3, "a", 30, 3),
         (4, "b", 7, 4)), Seq("id"), "seq", "__del")
@@ -606,7 +617,7 @@ class MaterializedAggSpec extends SparkSpec
       m.refresh(spark)
       assert(maintained(m) == direct(src))
       assert(maintained(m).find(_._1 == "a").get._5 == 20L)
-    } finally { sys.props.remove("graft.ivm.riskCap"); () }
+    }
   }
 
   test("fold regime: a removed value TYING the extremum rescans (multiplicity is unknowable)") {

@@ -228,8 +228,7 @@ class MaterializedJoinSpec extends SparkSpec {
     // route this tiny dim's advance to the rebuild arm, which is
     // legitimately hinted.)
     d.merge(dims(("a", "Acme Corp", 5)), Seq("ck"), "seq", "__ddel")
-    sys.props("graft.ivm.rebuildDirtyFraction") = "2.0"
-    try {
+    withBulkGateOff {
       withLocalDiffOff {
         assert(jobDescriptionsDuring { assert(m.refresh(spark).isDefined) }
           .count(_ == "commit:probe") >= 1, "distributed dim-driven advance must probe")
@@ -239,7 +238,7 @@ class MaterializedJoinSpec extends SparkSpec {
       d.merge(dims(("a", "Acme Inc", 6)), Seq("ck"), "seq", "__ddel")
       assert(jobDescriptionsDuring { assert(m.refresh(spark).isDefined) }
         .count(_ == "commit:probe") == 0, "small dim-driven advance must not probe")
-    } finally sys.props.remove("graft.ivm.rebuildDirtyFraction")
+    }
     assert(maintained(m) == direct(f, d, "left_outer"))
   }
 
@@ -319,8 +318,7 @@ class MaterializedJoinSpec extends SparkSpec {
       }
       if (distributed) withLocalDiffOff(body) else body
     }
-    sys.props("graft.ivm.rebuildDirtyFraction") = "2.0"
-    try {
+    withBulkGateOff {
       for (jt <- Seq("left_outer", "inner")) {
         val small = run(s"arms_small_$jt", jt, distributed = false)
         val planned = run(s"arms_dist_$jt", jt, distributed = true)
@@ -329,7 +327,7 @@ class MaterializedJoinSpec extends SparkSpec {
           assert(a == b, s"$jt: step $i differs between the arms")
         }
       }
-    } finally sys.props.remove("graft.ivm.rebuildDirtyFraction")
+    }
   }
 
   test("a dim key fanning out past the collect cap takes the distributed arm") {
@@ -338,9 +336,7 @@ class MaterializedJoinSpec extends SparkSpec {
     f.merge(facts((0 until 20).map(i => (i, if (i < 12) "a" else "b", i.toLong, 1L)): _*),
       Seq("id"), "seq", "__fdel")
     m.refresh(spark)
-    sys.props("graft.ivm.rebuildDirtyFraction") = "2.0"
-    sys.props("graft.ivm.riskCap") = "5"
-    try {
+    withBulkGateOff(withCollectCap(5) {
       // 12 facts reference "a": past the cap of 5, the distributed arm runs
       d.merge(dims(("a", "Acme Corp", 3)), Seq("ck"), "seq", "__ddel")
       assert(jobDescriptionsDuring { assert(m.refresh(spark).isDefined) }
@@ -352,10 +348,7 @@ class MaterializedJoinSpec extends SparkSpec {
       assert(jobDescriptionsDuring { assert(m.refresh(spark).isDefined) }
         .count(_ == "commit:probe") == 0, "a small delta under the cap must not probe")
       assert(maintained(m) == direct(f, d, "left_outer"))
-    } finally {
-      sys.props.remove("graft.ivm.riskCap")
-      sys.props.remove("graft.ivm.rebuildDirtyFraction")
-    }
+    })
   }
 
   test("version pairs pack monotonically and round-trip") {

@@ -288,6 +288,47 @@ class SnapshotCatalogSpec extends SparkSpec {
     }
   }
 
+  test("graft-catalog routes and prunes like graft-snapshot: clustered and bloom members") {
+    import org.apache.spark.sql.functions._
+    val dir = tmpDir("catroute") + "/c"
+    val cat = new SnapshotCatalog(dir)
+    // a member Z-order-clustered on its key: routing ignores the key hash
+    new SnapshotParquetSink(s"$dir/zc", nBuckets = 16,
+      clusterBy = Seq(SnapshotParquetSink.ClusterCol("id", 0L, 1000L)))
+      .merge(spark.range(1000).select(col("id"), lit(0L).as("seq"),
+        lit(false).as("is_delete")), Seq("id"), "seq", "is_delete")
+    new SnapshotParquetSink(s"$dir/bf", nBuckets = 8, bloomCols = Seq("ext"))
+      .merge(spark.range(512).select(col("id"), lit(0L).as("seq"),
+        concat(lit("e"), col("id")).as("ext"), lit(false).as("is_delete")),
+        Seq("id"), "seq", "is_delete")
+    cat.commitCurrent(Seq("zc", "bf"))
+    def viaCatalog(t: String) = spark.read.format("graft-catalog").option("table", t).load(dir)
+    def viaSnapshot(t: String) = spark.read.format("graft-snapshot").option("asOf", 0L)
+      .load(s"$dir/$t")
+    def planned(df: DataFrame): Seq[String] =
+      df.queryExecution.executedPlan.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          b.scan match {
+            case f: org.apache.spark.sql.execution.datasources.v2.FileScan =>
+              f.fileIndex.inputFiles.toSeq
+          }
+      }.flatten.sorted
+    assert(viaCatalog("zc").count() == 1000L)
+    val hit = viaCatalog("zc").filter($"id" === 777L)
+    assert(hit.select("id").collect().map(_.getLong(0)).toSeq == Seq(777L),
+      "a key equality on a clustered member must route by its cluster spec")
+    assert(planned(hit).size == 1)
+    assert(planned(hit) == planned(viaSnapshot("zc").filter($"id" === 777L)))
+    // a batched point lookup routes each value through the same spec
+    val batch = viaCatalog("zc").filter($"id".isin(3L, 777L))
+    assert(batch.count() == 2L)
+    assert(planned(batch).size == 2)
+    val ext = viaCatalog("bf").filter($"ext" === "e37")
+    assert(ext.count() == 1L)
+    assert(planned(ext).size < 8, "bloom sidecars must prune catalog reads")
+    assert(planned(ext) == planned(viaSnapshot("bf").filter($"ext" === "e37")))
+  }
+
   test("retainedVersions + vacuum: pinned table versions are reported; history expires") {
     val cat = new SnapshotCatalog(tmpDir("cat") + "/c")
     val a = cat.table("a", 2)

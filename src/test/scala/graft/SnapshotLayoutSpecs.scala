@@ -15,7 +15,7 @@ trait SnapshotLayoutFixtures extends SparkSpec {
   protected def batch(rows: (String, Long, String, Boolean)*): DataFrame =
     rows.toSeq.toDF("primary_key", "seq", "val", "is_delete")
 
-  protected def state(sink: graft.sink.UpsertSink, mode: DeleteMode): Map[String, (Long, String)] =
+  protected def state(sink: SnapshotParquetSink, mode: DeleteMode): Map[String, (Long, String)] =
     sink.read(spark, mode).collect()
       .map(r => r.getAs[String]("primary_key") ->
         (r.getAs[Long]("seq"), r.getAs[String]("val"))).toMap

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.GraftSession
+import graft.sink.{MaterializedAgg, SnapshotParquetSink}
 
 /** Shared session for all suites (one per JVM; sbt forks a single test JVM). */
 trait SparkSpec extends AnyFunSuite {
@@ -28,16 +29,45 @@ trait SparkSpec extends AnyFunSuite {
     if (crc.exists()) assert(crc.delete())
   }
 
+  /** Runs `f` with a package-private tuning hook set to `value`, then
+    * restores the prior value.
+    */
+  private def withHook[T, A](get: => T, value: T)(set: T => Unit)(f: => A): A = {
+    val prior = get
+    set(value)
+    try f
+    finally set(prior)
+  }
+
   /** Runs `f` with the sink's driver-local keyed diff turned off
     * ([[graft.sink.SnapshotParquetSink.localDiffMaxBytes]] at −1), so every
-    * refresh and change feed takes the distributed arm; then restores it.
+    * refresh and change feed takes the distributed arm.
     */
-  def withLocalDiffOff[A](f: => A): A = {
-    val prior = graft.sink.SnapshotParquetSink.localDiffMaxBytes
-    graft.sink.SnapshotParquetSink.localDiffMaxBytes = -1L
-    try f
-    finally graft.sink.SnapshotParquetSink.localDiffMaxBytes = prior
-  }
+  def withLocalDiffOff[A](f: => A): A =
+    withHook(SnapshotParquetSink.localDiffMaxBytes, -1L)(
+      SnapshotParquetSink.localDiffMaxBytes = _)(f)
+
+  /** Runs `f` with the IVM bulk gate unreachable
+    * ([[graft.sink.MaterializedAgg.rebuildDirtyFraction]] at 2), so a
+    * refresh of a small table stays incremental however many buckets
+    * changed.
+    */
+  def withBulkGateOff[A](f: => A): A =
+    withHook(MaterializedAgg.rebuildDirtyFraction, 2.0)(
+      MaterializedAgg.rebuildDirtyFraction = _)(f)
+
+  /** Runs `f` with the refreshes' driver collect cap
+    * ([[graft.sink.MaterializedAgg.collectCap]]) at `n` rows.
+    */
+  def withCollectCap[A](n: Int)(f: => A): A =
+    withHook(MaterializedAgg.collectCap, n)(MaterializedAgg.collectCap = _)(f)
+
+  /** Runs `f` with the commit's fused-shape skew threshold
+    * ([[graft.sink.SnapshotParquetSink.fusedMaxBucketBytes]]) at `n` bytes.
+    */
+  def withFusedMaxBucketBytes[A](n: Long)(f: => A): A =
+    withHook(SnapshotParquetSink.fusedMaxBucketBytes, n)(
+      SnapshotParquetSink.fusedMaxBucketBytes = _)(f)
 
   /** Job descriptions ([[graft.engine.JobTag]]) observed while `f` runs —
     * pins probe-skip/job-count claims against the scheduler rather than

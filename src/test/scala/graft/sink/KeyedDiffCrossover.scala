@@ -35,7 +35,8 @@ object KeyedDiffCrossover {
       concat(lit("customer-"), col("id").cast("string")).as("cname"),
       lit(1L).as("seq"), lit(false).as("is_del"))
     val prior = SnapshotParquetSink.localDiffMaxBytes
-    sys.props("graft.ivm.rebuildDirtyFraction") = "2.0"
+    val priorFraction = MaterializedAgg.rebuildDirtyFraction
+    MaterializedAgg.rebuildDirtyFraction = 2.0
     sys.props("graft.ivm.forceRegime") = "recompute"
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime()
@@ -87,7 +88,7 @@ object KeyedDiffCrossover {
         }.mkString)
     } finally {
       SnapshotParquetSink.localDiffMaxBytes = prior
-      sys.props.remove("graft.ivm.rebuildDirtyFraction")
+      MaterializedAgg.rebuildDirtyFraction = priorFraction
       sys.props.remove("graft.ivm.forceRegime")
     }
     spark.stop()
