@@ -124,9 +124,9 @@ object BenchIvmScale {
       // two rounds — the slack is part of the claim and stated with it).
       def timedRefresh(v: graft.sink.MaterializedAgg,
           force: Option[String]): Double = {
-        force.foreach(sys.props("graft.ivm.forceRegime") = _)
+        graft.sink.MaterializedAgg.forcedRegime = force
         try timed(v.refresh(spark))._2
-        finally { force.foreach(_ => sys.props.remove("graft.ivm.forceRegime")); () }
+        finally graft.sink.MaterializedAgg.forcedRegime = None
       }
       var refreshSec = timedRefresh(m, None)
       val regime = m.lastRefreshRegime.getOrElse("none")

@@ -113,9 +113,11 @@ final class MaterializedAgg(
   require(aggs.nonEmpty, "materialized aggregate needs aggregate columns")
 
   /** Telemetry: which maintenance regime the last [[refresh]] ran —
-    * "initial" (first build), "delta" (pure arithmetic fold), "recompute"
-    * (dirty-group rescan), None before any refresh. Tests assert the delta
-    * fast path actually engages for SUM/COUNT views.
+    * "initial" (first build), "delta" (pure arithmetic fold), "fold"
+    * (extremum-aware fold of MIN/MAX views), "recompute" (dirty-group
+    * rescan), None before any refresh. Tests assert the delta fast path
+    * actually engages for SUM/COUNT views; the IVM scale bench and
+    * perfbench's `fold_share` count "fold".
     */
   @volatile var lastRefreshRegime: Option[String] = None
 
@@ -424,8 +426,7 @@ final class MaterializedAgg(
             if (sys.props.contains("graft.ivm.debug"))
               System.err.println(s"[pick] estFold=$estFold (bucket+" +
                 s"$fixedEquiv fixed) estRecompute=$estRecompute")
-            val forced = sys.props.get("graft.ivm.forceRegime") // bench/test twin knob
-            val pickFold = forced match {
+            val pickFold = MaterializedAgg.forcedRegime match {
               case Some("fold")      => true
               case Some("recompute") => false
               case _                 => estFold < estRecompute
@@ -588,8 +589,8 @@ final class MaterializedAgg(
     *   2. one GROUP BY over the signed rows yields per-group deltas:
     *      Δrows = Σw, Δsum = Σ(±input), Δnn = Σ(w · input-not-null),
     *      Δcount = Σ(w · counted).
-    *   3. the delta batch ships to [[SnapshotParquetSink.mergeFold]],
-    *      which COMBINES matching keys inside the affected-bucket rewrite
+    *   3. the delta batch ships to [[SnapshotParquetSink.merge]] with a
+    *      `fold`, which COMBINES matching keys inside the affected-bucket rewrite
     *      the commit already pays (stored rows re-encode as addable parts;
     *      everything is a commutative integer monoid): a group whose
     *      `__rows` reaches 0 folds to a logical delete; a SUM whose `__nn`
@@ -663,7 +664,7 @@ final class MaterializedAgg(
     // the delta batch, DELTA-ENCODED in the stored schema: sums carry the
     // raw signed delta (never null — coalesced to 0), counters carry their
     // deltas. The fold with the stored values happens INSIDE the merge's
-    // affected-bucket rewrite (mergeFold) — the commit's own read is the
+    // affected-bucket rewrite (merge's fold) — the commit's own read is the
     // only read, so NOTHING here is proportional to the view, let alone
     // the source. Persisted: merge walks the batch several times.
     // groups whose contributions FULLY CANCEL (only unchanged keys, or
@@ -721,9 +722,8 @@ final class MaterializedAgg(
               col("__seq_f").as("seq"), col("__gen_f").as("__gen")): _*)
     }
     try {
-      if (sys.props.contains("graft.ivm.debug")) dbg("materialize")(delta.count())
-      dbg("mergeFold")(
-        sink.mergeFold(delta, groupCols, "seq", "__del", Some(applied))(foldReduce))
+      dbg("merge")(sink.merge(delta, groupCols, "seq", "__del",
+        fold = Some(foldReduce), requireBaseSeq = Some(applied)))
       Some(srcV)
     } catch {
       case _: SnapshotParquetSink.FoldBaseConflict =>
@@ -759,7 +759,7 @@ final class MaterializedAgg(
     *      group's extremum) recompute from the source snapshot restricted
     *      to them — the only O(source-scan) step, skipped entirely when
     *      the at-risk set is empty.
-    *   4. one guarded merge ([[SnapshotParquetSink.mergeGuardedHinted]]) ships
+    *   4. one guarded, probe-hinted [[SnapshotParquetSink.merge]] ships
     *      the ABSOLUTE folded rows; a concurrent refresher moving the
     *      applied head throws FoldBaseConflict and this refresh re-reads
     *      and retries (same protocol as the delta regime).
@@ -962,14 +962,12 @@ final class MaterializedAgg(
       val materialized = batch
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        if (sys.props.contains("graft.ivm.debug")) dbg("materialize")(materialized.count())
         // probe hint: every dirty group appears in the batch (safe covers
         // all of deltas, rec replaces the at-risk subset), so the affected
         // agg buckets are exactly the dirty-bucket probe's result and the
         // applied head is the stamped srcV — the merge skips its probe job
-        dbg("mergeFold")(
-          sink.mergeGuardedHinted(materialized, groupCols, "seq", "__del",
-            Some(applied), dirtyBuckets.toArray.sorted, Some(srcV)))
+        dbg("merge")(sink.merge(materialized, groupCols, "seq", "__del",
+          requireBaseSeq = Some(applied), probeHint = Some((dirtyBuckets.toArray, srcV))))
         Some(srcV)
       } catch {
         case _: SnapshotParquetSink.FoldBaseConflict =>
@@ -1141,6 +1139,12 @@ object MaterializedAgg {
     * A var only so specs can keep small tables' refreshes incremental.
     */
   @volatile private[graft] var rebuildDirtyFraction: Double = 0.5
+
+  /** Pins the extremum-view regime pick to "fold" or "recompute" instead of
+    * the cost model (None). A var only so specs and the IVM scale bench can
+    * run both regimes over the same history.
+    */
+  @volatile private[graft] var forcedRegime: Option[String] = None
 
   /** The IVM bulk gate (manifest-only): at least [[rebuildDirtyFraction]]
     * of the table's buckets changed between the two versions, so most of

@@ -146,30 +146,27 @@ final class MaterializedJoin(
         // and tombstones vanished keys). Steady micro-advances keep the
         // O(changed) path.
         //
-        // metadata-derived probe hint ([[SnapshotParquetSink.mergeHinted]]):
-        // the view is keyed by the FACT keys, so when the view sink shares
-        // the fact table's hash routing (same bucket count, no Z-order
-        // spec; key types are the fact's stored types end to end), every
-        // delta row lands in the view bucket its fact key occupies in the
-        // fact table — each arm below knows that set from manifests alone:
+        // metadata-derived probe hint (`probeHint` of
+        // [[SnapshotParquetSink.merge]]): the view is keyed by the FACT
+        // keys, so when the view sink shares the fact table's routing
+        // ([[SnapshotParquetSink.sharesRouting]]; key types are the fact's
+        // stored types end to end), every delta row lands in the view
+        // bucket its fact key occupies in the fact table — each arm below
+        // knows that set from manifests alone:
         // full builds touch at most fact-manifest ∪ view-manifest buckets
         // (recompute ∪ tombstones), a dim-quiet advance at most the fact
         // buckets whose files changed. The dim-driven arm fans out to
         // facts in ANY bucket — it keeps the probing merge. A wrong hint
         // cannot corrupt: the sink aborts pre-publish (ProbeHintMismatch)
         // and the refresh retries unhinted.
-        val routingShared = sink.isHashRouted &&
-          sink.bucketCount == SnapshotParquetSink.manifest(fact.dir, fv)._1 &&
-          SnapshotParquetSink.manifestCluster(fact.dir, fv).isEmpty
+        val routingShared = sink.sharesRouting(fact.dir, fv, fKeys)
         def fullHint: Option[Array[Int]] =
-          if (!routingShared) None
-          else Some((SnapshotParquetSink.manifest(fact.dir, fv)._2.keySet ++
+          Option.when(routingShared)((SnapshotParquetSink.manifest(fact.dir, fv)._2.keySet ++
             sink.currentVersion
               .map(v => SnapshotParquetSink.manifest(sink.dir, v)._2.keySet)
-              .getOrElse(Set.empty[Int])).toArray.sorted)
+              .getOrElse(Set.empty[Int])).toArray)
         def changedFactHint(afv: Long): Option[Array[Int]] =
-          if (!routingShared) None
-          else Some(SnapshotParquetSink.changedBuckets(fact.dir, afv, fv).toArray.sorted)
+          Option.when(routingShared)(SnapshotParquetSink.changedBuckets(fact.dir, afv, fv).toArray)
         // the delta, its probe hint, and whether both diffs came back
         // driver-local (the delta is then collected when it is small)
         val (delta, hint, local) = applied match {
@@ -244,16 +241,13 @@ final class MaterializedJoin(
               SnapshotParquetSink.localFrame(spark, stamped.schema,
                 stamped.queryExecution.toRdd.map(_.copy()).collect().toSeq)
             else stamped
-          hint match {
-            case Some(bs) =>
-              try sink.mergeHinted(batch, fKeys, "__vseq", "__del", bs, Some(pack(fv, dv)))
-              catch {
-                case _: SnapshotParquetSink.ProbeHintMismatch =>
-                  // staged write deleted, nothing published — replay with
-                  // the probing merge (idempotent LWW)
-                  sink.merge(batch, fKeys, "__vseq", "__del")
-              }
-            case None => sink.merge(batch, fKeys, "__vseq", "__del")
+          try sink.merge(batch, fKeys, "__vseq", "__del",
+            probeHint = hint.map((_, pack(fv, dv))))
+          catch {
+            case _: SnapshotParquetSink.ProbeHintMismatch =>
+              // staged write deleted, nothing published — replay with
+              // the probing merge (idempotent LWW)
+              sink.merge(batch, fKeys, "__vseq", "__del")
           }
           Some((fv, dv))
         } finally {

@@ -461,16 +461,28 @@ object SnapshotParquetSink {
     (z >> (zBits - log2n)).toInt
   }
 
-  /** A fold-merge lost its optimistic base check ([[SnapshotParquetSink
-    * .mergeFold]]): the table's applied head moved while the delta was in
-    * flight. The delta is NOT applied; recompute it against the current
-    * head and retry.
+  /** A guarded merge lost its optimistic base check (`requireBaseSeq` of
+    * [[SnapshotParquetSink.merge]]): the table's applied head moved while
+    * the batch was in flight. The batch is NOT applied; recompute it
+    * against the current head and retry.
     */
   final case class FoldBaseConflict(tableDir: String, expected: Long,
       found: Option[Long]) extends RuntimeException(
     s"fold-merge base conflict at $tableDir: delta computed against applied " +
       s"head $expected but the table records $found — recompute against the " +
       "current head and retry")
+
+  /** A staged rewrite: the commit root `data/<commitId>` written against
+    * `base`, the buckets it holds, the written frame's schema and the
+    * manifest lines derived from its files — computed once and republished
+    * unchanged across rebase attempts.
+    */
+  private final case class Written(base: Option[Long], commitId: String,
+      buckets: Array[Int], schema: StructType, stats: Seq[String],
+      blooms: Seq[String]) {
+    def entries: Seq[(Int, String)] =
+      buckets.toSeq.map(b => b -> s"data/$commitId/__bucket=$b")
+  }
 
   /** A hinted merge wrote a bucket dir its hint never declared — the
     * caller's affected-bucket precomputation is wrong (publishing would
@@ -621,6 +633,7 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     statsCols: Seq[String] = Nil,
     clusterBy: Seq[SnapshotParquetSink.ClusterCol] = Nil,
     bloomCols: Seq[String] = Nil) {
+  import SnapshotParquetSink.Written
 
   statsCols.foreach(SnapshotParquetSink.validManifestName("stats"))
   bloomCols.foreach(SnapshotParquetSink.validManifestName("bloom"))
@@ -643,6 +656,14 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
   }
 
   private def manifestsDir: HPath = SnapshotParquetSink.manifestsDir(dir)
+
+  private val dbg = new graft.engine.Dbg("graft.commit.debug", "[commit]")
+
+  /** One commit phase: timed under `graft.commit.debug`, its jobs tagged
+    * `commit:<tag>`.
+    */
+  private def phase[A](spark: SparkSession, tag: String)(f: => A): A =
+    dbg(tag)(graft.engine.JobTag(spark, s"commit:$tag")(f))
   private def manifestPath(v: Long): HPath = SnapshotParquetSink.manifestPath(dir, v)
 
   /** `s <bucket> <col> <min> <max>` lines for the freshly-written commit
@@ -775,54 +796,28 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     * streams the same rows — no re-read of fresh files, no extra jobs (the
     * pre-fusion build cost 1.5–2.1× of the plain commit; the bar is ≤1.2×).
     * The driver then only decodes the observed map and writes the sidecar
-    * files (concurrent, I/O-bound — same publication as before).
+    * files (concurrent, I/O-bound — same publication as before). Returns
+    * the write frame and the sidecar writer: call it with the commit id
+    * AFTER the write action completed (the observation resolves then); it
+    * returns the sidecars' `f` manifest lines.
     *
-    * The one sidecar builder: merge and replaceAll observe this handle's
-    * `bloomCols`, compact's backfill and rebucket the columns they index.
-    * Every write frame is hash-partitioned by `__bucket`, so each bucket's
-    * words come from one task and the filters equal a re-read of the
-    * written files. compact (without a backfill) and purge copy the prior
-    * sidecars instead ([[copyBloomsInto]]).
+    * The one sidecar builder, attached by [[writeStage]]: merge and
+    * replaceAll observe this handle's `bloomCols`, compact's backfill and
+    * rebucket the columns they index. Every write frame is hash-partitioned
+    * by `__bucket`, so each bucket's words come from one task and the
+    * filters equal a re-read of the written files. compact (without a
+    * backfill) and purge copy the prior sidecars instead
+    * ([[copyBloomsInto]]).
     */
-  private final class ObservedBlooms(
-      val frame: DataFrame,
-      obs: Option[org.apache.spark.sql.Observation],
-      cols: Seq[String]) {
-    /** Sidecar files written + their `f` manifest lines; call AFTER the
-      * write action completed (the observation resolves then).
-      */
-    def lines(commitId: String,
-        schema: org.apache.spark.sql.types.StructType): Seq[String] =
-      obs.toSeq.flatMap { o =>
-        val row = o.get
-        cols.flatMap { c =>
-          val ddl = schema(c).dataType.catalogString
-          val ents = (row(s"__bf_$c") match {
-            case null => Seq.empty[(Any, Any)]
-            case m: scala.collection.Map[_, _] => m.toSeq
-          }).map { case (bk, v) =>
-            val r = v.asInstanceOf[org.apache.spark.sql.Row]
-            (bk.asInstanceOf[Int], r.getAs[Array[Byte]]("bf"))
-          }.sortBy(_._1)
-          SnapshotParquetSink.inParallel(ents) { case (b, bytes) =>
-            val rel = s"data/$commitId/__bloom/$c/$b.bf"
-            Dfs.writeBytes(new HPath(s"$dir/$rel"), bytes)
-            s"f $b $c $ddl $rel"
-          }
-        }
-      }
-  }
-
   private def observeBlooms(spark: SparkSession, toWrite: DataFrame,
-      schema: org.apache.spark.sql.types.StructType,
-      cols: Seq[String]): ObservedBlooms =
-    if (cols.isEmpty) new ObservedBlooms(toWrite, None, Nil)
+      cols: Seq[String]): (DataFrame, String => Seq[String]) =
+    if (cols.isEmpty) (toWrite, _ => Nil)
     else {
       graft.functions.GraftFunctions.register(spark)
       val aggs = cols.map { c =>
-        require(schema.fieldNames.contains(c),
+        require(toWrite.columns.contains(c),
           s"bloom column '$c' absent from the batch")
-        val ddl = schema(c).dataType.catalogString
+        val ddl = toWrite.schema(c).dataType.catalogString
         require(!ddl.exists(_.isWhitespace),
           s"bloom column '$c' has a non-atomic type ($ddl) — bloom skipping " +
             "covers atomic columns (equality on them is what gets pushed down)")
@@ -843,9 +838,25 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
           when(col(c).isNotNull, xxhash64(col(c)))))
       // the drop ABOVE the observe keeps the helper out of the written
       // files while CollectMetrics still sees it
-      new ObservedBlooms(hashed.observe(obs, aggs.head, aggs.tail: _*)
-        .drop(cols.map(c => s"__graft_bfh_$c"): _*),
-        Some(obs), cols)
+      (hashed.observe(obs, aggs.head, aggs.tail: _*)
+        .drop(cols.map(c => s"__graft_bfh_$c"): _*), commitId => {
+        val row = obs.get
+        cols.flatMap { c =>
+          val ddl = toWrite.schema(c).dataType.catalogString
+          val ents = (row(s"__bf_$c") match {
+            case null => Seq.empty[(Any, Any)]
+            case m: scala.collection.Map[_, _] => m.toSeq
+          }).map { case (bk, v) =>
+            val r = v.asInstanceOf[org.apache.spark.sql.Row]
+            (bk.asInstanceOf[Int], r.getAs[Array[Byte]]("bf"))
+          }.sortBy(_._1)
+          SnapshotParquetSink.inParallel(ents) { case (b, bytes) =>
+            val rel = s"data/$commitId/__bloom/$c/$b.bf"
+            Dfs.writeBytes(new HPath(s"$dir/$rel"), bytes)
+            s"f $b $c $ddl $rel"
+          }
+        }
+      })
     }
 
   /** Carried/copied bloom lines for a maintenance rewrite (compact, purge):
@@ -947,11 +958,21 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     */
   def bucketCount: Int = nBuckets
 
-  /** True when this handle routes by key hash (no Z-order cluster spec) —
-    * the only routing a metadata-derived probe hint can reproduce
-    * ([[mergeHinted]] callers gate on it).
+  /** Whether the table at `otherDir`, as of its `version`, routes rows
+    * exactly as this handle routes a batch merged by `keys`: hash routing on
+    * both sides (a Z-order spec routes by tile, which a metadata-derived
+    * hint cannot reproduce), the same bucket count and the same recorded
+    * keys. Then a row keeps its bucket across the two tables — provided
+    * the batch stores the key types that table stores — so that table's
+    * manifest bucket sets can serve as this sink's `probeHint`
+    * ([[merge]]). The one routing-transfer check of hinting callers.
     */
-  def isHashRouted: Boolean = clusterBy.isEmpty
+  def sharesRouting(otherDir: String, version: Long, keys: Seq[String]): Boolean = {
+    val lines = SnapshotParquetSink.manifestLines(otherDir, version)
+    clusterBy.isEmpty && SnapshotParquetSink.clusterOf(lines).isEmpty &&
+      SnapshotParquetSink.manifestOf(otherDir, version, lines)._1 == nBuckets &&
+      SnapshotParquetSink.keysOf(otherDir, version, lines) == keys
+  }
 
   /** All published versions, ascending; empty before the first commit. */
   def versions: Seq[Long] = SnapshotParquetSink.versions(dir)
@@ -1023,14 +1044,6 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** The buckets the write under `data/<commitId>` actually produced,
-    * ascending — one listing of its `__bucket=` directories.
-    */
-  private def writtenBucketsOf(commitId: String): Array[Int] =
-    Dfs.list(new HPath(s"$dir/data/$commitId")).map(_.getPath.getName)
-      .collect { case n if n.startsWith("__bucket=") => n.stripPrefix("__bucket=").toInt }
-      .toArray.sorted
-
   /** Bloom columns a whole-table rewrite of `base` covers: this handle's
     * declaration, else the declaration `base`'s manifest records.
     */
@@ -1079,101 +1092,123 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     */
   def lastCommitFusedShape: Option[Boolean] = lastFused
 
-  /** Applies a micro-batch of CDC events (any order, any mix of inserts,
-    * updates and deletes flagged by `isDeleteCol`) with last-write-wins by
-    * `seqCol` per `keys`.
+  /** Applies a batch of CDC events (any order, any mix of inserts, updates
+    * and deletes flagged by `isDeleteCol`) as ONE commit, last-write-wins
+    * by `seqCol` per `keys` — the warehouse MERGE, and the sink's one merge
+    * entry point. The trailing parameters adapt that commit; their
+    * defaults give the plain merge.
+    *
+    * `fold`: matching keys COMBINE through a caller-provided aggregation
+    * instead of last-write-wins replacement — the LSM "merge operator" idea
+    * (RocksDB mergeOp, Druid/Pinot ingestion rollup) on the
+    * manifest-committed bucket layout: the batch carries DELTAS, and the
+    * fold happens INSIDE the affected-bucket rewrite the commit already
+    * pays, so advancing an aggregate costs zero extra reads of the table
+    * ([[MaterializedAgg]]'s pure-delta refresh rides this). The reduce
+    * receives the union of the affected buckets' current rows and the batch
+    * (columns: the stored schema plus `__bucket`, `__gen`, `__is_deleted`)
+    * and must return EXACTLY ONE row per key, preserving `__bucket`,
+    * `__gen`, `__is_deleted` and `seqCol`. LAYOUT CONTRACT: under the fused
+    * (non-skewed) shape the input is hash-partitioned by `__bucket` into
+    * one partition per affected bucket, and the reduce must GROUP BY a
+    * column set containing `__bucket` (grouping by `(__bucket +: keys)`
+    * rides that shuffle exchange-free and keeps the one-file-per-bucket
+    * write layout; a keys-only reduce would re-shuffle to default
+    * partitions and scatter each bucket's rows across many small output
+    * files). Under the skew fallback the layout shuffle is re-asserted
+    * above the reduce, so any grouping is layout-safe there. UNLIKE
+    * last-write-wins, a fold is NOT replay-idempotent: applying the same
+    * delta twice double-counts — folds run under `requireBaseSeq`.
+    *
+    * `requireBaseSeq`: the optimistic applied-head guard, atomic with the
+    * commit. The publish aborts with [[SnapshotParquetSink
+    * .FoldBaseConflict]] unless the table's recorded head (`maxseq`) still
+    * equals the head the batch was computed against — checked before the
+    * write and on every carry source (a rebase re-carries from winners
+    * that may hold another refresher's commit) — so a concurrent refresher
+    * (or a crashed-then-raced replay) can never double-apply; it
+    * recomputes against the new head and retries. Maintenance rewrites
+    * that keep the head (compact) pass the guard. Without a fold, a
+    * guarded batch carries ABSOLUTE values computed FROM the stored state
+    * at that head and stamped at-or-above it, so it is AUTHORITATIVE for
+    * its keys: the dedup is replace-by-key, a broadcast anti-join instead
+    * of the plain merge's whole-bucket window sort. Such batches must be
+    * key-unique.
+    *
+    * `probeHint`: the probe PRECOMPUTED — the batch's affected buckets and
+    * applied head, for callers that know both already (the IVM fold from
+    * its own dirty-group probe; followers and join views from upstream
+    * manifests, gated on [[sharesRouting]]) — skips the probe job. The
+    * hint may be a SUPERSET of the buckets the batch writes: the manifest
+    * takes entries for exactly the bucket dirs the write produced (one
+    * driver-side listing), so a hinted bucket with no rows keeps its
+    * carried entry. A WRITTEN bucket missing from the hint would orphan its
+    * rows, so the commit fails loudly with [[SnapshotParquetSink
+    * .ProbeHintMismatch]]: the write is deleted and nothing is published,
+    * so an unhinted retry is always safe. The head must be AT OR ABOVE the
+    * batch's true max (and at or below the head the table semantically
+    * reaches after this merge): understating it corrupts seq-aligned cuts.
     */
   def merge(batch: DataFrame, keys: Seq[String], seqCol: String,
-      isDeleteCol: String): Unit =
-    mergeImpl(batch, keys, seqCol, isDeleteCol, None, None, None)
-
-  /** [[merge]] where matching keys COMBINE through a caller-provided
-    * aggregation instead of last-write-wins replacement — the LSM
-    * "merge operator" idea (RocksDB mergeOp, Druid/Pinot ingestion rollup)
-    * on the manifest-committed bucket layout: the incoming batch carries
-    * DELTAS, and the fold happens INSIDE the affected-bucket rewrite the
-    * commit already pays, so advancing an aggregate costs zero extra reads
-    * of the table ([[MaterializedAgg]]'s pure-delta refresh rides this).
-    *
-    * `reduce` receives the union of the affected buckets' current rows and
-    * the incoming batch (columns: the stored schema plus `__bucket`,
-    * `__gen`, `__is_deleted`) and must return EXACTLY ONE row per key,
-    * preserving `__bucket`, `__gen`, `__is_deleted` and `seqCol`.
-    * LAYOUT CONTRACT: under the fused (non-skewed) shape the input is
-    * hash-partitioned by `__bucket` into one partition per affected
-    * bucket, and the reduce must GROUP BY a column set containing
-    * `__bucket` (grouping by `(__bucket +: keys)` rides that shuffle
-    * exchange-free and keeps the one-file-per-bucket write layout; a
-    * keys-only reduce would re-shuffle to default partitions and scatter
-    * each bucket's rows across many small output files). Under the skew
-    * fallback the layout shuffle is re-asserted above the reduce, so any
-    * grouping is layout-safe there.
-    *
-    * UNLIKE last-write-wins, folding is NOT replay-idempotent: applying the
-    * same delta twice double-counts. Callers gate replays on the recorded
-    * applied head (`maxseq`), and `requireBaseSeq` makes the gate atomic
-    * with the commit: the publish aborts with [[SnapshotParquetSink
-    * .FoldBaseConflict]] unless the table's recorded head still equals the
-    * head the delta was computed against — a concurrent refresher (or a
-    * crashed-then-raced replay) can never double-apply; it recomputes
-    * against the new head and retries. Maintenance rewrites that keep the
-    * head (compact) pass the guard and the fold proceeds on their state.
-    */
-  def mergeFold(batch: DataFrame, keys: Seq[String], seqCol: String,
-      isDeleteCol: String, requireBaseSeq: Option[Long])(
-      reduce: DataFrame => DataFrame): Unit =
-    mergeImpl(batch, keys, seqCol, isDeleteCol, Some(reduce), requireBaseSeq, None)
-
-  /** [[merge]] under the optimistic applied-head guard: throws
-    * [[SnapshotParquetSink.FoldBaseConflict]] when the table's recorded
-    * maxseq moved off `requireBaseSeq` — for callers whose batch carries
-    * ABSOLUTE values computed FROM the stored state at that head (a moved
-    * head means another writer advanced the state; last-write-wins over
-    * stale absolutes would silently lose its update). Delta-shaped twins
-    * combine inside the rewrite instead ([[mergeFold]]); absolute twins
-    * catch the conflict and retry from a re-read.
-    *
-    * Dedup semantics under the guard: the batch is AUTHORITATIVE for its
-    * keys (replace-by-key — held base ⇒ the absolutes supersede whatever
-    * the bucket stores for those keys, and callers stamp seq at-or-above
-    * the head anyway), executed as a broadcast anti-join instead of the
-    * plain merge's whole-bucket window sort. Batches must be key-unique.
-    *
-    * The probe is PRECOMPUTED: callers that already know the batch's
-    * affected buckets and applied head (the IVM fold derives both from its
-    * own dirty-group probe) skip the merge's probe job — one fewer
-    * fixed-latency action per refresh. The hint may be a SUPERSET of the
-    * buckets the batch writes: the manifest takes entries for exactly the
-    * bucket dirs the write produced (one driver-side listing), so a hinted
-    * bucket with no rows keeps its carried entry. A WRITTEN bucket missing
-    * from the hint would orphan its rows, so it fails the commit loudly
-    * ([[SnapshotParquetSink.ProbeHintMismatch]]), as in [[mergeHinted]].
-    */
-  def mergeGuardedHinted(batch: DataFrame, keys: Seq[String], seqCol: String,
-      isDeleteCol: String, requireBaseSeq: Option[Long],
-      affectedBuckets: Array[Int], batchMaxSeq: Option[Long]): Unit =
-    mergeImpl(batch, keys, seqCol, isDeleteCol, None, requireBaseSeq,
-      Some((affectedBuckets, batchMaxSeq)))
-
-  /** [[merge]] with the probe PRECOMPUTED — the unguarded twin of
-    * [[mergeGuardedHinted]] for callers that derive the batch's affected
-    * buckets and applied head from METADATA (a follower whose upstream
-    * shares the bucket layout reads both off the upstream manifests) —
-    * the steady-state micro-commit drops to one data action plus manifest
-    * FS. The hint may be a SUPERSET of the buckets the batch actually
-    * writes (a changed-but-empty upstream bucket contributes no rows):
-    * the write publishes entries for exactly the bucket dirs produced,
-    * and a WRITTEN bucket missing from the hint still fails the commit
-    * loudly ([[SnapshotParquetSink.ProbeHintMismatch]]) — that direction
-    * would orphan rows. `batchMaxSeq` must be AT OR ABOVE the batch's
-    * true max (and at or below the head the table semantically reaches
-    * after this merge): understating it corrupts seq-aligned cuts.
-    */
-  def mergeHinted(batch: DataFrame, keys: Seq[String], seqCol: String,
-      isDeleteCol: String, affectedBuckets: Array[Int],
-      batchMaxSeq: Option[Long]): Unit =
-    mergeImpl(batch, keys, seqCol, isDeleteCol, None, None,
-      Some((affectedBuckets, batchMaxSeq)))
+      isDeleteCol: String, fold: Option[DataFrame => DataFrame] = None,
+      requireBaseSeq: Option[Long] = None,
+      probeHint: Option[(Array[Int], Long)] = None): Unit = synchronized {
+    probeStage(batch, keys, seqCol, isDeleteCol, probeHint) {
+      (incoming0, affected, batchMaxSeq) =>
+        if (affected.nonEmpty) {
+          // the entries the staged computation read, and the telemetry
+          var read = Map.empty[Int, String]
+          var dataWrites = 0
+          var rebases = 0
+          val (version, attempts) = publishStage("snapshot commit", () => {
+            val (entries, w) = computeStage(incoming0, keys, seqCol, fold,
+              requireBaseSeq, affected, hinted = probeHint.isDefined)
+            read = entries
+            dataWrites += 1
+            w
+          }, rebase = _ => {
+            val cur = currentVersion.getOrElse(
+              sys.error(s"lost the commit race at $dir but no version is " +
+                "published — another writer's manifest vanished mid-race"))
+            // a lost race against writers of DISJOINT buckets rebases: the
+            // winners changed NEITHER the layout (bucket count / keys /
+            // cluster spec — guardLayout) NOR any bucket this computation
+            // read, so the merged files remain the correct next state of
+            // exactly those buckets; an overlapping winner invalidates it
+            guardLayout(cur, "merge", keys, seqCol)
+            val curEntries = readManifest(cur)
+            if (affected.exists(b => curEntries.get(b) != read.get(b))) None
+            else { rebases += 1; Some(cur) }
+          }) { (w, carryFrom, version) =>
+            // hinted probes are trusted into the manifest: a written bucket
+            // dir outside the hint fails the commit (see the scaladoc)
+            if (!w.buckets.toSet.subsetOf(affected.toSet))
+              throw SnapshotParquetSink.ProbeHintMismatch(
+                s"probe hint mismatch at $dir: hinted buckets " +
+                  s"${affected.mkString(",")} but the write produced " +
+                  s"${w.buckets.mkString(",")} — the caller's " +
+                  "affected-bucket precomputation is wrong")
+            val priorMaxSeq = carryFrom.flatMap(SnapshotParquetSink.manifestMaxSeq(dir, _))
+            requireBaseSeq.foreach { rb =>
+              if (!priorMaxSeq.contains(rb))
+                throw SnapshotParquetSink.FoldBaseConflict(dir, rb, priorMaxSeq)
+            }
+            // entries, stats and bloom lines carry forward alike: untouched
+            // buckets keep those of the commit that last wrote them
+            val written = w.buckets.toSet
+            manifestBody(version, nBuckets, keys, seqCol,
+              (batchMaxSeq.toSeq ++ priorMaxSeq).reduceOption(_ max _),
+              schemaJson(w.schema, carryFrom), carryFrom, clusterBy,
+              carryFrom.map(readManifest).getOrElse(Map.empty) ++ w.entries,
+              carryFrom.toSeq.flatMap(carriedStats(_, b => !written(b))) ++ w.stats,
+              carryFrom.toSeq.flatMap(v => carriedLines("f",
+                SnapshotParquetSink.manifestBlooms(dir, v), b => !written(b))) ++ w.blooms)
+          }
+          lastCommitInfo = Some(SnapshotParquetSink.CommitInfo(
+            version, attempts, rebases, dataWrites))
+        }
+    }
+  }
 
   /** The commit probe — the batch's affected-bucket list and applied head
     * — as ONE single-stage job, no shuffle: a per-partition fold over the
@@ -1185,8 +1220,7 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     */
   private def probeBucketsAndHead(incoming0: DataFrame,
       seqCol: String): (Array[Int], Option[Long]) = {
-    val dbgP = new graft.engine.Dbg("graft.commit.debug", "[commit]")
-    val probeRdd = dbgP("probe.plan")(
+    val probeRdd = dbg("probe.plan")(
       incoming0.select(col("__bucket"), col(seqCol).cast("long"))
         .queryExecution.toRdd)
     val parts = probeRdd.mapPartitions { it =>
@@ -1204,39 +1238,38 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
         }
         Iterator.single((seen, any, mx))
       }
-    val parts2 = dbgP("probe.job")(parts.collect())
+    val parts2 = dbg("probe.job")(parts.collect())
     val bs = parts2.iterator.map(_._1)
       .foldLeft(new scala.collection.mutable.BitSet())(_ |= _)
     val mxs = parts2.iterator.filter(_._2).map(_._3)
     (bs.toArray, if (mxs.isEmpty) None else Some(mxs.max))
   }
 
-  private def mergeImpl(batch: DataFrame, keys: Seq[String], seqCol: String,
-      isDeleteCol: String, reduceOpt: Option[DataFrame => DataFrame],
-      requireBaseSeq: Option[Long],
-      probeHint: Option[(Array[Int], Option[Long])]): Unit = synchronized {
-    val dbg = new graft.engine.Dbg("graft.commit.debug", "[commit]")
+  /** The probe stage of [[merge]] and [[replaceAll]]: runs `f` over the
+    * batch (delete flag folded, `__bucket` routed), its affected buckets,
+    * ascending — the driver-side list that limits the read and rewrite to
+    * affected buckets only — and its applied head (recorded in the
+    * manifest, monotone across commits, so catalog seq-aligned cuts read
+    * metadata, not data; all-null seq contributes no head). The probe is
+    * the caller's hint; for a driver-local batch (a LocalRelation as built
+    * — never the optimized plan, which would cost every ingest batch an
+    * optimizer pass) a driver-side evaluation, no persist and no job; else
+    * ONE `commit:probe` job ([[probeBucketsAndHead]] — separate jobs for
+    * the two answers doubled the fixed per-job latency of every
+    * micro-commit), which also materializes the persist a planned batch
+    * stays under while `f` runs.
+    */
+  private def probeStage[A](batch: DataFrame, keys: Seq[String], seqCol: String,
+      isDeleteCol: String, hint: Option[(Array[Int], Long)])(
+      f: (DataFrame, Array[Int], Option[Long]) => A): A = {
     keys.foreach(SnapshotParquetSink.validManifestName("key"))
-    val spark = batch.sparkSession
-    // a driver-local batch (a LocalRelation as built — never the optimized
-    // plan, which would cost every ingest batch an optimizer pass) is
-    // re-read for free and probed on the driver: no persist, no probe job
     val local = SnapshotParquetSink.localRows(batch).isDefined
     val incoming0 = SnapshotParquetSink.foldDeleteFlag(batch, isDeleteCol)
       .withColumn("__bucket", bucketOf(keys))
     if (!local) incoming0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // ONE probe job: the affected-bucket list (≤ nBuckets values by
-      // construction — the driver-side list that limits the read and
-      // rewrite to affected buckets only) AND the batch's applied head
-      // (recorded in the manifest, monotone across commits, so catalog
-      // seq-aligned cuts read metadata, not data; all-null seq contributes
-      // no head). Separate jobs here doubled the fixed per-job latency on
-      // every micro-commit — the q61 lifecycle tail is merge-count-bound.
-      // A caller-provided hint skips even this one job (exactness enforced
-      // against the written bucket dirs below).
-      val (affected, batchMaxSeq) = probeHint match {
-        case Some((bs, mx)) => (bs.sorted, mx)
+      val (affected, head) = hint match {
+        case Some((bs, mx)) => (bs.sorted, Some(mx))
         case None if local =>
           // the projection folds into the local relation: a driver-side
           // evaluation, not a job
@@ -1244,251 +1277,197 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
           (probed.map(_.getInt(0)).distinct.sorted,
             probed.filterNot(_.isNullAt(1)).map(_.getLong(1)).reduceOption(_ max _))
         case None =>
-          dbg("probe")(graft.engine.JobTag(spark, "commit:probe") {
-            probeBucketsAndHead(incoming0, seqCol) })
+          phase(batch.sparkSession, "probe")(probeBucketsAndHead(incoming0, seqCol))
       }
-      if (affected.isEmpty) return
+      f(incoming0, affected, head)
+    } finally { incoming0.unpersist(); () }
+  }
 
-      // one computed-and-written merge result: the publish attempts below
-      // republish it unchanged across rebases
-      final case class Staged(base: Option[Long], entries: Map[Int, String],
-          commitId: String, written: Array[Int],
-          schema: org.apache.spark.sql.types.StructType,
-          stats: Seq[String], blooms: Seq[String])
+  /** The compute stage of [[merge]]: against the current version, reads
+    * the affected buckets, dedups (or folds) them with the batch in the
+    * shape the skew guard picks, and writes the result ([[writeStage]]).
+    * Returns the bucket entries it read with the staged write.
+    */
+  private def computeStage(incoming0: DataFrame, keys: Seq[String],
+      seqCol: String, fold: Option[DataFrame => DataFrame],
+      requireBaseSeq: Option[Long], affected: Array[Int],
+      hinted: Boolean): (Map[Int, String], Written) = {
+    val spark = incoming0.sparkSession
+    val base = currentVersion
+    // the optimistic base check before any work: a moved head means some
+    // other writer advanced the state (folding now would double-apply)
+    requireBaseSeq.foreach { rb =>
+      val prior = base.flatMap(v => SnapshotParquetSink.manifestMaxSeq(dir, v))
+      if (!prior.contains(rb))
+        throw SnapshotParquetSink.FoldBaseConflict(dir, rb, prior)
+    }
+    val entries = base.map(readManifest).getOrElse(Map.empty)
+    // re-run per computation and per lost publish: a concurrent
+    // rebucket/recluster between attempts changes the answer
+    base.foreach(guardLayout(_, "merge", keys, seqCol))
 
-      var dataWrites = 0
-      def compute(): Staged = {
-        val base = currentVersion
-        // fold merges: the optimistic base check — the delta was computed
-        // against a specific applied head; a moved head means some other
-        // writer advanced the state and folding now would double-apply
-        requireBaseSeq.foreach { rb =>
-          val prior = base.flatMap(v => SnapshotParquetSink.manifestMaxSeq(dir, v))
-          if (!prior.contains(rb))
-            throw SnapshotParquetSink.FoldBaseConflict(dir, rb, prior)
-        }
-        val entries = base.map(readManifest).getOrElse(Map.empty)
-        // re-run per computation and per lost publish: a concurrent
-        // rebucket/recluster between attempts changes the answer
-        base.foreach(guardLayout(_, "merge", keys, seqCol))
+    // existing state of the affected buckets, read under the manifest's
+    // RECORDED schema (zero footer IO — the readAt rule; explicit-schema
+    // reads null-fill evolution-era files exactly like mergeSchema
+    // resolved them, and __bucket comes back as the appended partition
+    // column)
+    val current = base.flatMap(v => readByRoot(spark,
+      affected.toSeq.flatMap(b => entries.get(b).map(rel => (b, rel))),
+      SnapshotParquetSink.manifestSchema(dir, v)))
 
-        // existing state of the affected buckets, read under the
-        // manifest's RECORDED schema (zero footer IO — the readAt rule;
-        // explicit-schema reads null-fill evolution-era files exactly like
-        // mergeSchema resolved them, and __bucket comes back as the
-        // appended partition column)
-        val current = base.flatMap(v => readByRoot(spark,
-          affected.toSeq.flatMap(b => entries.get(b).map(rel => (b, rel))),
-          SnapshotParquetSink.manifestSchema(dir, v)))
+    // __gen = the version this computation TARGETS. A rebase publishes
+    // these files at a HIGHER version with the gen left as-is — safe
+    // because rebase requires every affected bucket untouched by the
+    // winners: a key lives in exactly one bucket, so the stale gen can
+    // only ever tie-break against gens from commits at or below `base`,
+    // which are strictly smaller.
+    val targetVersion = base.map(_ + 1L).getOrElse(0L)
+    val incoming = incoming0.withColumn("__gen", lit(targetVersion))
+    // the one-file-per-bucket layout shuffle, applied BELOW the dedup/
+    // fold instead of above the write: __bucket is a function of the
+    // merge keys, so hash-partitioning by __bucket alone already
+    // clusters every key's rows into one partition — a window over
+    // (__bucket +: keys) and the fold's groupBy(__bucket +: groups)
+    // are then exchange-free on top of it (ClusteredDistribution is
+    // satisfied by a subset partitioning), where the old shape paid a
+    // second full exchange: keys-window-shuffle THEN bucket-repartition
+    // (one exchange per micro-commit saved, plus its AQE stage-job).
+    // Parallelism note: the dedup now runs at affected-bucket
+    // granularity, the same granularity the per-bucket file write
+    // always ran at — bounded by the recommended small-bucket layout.
+    //
+    // SKEW GUARD on that trade: a HOT bucket under the fused shape is
+    // one straggler task sorting/folding the whole bucket. The shape
+    // is therefore picked per commit from the manifest's own entries:
+    // when any affected bucket's stored bytes exceed
+    // `fusedMaxBucketBytes` (256 MB — the AQE skew threshold), the
+    // dedup/fold runs at KEY granularity on the default shuffle
+    // partitioning and the one-file-per-bucket
+    // repartition moves ABOVE it (the pre-r15 two-exchange shape:
+    // more driver round trips, but the sort/fold parallelizes across
+    // keys instead of serializing on the hot bucket). Cost: one
+    // ContentSummary per affected bucket with a stored entry, on the
+    // shared FS pool — micro-commits touch few buckets, bulk commits
+    // amortize it against the rewrite itself.
+    val fusedShape = dbg("fusedchk") {
+      val cap = SnapshotParquetSink.fusedMaxBucketBytes
+      val stored = affected.toSeq.flatMap(b => entries.get(b).map(rel => s"$dir/$rel"))
+      stored.isEmpty || SnapshotParquetSink.inParallel(stored) { p =>
+        try Dfs.contentSummary(new HPath(p))._2
+        catch { case _: java.io.IOException => 0L }
+      }.max <= cap
+    }
+    lastFused = Some(fusedShape)
+    def bucketLayout(df: DataFrame): DataFrame =
+      df.repartition(affected.length, col("__bucket"))
+    val all0 = current match {
+      case Some(c) => c.unionByName(incoming, allowMissingColumns = true)
+      case None    => incoming
+    }
+    lazy val all = if (fusedShape) bucketLayout(all0) else all0
+    // one output file per bucket: every branch is partitioned by __bucket
+    // into affected.length partitions
+    val merged = (fold, requireBaseSeq) match {
+      case (Some(reduce), _) =>
+        // the reduce's own groupBy(__bucket, groups) rides the layout
+        // shuffle when fused; under the skew fallback it plans its own
+        // key-granularity exchange and the layout shuffle moves above
+        if (fusedShape) reduce(all) else bucketLayout(reduce(all0))
+      case (None, Some(_)) =>
+        // guarded absolutes replace by key: a broadcast anti-join of the
+        // carried state against the (small-by-design: dirty groups)
+        // incoming keys replaces the window dedup, which shuffled AND
+        // sorted the entire affected-bucket content on every fold refresh
+        bucketLayout(current match {
+          case None => incoming
+          case Some(c) =>
+            val inKeys = broadcast(incoming.select(keys.map(col): _*).distinct())
+            c.join(inKeys, keys.map(k => c(k) <=> inKeys(k)).reduce(_ && _), "left_anti")
+              .unionByName(incoming, allowMissingColumns = true)
+        })
+      case (None, None) =>
+        // fused: the (__bucket +: keys) window is exchange-free on top
+        // of the bucket layout (subset partitioning). Skew fallback:
+        // window at key granularity first — the sort parallelizes
+        // across keys — then the layout shuffle on the survivors.
+        if (fusedShape) lastWritePerKey(all, "__bucket" +: keys, seqCol)
+        else bucketLayout(lastWritePerKey(all0, keys, seqCol))
+    }
+    // an unhinted batch writes every affected bucket; a hint may
+    // over-approximate, so the written dirs are listed
+    (entries, writeStage(spark, base, merged, parquetBloomOptsFor(base, bloomCols),
+      bloomCols, statsCols, if (hinted) None else Some(affected)))
+  }
 
-        // __gen = the version this computation TARGETS. A rebase publishes
-        // these files at a HIGHER version with the gen left as-is — safe
-        // because rebase requires every affected bucket untouched by the
-        // winners: a key lives in exactly one bucket, so the stale gen can
-        // only ever tie-break against gens from commits at or below `base`,
-        // which are strictly smaller.
-        val targetVersion = base.map(_ + 1L).getOrElse(0L)
-        val incoming = incoming0.withColumn("__gen", lit(targetVersion))
-        // the one-file-per-bucket layout shuffle, applied BELOW the dedup/
-        // fold instead of above the write: __bucket is a function of the
-        // merge keys, so hash-partitioning by __bucket alone already
-        // clusters every key's rows into one partition — a window over
-        // (__bucket +: keys) and the fold's groupBy(__bucket +: groups)
-        // are then exchange-free on top of it (ClusteredDistribution is
-        // satisfied by a subset partitioning), where the old shape paid a
-        // second full exchange: keys-window-shuffle THEN bucket-repartition
-        // (one exchange per micro-commit saved, plus its AQE stage-job).
-        // Parallelism note: the dedup now runs at affected-bucket
-        // granularity, the same granularity the per-bucket file write
-        // always ran at — bounded by the recommended small-bucket layout.
-        //
-        // SKEW GUARD on that trade: a HOT bucket under the fused shape is
-        // one straggler task sorting/folding the whole bucket. The shape
-        // is therefore picked per commit from the manifest's own entries:
-        // when any affected bucket's stored bytes exceed
-        // `fusedMaxBucketBytes` (256 MB — the AQE skew threshold), the
-        // dedup/fold runs at KEY granularity on the default shuffle
-        // partitioning and the one-file-per-bucket
-        // repartition moves ABOVE it (the pre-r15 two-exchange shape:
-        // more driver round trips, but the sort/fold parallelizes across
-        // keys instead of serializing on the hot bucket). Cost: one
-        // ContentSummary per affected bucket with a stored entry, on the
-        // shared FS pool — micro-commits touch few buckets, bulk commits
-        // amortize it against the rewrite itself.
-        val fusedShape = dbg("fusedchk") {
-          val cap = SnapshotParquetSink.fusedMaxBucketBytes
-          val stored = affected.toSeq.flatMap(b => entries.get(b).map(rel => s"$dir/$rel"))
-          stored.isEmpty || SnapshotParquetSink.inParallel(stored) { p =>
-            try Dfs.contentSummary(new HPath(p))._2
-            catch { case _: java.io.IOException => 0L }
-          }.max <= cap
-        }
-        lastFused = Some(fusedShape)
-        def bucketLayout(df: DataFrame): DataFrame =
-          df.repartition(affected.length, col("__bucket"))
-        val all0 = current match {
-          case Some(c) => c.unionByName(incoming, allowMissingColumns = true)
-          case None    => incoming
-        }
-        lazy val all = if (fusedShape) bucketLayout(all0) else all0
-        val merged = (reduceOpt, requireBaseSeq) match {
-          case (Some(reduce), _) =>
-            // the reduce's own groupBy(__bucket, groups) rides the layout
-            // shuffle when fused; under the skew fallback it plans its own
-            // key-granularity exchange and the layout shuffle moves above
-            if (fusedShape) reduce(all) else bucketLayout(reduce(all0))
-          case (None, Some(_)) =>
-            // guarded-ABSOLUTE contract: the batch's rows were computed
-            // FROM the stored state at the guarded head (checked above and
-            // re-checked per publish attempt) and stamped at-or-above it,
-            // so the batch is authoritative for its keys — LWW reduces to
-            // replace-by-key. A broadcast anti-join of the carried state
-            // against the (small-by-design: dirty groups) incoming keys
-            // replaces the window dedup, which shuffled AND sorted the
-            // entire affected-bucket content on every fold refresh.
-            (current match {
-              case None => incoming
-              case Some(c) =>
-                val inKeys = broadcast(
-                  incoming.select(keys.map(col): _*).distinct())
-                c.join(inKeys,
-                    keys.map(k => c(k) <=> inKeys(k)).reduce(_ && _),
-                    "left_anti")
-                  .unionByName(incoming, allowMissingColumns = true)
-            }).repartition(affected.length, col("__bucket"))
-          case (None, None) =>
-            // fused: the (__bucket +: keys) window is exchange-free on top
-            // of the bucket layout (subset partitioning). Skew fallback:
-            // window at key granularity first — the sort parallelizes
-            // across keys — then the layout shuffle on the survivors.
-            if (fusedShape) lastWritePerKey(all, "__bucket" +: keys, seqCol)
-            else bucketLayout(lastWritePerKey(all0, keys, seqCol))
-        }
+  /** The write stage of every rewrite: writes `frame` (one partition per
+    * bucket) under a fresh commit root with the writer options `opts`.
+    * Bloom sidecars for the `observe` columns build INSIDE the write job
+    * ([[observeBlooms]]); with `copyBlooms`, `base`'s sidecars are copied
+    * for the written buckets instead ([[copyBloomsInto]]). The stats lines
+    * of `statCols` come from one read-back ([[statsLinesFor]]). The written
+    * buckets are `buckets` when the caller knows them, else one listing of
+    * the root (a bucket whose rows all vanished writes no dir).
+    */
+  private def writeStage(spark: SparkSession, base: Option[Long], frame: DataFrame,
+      opts: Map[String, String], observe: Seq[String], statCols: Seq[String],
+      buckets: Option[Array[Int]] = None, copyBlooms: Boolean = false): Written = {
+    val commitId = UUID.randomUUID().toString
+    val (toWrite, sidecars) = observeBlooms(spark, frame, observe)
+    phase(spark, "write")(writeBuckets(toWrite, commitId, opts))
+    val written = buckets.getOrElse(
+      Dfs.list(new HPath(s"$dir/data/$commitId")).map(_.getPath.getName)
+        .collect { case n if n.startsWith("__bucket=") => n.stripPrefix("__bucket=").toInt }
+        .toArray.sorted)
+    val stats = if (written.isEmpty) Nil
+      else phase(spark, "stats")(statsLinesFor(spark, commitId, statCols))
+    val blooms = if (copyBlooms) copyBloomsInto(base.get, commitId, written.toSet)
+      else phase(spark, "blooms")(sidecars(commitId))
+    Written(base, commitId, written, frame.schema, stats, blooms)
+  }
 
-        val commitId = UUID.randomUUID().toString
-        // one output file per bucket: every branch above is already
-        // partitioned by __bucket into affected.length partitions
-        val toWrite = merged
-        // bloom sidecars build INSIDE the write job (observe + the
-        // BloomWordsAgg imperative aggregate): zero extra reads of the
-        // fresh files, zero extra jobs — the pre-fusion two-job build was
-        // measured at 1.5–2.1× bulk-commit overhead
-        val obs = observeBlooms(spark, toWrite, merged.schema, bloomCols)
-        dbg("write")(graft.engine.JobTag(spark, "commit:write") {
-          writeBuckets(obs.frame, commitId, parquetBloomOptsFor(base, bloomCols)) })
-        dataWrites += 1
-        // hinted probes are trusted into the manifest — verify the written
-        // bucket dirs against the hint (one driver-side listing). The
-        // manifest overlays entries for exactly the WRITTEN buckets, so a
-        // hinted bucket the batch never touched (metadata-derived hints
-        // may over-approximate: a changed-but-empty upstream bucket) just
-        // keeps its carried entry; a written dir MISSING from the hint
-        // still fails loudly — publishing would orphan those rows.
-        val writtenBuckets: Array[Int] = probeHint match {
-          case None => affected
-          case Some(_) =>
-            val written = writtenBucketsOf(commitId)
-            if (!written.toSet.subsetOf(affected.toSet)) {
-              // drop the never-published write before surfacing — the other
-              // abort paths (FoldBaseConflict, overlap-abandon) do the same,
-              // and a retrying caller must not leak one bucket-rewrite tree
-              // per attempt until a vacuum runs
-              Dfs.deleteTreeQuiet(new HPath(s"$dir/data/$commitId"))
-              throw SnapshotParquetSink.ProbeHintMismatch(
-                s"probe hint mismatch at $dir: hinted buckets " +
-                  s"${affected.mkString(",")} but the write produced " +
-                  s"${written.mkString(",")} — the caller's " +
-                  "affected-bucket precomputation is wrong")
-            }
-            written
-        }
-        // data-derived manifest lines depend only on the written files —
-        // computed once, reused verbatim across rebase attempts
-        val freshStats = dbg("stats")(graft.engine.JobTag(spark, "commit:stats") {
-          statsLinesFor(spark, commitId) })
-        val freshBlooms = dbg("blooms")(graft.engine.JobTag(spark, "commit:blooms") {
-          obs.lines(commitId, merged.schema) })
-
-        Staged(base, entries, commitId, writtenBuckets, merged.schema,
-          freshStats, freshBlooms)
+  /** The publish stage of every rewrite: the [[graft.engine.CommitLock
+    * .retry]] loop around one staged write. An attempt stages the write
+    * when none is held (`compute`), builds the manifest body carried from
+    * `carryFrom` — the write's base, or the winner it rebased onto — and
+    * publishes it at the next version. After a lost publish, `rebase`
+    * names a winner to republish the SAME files over (no recompute, no
+    * rewrite), or None: the write is dropped and recomputed after the
+    * backoff. The one place a staged write is dropped: on that lost
+    * publish, and when anything but the publish itself throws (a check in
+    * `body`, a failed `rebase`, the last lost race) — nothing was
+    * published, so a retrying caller leaks no commit root. Returns the
+    * published version and the attempt count.
+    */
+  private def publishStage(what: String, compute: () => Written,
+      rebase: Written => Option[Long] = _ => None)(
+      body: (Written, Option[Long], Long) => String): (Long, Int) = {
+    var staged: Option[Written] = None
+    var carryFrom: Option[Long] = None
+    var publishing = false
+    // best-effort: the orphan is unreferenced scratch — a transient delete
+    // failure must not abort the retry (vacuum collects it)
+    def drop(): Unit = {
+      staged.foreach(w => Dfs.deleteTreeQuiet(new HPath(s"$dir/data/${w.commitId}")))
+      staged = None
+    }
+    try graft.engine.CommitLock.retry(what, dir, () => rebase(staged.get) match {
+      case Some(winner) => carryFrom = Some(winner); true
+      case None => drop(); false
+    }) { attempts =>
+      val w = staged.getOrElse {
+        val fresh = compute()
+        staged = Some(fresh)
+        carryFrom = fresh.base
+        fresh
       }
-
-      // publish loop (the shared retry policy): the first attempt after a
-      // computation carries from its base; a lost race against writers of
-      // DISJOINT buckets rebases — re-carries from the winners' manifest
-      // and republishes the SAME data files (no recompute, no rewrite); an
-      // overlapping winner invalidates the computation, which is dropped
-      // and redone against the new state after the backoff
-      var staged: Option[Staged] = None
-      var carryFrom: Option[Long] = None
-      var rebases = 0
-      def rebased(): Boolean = {
-        val s = staged.get
-        val cur = currentVersion.getOrElse(
-          sys.error(s"lost the commit race at $dir but no version is " +
-            "published — another writer's manifest vanished mid-race"))
-        // rebase precondition: the winners changed NEITHER the layout
-        // (bucket count / keys / cluster spec — guardLayout) NOR any
-        // bucket this computation read (its entry must still be what
-        // our base read) — then the merged files remain the correct
-        // next state of exactly those buckets
-        guardLayout(cur, "merge", keys, seqCol)
-        val curEntries = readManifest(cur)
-        if (affected.forall(b => curEntries.get(b) == s.entries.get(b))) {
-          rebases += 1
-          carryFrom = Some(cur)
-          true
-        } else {
-          // best-effort: the orphan is unreferenced scratch — a transient
-          // delete failure must not abort the retry (vacuum collects it)
-          Dfs.deleteTreeQuiet(new HPath(s"$dir/data/${s.commitId}"))
-          staged = None
-          false
-        }
-      }
-      graft.engine.CommitLock.retry("snapshot commit", dir, () => rebased()) { attempts =>
-        val s = staged.getOrElse {
-          val fresh = compute()
-          staged = Some(fresh)
-          carryFrom = fresh.base
-          fresh
-        }
-        val version = carryFrom.map(_ + 1L).getOrElse(0L)
-        val carryEntries = carryFrom.map(readManifest).getOrElse(Map.empty)
-        val newEntries = carryEntries ++
-          s.written.map(b => b -> s"data/${s.commitId}/__bucket=$b")
-        val priorMaxSeq: Option[Long] =
-          carryFrom.flatMap(SnapshotParquetSink.manifestMaxSeq(dir, _))
-        // fold merges re-check the base on every carry source: a rebase
-        // re-carries from winners whose state may include another
-        // refresher's fold of the same delta
-        requireBaseSeq.foreach { rb =>
-          if (!priorMaxSeq.contains(rb)) {
-            Dfs.deleteTreeQuiet(new HPath(s"$dir/data/${s.commitId}"))
-            throw SnapshotParquetSink.FoldBaseConflict(dir, rb, priorMaxSeq)
-          }
-        }
-        val maxSeqOpt: Option[Long] = (batchMaxSeq.toSeq ++ priorMaxSeq.toSeq)
-          .reduceOption((a: Long, b: Long) => math.max(a, b))
-        // stats/bloom carry-forward mirrors the entries': untouched
-        // buckets keep the lines of the commit that last wrote them
-        val written = s.written.toSet
-        val carriedBlooms = carryFrom.toSeq.flatMap(v =>
-          carriedLines("f", SnapshotParquetSink.manifestBlooms(dir, v), b => !written(b)))
-        val body = manifestBody(version, nBuckets, keys, seqCol, maxSeqOpt,
-          schemaJson(s.schema, carryFrom), carryFrom, clusterBy, newEntries,
-          carryFrom.toSeq.flatMap(carriedStats(_, b => !written(b))) ++ s.stats,
-          carriedBlooms ++ s.blooms)
-        if (!publish(version, body)) None
-        else {
-          lastCommitInfo = Some(SnapshotParquetSink.CommitInfo(
-            version, attempts, rebases, dataWrites))
-          Some(())
-        }
-      }
-    } finally {
-      incoming0.unpersist()
-      ()
+      val version = carryFrom.map(_ + 1L).getOrElse(0L)
+      val manifest = body(w, carryFrom, version)
+      publishing = true
+      val won = publish(version, manifest)
+      publishing = false
+      if (won) Some((version, attempts)) else None
+    } catch {
+      case scala.util.control.NonFatal(e) if !publishing => drop(); throw e
     }
   }
 
@@ -1498,49 +1477,33 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     * batch alone (the type-widening contract: a widening replay must not
     * union with the stored narrow columns, where ANSI union coercion would
     * resolve a string-widened column back to the stored type), while every
-    * older version stays time-travel-readable under its own types. Publishes through the
-    * same commit lock and layout guard as [[merge]] (bucket count, keys,
-    * order column, cluster spec). A lost race deletes the written data
-    * root and rewrites the batch for the next version: the rows carry the
-    * target version as their `__gen`, so the files cannot be republished
-    * under another one.
+    * older version stays time-travel-readable under its own types. Probes
+    * and publishes through the same stages and layout guard as [[merge]]
+    * (bucket count, keys, order column, cluster spec). A lost race drops
+    * the write and rewrites the batch for the next version: the rows carry
+    * the target version as their `__gen`, so the files cannot be
+    * republished under another one.
     */
   def replaceAll(batch: DataFrame, keys: Seq[String], seqCol: String,
       isDeleteCol: String): Unit = synchronized {
-    keys.foreach(SnapshotParquetSink.validManifestName("key"))
-    val spark = batch.sparkSession
-    val incoming0 = SnapshotParquetSink.foldDeleteFlag(batch, isDeleteCol)
-      .withColumn("__bucket", bucketOf(keys))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // one probe job for bucket list + applied head (see merge)
-      val (affected, batchMaxSeq) = probeBucketsAndHead(incoming0, seqCol)
+    probeStage(batch, keys, seqCol, isDeleteCol, None) { (incoming0, affected, batchMaxSeq) =>
       require(affected.nonEmpty,
         s"replaceAll with an empty batch would publish an unreadable empty table at $dir")
       require(batchMaxSeq.isDefined,
         s"replaceAll batch carries no orderable $seqCol values — the rebuilt " +
           "table would record no applied head, and a later commitAligned " +
           "would silently pin the superseded pre-replace version")
-      graft.engine.CommitLock.retry("replaceAll", dir) { _ =>
+      publishStage("replaceAll", () => {
         val base = currentVersion
-        val version = base.map(_ + 1L).getOrElse(0L)
         base.foreach(guardLayout(_, "replaceAll", keys, seqCol))
-        val incoming = incoming0.withColumn("__gen", lit(version))
-        val merged = lastWritePerKey(incoming, keys, seqCol)
-        val commitId = UUID.randomUUID().toString
-        val toWrite = merged.repartition(affected.length, col("__bucket"))
-        // same in-write bloom fusion as merge (see observeBlooms)
-        val obs = observeBlooms(spark, toWrite, merged.schema, bloomCols)
-        writeBuckets(obs.frame, commitId, parquetBloomOptsFor(base, bloomCols))
-        val body = manifestBody(version, nBuckets, keys, seqCol, batchMaxSeq,
-          schemaJson(merged.schema, None), base, clusterBy,
-          affected.map(b => b -> s"data/$commitId/__bucket=$b"),
-          statsLinesFor(spark, commitId), obs.lines(commitId, merged.schema))
-        if (publish(version, body)) Some(())
-        else { deleteTree(new HPath(s"$dir/data/$commitId")); None }
+        val incoming = incoming0.withColumn("__gen", lit(base.map(_ + 1L).getOrElse(0L)))
+        writeStage(batch.sparkSession, base,
+          lastWritePerKey(incoming, keys, seqCol).repartition(affected.length, col("__bucket")),
+          parquetBloomOptsFor(base, bloomCols), bloomCols, statsCols, Some(affected))
+      }) { (w, _, version) =>
+        manifestBody(version, nBuckets, keys, seqCol, batchMaxSeq,
+          schemaJson(w.schema, None), w.base, clusterBy, w.entries, w.stats, w.blooms)
       }
-    } finally {
-      incoming0.unpersist()
       ()
     }
   }
@@ -1847,53 +1810,54 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
           .parquet(group.map { case (_, rel) => s"$dir/$rel" }: _*)
       }.reduceOption((a, b) => a.unionByName(b, allowMissingColumns = true))
 
+  /** Publishes a whole-table maintenance rewrite of the current version
+    * (compact, rebucket, purge) through the publish stage: `write(base)`
+    * stages it, and `layout(w, base)` gives the new version's bucket count
+    * and stats lines. Everything else carries from `base` — maintenance
+    * rewrites data files, never the key contract, the order column, the
+    * applied head or the cluster spec (this handle's own layout plays no
+    * part) — and the schema is derived fresh from the rewrite. A lost race
+    * (someone merged concurrently) recomputes from the winner's state.
+    * Returns the published version.
+    */
+  private def maintain(what: String)(write: Long => Written)(
+      layout: (Written, Long) => (Int, Seq[String])): Long =
+    publishStage(what,
+      () => write(currentVersion.getOrElse(sys.error(s"nothing to $what at $dir")))) {
+      (w, _, version) =>
+        val base = w.base.get
+        val (buckets, stats) = layout(w, base)
+        manifestBody(version, buckets, SnapshotParquetSink.manifestKeys(dir, base),
+          SnapshotParquetSink.manifestSeqCol(dir, base),
+          SnapshotParquetSink.manifestMaxSeq(dir, base), schemaJson(w.schema, None),
+          w.base, SnapshotParquetSink.manifestCluster(dir, base), w.entries, stats,
+          w.blooms)
+    }._1
+
   /** Rewrites the whole current state as ONE fresh commit: every bucket's
     * file moves under a single new root, so after history expires
     * (`vacuum`) the table holds exactly nBuckets files regardless of how
     * many incremental commits built it — the periodic maintenance step of
     * any log-structured table format (small-file and manifest-spread
-    * control). Publishes through the same rename-onto-absent lock as merge;
-    * a lost race (someone merged concurrently) recomputes from their state.
-    * Returns the published version.
+    * control). Returns the published version.
     */
   def compact(spark: SparkSession): Long = synchronized {
-    graft.engine.CommitLock.retry("compaction", dir) { _ =>
-      val base = currentVersion.getOrElse(sys.error(s"nothing to compact at $dir"))
-      val (baseBuckets, entries) = SnapshotParquetSink.manifest(dir, base)
-      val version = base + 1L
-      val full = readFullState(spark, base)
-      val commitId = UUID.randomUUID().toString
+    maintain("compact") { base =>
+      val entries = readManifest(base)
       // per-bucket content is preserved exactly, so stats ranges carry
-      // verbatim (carriedStats below) and so do the bloom sidecars (files
-      // copied under the new root — the same-root-as-entry invariant vacuum
-      // reachability relies on). EXCEPT when this handle declares
-      // bloomCols: then compaction is also the index BACKFILL path — the
-      // write observes fresh filters for every bucket, which is how a table
-      // bulk-loaded without blooms (the fast initial load) gains them
-      // afterwards in one maintenance pass
-      val obs = observeBlooms(spark, full.repartition(entries.size, col("__bucket")),
-        full.schema, bloomCols)
-      // bloom columns (handle's, or whatever the base manifest recorded):
-      // the rewrite keeps the parquet-native row-group blooms where the
-      // base manifest evidences saturated buckets (parquetBloomOptsFor)
-      writeBuckets(obs.frame, commitId,
-        parquetBloomOptsFor(Some(base), effectiveBloomCols(base)))
-      val bloomsOut =
-        if (bloomCols.nonEmpty) obs.lines(commitId, full.schema)
-        else copyBloomsInto(base, commitId, entries.keySet)
-      // compaction rewrites data files, never the key contract, the head
-      // or the routing — recorded bucket count, keys, seqcol, maxseq and
-      // cluster spec carry (this handle's own layout plays no part)
-      val body = manifestBody(version, baseBuckets, SnapshotParquetSink.manifestKeys(dir, base),
-        SnapshotParquetSink.manifestSeqCol(dir, base),
-        SnapshotParquetSink.manifestMaxSeq(dir, base),
-        schemaJson(full.schema, None), // full rewrite: derive fresh
-        Some(base), SnapshotParquetSink.manifestCluster(dir, base),
-        entries.keys.map(b => b -> s"data/$commitId/__bucket=$b"),
-        carriedStats(base, _ => true), bloomsOut)
-      if (publish(version, body)) Some(version)
-      else { Dfs.deleteTreeQuiet(new HPath(s"$dir/data/$commitId")); None }
-    }
+      // verbatim and so do the bloom sidecars (files copied under the new
+      // root — the same-root-as-entry invariant vacuum reachability relies
+      // on). EXCEPT when this handle declares bloomCols: then compaction is
+      // also the index BACKFILL path — the write observes fresh filters for
+      // every bucket, which is how a table bulk-loaded without blooms (the
+      // fast initial load) gains them afterwards in one maintenance pass.
+      // The rewrite keeps the parquet-native row-group blooms where the
+      // base manifest evidences saturated buckets (parquetBloomOptsFor).
+      writeStage(spark, Some(base),
+        readFullState(spark, base).repartition(entries.size, col("__bucket")),
+        parquetBloomOptsFor(Some(base), effectiveBloomCols(base)), bloomCols, Nil,
+        Some(entries.keys.toArray), copyBlooms = bloomCols.isEmpty)
+    } { (_, base) => (SnapshotParquetSink.manifest(dir, base)._1, carriedStats(base, _ => true)) }
   }
 
   /** Re-buckets the whole table to `newBuckets` as ONE fresh commit — the
@@ -1909,20 +1873,16 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     * stay time-travel-readable under their own recorded nBuckets — which
     * is why readers resolve nBuckets per manifest, never from a handle.
     * Writer handles constructed with the old count refuse on their next
-    * merge (the nBuckets guard) — construct new ones. Publishes through
-    * the same commit lock; returns the published version.
+    * merge (the nBuckets guard) — construct new ones. Returns the
+    * published version.
     */
   def rebucket(spark: SparkSession, newBuckets: Int): Long = synchronized {
     require(newBuckets > 0, "newBuckets must be positive")
     requireClusterable(newBuckets)
-    graft.engine.CommitLock.retry("rebucket", dir) { _ =>
-      val base = currentVersion.getOrElse(sys.error(s"nothing to rebucket at $dir"))
-      val version = base + 1L
-      val baseKeys = SnapshotParquetSink.manifestKeys(dir, base)
+    maintain("rebucket") { base =>
       requireClusterMatch(base)
-      val full = readFullState(spark, base).drop("__bucket")
-        .withColumn("__bucket", bucketExpr(baseKeys, newBuckets))
-      val commitId = UUID.randomUUID().toString
+      val full = readFullState(spark, base).drop("__bucket").withColumn("__bucket",
+        bucketExpr(SnapshotParquetSink.manifestKeys(dir, base), newBuckets))
       // bloom sidecars must be RECOMPUTED (values re-partition across the
       // new bucket set — carried filters would describe the old partition)
       val effBloomCols = effectiveBloomCols(base)
@@ -1938,25 +1898,13 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
       val nativeOpts = nativeBloomOpts(effBloomCols,
         Option(full.groupBy(col("__bucket")).count().agg(max("count")).head().get(0))
           .exists(_.asInstanceOf[Long] > BloomIndex.MaxDistinct))
-      val obs = observeBlooms(spark, full.repartition(newBuckets, col("__bucket")),
-        full.schema, effBloomCols)
-      writeBuckets(obs.frame, commitId, nativeOpts)
       // stats recomputed for whatever the base declared (this maintenance
       // handle may not declare statsCols; the table's skipping metadata
       // must survive regardless)
-      val statCols = if (statsCols.nonEmpty) statsCols
-        else SnapshotParquetSink.declaredStatsCols(dir, base)
-      val body = manifestBody(version, newBuckets, baseKeys,
-        SnapshotParquetSink.manifestSeqCol(dir, base),
-        SnapshotParquetSink.manifestMaxSeq(dir, base),
-        schemaJson(full.schema, None), // full rewrite: derive fresh
-        Some(base), clusterBy,
-        writtenBucketsOf(commitId).map(b => b -> s"data/$commitId/__bucket=$b"),
-        statsLinesFor(spark, commitId, statCols),
-        obs.lines(commitId, full.schema))
-      if (publish(version, body)) Some(version)
-      else { Dfs.deleteTreeQuiet(new HPath(s"$dir/data/$commitId")); None }
-    }
+      writeStage(spark, Some(base), full.repartition(newBuckets, col("__bucket")),
+        nativeOpts, effBloomCols,
+        if (statsCols.nonEmpty) statsCols else SnapshotParquetSink.declaredStatsCols(dir, base))
+    } { (w, _) => (newBuckets, w.stats) }
   }
 
   /** Drops tombstones whose delete event is at or below `horizonSeq`, as
@@ -1975,54 +1923,37 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     * recomputing keeps pruning tight).
     */
   def purgeTombstones(spark: SparkSession, horizonSeq: Long): Long = synchronized {
-    graft.engine.CommitLock.retry("purge", dir) { _ =>
-      val base = currentVersion.getOrElse(sys.error(s"nothing to purge at $dir"))
-      // the recorded order column governs the horizon comparison
-      val seqCol = SnapshotParquetSink.manifestSeqCol(dir, base)
-      val (baseBuckets, entries) = SnapshotParquetSink.manifest(dir, base)
-      val version = base + 1L
-      val full = readFullState(spark, base)
+    maintain("purge") { base =>
+      // the recorded order column governs the horizon comparison.
       // coalesce(true): a NULL-seq tombstone makes the predicate NULL and a
       // plain filter would DROP it regardless of horizon — unknown seq
       // must conservatively survive the purge
-      val purged = full.filter(
+      val seqCol = SnapshotParquetSink.manifestSeqCol(dir, base)
+      val purged = readFullState(spark, base).filter(
         coalesce(!(col("__is_deleted") && col(seqCol) <= horizonSeq), lit(true)))
-      val commitId = UUID.randomUUID().toString
-      writeBuckets(purged.repartition(entries.size, col("__bucket")), commitId,
-        parquetBloomOptsFor(Some(base), effectiveBloomCols(base)))
-      // a bucket whose every row was a purged tombstone writes no dir —
-      // list what actually landed instead of assuming the old bucket set
-      val writtenBuckets = writtenBucketsOf(commitId)
-      if (writtenBuckets.isEmpty) {
-        // the whole table was horizon-old tombstones: publishing a
-        // zero-entry manifest would leave an UNREADABLE head (the
-        // replaceAll guard's condition) — refuse; drop the table instead
-        deleteTree(new HPath(s"$dir/data/$commitId"))
+      // a bucket whose every row was a purged tombstone writes no dir — the
+      // stage lists what landed; bloom sidecars COPY for surviving buckets
+      // (content only shrank, so the existing filters stay safe
+      // over-approximations of what remains)
+      writeStage(spark, Some(base),
+        purged.repartition(readManifest(base).size, col("__bucket")),
+        parquetBloomOptsFor(Some(base), effectiveBloomCols(base)), Nil, statsCols,
+        copyBlooms = true)
+    } { (w, base) =>
+      // the whole table was horizon-old tombstones: publishing a
+      // zero-entry manifest would leave an UNREADABLE head (the
+      // replaceAll guard's condition) — refuse; drop the table instead
+      if (w.buckets.isEmpty)
         sys.error(s"purge at $dir would empty the table entirely " +
           "(every row is a horizon-old tombstone) — delete the table " +
           "instead of publishing an unreadable empty version")
-      }
-      // stats: recompute when this handle records them; otherwise CARRY the
-      // base's lines for surviving buckets — purge only removes rows, so
-      // prior ranges stay valid over-approximations, and a maintenance
+      // stats: recomputed when this handle records them; otherwise the
+      // base's lines CARRY for surviving buckets — purge only removes rows,
+      // so prior ranges stay valid over-approximations, and a maintenance
       // handle constructed without statsCols must not silently strip the
       // table's data-skipping metadata
-      val kept = writtenBuckets.toSet
-      val statsOut =
-        if (statsCols.nonEmpty) statsLinesFor(spark, commitId)
-        else carriedStats(base, kept)
-      // purge removes rows, never the routing or the head — bucket count,
-      // cluster spec and maxseq carry; bloom sidecars COPY for surviving
-      // buckets (content only shrank, so the existing filters stay safe
-      // over-approximations of what remains)
-      val body = manifestBody(version, baseBuckets, SnapshotParquetSink.manifestKeys(dir, base),
-        seqCol, SnapshotParquetSink.manifestMaxSeq(dir, base),
-        schemaJson(purged.schema, None), // full rewrite: derive fresh
-        Some(base), SnapshotParquetSink.manifestCluster(dir, base),
-        writtenBuckets.map(b => b -> s"data/$commitId/__bucket=$b"),
-        statsOut, copyBloomsInto(base, commitId, kept))
-      if (publish(version, body)) Some(version)
-      else { Dfs.deleteTreeQuiet(new HPath(s"$dir/data/$commitId")); None }
+      (SnapshotParquetSink.manifest(dir, base)._1,
+        if (statsCols.nonEmpty) w.stats else carriedStats(base, w.buckets.toSet))
     }
   }
 
@@ -2134,7 +2065,7 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     val orphans = Dfs.list(dataDir)
       .filterNot(st => referencedRoots.contains(s"data/${st.getPath.getName}"))
       .filter(st => now - st.getModificationTime >= minOrphanAgeMs)
-    orphans.foreach(st => deleteTree(st.getPath))
+    orphans.foreach(st => Dfs.deleteTreeStrict(st.getPath))
     // strict: the RETURN VALUE reports these as expired
     drop.foreach { v =>
       Dfs.deleteStrict(manifestPath(v))
@@ -2145,6 +2076,4 @@ final class SnapshotParquetSink(val dir: String, nBuckets: Int = 16,
     graft.engine.CommitLock.sweepStaged(manifestsDir, minOrphanAgeMs)
     (drop.size, orphans.size)
   }
-
-  private def deleteTree(p: HPath): Unit = Dfs.deleteTreeStrict(p)
 }

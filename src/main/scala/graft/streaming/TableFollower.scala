@@ -94,31 +94,26 @@ final class TableFollower(upstreamDir: String,
       "transform dropped 'is_deleted' — tombstones must pass through " +
         "(filter by SETTING it, not by dropping rows)")
     // the upstream-derived probe hint transfers to the downstream merge
-    // only when the two tables share the bucket routing function: hash
-    // routing (no Z-order spec) on the SAME key columns in the same order,
-    // the same bucket count, and key types the transform left untouched
-    // (xxhash64 hashes the same logical value differently per type). Then
-    // every slice row lands downstream in the bucket it occupied upstream,
-    // so the upstream manifest's changed-bucket set IS the batch's
-    // affected set and the merge skips its probe scan — the steady-state
-    // follower commit drops to one data action plus manifest FS.
+    // only when the two tables share the bucket routing function
+    // ([[SnapshotParquetSink.sharesRouting]]: hash routing on the SAME key
+    // columns in the same order and the same bucket count) and the
+    // transform left the key types untouched (xxhash64 hashes the same
+    // logical value differently per type). Then every slice row lands
+    // downstream in the bucket it occupied upstream, so the upstream
+    // manifest's changed-bucket set IS the batch's affected set and the
+    // merge skips its probe scan — the steady-state follower commit drops
+    // to one data action plus manifest FS.
     val usable = hint.filter { h =>
-      downstream.isHashRouted &&
-        h.upNBuckets == downstream.bucketCount &&
-        h.upKeys == keys &&
+      downstream.sharesRouting(upstreamDir, h.version, keys) &&
         keys.forall(k => out.schema(k).dataType == df.schema(k).dataType)
     }
-    usable match {
-      case Some(h) =>
-        try downstream.mergeHinted(out, keys, seqCol, "is_deleted",
-          h.buckets, Some(h.maxSeq))
-        catch {
-          case _: SnapshotParquetSink.ProbeHintMismatch =>
-            // the staged write is already deleted and nothing was
-            // published, so unhinted replay is plain idempotent LWW
-            downstream.merge(out, keys, seqCol, "is_deleted")
-        }
-      case None => downstream.merge(out, keys, seqCol, "is_deleted")
+    try downstream.merge(out, keys, seqCol, "is_deleted",
+      probeHint = usable.map(h => (h.buckets, h.maxSeq)))
+    catch {
+      case _: SnapshotParquetSink.ProbeHintMismatch =>
+        // the staged write is already deleted and nothing was
+        // published, so unhinted replay is plain idempotent LWW
+        downstream.merge(out, keys, seqCol, "is_deleted")
     }
   }
 
@@ -135,15 +130,14 @@ object TableFollower {
       seqCol: String = "seq")
 
   /** Upstream-manifest metadata a hop MAY convert into a downstream probe
-    * hint ([[SnapshotParquetSink.mergeHinted]]): the slice's bucket set
-    * under the UPSTREAM routing, the upstream applied head, and the layout
-    * facts ([[applySlice]] gates on them per hop) that decide whether that
-    * routing transfers. Only built when the upstream is hash-routed and
-    * records a head — a clustered upstream routes by
-    * Z-order, which key-hash downstream merges cannot reproduce.
+    * hint (`probeHint` of [[SnapshotParquetSink.merge]]): the slice's
+    * bucket set under the UPSTREAM routing, the upstream applied head, and
+    * the upstream version whose manifest decides, per hop, whether that
+    * routing transfers ([[applySlice]]). Only built when the upstream
+    * records a head.
     */
   private[streaming] final case class SliceHint(buckets: Array[Int],
-      maxSeq: Long, upNBuckets: Int, upKeys: Seq[String])
+      maxSeq: Long, version: Long)
 
   /** The slice a follower at `applied` must merge to reach `latest`:
     * changed buckets only on the incremental path, the full state on first
@@ -158,14 +152,11 @@ object TableFollower {
       s"follower '$name' applied v$a but upstream head is v$latest — the " +
         "upstream table was rebuilt under the same path; delete the " +
         "follower checkpoint to restart from scratch"))
-    val (upN, upEntries) = SnapshotParquetSink.manifest(upstream.dir, latest)
-    val upClustered =
-      SnapshotParquetSink.manifestCluster(upstream.dir, latest).nonEmpty
-    val upKeys = SnapshotParquetSink.manifestKeys(upstream.dir, latest)
+    val upEntries = SnapshotParquetSink.manifest(upstream.dir, latest)._2
     val upMax = SnapshotParquetSink.manifestMaxSeq(upstream.dir, latest)
     def hintOver(buckets: Iterable[Int]): Option[SliceHint] =
-      if (upClustered || upMax.isEmpty || buckets.isEmpty) None
-      else Some(SliceHint(buckets.toArray.sorted, upMax.get, upN, upKeys))
+      if (upMax.isEmpty || buckets.isEmpty) None
+      else Some(SliceHint(buckets.toArray.sorted, upMax.get, latest))
     // the full state routes to exactly the buckets the manifest records
     def full: (DataFrame, Option[SliceHint]) =
       (upstream.readAt(spark, latest, DeleteMode.Logical),

@@ -70,11 +70,11 @@ class CommitSkewGuardSpec extends SparkSpec {
         .agg(sum(when(col("__is_deleted"), 0L).otherwise(col("n"))).as("n"),
           max(col("seq")).as("seq"), max(col("__gen")).as("__gen"))
         .withColumn("__is_deleted", lit(false))
-    sink.mergeFold(delta(("a", 1L, 0L), ("b", 2L, 0L)), Seq("k"), "seq",
-      "__del", None)(foldReduce)
+    sink.merge(delta(("a", 1L, 0L), ("b", 2L, 0L)), Seq("k"), "seq",
+      "__del", fold = Some(foldReduce))
     withFusedMaxBucketBytes(1L) {
-      sink.mergeFold(delta(("a", 10L, 1L), ("c", 5L, 1L)), Seq("k"), "seq",
-        "__del", Some(0L))(foldReduce)
+      sink.merge(delta(("a", 10L, 1L), ("c", 5L, 1L)), Seq("k"), "seq",
+        "__del", fold = Some(foldReduce), requireBaseSeq = Some(0L))
       assert(sink.lastCommitFusedShape.contains(false))
       val got = sink.read(spark, DeleteMode.Hard).collect()
         .map(r => r.getAs[String]("k") -> r.getAs[Long]("n")).toMap

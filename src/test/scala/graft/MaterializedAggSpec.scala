@@ -22,19 +22,16 @@ class MaterializedAggSpec extends SparkSpec
   // (suites run sequentially in the forked test JVM, so the global prop
   // cannot race another suite)
   override def beforeAll(): Unit = {
-    sys.props("graft.ivm.forceRegime") = "fold"
+    MaterializedAgg.forcedRegime = Some("fold")
     super.beforeAll()
   }
   override def afterAll(): Unit = {
-    sys.props.remove("graft.ivm.forceRegime")
+    MaterializedAgg.forcedRegime = None
     super.afterAll()
   }
 
   /** Runs `body` under the ambient (cost-based) regime pick. */
-  private def costBased[A](body: => A): A = {
-    sys.props.remove("graft.ivm.forceRegime")
-    try body finally { sys.props("graft.ivm.forceRegime") = "fold"; () }
-  }
+  private def costBased[A](body: => A): A = withRegime(None)(body)
 
   private def rows(t: (Int, String, Long, Long)*): DataFrame =
     t.toSeq.toDF("id", "grp", "v", "seq")
@@ -159,8 +156,7 @@ class MaterializedAggSpec extends SparkSpec
         src.merge(b, Seq("id"), "seq", "__del")
         val v = src.currentVersion.get
         views.flatMap { case (regime, m) =>
-          sys.props("graft.ivm.forceRegime") = regime
-          m.refresh(spark)
+          withRegime(Some(regime))(m.refresh(spark))
           val got = rowsOf(m.read(spark).select((m.groupCols ++ Seq("n", "sv", "mn", "mx")).map(col): _*))
           if (!distributed)
             assert(got == rowsOf(src.read(spark, DeleteMode.Hard).groupBy(m.groupCols.map(col): _*)
@@ -170,22 +166,21 @@ class MaterializedAggSpec extends SparkSpec
       }
       if (distributed) withLocalDiffOff(body) else body
     }
-    try withBulkGateOff {
+    withBulkGateOff {
       val small = run("arms_small", distributed = false)
       val planned = run("arms_dist", distributed = true)
       assert(small.size == planned.size)
       small.zip(planned).zipWithIndex.foreach { case ((a, b), i) =>
         assert(a == b, s"step $i differs between the arms")
       }
-    } finally sys.props("graft.ivm.forceRegime") = "fold"
+    }
   }
 
   test("a small recompute refresh merges a driver-local delta: no probe job") {
     val (src, m) = mk("localmerge")
     src.merge(rows((1, "a", 10, 1), (2, "b", 20, 2), (3, "c", 5, 3)), Seq("id"), "seq", "__del")
     m.refresh(spark)
-    sys.props("graft.ivm.forceRegime") = "recompute"
-    try withBulkGateOff {
+    withRegime(Some("recompute")) { withBulkGateOff {
       src.merge(rows((2, "a", 7, 4)), Seq("id"), "seq", "__del")
       assert(jobDescriptionsDuring { assert(m.refresh(spark) == Some(1L)) }
         .count(_ == "commit:probe") == 0)
@@ -196,7 +191,7 @@ class MaterializedAggSpec extends SparkSpec
           .count(_ == "commit:probe") >= 1)
       }
       assert(maintained(m) == direct(src))
-    } finally sys.props("graft.ivm.forceRegime") = "fold"
+    } }
   }
 
   test("a group whose last row is deleted vanishes from the aggregate") {
@@ -653,8 +648,8 @@ class MaterializedAggSpec extends SparkSpec
 
   test("arithmetic regimes: CONCURRENT refreshers apply exactly once (FoldBaseConflict retry)") {
     // two independent handles over the same view race a refresh of the
-    // same source commit: the guarded merge (mergeFold for deltas,
-    // mergeGuardedHinted for fold absolutes) must refuse the loser's stale
+    // same source commit: the guarded merge (a fold for deltas, a
+    // probe-hinted merge for fold absolutes) must refuse the loser's stale
     // write — double-applying a delta, or last-write-winning a stale
     // absolute, would corrupt the view silently
     for ((tag, withExt) <- Seq(("delta", false), ("fold", true))) {

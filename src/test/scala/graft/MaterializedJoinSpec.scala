@@ -211,6 +211,9 @@ class MaterializedJoinSpec extends SparkSpec {
 
   test("refresh merges are probe-hinted except on dim-driven advances") {
     val (f, d, m) = mk("hint")
+    // a view at another bucket count routes facts elsewhere: never hinted
+    val m8 = new MaterializedJoin(f, d, new SnapshotParquetSink(tmpDir("mjoin_hint_v8"),
+      nBuckets = 8), Seq("ck"), Seq("cname"), "left_outer")
     d.merge(dims(("a", "Acme", 1), ("b", "Bolt", 2)), Seq("ck"), "seq", "__ddel")
     f.merge(facts((1, "a", 10, 1), (2, "a", 20, 2), (3, "b", 5, 3)),
       Seq("id"), "seq", "__fdel")
@@ -218,11 +221,20 @@ class MaterializedJoinSpec extends SparkSpec {
     assert(jobDescriptionsDuring { assert(m.refresh(spark).isDefined) }
       .count(_ == "commit:probe") == 0, "initial build must ride the hint")
     assert(maintained(m) == direct(f, d, "left_outer"))
+    assert(jobDescriptionsDuring { assert(m8.refresh(spark).isDefined) }
+      .count(_ == "commit:probe") >= 1, "an 8-bucket view's initial build must probe")
+    assert(maintained(m8) == direct(f, d, "left_outer"))
     // fact-only advance: delta buckets ⊆ changed fact buckets — hinted
     f.merge(facts((1, "b", 11, 4)), Seq("id"), "seq", "__fdel")
     assert(jobDescriptionsDuring { assert(m.refresh(spark).isDefined) }
       .count(_ == "commit:probe") == 0, "fact-only advance must ride the hint")
     assert(maintained(m) == direct(f, d, "left_outer"))
+    // (the distributed arm: a driver-local delta is probed on the driver)
+    withLocalDiffOff {
+      assert(jobDescriptionsDuring { assert(m8.refresh(spark).isDefined) }
+        .count(_ == "commit:probe") >= 1, "an 8-bucket view's fact-only advance must probe")
+    }
+    assert(maintained(m8) == direct(f, d, "left_outer"))
     // dim-driven INCREMENTAL advance: updates fan out to arbitrary fact
     // buckets — the distributed arm probes. (The bulk gate would otherwise
     // route this tiny dim's advance to the rebuild arm, which is

@@ -906,6 +906,20 @@ class SnapshotParquetSinkSpec extends SparkSpec {
     assert(n.versions == Seq(0L))
     assert(SnapshotParquetSink.manifestMaxSeq(n.dir, 0L).isEmpty)
     assert(n.read(spark, DeleteMode.Hard).count() == 2)
+    // replaceAll probes through the same stage: one tagged probe job for a
+    // planned batch, none for a driver-local one, the same publication
+    val b2 = Seq(Row("a", 11L, "x3", false), Row("e", 12L, "e", false), Row("c", 4L, "", true))
+    val lj = jobDescriptionsDuring(l.replaceAll(local(b2: _*), Seq("primary_key"), "seq", "is_delete"))
+    assert(!lj.contains("commit:probe"), lj)
+    assert(jobDescriptionsDuring(p.replaceAll(planned(b2: _*), Seq("primary_key"), "seq",
+      "is_delete")).count(_ == "commit:probe") == 1)
+    assert(l.currentVersion.contains(2L) && p.currentVersion.contains(2L))
+    assert(SnapshotParquetSink.manifest(l.dir, 2L)._2.keySet ==
+      SnapshotParquetSink.manifest(p.dir, 2L)._2.keySet)
+    assert(SnapshotParquetSink.manifestMaxSeq(l.dir, 2L).contains(12L))
+    assert(SnapshotParquetSink.manifestMaxSeq(p.dir, 2L).contains(12L))
+    assert(state(l, DeleteMode.Logical) == state(p, DeleteMode.Logical))
+    assert(state(l, DeleteMode.Hard).keySet == Set("a", "e"))
   }
 
   test("column names that would corrupt the manifest line format are rejected at commit") {
@@ -957,9 +971,9 @@ class SnapshotParquetSinkSpec extends SparkSpec {
     // batch never writes — is legal: metadata-derived hints over-
     // approximate, and the manifest overlays only WRITTEN dirs; see below.)
     intercept[SnapshotParquetSink.ProbeHintMismatch] {
-      sink.mergeGuardedHinted(batch(("b", 1L, "b1", false)),
+      sink.merge(batch(("b", 1L, "b1", false)),
         Seq("primary_key"), "seq", "is_delete", requireBaseSeq = Some(0L),
-        affectedBuckets = Array(emptyBucket), batchMaxSeq = Some(1L))
+        probeHint = Some((Array(emptyBucket), 1L)))
     }
     // nothing published by the failed attempt — and nothing LEAKED: the
     // aborted write's data/<commitId> tree is deleted before surfacing
@@ -971,30 +985,28 @@ class SnapshotParquetSinkSpec extends SparkSpec {
     assert(onDisk == v0DataDirs,
       s"failed hinted merge left an orphan commit tree: ${onDisk -- v0DataDirs}")
     // the EXACT hint commits (probe job skipped) with correct state + head
-    sink.mergeGuardedHinted(b, Seq("primary_key"), "seq", "is_delete",
-      requireBaseSeq = Some(0L), affectedBuckets = Array(realBucket),
-      batchMaxSeq = Some(1L))
+    sink.merge(b, Seq("primary_key"), "seq", "is_delete",
+      requireBaseSeq = Some(0L), probeHint = Some((Array(realBucket), 1L)))
     assert(state(sink, DeleteMode.Hard) ==
       Map("a" -> (0L, "a0"), "b" -> (1L, "b1")))
     assert(SnapshotParquetSink.manifestMaxSeq(dir, 1L).contains(1L))
     // guarded-absolute semantics: the batch REPLACES its keys
-    sink.mergeGuardedHinted(batch(("b", 2L, "b2", false)),
+    sink.merge(batch(("b", 2L, "b2", false)),
       Seq("primary_key"), "seq", "is_delete", requireBaseSeq = Some(1L),
-      affectedBuckets = Array(realBucket), batchMaxSeq = Some(2L))
+      probeHint = Some((Array(realBucket), 2L)))
     assert(state(sink, DeleteMode.Hard) ==
       Map("a" -> (0L, "a0"), "b" -> (2L, "b2")))
     // a SUPERSET hint (an extra bucket holding neither current rows nor
-    // batch rows) commits via the unguarded mergeHinted: manifest entries
+    // batch rows) commits through an unguarded hinted merge: manifest entries
     // land only for the dirs the write produced, the phantom bucket keeps
     // no entry — metadata-derived hints may over-approximate
     val cBucket = batch(("c", 3L, "c3", false))
       .select(sink.bucketRouting(Seq("primary_key")).as("__b")).head().getInt(0)
     val phantom = (0 until 4)
       .filterNot(Set(aBucket, realBucket, cBucket)).head
-    sink.mergeHinted(batch(("c", 3L, "c3", false)), Seq("primary_key"),
+    sink.merge(batch(("c", 3L, "c3", false)), Seq("primary_key"),
       "seq", "is_delete",
-      affectedBuckets = Array(phantom, cBucket).distinct.sorted,
-      batchMaxSeq = Some(3L))
+      probeHint = Some((Array(phantom, cBucket).distinct.sorted, 3L)))
     assert(state(sink, DeleteMode.Hard) ==
       Map("a" -> (0L, "a0"), "b" -> (2L, "b2"), "c" -> (3L, "c3")))
     val headV = sink.currentVersion.get

@@ -62,6 +62,13 @@ trait SparkSpec extends AnyFunSuite {
   def withCollectCap[A](n: Int)(f: => A): A =
     withHook(MaterializedAgg.collectCap, n)(MaterializedAgg.collectCap = _)(f)
 
+  /** Runs `f` with the extremum-view regime pick
+    * ([[graft.sink.MaterializedAgg.forcedRegime]]) pinned to `regime`
+    * ("fold" or "recompute"; None = the cost model).
+    */
+  def withRegime[A](regime: Option[String])(f: => A): A =
+    withHook(MaterializedAgg.forcedRegime, regime)(MaterializedAgg.forcedRegime = _)(f)
+
   /** Runs `f` with the commit's fused-shape skew threshold
     * ([[graft.sink.SnapshotParquetSink.fusedMaxBucketBytes]]) at `n` bytes.
     */

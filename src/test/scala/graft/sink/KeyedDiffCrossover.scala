@@ -37,7 +37,7 @@ object KeyedDiffCrossover {
     val prior = SnapshotParquetSink.localDiffMaxBytes
     val priorFraction = MaterializedAgg.rebuildDirtyFraction
     MaterializedAgg.rebuildDirtyFraction = 2.0
-    sys.props("graft.ivm.forceRegime") = "recompute"
+    MaterializedAgg.forcedRegime = Some("recompute")
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime()
       f
@@ -89,7 +89,7 @@ object KeyedDiffCrossover {
     } finally {
       SnapshotParquetSink.localDiffMaxBytes = prior
       MaterializedAgg.rebuildDirtyFraction = priorFraction
-      sys.props.remove("graft.ivm.forceRegime")
+      MaterializedAgg.forcedRegime = None
     }
     spark.stop()
   }
