@@ -175,10 +175,9 @@ object Dfs {
     * references. On an IOException with `dst` present, the destination's
     * content is compared to the source's: identical ⇒ this writer WON
     * (the temp is cleaned up best-effort); different ⇒ genuine lost race.
-    * The comparison applies to FILES only — directory renames (the
-    * TextIndexStore crash restore) report lost race whenever `dst` exists,
-    * since reading a directory as UTF-8 is undefined and the store-restore
-    * callers already tolerate losing to an identical restore. Known
+    * The comparison applies to FILES only — a directory rename reports
+    * lost race whenever `dst` exists, since reading a directory as UTF-8
+    * is undefined. Known
     * ambiguity: two racers publishing BYTE-IDENTICAL bodies can both take
     * the identical-content branch and both report "won"; `dst` holds
     * exactly those bytes either way so state stays consistent — a caller

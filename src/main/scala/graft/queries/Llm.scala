@@ -1220,8 +1220,8 @@ object Llm {
     },
 
     // BM25 through a COMPACTED index: the 3-batch store merged to one
-    // batch dir by TextIndexStore.compact (tmp_/old_ two-rename swap,
-    // crash-recoverable — the store-maintenance twin of q61f). Scores
+    // batch dir by TextIndexStore.compact (a generation flip — the
+    // store-maintenance twin of q61f). Scores
     // must be bit-identical to the one-shot corpus scan, which is what
     // the oracle computes — so the merge's tf sums and position folds
     // cannot have lost or doubled anything.

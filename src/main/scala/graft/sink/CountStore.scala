@@ -25,62 +25,44 @@ import org.apache.spark.sql.functions._
   */
 final class CountStore(val dir: String) {
 
-  /** The generation readers and appenders bind to ([[Generations]]). */
-  def liveGen: Long = Generations.liveGen(dir)
+  private val gens = new Generations(dir, Seq(""))
 
-  private def base(g: Long): String = if (g == 0L) dir else s"$dir/gen=$g"
+  /** The generation readers and appenders bind to ([[Generations]]). */
+  def liveGen: Long = gens.liveGen
 
   /** Commits one batch's grouped counts over `keyCols`. Batch ids must be
     * strictly increasing across appends; an id at or below the live fold
     * watermark is a replay of an already-folded batch and no-ops.
     */
-  def append(batch: DataFrame, keyCols: Seq[String], batchId: Long): Unit = {
-    val (g, wm) = Generations.liveGenInfo(dir)
-    if (wm.exists(batchId <= _)) return
-    appendAt(g, batch, keyCols, batchId)
-  }
+  def append(batch: DataFrame, keyCols: Seq[String], batchId: Long): Unit =
+    gens.append(batchId)(appendAt(_, batch, keyCols, batchId))
 
   /** [[append]] bound to an explicit generation (straggler test seam —
     * [[HllSketchStore.appendAt]]).
     */
   private[graft] def appendAt(g: Long, batch: DataFrame, keyCols: Seq[String],
-      batchId: Long): Unit = {
+      batchId: Long): Unit =
     batch.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("n"))
       .coalesce(1)
-      .write.mode("overwrite").parquet(s"${base(g)}/batch=$batchId")
-    ()
-  }
-
-  /** The store's visible partials ([[Generations.visibleBatches]] — live
-    * generation plus unfolded stragglers, one dir per batch id).
-    */
-  private def visible(spark: SparkSession): DataFrame = {
-    val groups = Generations.visibleBatches(dir, base)
-    require(groups.head._2.nonEmpty, s"no committed count batches at $dir")
-    groups.filter(_._2.nonEmpty).map { case (b, paths) =>
-      spark.read.option("basePath", b).parquet(paths: _*)
-    }.reduce(_ unionByName _)
-  }
+      .write.mode("overwrite").parquet(gens.batchPath(g, "", batchId))
 
   /** Merged running counts per key over everything ever committed. */
   def counts(spark: SparkSession, keyCols: Seq[String]): DataFrame =
-    visible(spark)
+    gens.read(spark, "")
       .groupBy(keyCols.map(col): _*)
       .agg(sum(col("n")).as("n"))
 
   /** Store maintenance: fold every visible partial into ONE per-key
     * partial (count addition is exactly the read-time merge, so [[counts]]
     * is identical before and after), published as the next generation with
-    * the fold watermark ([[HllSketchStore.compact]] — appends may run
+    * the fold watermark ([[Generations.fold]] — appends may run
     * concurrent; remaining single-writer contract is
-    * maintenance-vs-maintenance only).
+    * maintenance-vs-maintenance only). `dropBelow` is the retention
+    * horizon: partials below it are dropped, not folded.
     */
   def compact(spark: SparkSession, dropBelow: Long = Long.MinValue): Unit =
     synchronized {
-      // dropBelow = retention horizon ([[HllSketchStore.compact]]): partials
-      // below it are dropped, not folded
-      Generations.foldCompact(spark, dir, base, "count-store compaction",
-          dropBelow) { raw =>
+      gens.fold(spark, "count-store compaction", dropBelow) { (_, raw) =>
         val keyCols = raw.columns.filterNot(Set("n", "batch")).toSeq
         raw.groupBy(keyCols.map(col): _*)
           .agg(sum(col("n")).as("n"))
@@ -88,10 +70,6 @@ final class CountStore(val dir: String) {
       }
     }
 
-  /** Age-guarded reclaim of superseded generations ([[Generations]]). */
-  def vacuumGenerations(minAgeMs: Long = 3600000L): Int = {
-    val flat = graft.engine.Dfs.list(new org.apache.hadoop.fs.Path(dir))
-      .map(_.getPath.getName).filter(_.startsWith("batch="))
-    Generations.vacuum(dir, flat.toSeq, minAgeMs)
-  }
+  /** Age-guarded reclaim of superseded generations ([[Generations.vacuum]]). */
+  def vacuumGenerations(minAgeMs: Long = 3600000L): Int = synchronized(gens.vacuum(minAgeMs))
 }

@@ -1,262 +1,258 @@
 package graft.sink
 
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.engine.Dfs
 
-/** Shared generation machinery for the batch-partial store family
-  * (vector index, text index, HLL sketches, heavy hitters): maintenance
-  * rewrites (compaction, reclustering) build a complete NEW state under a
-  * not-yet-live `gen=<g+1>/` prefix and flip readers with ONE manifest
-  * publish through the commit-lock seam — no rename swap, no reader
-  * window, partials invisible until the flip. Generation 0 is each
-  * store's original flat layout, so pre-generation stores read unchanged.
+/** The generation protocol of the batch-partial store family (counts, HLL
+  * sketches, heavy hitters, text index, vector index) — the one place that
+  * knows their layout, append guard, visible read, fold compaction,
+  * publish and vacuum. A store declares its sub-stores once: `batchSubs`
+  * hold `_SUCCESS`-gated `batch=<id>` dirs ("" = the generation base
+  * itself), `stateSubs` hold per-generation state (the vector index's
+  * centroids).
   *
-  * Fold watermarks (round 10) lift the append side of the single-writer
-  * contract for the COMPACTION stores: a compaction publishes its
-  * manifest with `watermark=W` = the largest batch id folded into the
-  * merged partials. Under the store family's append contract — batch ids
-  * are strictly increasing across appends (streaming epochs are; dated
-  * batch ids are) and a replayed id rewrites identical content — the
-  * watermark makes appends safe CONCURRENT with compaction:
+  * Layout: generation 0 is the flat layout (`<dir>/<sub>/batch=<id>`);
+  * generation g ≥ 1 lives under `<dir>/gen=<g>/`. Maintenance (fold
+  * compaction, reclustering) builds a complete new generation under the
+  * not-yet-live prefix and flips readers with ONE manifest publish
+  * (`gens/v<g>.manifest`) through the commit-lock seam: readers always
+  * have a live generation, and partials stay invisible until the flip. A
+  * batch dir exists once its write committed (Spark's `_SUCCESS` marker
+  * landed); a crash mid-append leaves a dir without the marker, which
+  * readers skip (replaying the append overwrites and commits it).
+  *
+  * Every manifest carries the fold `watermark=` (the largest batch id the
+  * maintenance folded or re-homed) and the straggler `floor=` (the lowest
+  * generation that can still hold an unfolded batch); a manifest missing
+  * either is refused. Under the append contract — batch ids strictly
+  * increase across appends and a replayed id rewrites identical content —
+  * the watermark makes appends safe CONCURRENT with maintenance:
   *
   *   - an append that committed into the superseded generation after the
-  *     compaction snapshotted its input has `id > W` (it wasn't committed
-  *     at snapshot time, and ids only grow), so [[visibleBatches]] keeps
-  *     serving it from the old generation after the flip — the batch that
-  *     previously "vanished from the new generation" is exactly this one;
-  *   - a replay of an already-folded id (`id <= W`) that lands AFTER the
-  *     flip must not re-add rows the merge already contains — the stores
-  *     turn that append into a no-op;
+  *     maintenance snapshotted its input has `id > watermark`, so
+  *     [[visible]] keeps serving it from there (a straggler) until the next
+  *     fold adopts it;
+  *   - a replay of an id at or below the watermark that lands after the
+  *     flip must not re-add rows the merge already holds — [[append]] turns
+  *     it into a no-op;
   *   - an id that landed twice (pre-flip into the old generation AND as a
-  *     post-flip replay into the new) is read ONCE — highest generation
+  *     post-flip append into the new) is read ONCE — highest generation
   *     wins.
-  *
-  * The vector index participates with recluster-migration watermarks:
-  * the re-homed ids are "folded", and a straggler's stale cell layout is
-  * re-derived under the live centroids at read time
-  * ([[VectorIndexStore.search]]). A manifest WITHOUT a watermark line
-  * (any pre-watermark manifest) keeps the legacy semantics: the live
-  * generation's dirs are the whole store, and the straggler walk stops —
-  * everything below such a manifest is fully folded by construction.
   */
-private[graft] object Generations {
+private[graft] final class Generations(dir: String, batchSubs: Seq[String],
+    stateSubs: Seq[String] = Nil) {
+  import Generations._
 
-  /** The generation readers and appenders of `dir` currently bind to. */
-  def liveGen(dir: String): Long =
-    manifestGens(dir).lastOption.getOrElse(0L)
+  /** The directory of sub-store `sub` in generation `g`. */
+  def path(g: Long, sub: String): String = {
+    val base = if (g == 0L) dir else s"$dir/gen=$g"
+    if (sub.isEmpty) base else s"$base/$sub"
+  }
 
-  private def manifestGens(dir: String): Seq[Long] =
-    Dfs.list(new HPath(s"$dir/gens"))
-      .map(_.getPath.getName)
+  /** Where an append (or a fold) of batch `id` into generation `g` writes. */
+  def batchPath(g: Long, sub: String, id: Long): String = s"${path(g, sub)}/batch=$id"
+
+  /** The generation readers and appenders currently bind to. */
+  def liveGen: Long =
+    Dfs.list(new HPath(s"$dir/gens")).map(_.getPath.getName)
       .collect { case s if s.startsWith("v") && s.endsWith(".manifest") =>
         s.stripPrefix("v").stripSuffix(".manifest").toLong }
-      .sorted
+      .foldLeft(0L)(math.max)
 
-  /** Generation `g`'s fold watermark: Some(w) ⇒ every batch with id <= w
-    * is folded into its merged partials; None ⇒ legacy fold-everything
-    * semantics (gen 0 has no manifest and always reads None).
+  /** The live generation with its watermark and floor, resolved once —
+    * callers that touch several sub-stores pass this to every call so the
+    * reads can't straddle a concurrent flip.
     */
-  def genWatermark(dir: String, g: Long): Option[Long] =
-    manifestLine(dir, g, "watermark=")
-
-  /** Generation `g`'s straggler floor: Some(f) ⇒ no generation BELOW f can
-    * hold an unfolded batch — the maintenance that published `g` folded (or
-    * retention-dropped under the watermark) every id visible below f, so a
-    * straggler can only live in [f, g). The reader walk stops there, which
-    * is what keeps reads O(1) manifest/listing probes after years of
-    * compactions instead of O(total flips). None (pre-floor manifests) ⇒
-    * unbounded legacy walk.
-    */
-  def genFloor(dir: String, g: Long): Option[Long] =
-    manifestLine(dir, g, "floor=")
-
-  private def manifestLine(dir: String, g: Long, key: String): Option[Long] =
-    if (g == 0L) None
-    else {
-      val p = new HPath(s"$dir/gens", f"v$g%08d.manifest")
-      if (!Dfs.exists(p)) None
-      else Dfs.readUtf8(p).split('\n')
-        .find(_.startsWith(key))
-        .map(_.stripPrefix(key).trim.toLong)
-    }
-
-  /** (live generation, its fold watermark) in one resolution. */
-  def liveGenInfo(dir: String): (Long, Option[Long]) = {
-    val g = liveGen(dir)
-    (g, genWatermark(dir, g))
+  def live: Live = {
+    val g = liveGen
+    if (g == 0L) Live(0L, Long.MinValue, 0L) else manifest(dir, g)
   }
 
-  /** Clears a crashed prior attempt at generation `ng` (invisible garbage
-    * — it never published).
+  /** Runs `write(liveGen)` unless `batchId` is at or below the live fold
+    * watermark — a checkpoint replay of a batch the merged partials
+    * already hold, which must not count twice.
     */
-  def clearPartial(dir: String, ng: Long): Unit =
-    Dfs.deleteTreeQuiet(new HPath(s"$dir/gen=$ng"))
+  def append(batchId: Long)(write: Long => Unit): Unit = {
+    val at = live
+    if (batchId > at.watermark) write(at.gen)
+  }
 
-  /** The atomic flip: publish generation `ng`'s manifest, carrying the
-    * fold watermark when the rewrite has one (compactions do; recluster
-    * migrations re-home every id and publish without) and the straggler
-    * floor ([[genFloor]] — the lowest generation that can still hold an
-    * unfolded batch; maintenance passes the generation that was live while
-    * it ran, lower only when it left known-unfolded ids deeper down).
-    * Errors on a lost race — maintenance is single-writer per store; a
-    * concurrent maintainer's result should be re-examined, not
-    * overwritten.
+  /** Committed batch dirs of `base`, id-ascending. */
+  private def committed(base: String): Seq[(Long, String)] = {
+    val d = new HPath(base)
+    if (!Dfs.exists(d)) Seq.empty
+    else Dfs.list(d)
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
+      .filter(s => Dfs.exists(new HPath(s.getPath, "_SUCCESS")))
+      .map(s => s.getPath.getName.stripPrefix("batch=").toLong -> s.getPath.toString)
+      .sortBy(_._1)
+  }
+
+  /** The committed batch dirs a reader (or the next fold) of `sub` must
+    * see, one [[Group]] per generation, live generation first (present even
+    * when empty). Superseded generations from `live - 1` down to the live
+    * floor contribute their stragglers — committed ids above the live
+    * watermark not already seen in a higher generation. The floor keeps a
+    * read at O(1) listings after years of flips instead of O(flips).
     */
-  def publish(dir: String, ng: Long, what: String,
-      watermark: Option[Long] = None, floor: Option[Long] = None): Unit = {
-    val body = s"gen=$ng\n" + watermark.map(w => s"watermark=$w\n").getOrElse("") +
-      floor.map(f => s"floor=$f\n").getOrElse("")
-    if (!graft.engine.CommitLock.publishFile(
-        new HPath(s"$dir/gens", f"v$ng%08d.manifest"), body))
+  def visible(sub: String, at: Live = live): Seq[Group] = {
+    val head = Group(at.gen, path(at.gen, sub), committed(path(at.gen, sub)))
+    var seen = head.batches.map(_._1).toSet
+    val stragglers = (at.gen - 1 to at.floor by -1).flatMap { p =>
+      val strag = committed(path(p, sub))
+        .filter { case (id, _) => id > at.watermark && !seen(id) }
+      seen ++= strag.map(_._1)
+      if (strag.isEmpty) None else Some(Group(p, path(p, sub), strag))
+    }
+    head +: stragglers
+  }
+
+  /** Every visible partial of `sub` as one frame (each group under its own
+    * `basePath`, so the `batch` partition column resolves).
+    */
+  def read(spark: SparkSession, sub: String, at: Live = live): DataFrame = {
+    val groups = visible(sub, at).filter(_.batches.nonEmpty)
+    require(groups.nonEmpty, s"no committed ${if (sub.isEmpty) "" else s"$sub "}batches at $dir")
+    groups.map(_.read(spark)).reduce(_ unionByName _)
+  }
+
+  /** The next generation for a maintenance pass that resolved `at`, with a
+    * crashed prior attempt at it cleared (it never published — garbage).
+    */
+  def next(at: Live): Long = {
+    Dfs.deleteTreeQuiet(new HPath(path(at.gen + 1, "")))
+    at.gen + 1
+  }
+
+  /** Fold compaction: merges every visible partial of each batch sub into
+    * ONE partial per sub (`merge(sub, raw)`), written as the next
+    * generation and published with the fold watermark and floor. One
+    * listing per sub is pinned for both the fold set and the merge read (a
+    * batch committed between two listings would otherwise be folded yet
+    * left above the watermark — double-counted forever).
+    *
+    * Only ids committed in EVERY sub fold: an append commits its subs one
+    * after another, so a concurrent append can be TORN here (one sub live,
+    * the next still writing); folding it would cover the id with the
+    * watermark and orphan its remaining sub forever. A torn id stays a
+    * straggler and the published floor reaches down to its deepest
+    * generation. With one sub no id can be torn.
+    *
+    * `dropBelow` is the retention horizon: partials below it are dropped,
+    * not folded, and sit under the watermark, so their replays no-op. The
+    * merged dir lands at −1 for a full fold (outside Spark's non-negative
+    * epoch space, so no replayed append can overwrite it) and at the
+    * window's max id for a retention fold (so later horizons can judge the
+    * merged window by id). Callers hold their own instance lock —
+    * maintenance is single-writer per store.
+    */
+  def fold(spark: SparkSession, what: String, dropBelow: Long)
+      (merge: (String, DataFrame) => DataFrame): Unit = {
+    val at = live
+    val ng = next(at)
+    val groups = batchSubs.map(sub => sub -> visible(sub, at)).toMap
+    // id → the generation serving it, per sub
+    val ids = groups.map { case (sub, gs) =>
+      sub -> gs.flatMap(g => g.batches.map(_._1 -> g.gen)).toMap }
+    val folded = ids.values.map(_.keySet).reduce(_ intersect _).filter(_ >= dropBelow)
+    require(folded.nonEmpty,
+      s"nothing to compact at $dir (retention dropBelow=$dropBelow left no partials)")
+    val foldedMax = folded.max
+    val torn = ids.values.flatMap(_.keySet).toSet.filter(id => id >= dropBelow && !folded(id))
+    // a torn id below a fully-committed one breaks the strictly-increasing
+    // append contract (the watermark would swallow it) — refuse loudly
+    require(torn.forall(_ > foldedMax),
+      s"half-committed batches ${torn.filter(_ <= foldedMax).toSeq.sorted} below " +
+        s"folded id $foldedMax at $dir — append contract violation, not compacting")
+    val mergedId = if (dropBelow == Long.MinValue) -1L else foldedMax
+    for (sub <- batchSubs) {
+      val raw = groups(sub).map(g => g.copy(batches = g.batches.filter(b => folded(b._1))))
+        .filter(_.batches.nonEmpty).map(_.read(spark)).reduce(_ unionByName _)
+      merge(sub, raw).write.mode("overwrite").parquet(batchPath(ng, sub, mergedId))
+    }
+    // the floor is the generation live while this fold ran — the only place
+    // a concurrent append can have landed — or a torn id's deeper one
+    val tornGens = torn.toSeq.flatMap(id => ids.values.flatMap(_.get(id)))
+    publish(ng, what, math.max(at.watermark, foldedMax), (at.gen +: tornGens).min)
+  }
+
+  /** The atomic flip: publishes generation `ng`'s manifest. Errors on a
+    * lost race — maintenance is single-writer per store; a concurrent
+    * maintainer's result should be re-examined, not overwritten.
+    */
+  def publish(ng: Long, what: String, watermark: Long, floor: Long): Unit =
+    if (!graft.engine.CommitLock.publishFile(manifestPath(dir, ng),
+        s"gen=$ng\nwatermark=$watermark\nfloor=$floor\n"))
       sys.error(s"$what lost the generation-$ng publish race at $dir — " +
         "another maintainer ran concurrently; re-run against its result")
-  }
 
-  /** The committed batch dirs a reader (or the next compaction) of one
-    * sub-store must see, grouped per generation base dir so each group can
-    * be read under its own `basePath` (`subBase(g)` — the base the
-    * `batch=` partition column resolves against). Live generation first.
-    *
-    * Without a live watermark this is exactly the live generation's
-    * committed dirs (legacy). With one, superseded generations are walked
-    * highest-first for stragglers — committed ids `> watermark` not
-    * already seen in a higher generation — and the walk stops below the
-    * first superseded generation whose own manifest carries no watermark
-    * (a legacy fold-everything flip: nothing under it can be unfolded).
+  /** Reclaims superseded generations whose superseding flip (the publish
+    * of `gens/v<g+1>.manifest`) is at least `minAgeMs` old — the window
+    * in-flight readers that resolved `g` just before the flip may still be
+    * scanning it. Gen 0's flat dirs are one generation. A generation the
+    * visible read still serves stragglers from is kept; the next fold
+    * adopts them, after which it goes. Returns the number reclaimed.
     */
-  def visibleBatches(dir: String,
-      subBase: Long => String): Seq[(String, Seq[String])] =
-    visibleBatchesAt(dir, liveGenInfo(dir), subBase)
-
-  /** [[visibleBatches]] against an already-resolved (live, watermark) —
-    * multi-sub-store readers (text index: postings + doclens) resolve ONCE
-    * so the two sub-reads can't straddle a concurrent flip.
-    */
-  def visibleBatchesAt(dir: String, info: (Long, Option[Long]),
-      subBase: Long => String): Seq[(String, Seq[String])] =
-    visibleBatchesByGen(dir, info, subBase).map { case (_, b, ps) => b -> ps }
-
-  /** [[visibleBatchesAt]] with each group's generation — callers that must
-    * know WHERE an unfolded id lives (the text index derives its published
-    * floor from the torn ids' generations) read this form.
-    */
-  def visibleBatchesByGen(dir: String, info: (Long, Option[Long]),
-      subBase: Long => String): Seq[(Long, String, Seq[String])] = {
-    val (live, wm) = info
-    val liveBase = subBase(live)
-    val liveDirs = BatchStore.committedBatchDirs(liveBase)
-    val head = (live, liveBase, liveDirs.map(_._2))
-    wm match {
-      case None => Seq(head)
-      case Some(w) =>
-        // the straggler walk is floor-bounded: the live manifest's floor is
-        // the lowest generation that can still hold an unfolded id, so in
-        // steady state (every flip publishes one) a read probes exactly one
-        // superseded generation — not one per historical compaction
-        val stop = genFloor(dir, live).getOrElse(0L)
-        var seen = liveDirs.map(_._1).toSet
-        val groups = Seq.newBuilder[(Long, String, Seq[String])]
-        var p = live - 1
-        var open = true
-        while (p >= stop && open) {
-          val b = subBase(p)
-          val strag = BatchStore.committedBatchDirs(b)
-            .filter { case (id, _) => id > w && !seen.contains(id) }
-          if (strag.nonEmpty) {
-            seen ++= strag.map(_._1)
-            groups += ((p, b, strag.map(_._2)))
-          }
-          // a watermark-less superseded manifest folded everything below it
-          open = p == 0L || genWatermark(dir, p).isDefined
-          p -= 1
-        }
-        head +: groups.result()
-    }
-  }
-
-  /** Reclaims superseded (non-live) generations older than `minAgeMs`:
-    * `flatSubs` are the store's gen-0 flat directories (collected once a
-    * migration superseded them), plus every `gen=<g>` root below the live
-    * generation. The age guard covers in-flight readers around a flip.
-    *
-    * `batchSubs` names the sub dirs holding `batch=` dirs ("" = the
-    * generation base itself): when the live manifest carries a fold
-    * watermark, a superseded generation still holding committed stragglers
-    * (ids above the watermark — load-bearing via [[visibleBatches]]) is
-    * NOT reclaimed; the next compaction folds them and lifts the
-    * watermark past, after which reclaim proceeds. Returns the number of
-    * generations reclaimed.
-    */
-  def vacuum(dir: String, flatSubs: Seq[String], minAgeMs: Long,
-      batchSubs: Seq[String] = Seq("")): Int = {
-    val (live, wm) = liveGenInfo(dir)
+  def vacuum(minAgeMs: Long): Int = {
+    val at = live
     val now = System.currentTimeMillis()
-    // absent = vacuously cold (a half-reclaimed flat layout must not block
-    // the rest forever)
-    def cold(p: HPath): Boolean =
-      !Dfs.exists(p) || Dfs.list(p).forall(st =>
-        now - st.getModificationTime >= minAgeMs)
-    def holdsStragglers(genBase: String): Boolean = wm.exists { w =>
-      batchSubs.exists { sub =>
-        val b = if (sub.isEmpty) genBase else s"$genBase/$sub"
-        BatchStore.committedBatchDirs(b).exists(_._1 > w)
-      }
+    val serving = batchSubs.flatMap(visible(_, at).map(_.gen)).toSet
+    def reclaimable(g: Long): Boolean = g < at.gen && !serving(g) && {
+      val flip = manifestPath(dir, g + 1)
+      Dfs.exists(flip) &&
+        now - Dfs.fs(flip).getFileStatus(flip).getModificationTime >= minAgeMs
     }
-    var n = 0
-    if (live > 0L && flatSubs.exists(s => Dfs.exists(new HPath(s"$dir/$s")))) {
-      if (flatSubs.forall(s => cold(new HPath(s"$dir/$s"))) &&
-          !holdsStragglers(dir)) {
-        flatSubs.foreach(s => Dfs.deleteTreeQuiet(new HPath(s"$dir/$s")))
-        n += 1
-      }
+    val flat = (batchSubs ++ stateSubs).flatMap { sub =>
+      if (sub.nonEmpty) Seq(new HPath(s"$dir/$sub")).filter(Dfs.exists)
+      else Dfs.list(new HPath(dir)).map(_.getPath).filter(_.getName.startsWith("batch="))
     }
-    Dfs.list(new HPath(dir))
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen="))
-      .filter(st => st.getPath.getName.stripPrefix("gen=").toLong < live)
-      .filter(st => now - st.getModificationTime >= minAgeMs)
-      .filterNot(st => holdsStragglers(st.getPath.toString))
-      .foreach { st => Dfs.deleteTreeQuiet(st.getPath); n += 1 }
-    n
+    val flatGone = if (flat.nonEmpty && reclaimable(0L)) {
+      flat.foreach(Dfs.deleteTreeQuiet); 1
+    } else 0
+    val gens = Dfs.list(new HPath(dir)).map(_.getPath)
+      .filter(p => p.getName.startsWith("gen=") &&
+        reclaimable(p.getName.stripPrefix("gen=").toLong))
+    gens.foreach(Dfs.deleteTreeQuiet)
+    flatGone + gens.size
+  }
+}
+
+private[graft] object Generations {
+
+  /** A resolved generation: its number, fold watermark and straggler floor
+    * (gen 0 has no manifest: nothing folded, nothing below it).
+    */
+  final case class Live(gen: Long, watermark: Long, floor: Long)
+
+  /** One generation's visible committed batch dirs `(id, path)` under its
+    * sub-store dir `base`.
+    */
+  final case class Group(gen: Long, base: String, batches: Seq[(Long, String)]) {
+    def paths: Seq[String] = batches.map(_._2)
+    def read(spark: SparkSession): DataFrame =
+      spark.read.option("basePath", base).parquet(paths: _*)
   }
 
-  /** The compact scaffold shared by the single-sub batch-partial stores
-    * (counts, HLL, Misra–Gries): resolve the live generation ONCE, pin one
-    * directory listing for BOTH the fold-set computation and the merge read
-    * (a batch committed between two listings would otherwise be folded yet
-    * left above the watermark — double-counted forever), apply the
-    * `dropBelow` retention horizon, write `merge(raw)` as the new
-    * generation's single `batch=` dir and flip with a watermarked,
-    * floor-carrying manifest publish. The merged dir lands at −1 for a
-    * full fold (outside Spark's non-negative epoch space, so no replayed
-    * append can overwrite it) and at the window's max id for a retention
-    * fold (so later horizons can judge the merged window by id). Callers
-    * hold their own instance lock — maintenance is single-writer per
-    * store.
+  private def manifestPath(dir: String, g: Long) = new HPath(s"$dir/gens", f"v$g%08d.manifest")
+
+  /** Generation `g`'s manifest (g ≥ 1); one missing its watermark or floor
+    * line is refused.
     */
-  private[sink] def foldCompact(spark: org.apache.spark.sql.SparkSession,
-      dir: String, base: Long => String, what: String, dropBelow: Long)
-      (merge: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
-    val info @ (g, wm) = liveGenInfo(dir)
-    val ng = g + 1
-    clearPartial(dir, ng)
-    val groups = visibleBatchesAt(dir, info, base)
-      .map { case (b, paths) =>
-        b -> paths.filter(p => BatchStore.idOf(p) >= dropBelow) }
-    val kept = groups.flatMap(_._2)
-    require(kept.nonEmpty,
-      s"nothing to compact at $dir (retention dropBelow=$dropBelow left no partials)")
-    val foldedMax = kept.map(BatchStore.idOf).max
-    val raw = groups.filter(_._2.nonEmpty).map { case (b, paths) =>
-      spark.read.option("basePath", b).parquet(paths: _*)
-    }.reduce(_ unionByName _)
-    val mergedId = if (dropBelow == Long.MinValue) -1L else foldedMax
-    merge(raw).write.mode("overwrite").parquet(s"${base(ng)}/batch=$mergedId")
-    // the watermark also covers retention-DROPPED ids (they sit below the
-    // kept ones by the monotone-id contract), so their replays no-op; the
-    // floor is the generation that was live while this fold ran — the only
-    // place a concurrent append can have landed
-    publish(dir, ng, what,
-      watermark = Some(Seq(wm.getOrElse(Long.MinValue), foldedMax).max),
-      floor = Some(g))
+  private def manifest(dir: String, g: Long): Live = {
+    val lines = Dfs.readUtf8(manifestPath(dir, g)).split('\n')
+    def value(key: String): Long = lines.find(_.startsWith(key))
+      .getOrElse(sys.error(s"generation $g manifest at $dir has no '$key' line — " +
+        "every generation manifest carries watermark= and floor="))
+      .stripPrefix(key).trim.toLong
+    Live(g, value("watermark="), value("floor="))
   }
+
+  /** Generation `g`'s fold watermark (None for gen 0). */
+  def genWatermark(dir: String, g: Long): Option[Long] =
+    Option.when(g > 0L)(manifest(dir, g).watermark)
+
+  /** Generation `g`'s straggler floor (None for gen 0). */
+  def genFloor(dir: String, g: Long): Option[Long] =
+    Option.when(g > 0L)(manifest(dir, g).floor)
 }

@@ -22,21 +22,18 @@ import org.apache.spark.sql.functions._
   */
 final class HeavyHitterStore(val dir: String, k: Int = 2000) {
 
-  /** The generation readers and appenders bind to ([[Generations]]). */
-  def liveGen: Long = Generations.liveGen(dir)
+  private val gens = new Generations(dir, Seq(""))
 
-  private def base(g: Long): String = if (g == 0L) dir else s"$dir/gen=$g"
+  /** The generation readers and appenders bind to ([[Generations]]). */
+  def liveGen: Long = gens.liveGen
 
   /** Sketch one batch's items and commit the ≤ k-row partial. Batch ids
     * must be strictly increasing across appends ([[HllSketchStore.append]]
     * — the concurrent-compaction contract); an id at or below the live
     * fold watermark is a replay of an already-folded batch and no-ops.
     */
-  def append(batch: DataFrame, itemCol: Column, batchId: Long): Unit = {
-    val (g, wm) = Generations.liveGenInfo(dir)
-    if (wm.exists(batchId <= _)) return
-    appendAt(g, batch, itemCol, batchId)
-  }
+  def append(batch: DataFrame, itemCol: Column, batchId: Long): Unit =
+    gens.append(batchId)(appendAt(_, batch, itemCol, batchId))
 
   /** [[append]] bound to an explicit generation (straggler test seam —
     * [[HllSketchStore.appendAt]]).
@@ -47,19 +44,7 @@ final class HeavyHitterStore(val dir: String, k: Int = 2000) {
         count(lit(1)).as("batch_n"))
       .select(explode(col("hh")).as(Seq("item", "est")), col("batch_n"))
       .coalesce(1)
-      .write.mode("overwrite").parquet(s"${base(g)}/batch=$batchId")
-
-  /** The store's visible partials across generations
-    * ([[Generations.visibleBatches]] — live dirs plus unfolded
-    * stragglers, one dir per batch id).
-    */
-  private def visible(spark: SparkSession): DataFrame = {
-    val groups = Generations.visibleBatches(dir, base)
-    require(groups.head._2.nonEmpty, s"no committed heavy-hitter batches at $dir")
-    groups.filter(_._2.nonEmpty).map { case (b, paths) =>
-      spark.read.option("basePath", b).parquet(paths: _*)
-    }.reduce(_ unionByName _)
-  }
+      .write.mode("overwrite").parquet(gens.batchPath(g, "", batchId))
 
   /** Merged candidates from committed partials only: ((item, est) rows,
     * error bound). True count of any returned item lies in
@@ -69,7 +54,7 @@ final class HeavyHitterStore(val dir: String, k: Int = 2000) {
     * frame and bound 0, not a null crash.
     */
   def candidates(spark: SparkSession): (DataFrame, Long) = {
-    val raw = visible(spark)
+    val raw = gens.read(spark, "")
     // Σ_b n_b / (k+1): one row per batch feeds the driver scalar
     val bound = raw.select(col("batch"), col("batch_n")).distinct()
       .agg(coalesce(sum(col("batch_n")), lit(0L))).head().getLong(0) / (k + 1L)
@@ -81,12 +66,12 @@ final class HeavyHitterStore(val dir: String, k: Int = 2000) {
     * time, so the compacted store's candidates AND error bound are
     * identical (the merged rows carry the summed batch total; the additive
     * Σ n_b/(k+1) guarantee is unchanged). Published as the next generation
-    * ([[Generations]]); superseded partials stay for in-flight readers
-    * until [[vacuumGenerations]]. The published manifest carries the fold
-    * watermark, so appends may run concurrent with compaction
-    * ([[HllSketchStore.compact]] — stragglers stay visible from the
-    * superseded generation, folded-id replays no-op); the remaining
-    * single-writer contract is maintenance-vs-maintenance only.
+    * ([[Generations.fold]]); superseded partials stay for in-flight
+    * readers until [[vacuumGenerations]]. The published manifest carries
+    * the fold watermark, so appends may run concurrent with compaction
+    * (stragglers stay visible from the superseded generation, folded-id
+    * replays no-op); the remaining single-writer contract is
+    * maintenance-vs-maintenance only.
     * `dropBelow` is the retention horizon ([[HllSketchStore.compact]]):
     * partials below it are dropped, not folded — "trending over all time"
     * becomes "trending over the retained window", with the error bound
@@ -94,8 +79,7 @@ final class HeavyHitterStore(val dir: String, k: Int = 2000) {
     */
   def compact(spark: SparkSession, dropBelow: Long = Long.MinValue): Unit =
     synchronized {
-      Generations.foldCompact(spark, dir, base, "heavy-hitter compaction",
-          dropBelow) { raw =>
+      gens.fold(spark, "heavy-hitter compaction", dropBelow) { (_, raw) =>
         val totalN = raw.select(col("batch"), col("batch_n")).distinct()
           .agg(coalesce(sum(col("batch_n")), lit(0L))).head().getLong(0)
         raw.groupBy("item").agg(sum(col("est")).as("est"))
@@ -104,10 +88,6 @@ final class HeavyHitterStore(val dir: String, k: Int = 2000) {
       }
     }
 
-  /** Age-guarded reclaim of superseded generations ([[Generations]]). */
-  def vacuumGenerations(minAgeMs: Long = 3600000L): Int = {
-    val flat = graft.engine.Dfs.list(new org.apache.hadoop.fs.Path(dir))
-      .map(_.getPath.getName).filter(_.startsWith("batch="))
-    Generations.vacuum(dir, flat.toSeq, minAgeMs)
-  }
+  /** Age-guarded reclaim of superseded generations ([[Generations.vacuum]]). */
+  def vacuumGenerations(minAgeMs: Long = 3600000L): Int = synchronized(gens.vacuum(minAgeMs))
 }

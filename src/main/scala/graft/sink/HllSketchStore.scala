@@ -24,10 +24,10 @@ import org.apache.spark.sql.functions._
   */
 final class HllSketchStore(val dir: String, lgK: Int = 12) {
 
-  /** The generation readers and appenders bind to ([[Generations]]). */
-  def liveGen: Long = Generations.liveGen(dir)
+  private val gens = new Generations(dir, Seq(""))
 
-  private def base(g: Long): String = if (g == 0L) dir else s"$dir/gen=$g"
+  /** The generation readers and appenders bind to ([[Generations]]). */
+  def liveGen: Long = gens.liveGen
 
   /** Sketch one batch's per-group partials and commit them under the live
     * generation's `batch=<batchId>`. One narrow aggregation over the new
@@ -40,11 +40,8 @@ final class HllSketchStore(val dir: String, lgK: Int = 12) {
     * merged partial already contains it; re-appending would double-count).
     */
   def append(batch: DataFrame, groupCols: Seq[String], valueCol: String,
-      batchId: Long): Unit = {
-    val (g, wm) = Generations.liveGenInfo(dir)
-    if (wm.exists(batchId <= _)) return
-    appendAt(g, batch, groupCols, valueCol, batchId)
-  }
+      batchId: Long): Unit =
+    gens.append(batchId)(appendAt(_, batch, groupCols, valueCol, batchId))
 
   /** [[append]] bound to an explicit generation — the write path after the
     * generation resolution, exposed so tests can commit a straggler into a
@@ -55,35 +52,19 @@ final class HllSketchStore(val dir: String, lgK: Int = 12) {
     batch.groupBy(groupCols.map(col): _*)
       .agg(hll_sketch_agg(col(valueCol), lit(lgK)).as("sk"),
         count(lit(1)).as("n_rows"))
-      .write.mode("overwrite").parquet(s"${base(g)}/batch=$batchId")
+      .write.mode("overwrite").parquet(gens.batchPath(g, "", batchId))
 
-  /** Batch dirs whose write COMMITTED — [[BatchStore.committedBatchPaths]],
-    * the uncommitted-data-never-surfaces contract shared with
-    * [[HeavyHitterStore]] and mirroring the snapshot sink's manifest.
+  /** The live generation's committed batch dirs — uncommitted partials
+    * (no `_SUCCESS` marker) never surface ([[Generations.visible]]).
     */
-  def committedBatchPaths: Seq[String] =
-    BatchStore.committedBatchPaths(base(liveGen))
-
-  /** The store's visible partials: the live generation's committed dirs
-    * plus unfolded stragglers a concurrent appender committed into a
-    * superseded generation ([[Generations.visibleBatches]] — one dir per
-    * batch id, each group read under its own basePath so the `batch`
-    * partition column resolves).
-    */
-  private def visible(spark: SparkSession): DataFrame = {
-    val groups = Generations.visibleBatches(dir, base)
-    require(groups.head._2.nonEmpty, s"no committed sketch batches at $dir")
-    groups.filter(_._2.nonEmpty).map { case (b, paths) =>
-      spark.read.option("basePath", b).parquet(paths: _*)
-    }.reduce(_ unionByName _)
-  }
+  def committedBatchPaths: Seq[String] = gens.visible("").head.paths
 
   /** Merge every COMMITTED partial: per group, the unioned-sketch estimate
     * plus batch/row bookkeeping. Reads only sketch rows — history's data
     * files are never touched.
     */
   def estimates(spark: SparkSession, groupCols: Seq[String]): DataFrame =
-    visible(spark)
+    gens.read(spark, "")
       .groupBy(groupCols.map(col): _*)
       .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("estimate"),
         countDistinct(col("batch")).cast("bigint").as("n_batches"),
@@ -93,7 +74,7 @@ final class HllSketchStore(val dir: String, lgK: Int = 12) {
     * group (HLL union is associative and idempotent at a fixed lgK, so a
     * compacted store answers [[estimates]] identically — except
     * `n_batches`, which becomes 1 by construction), published as the next
-    * generation ([[Generations]] — readers safe during the rewrite, no
+    * generation ([[Generations.fold]] — readers safe during the rewrite, no
     * reader window; superseded partials stay for in-flight readers until
     * [[vacuumGenerations]]). A year of daily appends collapses from 365
     * batch dirs to one.
@@ -102,7 +83,7 @@ final class HllSketchStore(val dir: String, lgK: Int = 12) {
     * id merged — so appends may run CONCURRENT with compaction: a batch
     * the snapshot below didn't see commits with a higher id (strictly
     * increasing ids) and stays visible from the superseded generation
-    * ([[Generations.visibleBatches]]) until the next compact folds it;
+    * ([[Generations.visible]]) until the next compact folds it;
     * a post-flip replay of a folded id no-ops ([[append]]). The remaining
     * single-writer contract is maintenance-vs-maintenance only.
     *
@@ -120,11 +101,7 @@ final class HllSketchStore(val dir: String, lgK: Int = 12) {
     */
   def compact(spark: SparkSession, dropBelow: Long = Long.MinValue): Unit =
     synchronized {
-      // the scaffold ([[Generations.foldCompact]]) pins one listing, lands
-      // full folds at −1 / retention folds at the window's max id, and
-      // publishes the watermark + straggler floor
-      Generations.foldCompact(spark, dir, base, "sketch-store compaction",
-          dropBelow) { raw =>
+      gens.fold(spark, "sketch-store compaction", dropBelow) { (_, raw) =>
         val groupCols = raw.columns.filterNot(Set("sk", "n_rows", "batch")).toSeq
         raw.groupBy(groupCols.map(col): _*)
           .agg(hll_union_agg(col("sk")).as("sk"), sum(col("n_rows")).as("n_rows"))
@@ -132,10 +109,6 @@ final class HllSketchStore(val dir: String, lgK: Int = 12) {
       }
     }
 
-  /** Age-guarded reclaim of superseded generations ([[Generations]]). */
-  def vacuumGenerations(minAgeMs: Long = 3600000L): Int = {
-    val flat = graft.engine.Dfs.list(new org.apache.hadoop.fs.Path(dir))
-      .map(_.getPath.getName).filter(_.startsWith("batch="))
-    Generations.vacuum(dir, flat.toSeq, minAgeMs)
-  }
+  /** Age-guarded reclaim of superseded generations ([[Generations.vacuum]]). */
+  def vacuumGenerations(minAgeMs: Long = 3600000L): Int = synchronized(gens.vacuum(minAgeMs))
 }

@@ -36,27 +36,18 @@ import graft.llm.KMeans
   * committed batch reassigned under them — and flips readers to it with
   * one atomic manifest publish, so a reader can never pair one
   * generation's centroids with another's cell layout. Each generation's
-  * centroids are frozen, which preserves the replay contract: a crashed
-  * stream replaying `append(batchId)` after a migration rewrites that
-  * batch's dir in the NEW generation with deterministic identical content.
+  * centroids are frozen, which preserves the replay contract; a crashed
+  * stream replaying `append(batchId)` of a batch a migration re-homed is a
+  * no-op (the id sits under the migration's watermark).
   */
 final class VectorIndexStore(val dir: String) {
 
-  import org.apache.hadoop.fs.{Path => HPath}
-  import graft.engine.Dfs
-
-  // ---- generation layer: gen 0 is the original flat layout; recluster
-  // publishes gen manifests (gens/v%08d.manifest via the commit-lock seam)
-  // whose maximum is the LIVE generation — readers resolve centroids and
-  // vectors through one gen, so the pair can never tear.
+  // centroids and vectors live in one generation ([[Generations]]):
+  // readers resolve it once, so the pair can never tear
+  private val gens = new Generations(dir, Seq("vectors"), Seq("centroids"))
 
   /** The generation readers and appenders currently bind to. */
-  def liveGen: Long = Generations.liveGen(dir)
-
-  private def centroidsPath(g: Long): String =
-    if (g == 0L) s"$dir/centroids" else s"$dir/gen=$g/centroids"
-  private def vectorsPath(g: Long): String =
-    if (g == 0L) s"$dir/vectors" else s"$dir/gen=$g/vectors"
+  def liveGen: Long = gens.liveGen
 
   /** Trains the cell layout on the initial corpus (integer Lloyd — see
     * [[graft.llm.KMeans.train]]) and persists the centroid table. Call once
@@ -66,25 +57,23 @@ final class VectorIndexStore(val dir: String) {
   def init(corpus: DataFrame, k: Int, iters: Int, scale: Int = 4096,
       idCol: String = "vec_id", embCol: String = "embedding"): Unit = {
     val model = KMeans.train(corpus, k, iters, scale, idCol, embCol)
-    model.centroids.coalesce(1).write.mode("overwrite").parquet(centroidsPath(0L))
+    model.centroids.coalesce(1).write.mode("overwrite").parquet(gens.path(0L, "centroids"))
   }
 
   private def centroidsAt(spark: SparkSession, g: Long): KMeans.Centroids =
-    KMeans.collectCentroids(spark.read.parquet(centroidsPath(g)))
-
-  private def centroids(spark: SparkSession): KMeans.Centroids =
-    centroidsAt(spark, liveGen)
+    KMeans.collectCentroids(spark.read.parquet(gens.path(g, "centroids")))
 
   /** Assigns one vector batch to the frozen centroids and commits it,
     * partitioned by cell. The raw embedding rides along for the exact
     * rerank at search time (the quantized view exists only inside the
     * assignment expression), and every OTHER input column is persisted as
     * payload — metadata (labels, timestamps, source) that a filtered
-    * search can push down into the cell scan.
+    * search can push down into the cell scan. An id at or below the live
+    * watermark was re-homed by a [[recluster]]; its replay no-ops.
     */
   def append(batch: DataFrame, batchId: Long, scale: Int = 4096,
       idCol: String = "vec_id", embCol: String = "embedding"): Unit =
-    appendTo(liveGen, batch, batchId, scale, idCol, embCol)
+    gens.append(batchId)(appendTo(_, batch, batchId, scale, idCol, embCol))
 
   /** [[append]] bound to an explicit generation (also the straggler test
     * seam — [[HllSketchStore.appendAt]]).
@@ -97,27 +86,22 @@ final class VectorIndexStore(val dir: String) {
       .withColumn("cell",
         KMeans.cellOf(KMeans.quantize(col("embedding"), scale), cents))
       .write.partitionBy("cell").mode("overwrite")
-      .parquet(s"${vectorsPath(g)}/batch=$batchId")
+      .parquet(gens.batchPath(g, "vectors", batchId))
   }
 
-  /** Straggler batches under an already-resolved (generation, watermark):
-    * committed dirs an in-flight appender landed in a SUPERSEDED
-    * generation after [[recluster]] snapshotted its input (their ids sit
-    * above the manifest's fold watermark — the strictly-increasing-ids
-    * append contract). Their stored `cell` column is stale (it was
-    * assigned under the superseded generation's centroids), so readers
-    * re-derive cells under the LIVE centroids at read time — stragglers
-    * are one or two batch dirs, so the full-file read is batch-sized, not
-    * corpus-sized. Returns the raw rows (payload kept, bookkeeping
-    * dropped); empty frame when there are none.
+  /** The live generation's vectors and, separately, the stragglers an
+    * in-flight appender committed into a superseded generation after a
+    * [[recluster]] snapshotted its input ([[Generations.visible]]). A
+    * straggler's stored `cell` is stale (assigned under the superseded
+    * centroids), so readers re-derive it under the live centroids —
+    * stragglers are a batch or two, so that full read is batch-sized.
     */
-  private def stragglerVectors(spark: SparkSession,
-      info: (Long, Option[Long])): Option[DataFrame] = {
-    val groups = Generations.visibleBatchesAt(dir, info, vectorsPath).drop(1)
-    val frames = groups.filter(_._2.nonEmpty).map { case (b, paths) =>
-      spark.read.option("basePath", b).parquet(paths: _*).drop("batch", "cell")
-    }
-    frames.reduceOption(_ unionByName _)
+  private def vectorsAt(spark: SparkSession,
+      at: Generations.Live): (DataFrame, Option[DataFrame]) = {
+    val live +: strag = gens.visible("vectors", at)
+    require(live.batches.nonEmpty, s"no committed vector batches at $dir")
+    (live.read(spark).drop("batch"),
+      strag.map(_.read(spark).drop("batch", "cell")).reduceOption(_ unionByName _))
   }
 
   /** Top-k by exact cosine within the `nProbe` nearest cells per query —
@@ -145,8 +129,8 @@ final class VectorIndexStore(val dir: String) {
     // resolve the generation ONCE: reading liveGen again for the vectors
     // could pair one generation's centroids with another's cell layout if
     // a recluster flips between the two reads
-    val info @ (g, _) = Generations.liveGenInfo(dir)
-    val cents = centroidsAt(spark, g)
+    val at = gens.live
+    val cents = centroidsAt(spark, at.gen)
     val q = queries.select(col(idCol).as("q_id"), col(embCol).as("qe"))
       .withColumn("cells",
         KMeans.probeCellsOf(KMeans.quantize(col("qe"), scale), cents, nProbe))
@@ -154,19 +138,14 @@ final class VectorIndexStore(val dir: String) {
     // bounded by k regardless of query count
     val probed = q.select(explode(col("cells")).as("cell")).distinct()
       .collect().map(_.getInt(0)).sorted
-    val vdir = vectorsPath(g)
-    val batches = BatchStore.committedBatchPaths(vdir)
-    require(batches.nonEmpty, s"no committed vector batches at $dir")
-    val live = spark.read.option("basePath", vdir)
-      .parquet(batches: _*)
-      .filter(col("cell").isin(probed.map(Integer.valueOf): _*))
-      .drop("batch")
+    val (live, strag) = vectorsAt(spark, at)
     // stragglers re-derive their cell under the LIVE centroids and pass
     // the same probed-cell filter, so results are exactly the one-shot
     // IVF over the union corpus — concurrent-append visibility without
     // breaking the probe semantics
-    val scanned = stragglerVectors(spark, info).fold(live) { s =>
-      live.unionByName(
+    val liveProbed = live.filter(col("cell").isin(probed.map(Integer.valueOf): _*))
+    val scanned = strag.fold(liveProbed) { s =>
+      liveProbed.unionByName(
         s.withColumn("cell",
             KMeans.cellOf(KMeans.quantize(col("embedding"), scale), cents)
               .cast("int"))
@@ -191,17 +170,13 @@ final class VectorIndexStore(val dir: String) {
     * touches directory metadata plus row counts, not vectors).
     */
   def cellHistogram(spark: SparkSession, scale: Int = 4096): DataFrame = {
-    val info @ (g, _) = Generations.liveGenInfo(dir)
-    val vdir = vectorsPath(g)
-    val batches = BatchStore.committedBatchPaths(vdir)
-    require(batches.nonEmpty, s"no committed vector batches at $dir")
-    val live = spark.read.option("basePath", vdir)
-      .parquet(batches: _*).select(col("cell"))
+    val at = gens.live
+    val (live, strag) = vectorsAt(spark, at)
     // stragglers count under their LIVE-centroid cells ([[search]]) — the
     // metadata-only scan becomes a real read for those dirs alone
-    val cells = stragglerVectors(spark, info).fold(live) { s =>
-      val cents = centroidsAt(spark, g)
-      live.unionByName(s.select(
+    val cells = strag.fold(live.select(col("cell"))) { s =>
+      val cents = centroidsAt(spark, at.gen)
+      live.select(col("cell")).unionByName(s.select(
         KMeans.cellOf(KMeans.quantize(col("embedding"), scale), cents)
           .cast("int").as("cell")))
     }
@@ -213,36 +188,10 @@ final class VectorIndexStore(val dir: String) {
         expr("(n * k * 1000) DIV tot").cast("bigint").as("hot_x1000"))
   }
 
-  /** One physical dir per visible batch id — live generation's dirs plus
-    * unfolded stragglers, live winning a double-landed id
-    * ([[Generations.visibleBatchesAt]]) — the migration/retraining input:
-    * the next [[recluster]] ADOPTS stragglers by re-homing them into the
-    * new generation alongside everything else.
+  /** The visible batch dirs (live generation first, then stragglers) —
+    * the file list of the `graft-vectorindex` SQL reader.
     */
-  private def visibleBatchDirs(info: (Long, Option[Long])): Seq[(Long, String)] = {
-    val byId = scala.collection.mutable.LinkedHashMap[Long, String]()
-    for {
-      (_, paths) <- Generations.visibleBatchesAt(dir, info, vectorsPath)
-      p <- paths
-    } {
-      val id = BatchStore.idOf(p)
-      if (!byId.contains(id)) byId(id) = p
-    }
-    byId.toSeq.sortBy(_._1)
-  }
-
-  /** Every visible vector, raw (payload columns kept, bookkeeping
-    * dropped) — the migration/retraining corpus.
-    */
-  private def committedVectors(spark: SparkSession,
-      info: (Long, Option[Long])): DataFrame = {
-    val dirs = visibleBatchDirs(info)
-    require(dirs.nonEmpty, s"no committed vector batches at $dir")
-    dirs.map { case (_, p) =>
-      spark.read.option("basePath", p.substring(0, p.lastIndexOf("/batch=")))
-        .parquet(p).drop("batch", "cell")
-    }.reduce(_ unionByName _)
-  }
+  private[graft] def visibleBatches: Seq[Generations.Group] = gens.visible("vectors")
 
   /** Exact integer quantization inertia (Σ min d²) of `corpus` against a
     * centroid set — the drift measure [[recluster]] compares: stale
@@ -255,6 +204,14 @@ final class VectorIndexStore(val dir: String) {
         .cast("decimal(38,0)").as("d2"))
       .agg(sum(col("d2"))).head().getDecimal(0))
 
+  /** Reclaims superseded generations whose superseding flip is older than
+    * `minAgeMs` — the in-flight-reader window around a recluster's flip.
+    * Gen 0's flat layout is collected too once a migration superseded it;
+    * a generation still serving stragglers is kept ([[Generations.vacuum]]).
+    * Returns the number of generations reclaimed.
+    */
+  def vacuumGenerations(minAgeMs: Long = 3600000L): Int = synchronized(gens.vacuum(minAgeMs))
+
   /** Drift-triggered index maintenance: retrains centroids on ALL committed
     * vectors and — when the retrain recovers more than
     * `minImprovementX1000` parts-per-thousand of quantization inertia —
@@ -266,7 +223,7 @@ final class VectorIndexStore(val dir: String) {
     * threshold (centroids stay frozen — the replay-stability contract).
     *
     * Crash safety is the snapshot-sink shape: everything is written under
-    * the not-yet-live `gen=<g+1>/` before the publish, so a crash anywhere
+    * the not-yet-live next generation before the publish, so a crash anywhere
     * earlier leaves readers on the old generation and the partial is
     * invisible garbage (cleaned by the next recluster attempt). The
     * superseded generation stays on disk for in-flight readers;
@@ -280,63 +237,39 @@ final class VectorIndexStore(val dir: String) {
     * recluster adopts it. The remaining single-writer contract is
     * maintenance-vs-maintenance only.
     */
-  /** Reclaims superseded (non-live) generations older than `minAgeMs` —
-    * the age guard covers the in-flight-reader window around a recluster's
-    * manifest flip, exactly like the snapshot sink's orphan collection.
-    * Gen 0's flat layout is collected too once a migration superseded it.
-    * Returns the number of generations reclaimed.
-    */
-  def vacuumGenerations(minAgeMs: Long = 3600000L): Int = synchronized {
-    // the straggler guard: a superseded generation holding a batch a
-    // concurrent appender committed after the recluster snapshot (id
-    // above the manifest watermark) is load-bearing and not reclaimed
-    Generations.vacuum(dir, Seq("centroids", "vectors"), minAgeMs,
-      batchSubs = Seq("vectors"))
-  }
-
   def recluster(spark: SparkSession, k: Int, iters: Int, scale: Int = 4096,
       minImprovementX1000: Long = 100L): Option[Long] = synchronized {
-    val info @ (g, wm) = Generations.liveGenInfo(dir)
-    val corpus = committedVectors(spark, info)
+    val at = gens.live
+    // the migration corpus: every visible vector, stragglers included
+    val corpus = gens.read(spark, "vectors", at).drop("batch", "cell")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val model = KMeans.train(corpus, k, iters, scale)
       val newCents = KMeans.collectCentroids(model.centroids)
-      val curCents = centroidsAt(spark, g)
+      val curCents = centroidsAt(spark, at.gen)
       val cur = inertiaOf(corpus, curCents, scale)
       val fresh = inertiaOf(corpus, newCents, scale)
       // exact rational compare: cur/fresh > 1 + thr/1000
       val improved = cur * 1000 > fresh * (1000 + minImprovementX1000)
       if (!improved) return None
-      val ng = g + 1
-      // a prior crashed migration at ng is invisible garbage — restart it
-      Generations.clearPartial(dir, ng)
-      model.centroids.coalesce(1).write.mode("overwrite").parquet(centroidsPath(ng))
+      val ng = gens.next(at)
+      model.centroids.coalesce(1).write.mode("overwrite").parquet(gens.path(ng, "centroids"))
       // full migration, batch identity preserved: each visible batch —
       // including stragglers adopted from superseded generations — is
       // reassigned under the new centroids into the SAME batch id
-      val migrated = visibleBatchDirs(info)
+      val migrated = gens.visible("vectors", at).flatMap(_.batches)
       for ((b, p) <- migrated) {
         val batch = spark.read.parquet(p).drop("cell")
         appendTo(ng, batch, b, scale, "vec_id", "embedding")
       }
-      // the atomic flip: one manifest publish through the commit-lock
-      // seam. The fold watermark (max migrated id) is what keeps a
-      // CONCURRENT append safe: a batch that committed into generation g
-      // after the corpus read above has a higher id and stays visible as
-      // a straggler ([[search]] re-derives its cells) until the next
-      // recluster adopts it. A replay of a migrated id is already safe
-      // without the no-op rule the compaction stores need: it rewrites
-      // the SAME batch dir in the new generation with deterministic
-      // identical content (frozen centroids), and the per-id dedup
-      // prefers the live copy.
-      Generations.publish(dir, ng, "recluster",
-        watermark = Some(Seq(wm.getOrElse(Long.MinValue),
-          migrated.map(_._1).max).max),
-        // every visible id was re-homed, so only the generation live during
-        // this migration can hold a concurrent append — the straggler walk
-        // stops there ([[Generations.genFloor]])
-        floor = Some(g))
+      // the atomic flip. The watermark (max migrated id) keeps a CONCURRENT
+      // append safe: a batch that committed into generation g after the
+      // corpus read above has a higher id and stays visible as a straggler
+      // ([[search]] re-derives its cells) until the next recluster adopts
+      // it; a replay of a migrated id no-ops ([[append]]). Every visible id
+      // was re-homed, so only the generation live during this migration
+      // can hold a concurrent append — the floor.
+      gens.publish(ng, "recluster", math.max(at.watermark, migrated.map(_._1).max), at.gen)
       // the superseded generation is NOT deleted here: a reader that
       // resolved liveGen just before the flip is still scanning its files —
       // the same in-flight-reader window every store solves with AGE-based

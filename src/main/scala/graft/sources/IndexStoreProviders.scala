@@ -14,7 +14,6 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.engine.Dfs
-import graft.sink.BatchStore
 
 /** Option-keyed resolve-once cache, shared by every provider here and by
   * [[SnapshotTableProvider]]: Spark calls inferSchema then getTable on the
@@ -224,15 +223,10 @@ final class TextIndexTableProvider extends BatchStoreProvider {
     val sub = Option(options.get("sub")).getOrElse("postings")
     require(sub == "postings" || sub == "doclens",
       s"graft-textindex sub must be postings or doclens, got '$sub'")
-    // bind to the index's LIVE generation, like the Scala search path — a
-    // compaction flip must move SQL readers atomically too. The visibility
-    // walk matches the Scala readers': live dirs plus unfolded stragglers
-    // a concurrent appender committed into a superseded generation
-    // (fold-watermark contract, [[graft.sink.Generations.visibleBatches]]).
-    val store = new graft.sink.TextIndexStore(dir)
-    val info = graft.sink.Generations.liveGenInfo(dir)
-    val paths = graft.sink.Generations
-      .visibleBatchesAt(dir, info, store.subPath(_, sub)).flatMap(_._2)
+    // the Scala readers' visible read: the live generation's dirs plus
+    // unfolded stragglers a concurrent appender committed into a
+    // superseded generation — a compaction flip moves SQL readers too
+    val paths = new graft.sink.TextIndexStore(dir).visibleBatches(sub).flatMap(_.paths)
     require(paths.nonEmpty, s"no committed $sub batches at $dir")
     // no basePath: the batch=<id> bookkeeping level stays hidden
     BatchScanState(s"graft-textindex $dir/$sub", paths, None, _ => paths)
@@ -254,17 +248,27 @@ final class TextIndexTableProvider extends BatchStoreProvider {
   * the Scala `search` path performs, available to plain SQL
   * (`WHERE cell = 3` plans 1/k of the store's files before parquet
   * row-group pruning starts).
+  *
+  * While stragglers exist (batches an appender committed into a generation
+  * a recluster had just superseded) the read is refused: their stored
+  * `cell` was assigned under superseded centroids, so serving them would
+  * give cell predicates wrong answers and dropping them would lose rows.
+  * The next `recluster` adopts them.
   */
 final class VectorIndexTableProvider extends BatchStoreProvider {
   override def shortName(): String = "graft-vectorindex"
 
   override protected def resolveState(options: CaseInsensitiveStringMap): BatchScanState = {
     val dir = pathOf(options)
-    // bind to the index's LIVE generation, exactly like the Scala search
-    // path — a recluster migration must flip SQL readers atomically too
-    val gen = new graft.sink.VectorIndexStore(dir).liveGen
-    val base = if (gen == 0L) s"$dir/vectors" else s"$dir/gen=$gen/vectors"
-    val batchDirs = BatchStore.committedBatchPaths(base)
+    // the Scala readers' visible read — a recluster migration flips SQL
+    // readers atomically too
+    val live +: strag = new graft.sink.VectorIndexStore(dir).visibleBatches
+    if (strag.nonEmpty)
+      sys.error(s"graft-vectorindex at $dir: straggler batches " +
+        s"${strag.flatMap(_.batches.map(_._1)).sorted.mkString(", ")} were committed " +
+        "into a superseded generation and carry stale cells; the next recluster " +
+        "adopts them — read through VectorIndexStore.search until then")
+    val batchDirs = live.paths
     require(batchDirs.nonEmpty, s"no committed vector batches at $dir")
 
     def cellDirs(pred: Int => Boolean): Seq[String] = batchDirs.flatMap { b =>
@@ -292,6 +296,6 @@ final class VectorIndexTableProvider extends BatchStoreProvider {
     }
 
     // basePath surfaces `batch` and `cell` as real columns
-    BatchScanState(s"graft-vectorindex $dir", batchDirs, Some(base), prune)
+    BatchScanState(s"graft-vectorindex $dir", batchDirs, Some(live.base), prune)
   }
 }

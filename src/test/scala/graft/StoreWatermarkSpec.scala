@@ -277,20 +277,46 @@ class StoreWatermarkSpec extends SparkSpec {
     assert(nRows() == 250L, "generations below the floor must not be walked")
   }
 
-  test("legacy watermark-less manifests keep fold-everything semantics") {
+  test("generation manifests without watermark or floor are refused") {
     val dir = tmpDir("wm_legacy")
     val store = new HllSketchStore(dir, lgK = 12)
     import spark.implicits._
     val b = Seq(("g", 1L), ("g", 2L)).toDF("grp", "v")
     store.append(b, Seq("grp"), "v", 0L)
-    // simulate a pre-watermark compaction: merged partial + bare manifest
-    store.appendAt(1L, b, Seq("grp"), "v", -1L)
-    Generations.publish(dir, 1L, "legacy test")
-    assert(Generations.genWatermark(dir, 1L).isEmpty)
-    // reads bind to the live generation only — gen 0's dir is NOT walked
-    assert(store.estimates(spark, Seq("grp")).head().getAs[Long]("n_batches") == 1L)
-    // appends still write (no watermark to no-op against)
-    store.append(b, Seq("grp"), "v", 7L)
-    assert(store.estimates(spark, Seq("grp")).head().getAs[Long]("n_batches") == 2L)
+    val manifest = new org.apache.hadoop.fs.Path(s"$dir/gens", "v00000001.manifest")
+    for ((body, missing) <- Seq("gen=1\nfloor=0\n" -> "watermark=",
+        "gen=1\nwatermark=0\n" -> "floor=")) {
+      graft.engine.Dfs.writeUtf8(manifest, body)
+      for (op <- Seq[() => Any](() => store.estimates(spark, Seq("grp")).collect(),
+          () => store.append(b, Seq("grp"), "v", 7L), () => store.compact(spark))) {
+        val e = intercept[RuntimeException](op())
+        assert(e.getMessage.contains(dir) && e.getMessage.contains("generation 1") &&
+          e.getMessage.contains(missing), e.getMessage)
+      }
+    }
+  }
+
+  test("vacuum ages a superseded generation from its superseding flip") {
+    val store = new graft.sink.CountStore(tmpDir("wm_vacage"))
+    import spark.implicits._
+    def batch(k: String, n: Int) = Seq.fill(n)(k).toDF("k")
+    store.append(batch("a", 3), Seq("k"), 0L)
+    store.compact(spark)
+    store.append(batch("a", 4), Seq("k"), 1L)
+    val gen1 = new java.io.File(s"${store.dir}/gen=1")
+    assert(new java.io.File(gen1, "batch=1/_SUCCESS").exists())
+    // the data is two hours old; the flip that supersedes it is not
+    val old = System.currentTimeMillis() - 2 * 3600000L
+    def backdate(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(backdate))
+      assert(f.setLastModified(old))
+    }
+    backdate(gen1)
+    new java.io.File(store.dir).listFiles()
+      .filter(_.getName.startsWith("batch=")).foreach(backdate)
+    store.compact(spark)
+    assert(store.vacuumGenerations(minAgeMs = 3600000L) == 0)
+    assert(gen1.exists())
+    assert(store.counts(spark, Seq("k")).head().getAs[Long]("n") == 7L)
   }
 }

@@ -194,7 +194,14 @@ class VectorIndexReclusterSpec extends SparkSpec {
     val totalN = store.cellHistogram(spark).collect().map(_.getLong(1)).sum
     assert(totalN == 120L, s"histogram must count stragglers, got $totalN")
 
-    // a replay of a migrated id overwrites identically — nothing doubles
+    // SQL refuses while the straggler exists: its stored cells are stale,
+    // and silently dropping it would lose 40 rows
+    val refused = intercept[RuntimeException](
+      spark.read.format("graft-vectorindex").load(store.dir).count())
+    assert(refused.getMessage.contains("straggler batches 2") &&
+      refused.getMessage.contains("recluster"), refused.getMessage)
+
+    // a replay of a migrated id no-ops under the watermark — nothing doubles
     store.append(batch0(), 0L)
     assert(canon(store.search(spark, q2, k = 3, nProbe = 2)) == got)
 
@@ -207,6 +214,7 @@ class VectorIndexReclusterSpec extends SparkSpec {
     val migrated2 = store.recluster(spark, k = 4, iters = 2, minImprovementX1000 = -1000L)
     assert(migrated2.contains(2L))
     assert(graft.sink.Generations.genWatermark(store.dir, 2L) == Some(2L))
+    assert(spark.read.format("graft-vectorindex").load(store.dir).count() == 120L)
     val ref2 = new VectorIndexStore(tmpDir("vx4ref2") + "/ix")
     val union = batch0().unionByName(batch1()).unionByName(batch2())
     ref2.init(union, k = 4, iters = 2)
