@@ -4,9 +4,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics over pair frames (the same (i, j) edges the
-  * dedup candidate generators emit). Companions to
-  * [[graft.llm.Dedup.connectedComponents]]: BSP rounds of join + aggregate,
-  * one shuffle per round, every frame partitioned by node id.
+  * dedup candidate generators emit). Companions to the distributed arm of
+  * [[graft.llm.Dedup.connectedComponents]] (whose driver-local arm resolves
+  * small collected edge lists in one union-find instead): BSP rounds of
+  * join + aggregate, one shuffle per round, every frame partitioned by
+  * node id.
   */
 object Graph {
 

@@ -192,7 +192,10 @@ private[graft] final class Generations(dir: String, batchSubs: Seq[String],
     * in-flight readers that resolved `g` just before the flip may still be
     * scanning it. Gen 0's flat dirs are one generation. A generation the
     * visible read still serves stragglers from is kept; the next fold
-    * adopts them, after which it goes. Returns the number reclaimed.
+    * adopts them, after which it goes. Manifest stages in `gens/` that a
+    * crash between [[graft.engine.CommitLock.publishFile]]'s stage write
+    * and its publish left behind go once `minAgeMs` old. Returns the
+    * number of generations reclaimed.
     */
   def vacuum(minAgeMs: Long): Int = {
     val at = live
@@ -214,6 +217,7 @@ private[graft] final class Generations(dir: String, batchSubs: Seq[String],
       .filter(p => p.getName.startsWith("gen=") &&
         reclaimable(p.getName.stripPrefix("gen=").toLong))
     gens.foreach(Dfs.deleteTreeQuiet)
+    graft.engine.CommitLock.sweepStaged(new HPath(s"$dir/gens"), minAgeMs)
     flatGone + gens.size
   }
 }

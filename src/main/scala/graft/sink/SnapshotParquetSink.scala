@@ -181,7 +181,7 @@ object SnapshotParquetSink {
   @volatile private[graft] var localDiffMaxBytes: Long = 4L << 20
 
   /** A driver-local frame over internal-format `rows`. */
-  private[sink] def localFrame(spark: SparkSession, schema: StructType,
+  private[graft] def localFrame(spark: SparkSession, schema: StructType,
       rows: Seq[InternalRow]): DataFrame =
     Bridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.llm.{Dedup, Similarity, TextAnalysis}
 import graft.multimodal.Multimodal
@@ -114,6 +115,123 @@ class LlmSpec extends SparkSpec {
       labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
     assert(chainClusters.values.toSet == Set(1L))
+  }
+
+  test("connectedComponents: min-reachable-id clusters on the forced BSP arm") {
+    withLocalComponentsOff {
+      val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("i", "j")
+      val (clusters, rounds) = Dedup.connectedComponentsStats(pairs, (1L to 7L).toDF("doc_id")) {
+        (labels, r) => (labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, r)
+      }
+      assert(rounds > 0, "the forced BSP arm runs at least one round")
+      assert(clusters == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L,
+        5L -> 5L, 6L -> 5L, 7L -> 7L))
+      assert(leakedCaches.isEmpty)
+      val chain = Seq((3L, 4L), (2L, 3L), (1L, 2L)).toDF("i", "j")
+      val chainClusters = Dedup.connectedComponents(chain, (1L to 4L).toDF("doc_id")) { labels =>
+        labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
+      assert(chainClusters.values.toSet == Set(1L))
+    }
+  }
+
+  /** A seeded random pair graph and its node list: chains, stars,
+    * self-loops, duplicate and reversed edges, endpoints absent from the
+    * nodes, null endpoints, duplicate node ids and (every 5th seed) a null
+    * node id; seed 0 has no edges. Ids are Int on seeds ≡ 1 (mod 4), Int
+    * edges over Long nodes on seeds ≡ 3 (mod 4), Long otherwise. The nodes
+    * are a local frame, or on seeds ≡ 2 (mod 3) a repartitioned one (so
+    * the local arm runs its membership job).
+    */
+  private def randomGraph(seed: Int): (DataFrame, DataFrame) = {
+    val rnd = new scala.util.Random(seed)
+    val n = 20 + rnd.nextInt(40)
+    val edges = scala.collection.mutable.ArrayBuffer[(Option[Long], Option[Long])]()
+    def id(): Long = 1L + rnd.nextInt(n + 8) // ids above n are absent from the nodes
+    if (seed > 0) (0 until 1 + rnd.nextInt(6)).foreach { _ =>
+      rnd.nextInt(3) match {
+        case 0 => // chain
+          val start = id(); val len = 1 + rnd.nextInt(8)
+          (0 until len).foreach(k => edges += ((Some(start + k), Some(start + k + 1))))
+        case 1 => // star
+          val hub = id(); (0 until 1 + rnd.nextInt(5)).foreach(_ => edges += ((Some(hub), Some(id()))))
+        case _ => // random edges
+          (0 until 1 + rnd.nextInt(6)).foreach(_ => edges += ((Some(id()), Some(id()))))
+      }
+    }
+    if (edges.nonEmpty) {
+      val some = edges(rnd.nextInt(edges.size))
+      edges += some += some.swap += ((some._1, some._1)) // duplicate, reversed, self-loop
+      edges += ((None, Some(id()))) += ((Some(id()), None)) += ((None, None))
+    }
+    val shuffled = rnd.shuffle(edges.toSeq)
+    val nodeIds = (1L to n.toLong).map(Option(_)) ++
+      Seq.fill(3)(Option(1L + rnd.nextInt(n))) ++ (if (seed % 5 == 4) Seq(None) else Nil)
+    val intEdges = seed % 4 == 1 || seed % 4 == 3
+    val pairs =
+      if (intEdges) shuffled.map { case (a, b) => (a.map(_.toInt), b.map(_.toInt)) }.toDF("i", "j")
+      else shuffled.toDF("i", "j")
+    val local =
+      if (seed % 4 == 1) nodeIds.map(_.map(_.toInt)).toDF("doc_id") else nodeIds.toDF("doc_id")
+    (pairs, if (seed % 3 == 2) local.repartition(2) else local)
+  }
+
+  test("connectedComponents: the driver-local and BSP arms agree on random graphs") {
+    def run(pairs: DataFrame, nodes: DataFrame) = {
+      val (labels, schema, rounds) = Dedup.connectedComponentsStats(pairs, nodes) {
+        (l, r) => (l.collect().map(_.toString).sorted.toSeq, l.schema, r) }
+      val docs = nodes.withColumn("text",
+        concat_ws(" ", array_repeat(lit("w"), (coalesce(col("doc_id"), lit(0)) % 4 + 1).cast("int"))))
+      val verdict = Dedup.dedupVerdict(docs, pairs)(_.collect().map(_.toString).sorted.toSeq)
+      assert(leakedCaches.isEmpty)
+      (labels, schema, rounds, verdict)
+    }
+    (0 until 24).foreach { seed =>
+      val (pairs, nodes) = randomGraph(seed)
+      val local = run(pairs, nodes)
+      val bsp = withLocalComponentsOff(run(pairs, nodes))
+      assert(local._3 == 0, s"seed $seed: local pairs must take the driver-local arm")
+      assert(bsp._3 > 0, s"seed $seed: the forced arm must run BSP rounds")
+      assert(local._1 == bsp._1, s"seed $seed: labels differ")
+      assert(local._2 == bsp._2, s"seed $seed: label schemas differ")
+      assert(local._4 == bsp._4, s"seed $seed: verdicts differ")
+      assert(local._1.size == nodes.count(), s"seed $seed: one label per node row")
+    }
+  }
+
+  test("connectedComponents: the local arm's only job before consume is the membership filter") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (6L, 9L)).toDF("i", "j")
+    val seen = jobDescriptionsDuring {
+      Dedup.connectedComponentsStats(pairs, spark.range(1, 8).toDF("doc_id")) { (_, r) =>
+        assert(r == 0) }
+    }
+    assert(seen == Seq("components:members"), s"jobs: $seen")
+    // local nodes too: no job at all
+    val none = jobDescriptionsDuring {
+      Dedup.connectedComponentsStats(pairs, (1L to 7L).toDF("doc_id")) { (_, r) => assert(r == 0) }
+    }
+    assert(none.isEmpty, s"jobs: $none")
+    val labels = Dedup.connectedComponents(pairs, spark.range(1, 8).toDF("doc_id")) {
+      _.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap }
+    // 9 is no node: the edge (6, 9) links nothing
+    assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L, 6L -> 5L, 7L -> 7L))
+    assert(leakedCaches.isEmpty)
+  }
+
+  test("connectedComponents: edges over the cap and non-local edges take the BSP arm") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("i", "j")
+    val nodes = (1L to 7L).toDF("doc_id")
+    def rounds(p: DataFrame) = Dedup.connectedComponentsStats(p, nodes) {
+      (l, r) => (l.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, r) }
+    val local = rounds(pairs)
+    assert(local._2 == 0)
+    val over = withLocalComponentsMaxEdges(2)(rounds(pairs))
+    assert(over._2 > 0, "3 local edges over a cap of 2 must take the BSP arm")
+    assert(over._1 == local._1)
+    val ranged = rounds(spark.range(1, 3).selectExpr("id as i", "id + 1 as j"))
+    assert(ranged._2 > 0, "a non-local edge frame must take the BSP arm")
+    assert(ranged._1 == local._1 - 5L - 6L ++ Map(5L -> 5L, 6L -> 6L))
+    assert(leakedCaches.isEmpty)
   }
 
   test("verdictFromLabels: struct-min canonical pick equals the rn=1 window shape") {

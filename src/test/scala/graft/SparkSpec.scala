@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.GraftSession
+import graft.llm.Dedup
 import graft.sink.{MaterializedAgg, SnapshotParquetSink}
 
 /** Shared session for all suites (one per JVM; sbt forks a single test JVM). */
@@ -46,6 +47,17 @@ trait SparkSpec extends AnyFunSuite {
   def withLocalDiffOff[A](f: => A): A =
     withHook(SnapshotParquetSink.localDiffMaxBytes, -1L)(
       SnapshotParquetSink.localDiffMaxBytes = _)(f)
+
+  /** Runs `f` with connected components' driver-local arm capped at `n`
+    * edges ([[graft.llm.Dedup.localComponentsMaxEdges]]; −1 = off).
+    */
+  def withLocalComponentsMaxEdges[A](n: Int)(f: => A): A =
+    withHook(Dedup.localComponentsMaxEdges, n)(Dedup.localComponentsMaxEdges = _)(f)
+
+  /** Runs `f` with connected components' driver-local arm turned off, so
+    * every graph takes the distributed (BSP/star) arm.
+    */
+  def withLocalComponentsOff[A](f: => A): A = withLocalComponentsMaxEdges(-1)(f)
 
   /** Runs `f` with the IVM bulk gate unreachable
     * ([[graft.sink.MaterializedAgg.rebuildDirtyFraction]] at 2), so a

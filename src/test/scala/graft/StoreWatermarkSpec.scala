@@ -319,4 +319,27 @@ class StoreWatermarkSpec extends SparkSpec {
     assert(gen1.exists())
     assert(store.counts(spark, Seq("k")).head().getAs[Long]("n") == 7L)
   }
+
+  test("vacuum sweeps aged generation-manifest stages, keeps fresh ones") {
+    val store = new graft.sink.CountStore(tmpDir("wm_vacstage"))
+    import spark.implicits._
+    def batch(k: String, n: Int) = Seq.fill(n)(k).toDF("k")
+    store.append(batch("a", 3), Seq("k"), 0L)
+    store.compact(spark)
+    store.append(batch("a", 4), Seq("k"), 1L)
+    // what a crash between the flip's stage write and its publish leaves
+    val gens = new java.io.File(s"${store.dir}/gens")
+    def stage(name: String, ageMs: Long): java.io.File = {
+      val f = new java.io.File(gens, name)
+      java.nio.file.Files.writeString(f.toPath, "gen=2\nwatermark=1\nfloor=0\n")
+      assert(f.setLastModified(System.currentTimeMillis() - ageMs))
+      f
+    }
+    val aged = stage(".tmp-aged", 2 * 3600000L)
+    val fresh = stage(".tmp-fresh", 0L)
+    assert(store.vacuumGenerations(minAgeMs = 3600000L) == 0)
+    assert(!aged.exists(), "an aged stage must be swept")
+    assert(fresh.exists(), "a fresh stage may still be publishing")
+    assert(store.counts(spark, Seq("k")).head().getAs[Long]("n") == 7L)
+  }
 }
